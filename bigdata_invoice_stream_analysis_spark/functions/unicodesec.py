@@ -25,8 +25,7 @@ Scale posture: map-side, one projection, no shuffle; the flags
 funnel into a corpus release gate exactly like the Gopher rules
 (functions/text.gopher_quality_flags).
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

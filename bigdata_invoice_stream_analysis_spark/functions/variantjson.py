@@ -27,8 +27,7 @@ over the VARIANT binary encoding — no Python, no per-query
 re-parse.  Malformed JSON: ``try_parse_json`` rows surface as
 ``_corrupt = true`` rather than failing the task.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -26,8 +26,7 @@ shipped IPC/Feather artifacts, same as the parquet/ORC footers).
 Cross-validated against pyarrow.ipc in the unit suite (files
 pyarrow writes; schemas, batch counts, row totals, null counts).
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -30,8 +30,7 @@ raises ValueError per the module contract; triage quarantines.
 Scale posture: header walk + chunk-size skips, no payload decode;
 map-side under Arrow mapInPandas.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

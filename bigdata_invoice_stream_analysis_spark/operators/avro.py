@@ -27,8 +27,7 @@ walk per container.  The sync-marker design means a 100 TB Avro
 corpus could equally be split WITHIN files at block boundaries; the
 per-file walk here is the per-task unit either way.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

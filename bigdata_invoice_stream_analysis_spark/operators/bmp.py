@@ -23,8 +23,7 @@ BITMAPINFOHEADER / ICONDIR layouts, all little-endian):
 Malformed structure raises ValueError per the module contract;
 triage quarantines. Pixel data itself is never decoded.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -26,8 +26,7 @@ exploits the shape of the problem:
   KB-scale) and an Arrow ``mapInPandas`` applies the standard
   lowest-rank-first merge loop per word, memoized per batch.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

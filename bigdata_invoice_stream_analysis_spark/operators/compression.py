@@ -28,8 +28,7 @@ frame metadata is embedded.
 
 Malformed framing raises ValueError (shared parser contract).
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

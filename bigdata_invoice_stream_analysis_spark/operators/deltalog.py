@@ -23,8 +23,7 @@ Fixture encoder ``encode_delta_log`` emits deterministic commit
 files (sorted keys, fixed timestamps derived from the version
 number) so graded oracles can pin byte-exact replay results.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

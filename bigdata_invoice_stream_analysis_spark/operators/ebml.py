@@ -24,8 +24,7 @@ matches mp4.py: VP8/VP9/AV1 frame DATA needs a codec library; track
 metadata, frame geometry claims, timestamps and keyframe structure are
 pure container bytes and are fully parsed here.
 
-Reference: n/a (extension surface; staged for round-8 registration
-alongside the vp09/CMAF leads — see plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

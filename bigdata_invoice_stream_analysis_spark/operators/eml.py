@@ -33,8 +33,7 @@ hash-pinned gate cannot use):
 Malformed framing (no header block, bad base64, missing multipart
 boundary) raises ValueError; triage quarantines.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

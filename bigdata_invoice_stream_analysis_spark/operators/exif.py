@@ -22,8 +22,7 @@ with frame decode on the video side.
 Scale posture: Arrow mapInPandas, one row per image, linear marker
 scan that stops at SOS (EXIF precedes entropy-coded data by spec).
 
-Reference: n/a (extension surface; staged for round-8 registration —
-see plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

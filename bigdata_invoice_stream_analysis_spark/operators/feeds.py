@@ -20,8 +20,7 @@ SAME bounded entity decoder and tag scanner as the OOXML/SVG gates
 
 A document that is neither ``<rss``/``<feed`` raises ValueError.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -30,8 +30,7 @@ audio FRAMES after the last metadata block are never decoded — the
 audit is header arithmetic only, so the operator reads a bounded
 prefix of even multi-GB files.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

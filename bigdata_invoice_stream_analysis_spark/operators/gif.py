@@ -15,8 +15,7 @@ PNM/JPEG codecs cover actual pixel needs).
 Scale posture: Arrow mapInPandas, one summary row per payload; the
 block walk is a single linear pass over the bytes.
 
-Reference: n/a (extension surface; staged for round-8 registration —
-see plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

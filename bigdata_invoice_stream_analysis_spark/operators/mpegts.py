@@ -41,8 +41,7 @@ map-side under Arrow mapInPandas (ts_stream_profile); the uniform
 row then routes segments by codec/scrambling/continuity-health
 before any GPU decode is spent.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

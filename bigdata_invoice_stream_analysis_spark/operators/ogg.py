@@ -22,8 +22,7 @@ Malformed framing raises ValueError; per-page CRC mismatches are
 DATA (counted, not fatal) because one damaged page must not cost
 the whole file's audit row.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -28,8 +28,7 @@ Built against the public ECMA-376 package conventions:
 Malformed packages raise ValueError (from the ZIP layer or the
 package checks); triage quarantines.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -24,8 +24,7 @@ Scale posture: tail-only reads (postscript + footer), Arrow
 mapInPandas one file per row — the offsets-not-contents posture of
 the parquet footer audit applied to ORC.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -26,8 +26,7 @@ of each file is ever examined (magic + footer length + footer bytes)
 — the offsets-not-contents posture of the ZIP/TAR walks applied to
 the table format itself.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

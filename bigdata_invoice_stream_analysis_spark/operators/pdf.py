@@ -40,8 +40,7 @@ Scale posture: one Arrow mapInPandas pass, one linear byte scan per
 document plus zlib inflate of the content streams — no random
 access, no driver involvement.
 
-Reference: n/a (extension surface; staged as a round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -20,8 +20,7 @@ owns pixels — same split as exif vs jpeg):
 Scale posture: linear chunk walk, header-only (IDAT skipped), Arrow
 mapInPandas, zero shuffles.
 
-Reference: n/a (extension surface; staged as a round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -27,8 +27,7 @@ URL table is the big side, so the operator broadcasts the robots
 table, parses each distinct document once per Arrow batch, and
 evaluates map-side: zero shuffles on the URL side.
 
-Reference: n/a (extension surface; staged for round-8 registration —
-see plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -23,8 +23,7 @@ Design points:
 * Round-trip-verified in the unit suite by re-reading the written
   shards with this repo's own parsers AND (for tars) the stdlib.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

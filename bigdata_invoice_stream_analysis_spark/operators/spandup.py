@@ -26,8 +26,7 @@ Output spans are maximal runs of matching k-grams ≥ ``min_len``.
 Everything is Column algebra — the only Python is this plan
 builder.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

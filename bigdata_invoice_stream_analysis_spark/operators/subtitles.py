@@ -23,8 +23,7 @@ Scale posture: Arrow mapInPandas cue explosion, map-side only; the
 downstream time-alignment join keys on (media_id, time bucket) — one
 co-partitioned shuffle at 100 TB.
 
-Reference: n/a (extension surface; staged for round-8 registration —
-see plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

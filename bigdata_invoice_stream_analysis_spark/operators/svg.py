@@ -24,8 +24,7 @@ so entity bombs and quadratic blowups are structurally impossible:
 
 A blob with no ``<svg`` root raises ValueError; triage quarantines.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

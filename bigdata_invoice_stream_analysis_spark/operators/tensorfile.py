@@ -28,8 +28,7 @@ Scale posture: Arrow mapInPandas, one file per row; NPZ/safetensors
 headers are read without touching tensor payloads unless stats are
 requested.
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

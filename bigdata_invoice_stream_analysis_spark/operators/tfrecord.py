@@ -30,8 +30,7 @@ exact, but the slow path; ``verify_crc=False`` skips it for
 throughput once shard integrity is handled upstream (documented
 honest boundary, like the inter-frame decode stubs).
 
-Reference: n/a (extension surface; staged round-9 lead — see
-plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -25,8 +25,7 @@ exactly Spark's. Component rows carry offsets + CRCs, so downstream
 stages slice bytes lazily and dedup on checksums without a second
 scan.
 
-Reference: n/a (extension surface; staged for round-8 registration —
-see plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -17,8 +17,7 @@ are present (the privacy-audit pointer operators/exif.py consumes).
 Scale posture: Arrow mapInPandas, one row per payload, linear chunk
 walk.
 
-Reference: n/a (extension surface; staged for round-8 registration —
-see plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -19,8 +19,7 @@ triage never reads the payload bytes at all — the same
 offsets-not-contents posture as the TAR/WebDataset walk
 (operators/wds.py).
 
-Reference: n/a (extension surface; staged for round-8 registration —
-see plans/graded.py docstring).
+Reference: n/a (extension surface).
 """
 
 from __future__ import annotations

@@ -2,9 +2,9 @@
 
 Split out of plans/queries.py (round 4) to keep per-file size reviewable;
 registration still flows through the shared ``@query`` decorator, and
-plans/graded.py owns the driver grading window, so module boundaries are
-layout only — zero behavior change (pinned by tests/test_graded_window.py
-and the full oracle-parity suite).
+``__spark_entry__.GRADED_50`` owns the driver grading window, so module
+boundaries are layout only — zero behavior change (pinned by
+tests/test_graded_window.py and the full oracle-parity suite).
 """
 
 from __future__ import annotations
@@ -244,11 +244,12 @@ def prepared_purchase_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     away"): the r9 shape built the FULL purchase projection
     (purchase_rows) and then filtered + re-parsed — the two gate
     filters are pure functions of single scan columns (``InvoiceNo
-    NOT LIKE 'C%'`` ⟺ o_orderstatus <> 'F'; ``CustomerID <> ''`` ⟺
-    l_orderkey % 97 <> 0), so they now push to the scans BEFORE the
-    join, and ``ts`` derives directly from the join columns instead
-    of the date_format→try_to_timestamp string roundtrip (order_ts is
-    minute-granular with seconds == 0, so parse(format(x)) == x —
+    NOT LIKE 'C%'`` ⟺ o_orderstatus IS NULL OR o_orderstatus <> 'F';
+    ``CustomerID <> ''`` ⟺ l_orderkey % 97 <> 0), so they now push to
+    the scans BEFORE the join, and ``ts`` derives directly from the join
+    columns instead of the date_format→try_to_timestamp string
+    roundtrip (order_ts is minute-granular with seconds == 0, so
+    parse(format(x)) == x —
     verified exact under UTC and DST session timezones, and every
     gate's oracle re-derives the same instants from the PURCHASE_CTE
     strings). Output rows identical to the r9 shape (pinned by
@@ -261,8 +262,9 @@ def prepared_purchase_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 97 != 0
     )
+    # NULL status is a non-cancelled InvoiceNo in purchase_projection
     o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") != "F"
+        F.col("o_orderstatus").isNull() | (F.col("o_orderstatus") != "F")
     )
     from bigdata_invoice_stream_analysis_spark.sources.tables import (
         ensure_min_parallelism,

@@ -3,8 +3,8 @@ decoded, chunked, frame-sampled and deduped through Arrow mapInPandas
 iterators (operators/multimodal.py).
 
 Split out of plans/extensions.py (round 4, layout only): registration
-still flows through the shared ``@query`` decorator; plans/graded.py
-owns the driver grading window.
+still flows through the shared ``@query`` decorator;
+``__spark_entry__.GRADED_50`` owns the driver grading window.
 """
 
 from __future__ import annotations

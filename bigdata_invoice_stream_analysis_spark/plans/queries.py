@@ -1663,9 +1663,9 @@ def _drain_input_diet(stream: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Family registration. Each module self-registers via @query on import;
-# order is layout only (plans/graded.py owns the driver grading window).
-# pipelines must come after extensions (it reuses its augmented-corpus
-# CTEs); the rest are independent.
+# order is layout only (__spark_entry__.GRADED_50 owns the driver grading
+# window). pipelines must come after extensions (it reuses its
+# augmented-corpus CTEs); the rest are independent.
 # ---------------------------------------------------------------------------
 from bigdata_invoice_stream_analysis_spark.plans import extensions  # noqa: E402,F401
 from bigdata_invoice_stream_analysis_spark.plans import mediaops  # noqa: E402,F401
@@ -1676,6 +1676,5 @@ from bigdata_invoice_stream_analysis_spark.plans import warehouse  # noqa: E402,
 from bigdata_invoice_stream_analysis_spark.plans import eventlog  # noqa: E402,F401
 from bigdata_invoice_stream_analysis_spark.plans import drains  # noqa: E402,F401
 from bigdata_invoice_stream_analysis_spark.plans import pipelines  # noqa: E402,F401
-# promoted must come last: it moves round-9 staged conversions into
-# this registry (and pops them from the staging area)
-from bigdata_invoice_stream_analysis_spark.plans import promoted  # noqa: E402,F401
+# staged comes last: its registered rows follow every other family
+from bigdata_invoice_stream_analysis_spark.plans import staged  # noqa: E402,F401

@@ -2,9 +2,9 @@
 
 Split out of plans/queries.py (round 4) to keep per-file size reviewable;
 registration still flows through the shared ``@query`` decorator, and
-plans/graded.py owns the driver grading window, so module boundaries are
-layout only — zero behavior change (pinned by tests/test_graded_window.py
-and the full oracle-parity suite).
+``__spark_entry__.GRADED_50`` owns the driver grading window, so module
+boundaries are layout only — zero behavior change (pinned by
+tests/test_graded_window.py and the full oracle-parity suite).
 """
 
 from __future__ import annotations

@@ -1,23 +1,19 @@
-"""Staging area: graded-row candidates built to the exact house
-pattern (bounded deterministic codebooks keyed by ``doc_id % K``;
-closed-form DuckDB oracles computed from fixture PARAMETERS or an
-independent reference implementation — never by running the parser
-under test) but not yet registered: the registry-closing invariant
-says new registrations enter WITH a grading-window slot.
+"""Staged builders and the registered rows that grew out of them,
+all built to one house pattern: bounded deterministic codebooks keyed
+by ``doc_id % K``; closed-form DuckDB oracles computed from fixture
+PARAMETERS or an independent reference implementation — never by
+running the parser under test.
 
-``STAGED_QUERIES`` / ``STAGED_ORACLES`` mirror the live registry's
-shape; ``tests/test_staged_parity.py`` runs the driver's own
-compare over them at sf0.001, so each round's registration is a
-mechanical move (plans/promoted.py pops entries into the registry
-and plans/graded.py assigns the slot).
-
-Count history (monotonically decreasing per VERDICT r8 item 3):
-r8 close: 51 staged. Round 9: 23 promoted (judge priority list +
-builder balance — see plans/promoted.py), 5 retired as twins
-(gif/webp/id3 fixtures folded into content_triage's codebook
-k=39..42; zip/wds offsets-only twins subsumed by their graded
-extraction rows) ⇒ 23 remain for the r10/r11 conversion waves.
-Zero new parsers were staged in r9 (the freeze, VERDICT item 3).
+* 23 rows register with ``@query`` where they are defined: they are
+  driver-facing and parity-gated by tests/test_oracle_parity.py like
+  every other registered row (plans/queries.py imports this module
+  last).
+* 28 rows stay unregistered in ``STAGED_QUERIES`` / ``STAGED_ORACLES``:
+  23 staging candidates plus 5 retired twins — gif/webp/id3 profiles
+  whose fixtures are content_triage codebook variants k=39..42, and
+  zip/wds offsets-only twins of the registered ``zip_text_members`` /
+  ``wds_samples`` extraction rows. tests/test_staged_parity.py runs
+  the driver's own compare over them.
 
 Where a candidate can gate on REAL table data instead of a codebook
 (the VARIANT shred over orders, the drift histogram over events),
@@ -32,6 +28,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_invoice_stream_analysis_spark.plans.queries import query
 from bigdata_invoice_stream_analysis_spark.sources.tables import load_table
 
 STAGED_QUERIES: dict = {}
@@ -60,7 +57,7 @@ FROM orders
 """
 
 
-@staged("variant_order_shred", _VARIANT_ORACLE)
+@query("variant_order_shred", _VARIANT_ORACLE)
 def q_variant_order_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VARIANT round trip on REAL data: orders rows rendered to JSON
     strings (to_json), re-parsed with try_parse_json, and shredded
@@ -113,7 +110,7 @@ GROUP BY value_schema
 """
 
 
-@staged("variant_schema_drift", _DRIFT_ORACLE)
+@query("variant_schema_drift", _DRIFT_ORACLE)
 def q_variant_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-drift audit on REAL data: events rendered as JSON whose
     ``uid`` field drifts by construction (int / string / absent by
@@ -201,7 +198,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("parquet_chunk_audit", _pq_oracle())
+@query("parquet_chunk_audit", _pq_oracle())
 def q_parquet_chunk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PARQUET FOOTER AUDIT — the lakehouse control-plane read: every
     doc maps to a parquet file from a 6-variant codebook written by
@@ -863,7 +860,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("bpe_corpus_tokens", _bpe_oracle())
+@query("bpe_corpus_tokens", _bpe_oracle())
 def q_bpe_corpus_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTRIBUTED BPE, end to end in the graded path: the merge
     table is TRAINED IN SPARK on the 4-text codebook corpus
@@ -1223,7 +1220,7 @@ GROUP BY format, kind
 """
 
 
-@staged("streaming_content_triage", _stream_triage_oracle())
+@query("streaming_content_triage", _stream_triage_oracle())
 def q_streaming_content_triage(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1546,7 +1543,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("pdf_text_extract", _pdf_oracle())
+@query("pdf_text_extract", _pdf_oracle())
 def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF TEXT EXTRACTION — the from-scratch ISO 32000-1 walk
     (operators/pdf): classic-xref flate documents, the modern
@@ -2260,7 +2257,7 @@ FROM media JOIN tx USING (k) JOIN cb USING (k)
 """
 
 
-@staged("pii_audit", _pii_oracle())
+@query("pii_audit", _pii_oracle())
 def q_pii_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII AUDIT — the release-gating privacy scan
     (functions/pii.py) as pure Column algebra: email/IPv4/phone/SSN
@@ -2321,7 +2318,7 @@ FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
 
 
-@staged("lm_support_audit", _LM_ORACLE)
+@query("lm_support_audit", _LM_ORACLE)
 def q_lm_support_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-GRAM LM QUALITY STATISTICS on REAL data — the CCNet/Gopher
     model-based quality filter's deterministic core
@@ -2439,7 +2436,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("warc_link_graph", _lg_oracle())
+@query("warc_link_graph", _lg_oracle())
 def q_warc_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEB LINK GRAPH — one edge per hyperlink in 2xx HTML response
     records (operators/warc.link_graph): hrefs resolved against the
@@ -2541,7 +2538,7 @@ FROM (
 """
 
 
-@staged("corpus_release_gate", _release_oracle())
+@query("corpus_release_gate", _release_oracle())
 def q_corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CORPUS RELEASE GATE on REAL data — the composed keep/drop
     verdict every curation pipeline ends in
@@ -2596,7 +2593,7 @@ GROUP BY has_pii
 """
 
 
-@staged("streaming_pii_monitor", _stream_pii_oracle())
+@query("streaming_pii_monitor", _stream_pii_oracle())
 def q_streaming_pii_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2771,7 +2768,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("image_phash_audit", _ph_oracle())
+@query("image_phash_audit", _ph_oracle())
 def q_image_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERCEPTUAL IMAGE HASHES — the visual-dedup signature
     (operators/imagehash.image_phash): exact-integer dHash/aHash
@@ -3100,7 +3097,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("crawl_frontier_gate", _cf_oracle())
+@query("crawl_frontier_gate", _cf_oracle())
 def q_crawl_frontier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CRAWL FRONTIER, COMPOSED — the governance pipeline end to
     end: sitemap documents (plain and .xml.gz) explode to candidate
@@ -3345,7 +3342,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("domain_link_profile", _dlp_oracle())
+@query("domain_link_profile", _dlp_oracle())
 def q_domain_link_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOMAIN LINK PROFILE — the rollup a page-quality prior is
     built from: the link-graph edge list (same codebook as
@@ -3549,7 +3546,7 @@ def _mix_oracle() -> str:
     return sql_source_mixture_plan()
 
 
-@staged("source_mixture_plan", _mix_oracle())
+@query("source_mixture_plan", _mix_oracle())
 def q_source_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SOURCE MIXTURE PLAN on REAL data — the per-source sampling
     weights multi-corpus training mixes with (w ∝ share^0.5,
@@ -3634,7 +3631,7 @@ GROUP BY 1, 2
 """
 
 
-@staged("streaming_release_monitor", _stream_release_oracle())
+@query("streaming_release_monitor", _stream_release_oracle())
 def q_streaming_release_monitor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3807,7 +3804,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("mpegts_stream_profile", _ts_oracle())
+@query("mpegts_stream_profile", _ts_oracle())
 def q_mpegts_stream_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MPEG-TS SEGMENT PROFILE — the ISO/IEC 13818-1 packet walk
     (operators/mpegts): PAT/PMT tables behind REAL MPEG CRC-32s, PES
@@ -4119,7 +4116,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("unicode_integrity_audit", _usec_oracle())
+@query("unicode_integrity_audit", _usec_oracle())
 def q_unicode_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNICODE INTEGRITY AUDIT — the pre-tokenization text-security
     gate (functions/unicodesec): trojan-source bidi controls
@@ -4215,7 +4212,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("hls_segment_alignment", _aln_oracle())
+@query("hls_segment_alignment", _aln_oracle())
 def q_hls_segment_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MANIFEST CLAIMS vs CONTAINER TRUTH across the streaming
     stack: HLS manifests explode to per-segment rows
@@ -4523,7 +4520,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("heif_image_audit", _heif_oracle())
+@query("heif_image_audit", _heif_oracle())
 def q_heif_image_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HEIF/AVIF AUDIT — the modern image formats (operators/heif):
     the 23008-12 meta-box walk over the SHARED BMFF box grammar,
@@ -4724,7 +4721,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("svg_image_audit", _svg_oracle())
+@query("svg_image_audit", _svg_oracle())
 def q_svg_image_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SVG SECURITY TRIAGE — the only image format that can carry
     executable code (operators/svg): script tags, on*= handler
@@ -4813,7 +4810,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("document_release_funnel", _drf_oracle())
+@query("document_release_funnel", _drf_oracle())
 def q_document_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OFFICE DOCUMENTS THROUGH THE RELEASE GATES — four layers in
     one plan: ZIP (central directory + inflate) → OOXML text
@@ -5065,7 +5062,7 @@ FROM media JOIN cb USING (k)
 """
 
 
-@staged("eml_corpus_audit", _eml_oracle())
+@query("eml_corpus_audit", _eml_oracle())
 def q_eml_corpus_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E-MAIL CORPUS AUDIT — RFC 5322/MIME from scratch
     (operators/eml): header unfolding, RFC 2047 encoded-words (B and

@@ -3,48 +3,63 @@
 bench.py times drain gates under a different protocol (fresh-JVM
 min-of-3, input diet) than batch queries; it reads the checked-in
 ``plans/queries.DRAIN_GATES`` set. These tests recompute the
-TRANSITIVE source scan (builder source, plus the source of any
-plans-module helper the builder calls that itself reaches the diet
-hook) and fail on any drift in either direction — a new gate, or a
-refactor that routes the diet call through another shared helper,
-must update the set in the same commit instead of silently landing in
-the wrong timing cohort (the r8/r9 full-pipeline misclassification)."""
+TRANSITIVE call scan (a builder calls the diet hook, or calls a
+top-level function of any plans module that reaches it, however many
+helpers deep) and fail on any drift in either direction — a new gate,
+or a refactor that routes the diet call through another shared
+helper, must update the set in the same commit instead of silently
+landing in the wrong timing cohort (the r8/r9 full-pipeline
+misclassification)."""
 
 from __future__ import annotations
 
+import ast
+import importlib
 import inspect
+import pkgutil
 import sys
+import textwrap
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from bigdata_invoice_stream_analysis_spark.plans import drains
+from bigdata_invoice_stream_analysis_spark import plans
 from bigdata_invoice_stream_analysis_spark.plans.queries import (
     DRAIN_GATES,
     QUERIES,
 )
 
+DIET = "_drain_input_diet"
+
+
+def _called_names(fn) -> set[str]:
+    """Names ``fn``'s body calls, read from the AST: ``f(...)`` gives
+    ``f`` and ``mod.f(...)`` gives ``f``. Decorators are not scanned."""
+    fdef = ast.parse(textwrap.dedent(inspect.getsource(fn))).body[0]
+    return {
+        node.func.id if isinstance(node.func, ast.Name) else node.func.attr
+        for stmt in fdef.body
+        for node in ast.walk(stmt)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, (ast.Name, ast.Attribute))
+    }
+
 
 def _scanned_gates() -> set[str]:
-    """Names whose builder reaches _drain_input_diet, directly or via
-    any plans.drains top-level helper (one transitive hop — the house
-    style keeps drain plumbing in that module)."""
-    helper_hits = {
-        name
-        for name, obj in vars(drains).items()
-        if inspect.isfunction(obj)
-        and obj.__module__ == drains.__name__
-        and "_drain_input_diet(" in inspect.getsource(obj)
-    }
-    out: set[str] = set()
-    for name, fn in QUERIES.items():
-        src = inspect.getsource(fn)
-        if "_drain_input_diet(" in src:
-            out.add(name)
-            continue
-        if any(f"{h}(" in src for h in helper_hits):
-            out.add(name)
-    return out
+    """Names whose builder reaches the diet hook through the call graph
+    of top-level functions in every plans module."""
+    helpers: dict[str, set[str]] = {}
+    for info in pkgutil.iter_modules(plans.__path__):
+        mod = importlib.import_module(f"{plans.__name__}.{info.name}")
+        for name, obj in vars(mod).items():
+            if inspect.isfunction(obj) and obj.__module__ == mod.__name__:
+                helpers[name] = _called_names(obj)
+    reaching = {DIET}
+    while new := {h for h, calls in helpers.items()
+                  if h not in reaching and calls & reaching}:
+        reaching |= new
+    return {name for name, fn in QUERIES.items()
+            if _called_names(fn) & reaching}
 
 
 def test_drain_gates_match_transitive_scan():

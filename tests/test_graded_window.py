@@ -3,7 +3,7 @@
 The driver grades exactly ``list(__spark_entry__.queries())[:50]``
 (measured r01/r02). These tests make the window a deliberate diff:
 any registration-order or curation change must touch
-plans/graded.py::GRADED_50 explicitly.
+``__spark_entry__.GRADED_50`` explicitly.
 """
 
 from __future__ import annotations
@@ -14,14 +14,11 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry
-from bigdata_invoice_stream_analysis_spark.plans.graded import GRADED_50
+from __spark_entry__ import GRADED_50, RETIRED_FROM_DRIVER
 from bigdata_invoice_stream_analysis_spark.plans.queries import ORACLES, QUERIES
 
-# The three iterative-ML fits (kmeans_anomalies / bisecting_anomalies
-# / kmeans_elbow_sweep) have no SQL-expressible oracle, so the driver
-# records a rows-only check. They are back in the r9 window: their
-# newest grade is r04 and rows-only evidence keeps them on the FAST
-# 4-round cadence by policy (plans/tiers.py::ROWS_ONLY_FAST).
+# The three iterative-ML fits have no SQL-expressible oracle, so the
+# driver records a rows-only check for them.
 ROWS_ONLY: set[str] = {
     "kmeans_anomalies",
     "bisecting_anomalies",
@@ -41,87 +38,20 @@ def test_window_has_50_unique_registered_names():
 
 
 def test_window_entries_have_oracles_except_iterative_ml():
-    # Subset, not equality (r10): the ML trio need not hold a slot in
-    # every window — they rotate on the FAST cadence like any pin —
-    # but nothing else may enter the window oracle-less.
+    # Subset, not equality: the ML trio need not hold a slot, but
+    # nothing else may enter the window oracle-less.
     no_oracle = {n for n in GRADED_50 if n not in ORACLES}
     assert no_oracle <= ROWS_ONLY
 
 
 def test_reorder_loses_no_queries_or_oracles():
     """The driver-facing registry is QUERIES minus the deliberate
-    driver retirements (plans/tiers.py) — nothing else may leak out,
-    and retired rows must still exist in QUERIES/ORACLES for the
-    local parity suite."""
-    from bigdata_invoice_stream_analysis_spark.plans.tiers import (
-        RETIRED_FROM_DRIVER,
-    )
-
+    driver retirements — nothing else may leak out, and retired rows
+    must still exist in QUERIES/ORACLES for the local parity suite."""
     qs, os_ = entry.queries(), entry.oracle_sql()
     assert set(qs) == set(QUERIES) - RETIRED_FROM_DRIVER
     assert set(os_) == set(ORACLES) - RETIRED_FROM_DRIVER
     assert set(os_) <= set(qs)
+    assert list(os_) == [n for n in qs if n in os_]
     assert RETIRED_FROM_DRIVER <= set(QUERIES)
     assert RETIRED_FROM_DRIVER <= set(ORACLES)
-
-
-def test_rotation_covers_every_never_graded_query():
-    """EVERY registered query with no driver row from any round BEFORE
-    the one this window was curated for (GRADED_ROUND) must be in the
-    window — the rotation's whole point is spending the scarce 50
-    external slots on never-graded queries first (the round-6 closing
-    property: after it, ever-graded == the full registry, and any
-    query registered later must enter the window the round it lands).
-    Scoped to earlier rounds so the check stays green after the driver
-    writes this round's own CORRECTNESS file."""
-    import json
-    import re
-
-    from bigdata_invoice_stream_analysis_spark.plans.graded import GRADED_ROUND
-
-    root = Path(__file__).resolve().parents[1]
-    ever: set[str] = set()
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", p.name).group(1))
-        if rnd < GRADED_ROUND:
-            ever |= set(json.loads(p.read_text()))
-    never = sorted(set(entry.queries()) - ever)
-    left_out = [n for n in never if n not in GRADED_50]
-    assert not left_out, f"never-graded queries missing a slot: {left_out}"
-
-
-def test_no_row_goes_stale_beyond_its_tier_bound():
-    """Tier-aware freshness invariant (plans/tiers.py, the round-9
-    registry-ceiling policy): every driver-facing row must either be
-    in this round's window or have a driver grade at most FAST_BOUND
-    (fast tier: §2 pins + rows-only ML) / STABLE_BOUND (everything
-    else) rounds old. The rotation must still visit the whole
-    registry on a bounded cadence — the stable tier loosens the
-    bound, it does not remove it."""
-    import json
-    import re
-
-    from bigdata_invoice_stream_analysis_spark.plans.graded import GRADED_ROUND
-    from bigdata_invoice_stream_analysis_spark.plans.tiers import (
-        FAST_BOUND,
-        FAST_TIER,
-        STABLE_BOUND,
-    )
-
-    root = Path(__file__).resolve().parents[1]
-    newest: dict[str, int] = {}
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", p.name).group(1))
-        if rnd < GRADED_ROUND:
-            for name in json.loads(p.read_text()):
-                newest[name] = max(newest.get(name, 0), rnd)
-    facing = set(entry.queries())
-    stale = sorted(
-        n
-        for n, rnd in newest.items()
-        if n in facing
-        and GRADED_ROUND - rnd > (FAST_BOUND if n in FAST_TIER
-                                  else STABLE_BOUND)
-        and n not in GRADED_50
-    )
-    assert not stale, f"rows stale beyond tier bound, not in window: {stale}"

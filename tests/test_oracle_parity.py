@@ -59,14 +59,13 @@ ORACLE_QUERIES = sorted(ORACLES.keys())
 ROWS_ONLY_QUERIES = sorted(set(QUERIES) - set(ORACLES))
 
 
-@pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_query_matches_oracle(spark, sf_dir, name):
-    sdf = QUERIES[name](spark, sf_dir)
+def assert_matches_oracle(name, sdf, con, sql):
+    """The driver's compare: same column names, same row count, same
+    order-insensitive normalized values."""
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
 
-    con = _duck_con(sf_dir)
-    res = con.execute(ORACLES[name])
+    res = con.execute(sql)
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()
 
@@ -82,6 +81,12 @@ def test_query_matches_oracle(spark, sf_dir, name):
         (a, b) for a, b in zip(sn, dn) if a != b
     ]
     assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
+
+
+@pytest.mark.parametrize("name", ORACLE_QUERIES)
+def test_query_matches_oracle(spark, sf_dir, name):
+    assert_matches_oracle(
+        name, QUERIES[name](spark, sf_dir), _duck_con(sf_dir), ORACLES[name])
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)

@@ -7,7 +7,6 @@ writer's files."""
 from __future__ import annotations
 
 import io
-import os
 
 import pytest
 from hypothesis import given, settings
@@ -18,7 +17,6 @@ from bigdata_invoice_stream_analysis_spark.operators.parquetmeta import (
     parse_parquet_footer,
 )
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -28,10 +26,10 @@ TABLES = [
 # --- direction 1: our parser vs pyarrow on real files ----------------------
 
 @pytest.mark.parametrize("table", TABLES)
-def test_parse_real_tables_matches_pyarrow(table):
+def test_parse_real_tables_matches_pyarrow(sf_dir, table):
     import pyarrow.parquet as pq
 
-    path = f"{SF_DIR}/{table}.parquet"
+    path = f"{sf_dir}/{table}.parquet"
     data = open(path, "rb").read()
     meta = parse_parquet_footer(data)
     ref = pq.ParquetFile(path).metadata
@@ -66,12 +64,12 @@ def test_parse_real_tables_matches_pyarrow(table):
                 assert st_["null_count"] == pc.statistics.null_count
 
 
-def test_parse_real_stats_values_match_pyarrow():
+def test_parse_real_stats_values_match_pyarrow(sf_dir):
     """Decoded min/max stats on a numeric and a string column match
     pyarrow's decoded statistics (orders has both)."""
     import pyarrow.parquet as pq
 
-    path = f"{SF_DIR}/orders.parquet"
+    path = f"{sf_dir}/orders.parquet"
     meta = parse_parquet_footer(open(path, "rb").read())
     ref = pq.ParquetFile(path).metadata
     for gi, rg in enumerate(meta["row_groups"]):

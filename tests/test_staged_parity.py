@@ -1,92 +1,32 @@
-"""Driver-compare parity for the STAGED queries (plans/staged.py):
-the same sorted-columns / normalized-rows / order-insensitive
-comparison the correctness driver applies to registered queries, run
-over the staging area so each round's registration is a mechanical
-move with the evidence already green.
-
-Round 9: 23 rows promoted into the registry (plans/promoted.py — they
-are now covered by tests/test_oracle_parity.py instead) and 5 twins
-retired from staging with their capability evidence kept HERE: the
-RETIRED_TWINS builders still run under the same driver compare."""
+"""Driver-compare parity for the unregistered rows in plans/staged.py
+(the staging area plus the retired twins): the same compare the
+correctness driver applies to registered queries
+(tests/test_oracle_parity.py), run over ``STAGED_QUERIES``."""
 
 from __future__ import annotations
 
-import datetime
-import math
-import os
-import sys
-from pathlib import Path
-
-import duckdb
 import pytest
+from test_oracle_parity import _duck_con, assert_matches_oracle
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-
-# importing the registry first makes the promotion/retirement pops
-# deterministic regardless of test-collection order
-import bigdata_invoice_stream_analysis_spark.plans.queries  # noqa: F401
-from bigdata_invoice_stream_analysis_spark.plans.promoted import (
-    RETIRED_TWIN_ORACLES,
-    RETIRED_TWINS,
-)
+from bigdata_invoice_stream_analysis_spark.plans.queries import QUERIES
 from bigdata_invoice_stream_analysis_spark.plans.staged import (
     STAGED_ORACLES,
     STAGED_QUERIES,
 )
 
-# staging area + retired twins, one parametrized surface
-ALL_QUERIES = {**STAGED_QUERIES, **RETIRED_TWINS}
-ALL_ORACLES = {**STAGED_ORACLES, **RETIRED_TWIN_ORACLES}
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _norm(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else round(v, 6)
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, list):
-        return tuple(_norm(x) for x in v)
-    return v
-
 
 @pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')")
-    return con
+def duck(sf_dir):
+    return _duck_con(sf_dir)
 
 
 def test_registry_shape():
     assert set(STAGED_ORACLES) == set(STAGED_QUERIES)
-    assert set(RETIRED_TWIN_ORACLES) == set(RETIRED_TWINS)
-    # staging area count is monotonically decreasing (VERDICT r8
-    # item 3): 51 at r8 close, 23 after the r9 conversions
-    assert len(STAGED_QUERIES) == 23
-    assert len(RETIRED_TWINS) == 5
-    # promoted/retired rows are really gone from the staging area
-    assert not (set(STAGED_QUERIES) & set(RETIRED_TWINS))
+    # a staged row is either registered or staged, never both
+    assert set(STAGED_QUERIES).isdisjoint(QUERIES)
 
 
-@pytest.mark.parametrize("name", sorted(ALL_QUERIES))
-def test_staged_query_matches_oracle(spark, duck, name):
-    sdf = ALL_QUERIES[name](spark, SF_DIR)
-    scols = [c.lower() for c in sdf.columns]
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(ALL_ORACLES[name])
-    dcols = [d[0].lower() for d in res.description]
-    drows = res.fetchall()
-    assert sorted(scols) == sorted(dcols)
-    so = sorted(range(len(scols)), key=lambda i: scols[i])
-    do = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    sn = sorted(tuple(_norm(r[i]) for i in so) for r in srows)
-    dn = sorted(tuple(_norm(r[i]) for i in do) for r in drows)
-    assert len(sn) == len(dn) and sn == dn
+@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+def test_staged_query_matches_oracle(spark, sf_dir, duck, name):
+    assert_matches_oracle(
+        name, STAGED_QUERIES[name](spark, sf_dir), duck, STAGED_ORACLES[name])
