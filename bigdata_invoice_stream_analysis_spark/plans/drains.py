@@ -9,8 +9,6 @@ tests/test_graded_window.py and the full oracle-parity suite).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,7 +21,6 @@ from bigdata_invoice_stream_analysis_spark.plans.queries import (
     SQL_FIELDS,
     SQL_INVALID,
     _drain_input_diet,
-    _drain_state_partitions,
     _run_drain,
     purchase_rows,
     query,
@@ -32,6 +29,11 @@ from bigdata_invoice_stream_analysis_spark.plans.queries import (
 )
 from bigdata_invoice_stream_analysis_spark.scratch import fresh_checkpoint
 from bigdata_invoice_stream_analysis_spark.sources.tables import load_table
+from bigdata_invoice_stream_analysis_spark.streaming.runtime import (
+    rocksdb_provider,
+    shuffle_partitions,
+    state_partitions,
+)
 
 # ---------------------------------------------------------------------------
 # Q: driver-graded STREAMING correctness — the windowed aggregation runs
@@ -334,29 +336,6 @@ def _stage_bucketed_stream(
     )
 
 
-@contextmanager
-def rocksdb_provider(spark: SparkSession):
-    """Run the enclosed block with the RocksDB state-store provider
-    (what the state-v2 API requires), restoring the prior providerClass
-    — or unsetting it — afterwards. ONE body shared by the four
-    state-v2 gates, the scaling probe, and the TTL tests, so a restore
-    fix lands everywhere at once."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 def _drive_until_drained(
     spark: SparkSession, writer, drained, what: str,
     partitions: int | None = None,
@@ -367,13 +346,9 @@ def _drive_until_drained(
     timer-evaluation micro-batches, so an availableNow drain NEVER
     terminates (measured: 167+ empty batches in 90 s) — driver-side
     stop is the only clean drain. Propagates streaming-query
-    exceptions; times out after 300 s. Shuffle partitions are
-    right-sized around the run exactly as _run_drain does (one state
-    store per shuffle partition per micro-batch)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    n = partitions or _drain_state_partitions(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
+    exceptions; times out after 300 s. State partitions are sized as
+    _run_drain sizes them."""
+    with shuffle_partitions(spark, partitions or state_partitions(spark)):
         q = writer.start()
         try:
             for _ in range(600):
@@ -388,8 +363,6 @@ def _drive_until_drained(
         finally:
             q.stop()
             q.awaitTermination(60)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def run_custom_state_drain(
@@ -475,7 +448,7 @@ def run_custom_state_drain(
     # Python keyed-state gates size to owned cores, not the JVM-gate
     # default: their bottleneck is per-group Python processing
     # (measured 6.9 s at 32 partitions vs 12.5 s at 8 on this drain).
-    n_parts = _drain_state_partitions(spark, python_state=True)
+    n_parts = state_partitions(spark, python_state=True)
     if stop_after_files:
         _drive_until_drained(spark, writer, drained, "TTL", partitions=n_parts)
     else:
@@ -721,7 +694,7 @@ def run_timer_state_drain(
     )
     _drive_until_drained(
         spark, writer, drained, "timer",
-        partitions=_drain_state_partitions(spark, python_state=True),
+        partitions=state_partitions(spark, python_state=True),
     )
     return acc
 
@@ -853,7 +826,7 @@ def q_streaming_state_list_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _run_drain(
             spark, writer,
-            partitions=_drain_state_partitions(spark, python_state=True),
+            partitions=state_partitions(spark, python_state=True),
         )
     return _snapshot_df(
         spark, acc,
@@ -1323,9 +1296,7 @@ def q_streaming_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     both watermark/update bounded; scoring is plan-literal codegen."""
     from bigdata_invoice_stream_analysis_spark.streaming.app import run_pipeline
 
-    return _run_full_pipeline_gate(
-        spark, sf_dir, run_pipeline, "full_pipe", n_queries=4
-    )
+    return _run_full_pipeline_gate(spark, sf_dir, run_pipeline, "full_pipe")
 
 
 @query("streaming_full_pipeline_router", oracle=FULL_PIPELINE_ORACLE)
@@ -1350,17 +1321,18 @@ def q_streaming_full_pipeline_router(
     )
 
     return _run_full_pipeline_gate(
-        spark, sf_dir, run_pipeline_router, "full_pipe_router", n_queries=3
+        spark, sf_dir, run_pipeline_router, "full_pipe_router"
     )
 
 
 def _run_full_pipeline_gate(
-    spark: SparkSession, sf_dir: str, runner, prefix: str, n_queries: int
+    spark: SparkSession, sf_dir: str, runner, prefix: str
 ) -> DataFrame:
     """Shared drain/read/flatten body for the two full-pipeline
     topology gates: stage event-time-ordered line buckets, run the
-    topology under ``runner`` (run_pipeline or run_pipeline_router)
-    with parquet sinks + fresh checkpoints, then flatten all four sink
+    topology under ``runner`` (run_pipeline or run_pipeline_router,
+    which size their own state partitions) with parquet sinks + fresh
+    checkpoints, then flatten all four sink
     outputs into one (sink, k1, k2, n) relation for the shared
     oracle."""
     from bigdata_invoice_stream_analysis_spark.scratch import fresh_checkpoint
@@ -1408,30 +1380,6 @@ def _run_full_pipeline_gate(
             "bisecting": ModelSpec(BISECT_CENTROIDS, BISECT_THRESHOLD),
         },
     )
-    # _run_drain's state-partition sizing, inlined: run_pipeline starts
-    # its own queries, so the conf must wrap the whole topology. The
-    # topology runs its queries CONCURRENTLY, so each query owns
-    # cores/n_queries (passed explicitly by the two gate wrappers —
-    # r10 ADVICE: the old `"router" in prefix` substring inference
-    # silently mis-divided for any new caller). r9 sized each query's
-    # share as a PYTHON-state gate (owned cores), but every stateful
-    # stage in this topology is a JVM aggregation (legacy_state=False →
-    # invoice_updates is a groupBy agg; the cancellation window is a
-    # JVM window agg; scoring is stateless codegen), and the r9 driver
-    # scaling block showed the tell: 0.68/0.71 low/high ratios — the
-    # 8-core run BEAT the 32-core run because 8 parts/query × 4
-    # queries over-provisioned JVM state stores. JVM-gate sizing
-    # (owned/4, floor 2) applies; before/after numbers in
-    # OPTIMIZATION_r10.md.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(
-            _drain_state_partitions(
-                spark, python_state=False, concurrent=n_queries
-            )
-        ),
-    )
     queries = []
     try:
         queries = runner(lines, cfg)
@@ -1446,7 +1394,6 @@ def _run_full_pipeline_gate(
         for q_ in queries:
             if q_.isActive:
                 q_.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     def _read(name: str, fallback_schema: str) -> DataFrame:
         import glob as globmod

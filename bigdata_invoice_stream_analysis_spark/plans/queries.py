@@ -29,6 +29,7 @@ from bigdata_invoice_stream_analysis_spark.operators import validate
 from bigdata_invoice_stream_analysis_spark.operators.topk import kth_largest, top_k
 from bigdata_invoice_stream_analysis_spark.scratch import fresh_checkpoint
 from bigdata_invoice_stream_analysis_spark.sources.tables import load_table
+from bigdata_invoice_stream_analysis_spark.streaming import runtime
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -1541,49 +1542,6 @@ def register(name: str):
     return QUERIES[name]
 
 
-def _drain_state_partitions(
-    spark: SparkSession, python_state: bool = False, concurrent: int = 1
-) -> int:
-    """State-partition sizing for the streaming drain gates (r9, guide
-    §2.2 "fewer, larger partitions" applied to streaming state, where
-    AQE cannot coalesce — the count is fixed at first checkpoint).
-
-    Streaming stateful operators create one state-store instance per
-    shuffle partition per micro-batch (a stream-stream join creates
-    FOUR). Measured on this seat (32 cores, sf0.1 drain volume): the
-    per-store fixed cost (load + commit + checkpoint files) dominates
-    pure-JVM gates whose per-partition state is tiny, and it grows
-    SUPERLINEARLY with concurrent store count — the stream-stream
-    interval join drained in 5.0 s at 8 partitions vs 10.2 s at 32
-    (identical result; summed in-task store times collapsed 13×), and
-    a plain keyed agg drain read 1.0 s at 8 vs 1.65 s at 32. Python
-    keyed-state gates are the OPPOSITE: their bottleneck is per-group
-    Python processing, which parallelizes across workers — the same
-    custom-state drain read 6.9 s at 32 partitions vs 12.5 s at 8 —
-    so they size to the cores the query owns.
-
-    Sizing rule, env-overridable for production
-    (SPARK_GRAFT_DRAIN_STATE_PARTITIONS): Python-state gates get the
-    owned cores (min(32, cores) split across `concurrent` queries of a
-    multi-sink topology); JVM-state gates get a quarter of that
-    (floor 2) — per-partition state at drain volume is KB-scale, far
-    under any per-store fixed cost. On a production cluster the right
-    count derives from state volume (e.g. 1-4 GB of RocksDB state per
-    partition), which at 100 TB yields ≥ cluster cores — that is what
-    the env override expresses; the local default keeps the driver's
-    low-core bench runs comparable because it derives from
-    SPARK_GRAFT_CPUS, not from a constant."""
-    env = os.environ.get("SPARK_GRAFT_DRAIN_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
-    owned = max(
-        1, min(32, spark.sparkContext.defaultParallelism) // max(1, concurrent)
-    )
-    if python_state:
-        return owned
-    return max(2, owned // 4)
-
-
 def _run_drain(
     spark: SparkSession,
     writer,
@@ -1591,25 +1549,16 @@ def _run_drain(
     partitions: int | None = None,
 ) -> None:
     """Start a streaming writer and block until its availableNow drain
-    finishes, with `spark.sql.shuffle.partitions` temporarily set to
-    ``partitions`` (default: the _drain_state_partitions JVM-gate
-    sizing). State partition count is a deliberate sizing decision for
-    a streaming job (set once at first checkpoint), not something to
-    inherit from the batch default — under the driver's vanilla
-    session that default would mean 200 state stores + checkpoint
-    directories per micro-batch."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    n = partitions or _drain_state_partitions(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
+    finishes, with ``partitions`` state partitions (default: the
+    streaming.runtime.state_partitions JVM-state rule for one query)."""
+    n = partitions or runtime.state_partitions(spark)
+    with runtime.shuffle_partitions(spark, n):
         q = writer.start()
         if not q.awaitTermination(timeout):
             q.stop()
             raise TimeoutError(
                 f"streaming drain did not finish within {timeout}s"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 # POSITIVE drain-gate classification (r10 ADVICE: bench.py used to

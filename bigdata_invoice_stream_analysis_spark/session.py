@@ -2,10 +2,13 @@
 
 Local testing runs a single JVM (``local[N]``); production posture is a
 multi-executor cluster, so every default here is chosen to survive both:
-AQE on (runtime coalesce + skew-join handling), shuffle partitions sized
-to cores locally (a cluster deployment overrides via ``extra_conf`` or
-spark-submit), Arrow enabled for the few pandas-UDF operators, UTC
-session time zone so timestamp semantics match the DuckDB oracle.
+AQE on (runtime coalesce + skew-join handling), batch shuffle
+partitions sized to cores locally (a cluster deployment overrides via
+``extra_conf`` or spark-submit), Arrow enabled for the few pandas-UDF
+operators, UTC session time zone so timestamp semantics match the
+DuckDB oracle. Streaming queries do not inherit the shuffle count:
+streaming.runtime.state_partitions sizes each stateful query when it
+starts, from the cores and the number of concurrent queries.
 """
 
 from __future__ import annotations

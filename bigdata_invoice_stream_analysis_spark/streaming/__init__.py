@@ -15,5 +15,7 @@ Modules:
   state     — applyInPandasWithState legacy-exact keyed state (W2/A4)
   scoring   — stream-safe centroid scoring (M3/M4, pure column math)
   sinks     — Kafka / parquet / memory sinks + foreachBatch router (S4/W4/W6)
+  runtime   — per-query state-partition sizing and the RocksDB scope
+  app       — the four-sink topologies (InvoicePipeline.main twin)
   producer  — replay producer simulator (S7)
 """

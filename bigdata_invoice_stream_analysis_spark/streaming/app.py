@@ -16,8 +16,10 @@ plan-literal — no model broadcast, no Python in the stream.
 Scale posture: each query checkpoints independently (replayable Kafka
 offsets ⇒ at-least-once per sink, no receiver data-loss window like the
 reference's WAL-less ZK receiver); state lives in the partitioned state
-store (RocksDB via conf for large key spaces); AQE is off in streaming
-but shuffle partitions are sized by the session factory.
+store (RocksDB via conf for large key spaces). AQE is off in streaming,
+so each query starts with its own state-partition count from
+streaming.runtime.state_partitions (the topology's cores split across
+its concurrent queries); the caller's session keeps its own count.
 """
 
 from __future__ import annotations
@@ -28,12 +30,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from bigdata_invoice_stream_analysis_spark.streaming import pipeline as P
-from bigdata_invoice_stream_analysis_spark.streaming import scoring, sinks, state
+from bigdata_invoice_stream_analysis_spark.streaming import (
+    runtime,
+    scoring,
+    sinks,
+    state,
+)
 
 TOPIC_INVALID = "facturas_erroneas"  # IP:27
 TOPIC_CANCELLATIONS = "cancelaciones"  # IP:28
 TOPIC_ANOMALIES_KMEANS = "anomalias_kmeans"  # IP:26
 TOPIC_ANOMALIES_BISECT = "anomalias_bisect_kmeans"  # IP:29
+
+
+def _topic(model_name: str) -> str:
+    return {
+        "kmeans": TOPIC_ANOMALIES_KMEANS,
+        "bisecting": TOPIC_ANOMALIES_BISECT,
+    }.get(model_name, f"anomalias_{model_name}")
 
 
 @dataclass
@@ -95,43 +109,64 @@ def _start(
     raise ValueError(f"unknown sink_mode {cfg.sink_mode!r}")
 
 
-def run_pipeline(lines: DataFrame, cfg: PipelineConfig) -> list[StreamingQuery]:
-    """Wire all four branches onto a normalized line stream
-    (sources.*_lines_source) and start their queries. If wiring fails
-    after some queries started (bad checkpoint dir, broken sink), the
-    survivors are stopped before the error propagates — a partial
-    topology must not leak active streams into the session."""
+def _wire(
+    lines: DataFrame, cfg: PipelineConfig, shared_scan: bool
+) -> list[StreamingQuery]:
+    """The wiring both topologies share: the invalid-line and windowed
+    cancellation queries, then the anomaly queries on the per-invoice
+    feature stream — one per model, or with ``shared_scan`` one
+    foreachBatch router for all of them. Every query starts under the
+    state-partition count for its kind of state in a topology of that
+    many concurrent queries. If wiring fails after some queries started
+    (bad checkpoint dir, broken sink), the survivors are stopped before
+    the error propagates — a partial topology must not leak active
+    streams into the session."""
+    spark = lines.sparkSession
+    model_queries = min(1, len(cfg.models)) if shared_scan else len(cfg.models)
+    concurrent = 2 + model_queries
     queries: list[StreamingQuery] = []
     try:
-        queries.append(
-            _start(P.invalid_lines(lines), TOPIC_INVALID, cfg, "append")
-        )
-        queries.append(
-            _start(
-                P.cancellation_counts(
-                    lines, window=cfg.window, slide=cfg.slide,
-                    watermark=cfg.watermark, time_mode=cfg.time_mode,
+        with runtime.shuffle_partitions(
+            spark, runtime.state_partitions(spark, concurrent=concurrent)
+        ):
+            queries.append(
+                _start(P.invalid_lines(lines), TOPIC_INVALID, cfg, "append")
+            )
+            queries.append(
+                _start(
+                    P.cancellation_counts(
+                        lines, window=cfg.window, slide=cfg.slide,
+                        watermark=cfg.watermark, time_mode=cfg.time_mode,
+                    ),
+                    TOPIC_CANCELLATIONS, cfg, "append",
+                )
+            )
+        if cfg.models:
+            purchases = P.good_purchases(lines, time_mode=cfg.time_mode)
+            if cfg.legacy_state:
+                updates = state.apply_invoice_state(purchases)
+            else:
+                updates = P.invoice_updates(
+                    purchases, weighted_avg=cfg.weighted_avg
+                )
+            with runtime.shuffle_partitions(
+                spark,
+                runtime.state_partitions(
+                    spark, python_state=cfg.legacy_state, concurrent=concurrent
                 ),
-                TOPIC_CANCELLATIONS, cfg, "append",
-            )
-        )
-
-        purchases = P.good_purchases(lines, time_mode=cfg.time_mode)
-        if cfg.legacy_state:
-            updates = state.apply_invoice_state(purchases)
-        else:
-            updates = P.invoice_updates(purchases, weighted_avg=cfg.weighted_avg)
-
-        topic_by_model = {
-            "kmeans": TOPIC_ANOMALIES_KMEANS,
-            "bisecting": TOPIC_ANOMALIES_BISECT,
-        }
-        for model_name, spec in cfg.models.items():
-            flagged = scoring.anomalies_with_centroids(
-                updates, spec.centers, spec.threshold, cfg.feature_cols
-            )
-            topic = topic_by_model.get(model_name, f"anomalias_{model_name}")
-            queries.append(_start(flagged, topic, cfg, "update"))
+            ):
+                if shared_scan:
+                    specs = [(_topic(m), sp) for m, sp in cfg.models.items()]
+                    queries.append(_model_router(updates, specs, cfg))
+                else:
+                    for model_name, spec in cfg.models.items():
+                        flagged = scoring.anomalies_with_centroids(
+                            updates, spec.centers, spec.threshold,
+                            cfg.feature_cols,
+                        )
+                        queries.append(
+                            _start(flagged, _topic(model_name), cfg, "update")
+                        )
     except Exception:
         for q in queries:
             try:
@@ -140,6 +175,13 @@ def run_pipeline(lines: DataFrame, cfg: PipelineConfig) -> list[StreamingQuery]:
                 pass  # best-effort cleanup; the wiring error propagates
         raise
     return queries
+
+
+def run_pipeline(lines: DataFrame, cfg: PipelineConfig) -> list[StreamingQuery]:
+    """Wire all four branches onto a normalized line stream
+    (sources.*_lines_source) and start their queries: one anomaly query
+    per model, so 2 + len(cfg.models) queries run concurrently."""
+    return _wire(lines, cfg, shared_scan=False)
 
 
 def _model_router(
@@ -158,8 +200,8 @@ def _model_router(
     if cfg.sink_mode not in ("parquet", "kafka"):
         # Validate at WIRING time: raising inside the foreachBatch
         # callback would start all queries successfully and fail
-        # asynchronously on batch 0, bypassing run_pipeline_router's
-        # stop-survivors cleanup.
+        # asynchronously on batch 0, bypassing _wire's stop-survivors
+        # cleanup.
         raise ValueError(
             "the foreachBatch router needs an idempotent batch sink; "
             f"sink_mode {cfg.sink_mode!r} is not"
@@ -205,45 +247,7 @@ def run_pipeline_router(
     reference's 4-sink deployment. Output is row-identical to
     run_pipeline (the streaming_full_pipeline_router gate pins both
     against one oracle)."""
-    queries: list[StreamingQuery] = []
-    try:
-        queries.append(
-            _start(P.invalid_lines(lines), TOPIC_INVALID, cfg, "append")
-        )
-        queries.append(
-            _start(
-                P.cancellation_counts(
-                    lines, window=cfg.window, slide=cfg.slide,
-                    watermark=cfg.watermark, time_mode=cfg.time_mode,
-                ),
-                TOPIC_CANCELLATIONS, cfg, "append",
-            )
-        )
-        if cfg.models:
-            purchases = P.good_purchases(lines, time_mode=cfg.time_mode)
-            if cfg.legacy_state:
-                updates = state.apply_invoice_state(purchases)
-            else:
-                updates = P.invoice_updates(
-                    purchases, weighted_avg=cfg.weighted_avg
-                )
-            topic_by_model = {
-                "kmeans": TOPIC_ANOMALIES_KMEANS,
-                "bisecting": TOPIC_ANOMALIES_BISECT,
-            }
-            specs = [
-                (topic_by_model.get(m, f"anomalias_{m}"), spec)
-                for m, spec in cfg.models.items()
-            ]
-            queries.append(_model_router(updates, specs, cfg))
-    except Exception:
-        for q in queries:
-            try:
-                q.stop()
-            except Exception:
-                pass  # best-effort cleanup; the wiring error propagates
-        raise
-    return queries
+    return _wire(lines, cfg, shared_scan=True)
 
 
 def await_all(queries: list[StreamingQuery], timeout: int | None = None) -> None:

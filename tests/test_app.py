@@ -15,6 +15,7 @@ from bigdata_invoice_stream_analysis_spark.streaming.app import (
     run_pipeline,
 )
 from bigdata_invoice_stream_analysis_spark.streaming.producer import replay_to_dir
+from bigdata_invoice_stream_analysis_spark.streaming.runtime import state_partitions
 from bigdata_invoice_stream_analysis_spark.streaming.sources import file_lines_source
 
 
@@ -37,32 +38,76 @@ LINES = [
     line("I4", 1, "1/4/2011 23:59", "10.2"),
 ]
 
+SINKS = (
+    "facturas_erroneas",
+    "cancelaciones",
+    "anomalias_kmeans",
+    "anomalias_bisect_kmeans",
+)
 
-def test_run_pipeline_parquet_sinks(spark, tmp_path):
-    src = tmp_path / "in"
+
+def _replay(tmp_path, name: str, chunk: int):
+    """LINES replayed as chunk-line files into ``tmp_path / name``."""
     raw = tmp_path / "raw.csv"
     raw.write_text("\n".join(LINES) + "\n")
-    replay_to_dir(str(raw), str(src), chunk=4)
+    replay_to_dir(str(raw), str(tmp_path / name), chunk=chunk)
+    return tmp_path / name
+
+
+def _config(out_dir: str, **kw) -> PipelineConfig:
+    """The two-model parquet configuration the topology tests share."""
+    center = [10.0, 9.5, 11.0, 10.0, 3.0]
+    return PipelineConfig(
+        **{
+            "sink_mode": "parquet",
+            "out_dir": out_dir,
+            "time_mode": "event",
+            "watermark": "1 minute",
+            "available_now": True,
+            "models": {
+                "kmeans": ModelSpec(centers=[center], threshold=1000.0),
+                "bisecting": ModelSpec(centers=[center], threshold=1000.0),
+            },
+            "feature_cols": [
+                "AvgUnitPrice", "MinUnitPrice", "MaxUnitPrice", "Time",
+                "NumberItems",
+            ],
+            **kw,
+        }
+    )
+
+
+def _drain(queries) -> None:
+    for q in queries:
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+
+
+def _sink_rows(spark, out_dir: str, sink: str):
+    """A sink's columns and sorted rows, without the replay-bookkeeping
+    batch_id (batch numbering differs between topologies and across
+    restarts)."""
+    df = spark.read.parquet(f"{out_dir}/{sink}").drop("batch_id")
+    cols = sorted(df.columns)
+    return cols, sorted(map(tuple, df.select(*cols).collect()))
+
+
+def _state_partition_counts(queries) -> list[set[int]]:
+    """Per stateful query, the state-partition counts its last
+    micro-batch reported (stateless queries report no operators)."""
+    counts = []
+    for q in queries:
+        ops = q.lastProgress["stateOperators"]
+        if ops:
+            counts.append({op["numShufflePartitions"] for op in ops})
+    return counts
+
+
+def test_run_pipeline_parquet_sinks(spark, tmp_path):
+    src = _replay(tmp_path, "in", chunk=4)
 
     out = str(tmp_path / "out")
-    cfg = PipelineConfig(
-        sink_mode="parquet",
-        out_dir=out,
-        time_mode="event",
-        watermark="1 minute",
-        available_now=True,
-        models={
-            "kmeans": ModelSpec(
-                centers=[[10.0, 9.5, 11.0, 10.0, 3.0]], threshold=1000.0
-            ),
-            "bisecting": ModelSpec(
-                centers=[[10.0, 9.5, 11.0, 10.0, 3.0]], threshold=1000.0
-            ),
-        },
-        feature_cols=[
-            "AvgUnitPrice", "MinUnitPrice", "MaxUnitPrice", "Time", "NumberItems",
-        ],
-    )
+    cfg = _config(out)
     lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
     queries = run_pipeline(lines, cfg)
     assert len(queries) == 4
@@ -93,49 +138,21 @@ def test_run_pipeline_router_matches_four_query_topology(spark, tmp_path):
         run_pipeline_router,
     )
 
-    src = tmp_path / "in"
-    raw = tmp_path / "raw.csv"
-    raw.write_text("\n".join(LINES) + "\n")
-    replay_to_dir(str(raw), str(src), chunk=4)
-    cfg_kw = dict(
-        sink_mode="parquet",
-        time_mode="event",
-        watermark="1 minute",
-        available_now=True,
-        models={
-            "kmeans": ModelSpec(
-                centers=[[10.0, 9.5, 11.0, 10.0, 3.0]], threshold=1000.0
-            ),
-            "bisecting": ModelSpec(
-                centers=[[10.0, 9.5, 11.0, 10.0, 3.0]], threshold=1000.0
-            ),
-        },
-        feature_cols=[
-            "AvgUnitPrice", "MinUnitPrice", "MaxUnitPrice", "Time", "NumberItems",
-        ],
-    )
+    src = _replay(tmp_path, "in", chunk=4)
     lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
     out_a = str(tmp_path / "out_four")
-    qa = run_pipeline(lines, PipelineConfig(out_dir=out_a, **cfg_kw))
+    qa = run_pipeline(lines, _config(out_a))
     assert len(qa) == 4
     out_b = str(tmp_path / "out_router")
-    qb = run_pipeline_router(lines, PipelineConfig(out_dir=out_b, **cfg_kw))
+    qb = run_pipeline_router(lines, _config(out_b))
     assert len(qb) == 3  # invalid + cancellations + ONE anomaly router
     for q in (*qa, *qb):
         q.awaitTermination(120)
 
-    for sink in (
-        "facturas_erroneas",
-        "cancelaciones",
-        "anomalias_kmeans",
-        "anomalias_bisect_kmeans",
-    ):
-        a = spark.read.parquet(f"{out_a}/{sink}").drop("batch_id")
-        b = spark.read.parquet(f"{out_b}/{sink}").drop("batch_id")
-        assert sorted(a.columns) == sorted(b.columns), sink
-        ra = sorted(map(tuple, a.select(*sorted(a.columns)).collect()))
-        rb = sorted(map(tuple, b.select(*sorted(a.columns)).collect()))
-        assert ra == rb, f"{sink}: topologies disagree"
+    for sink in SINKS:
+        assert _sink_rows(spark, out_a, sink) == _sink_rows(
+            spark, out_b, sink
+        ), f"{sink}: topologies disagree"
     # the router landed the outlier in both model sinks
     km = spark.read.parquet(f"{out_b}/anomalias_kmeans")
     assert "I9" in {r.InvoiceNo for r in km.collect()}
@@ -144,13 +161,125 @@ def test_run_pipeline_router_matches_four_query_topology(spark, tmp_path):
     # topology failing asynchronously on batch 0)
     with pytest.raises(ValueError, match="idempotent batch sink"):
         run_pipeline_router(
-            lines,
-            PipelineConfig(
-                out_dir=str(tmp_path / "out_bad"),
-                **{**cfg_kw, "sink_mode": "memory"},
-            ),
+            lines, _config(str(tmp_path / "out_bad"), sink_mode="memory")
         )
     assert not (tmp_path / "out_bad" / "anomalias_kmeans").exists()
+
+
+@pytest.mark.parametrize("legacy_state", [False, True])
+def test_run_pipeline_sizes_state_partitions_per_query(
+    spark, tmp_path, monkeypatch, legacy_state
+):
+    """Each stateful query starts with the streaming.runtime rule for a
+    four-query topology (Python keyed state when legacy_state), and the
+    caller's session keeps its own shuffle-partition count. The rule
+    sees 32 cores, where JVM and Python state get different counts."""
+    monkeypatch.delenv("SPARK_GRAFT_DRAIN_STATE_PARTITIONS", raising=False)
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda sc: 32)
+    )
+    src = _replay(tmp_path, "in", chunk=4)
+    lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
+    queries = run_pipeline(
+        lines, _config(str(tmp_path / "out"), legacy_state=legacy_state)
+    )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    _drain(queries)
+
+    jvm = state_partitions(spark, concurrent=4)
+    model = state_partitions(spark, python_state=legacy_state, concurrent=4)
+    assert (jvm, model) == (2, 8 if legacy_state else 2)
+    # invalid lines are stateless; cancellations, then one query per model
+    assert _state_partition_counts(queries) == [{jvm}, {model}, {model}]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_wiring_failure_restores_conf_and_stops_started_queries(
+    spark, tmp_path, monkeypatch
+):
+    """A wiring error after some queries started leaves no active
+    stream behind and the session's shuffle-partition count as it was,
+    for a failure inside the sized block of either topology. The
+    queries run on an unbounded trigger, so only the cleanup stops
+    them."""
+    from bigdata_invoice_stream_analysis_spark.streaming import app
+
+    src = tmp_path / "in"
+    src.mkdir()
+    lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
+    before = {q.id for q in spark.streams.active}
+
+    # The router refuses a non-idempotent sink after the invalid and
+    # cancellation queries are already running.
+    with pytest.raises(ValueError, match="idempotent batch sink"):
+        app.run_pipeline_router(
+            lines,
+            _config(
+                str(tmp_path / "router"), sink_mode="memory",
+                available_now=False,
+            ),
+        )
+    assert {q.id for q in spark.streams.active} == before
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+    # The last of run_pipeline's four starts fails.
+    real_start, started = app._start, []
+
+    def failing_start(df, name, cfg, output_mode):
+        if name == app.TOPIC_ANOMALIES_BISECT:
+            raise RuntimeError("sink unavailable")
+        q = real_start(df, name, cfg, output_mode)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(app, "_start", failing_start)
+    with pytest.raises(RuntimeError, match="sink unavailable"):
+        app.run_pipeline(
+            lines, _config(str(tmp_path / "four"), available_now=False)
+        )
+    assert len(started) == 3
+    assert not any(q.isActive for q in started)
+    assert {q.id for q in spark.streams.active} == before
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_restart_keeps_checkpointed_state_partitions(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint keeps the state-partition count it was started
+    with: half the input drained under an override of 3 partitions,
+    then the rest resumed from the same checkpoint without it, reports
+    3 partitions and leaves all four sinks equal to one clean run."""
+    staged, src = _replay(tmp_path, "staged", chunk=2), tmp_path / "in"
+    files = sorted(os.listdir(staged))
+    assert len(files) == 4
+    src.mkdir()
+
+    def feed(names) -> None:
+        for n in names:  # rename keeps the replay's increasing mtimes
+            os.rename(staged / n, src / n)
+
+    def run(out_dir: str):
+        lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
+        queries = run_pipeline(lines, _config(out_dir))
+        _drain(queries)
+        return queries
+
+    resumed_out = str(tmp_path / "resumed")
+    feed(files[:2])
+    monkeypatch.setenv("SPARK_GRAFT_DRAIN_STATE_PARTITIONS", "3")
+    assert _state_partition_counts(run(resumed_out)) == [{3}] * 3
+    monkeypatch.delenv("SPARK_GRAFT_DRAIN_STATE_PARTITIONS")
+    feed(files[2:])
+    assert state_partitions(spark, concurrent=4) != 3
+    assert _state_partition_counts(run(resumed_out)) == [{3}] * 3
+
+    clean_out = str(tmp_path / "clean")
+    run(clean_out)
+    for sink in SINKS:
+        assert _sink_rows(spark, resumed_out, sink) == _sink_rows(
+            spark, clean_out, sink
+        ), f"{sink}: the resumed run differs from a clean run"
 
 
 def test_train_all_cli(spark, tmp_path):

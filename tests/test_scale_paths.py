@@ -54,7 +54,7 @@ def test_legacy_state_on_rocksdb(spark, tmp_path):
     src = str(tmp_path / "chunks")
     replay_to_dir(str(raw), src, chunk=2)
 
-    from bigdata_invoice_stream_analysis_spark.plans.drains import (
+    from bigdata_invoice_stream_analysis_spark.streaming.runtime import (
         rocksdb_provider,
     )
 

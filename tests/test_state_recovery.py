@@ -69,7 +69,7 @@ def test_state_v2_survives_restart(spark, tmp_path):
     new file into the RECOVERED state — min/max/items/Lines all span
     both runs, proving the RocksDB snapshot restore works end-to-end
     through the miniproto wire (state server re-created per query)."""
-    from bigdata_invoice_stream_analysis_spark.plans.drains import (
+    from bigdata_invoice_stream_analysis_spark.streaming.runtime import (
         rocksdb_provider,
     )
 
@@ -165,7 +165,9 @@ def test_state_v2_timers_survive_restart(spark, tmp_path):
     both runs) and a fresh timer must register and fire post-restore
     (n_fires spans both runs). Fired timers auto-delete, so nothing
     re-fires spuriously at restart."""
-    from bigdata_invoice_stream_analysis_spark.plans.drains import rocksdb_provider
+    from bigdata_invoice_stream_analysis_spark.streaming.runtime import (
+        rocksdb_provider,
+    )
     from bigdata_invoice_stream_analysis_spark.streaming.state import (
         transform_invoice_timers,
     )
@@ -197,7 +199,9 @@ def test_state_v2_ttl_survives_restart(spark, tmp_path):
     checkpoint state, not an in-memory timer."""
     import time as _time
 
-    from bigdata_invoice_stream_analysis_spark.plans.drains import rocksdb_provider
+    from bigdata_invoice_stream_analysis_spark.streaming.runtime import (
+        rocksdb_provider,
+    )
     from bigdata_invoice_stream_analysis_spark.streaming.state import (
         transform_invoice_state,
     )

@@ -12,9 +12,9 @@ import time
 from pyspark.sql import functions as F
 
 from bigdata_invoice_stream_analysis_spark.plans.drains import (
-    rocksdb_provider,
     run_custom_state_drain,
 )
+from bigdata_invoice_stream_analysis_spark.streaming.runtime import rocksdb_provider
 from bigdata_invoice_stream_analysis_spark.streaming.state import (
     transform_invoice_state,
 )

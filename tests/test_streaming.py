@@ -292,7 +292,7 @@ def test_state_v2_semantics(spark, stream_dir, tmp_path):
     package is missing, so this test EXECUTES state-v2 in this
     container; the JVM's Java-protobuf parser on the state server side
     is the wire-format interop oracle."""
-    from bigdata_invoice_stream_analysis_spark.plans.drains import (
+    from bigdata_invoice_stream_analysis_spark.streaming.runtime import (
         rocksdb_provider,
     )
     from bigdata_invoice_stream_analysis_spark.vendor.protobuf_shim import install
