@@ -25,9 +25,7 @@ subprocess JVMs, after the parent session has been STOPPED (a live
     min-of-3 is comparable round-over-round and to the r4-era
     early-registry numbers;
   * the streaming THROUGHPUT headline re-runs bench_streaming.py the
-    same way; the legacy same-JVM number is preserved separately as
-    "streaming_in_bench" (it is the fatigue measurement, not the
-    headline).
+    same way.
 "value" is total wall time over batch (in-bench) + drains (fresh JVM).
 
 Drift control: the slowest BATCH queries of the first pass are
@@ -413,18 +411,8 @@ def main() -> None:
         repeats[name] = samples
         timings[name] = sorted(samples)[1]
 
-    # Legacy same-JVM streaming drain — kept ONLY as the fatigue
-    # measurement (labeled apart from the headline since r5).
     streaming = None
-    streaming_in_bench = None
     bench_streaming_on = os.environ.get("SPARK_GRAFT_BENCH_STREAMING", "1") != "0"
-    if bench_streaming_on:
-        try:
-            from bench_streaming import drain
-
-            streaming_in_bench = drain(spark, sf_dir)
-        except Exception as e:  # keep the batch numbers even if it dies
-            streaming_in_bench = {"error": f"{type(e).__name__}: {e}"}
 
     # Stop the parent session BEFORE any fresh-JVM subprocess: a live
     # 100 GB-heap parent depresses a subprocess ~25% (measured r5:
@@ -595,7 +583,6 @@ def main() -> None:
                 "drain_queries": drain_names,
                 "drain_error": drain_error,
                 "streaming": streaming,
-                "streaming_in_bench": streaming_in_bench,
                 "sf": sf_val,
                 "n_queries": len(timings),
                 "seat": seat,

@@ -16,8 +16,8 @@ Prints ONE JSON line:
   {"metric": "streaming pipeline throughput", "value": lines_per_sec,
    "unit": "lines/sec", "lines": N, "wall_sec": S, "sf": ...}
 
-``drain(spark, sf_dir)`` is importable — bench.py folds the same
-number into the per-round batch benchmark output.
+bench.py runs this script in fresh subprocess JVMs (median of 3) for
+the ``streaming`` headline of its batch benchmark output.
 """
 
 from __future__ import annotations

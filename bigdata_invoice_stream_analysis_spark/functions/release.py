@@ -20,14 +20,14 @@ decision as ONE Catalyst plan:
 The verdict row is (keep, reasons) plus the contributing signals —
 ``reasons`` is a comma-joined, fixed-order list of failed gate
 names so the funnel report is a plain groupBy. Everything is
-boolean/integer/string: bit-identical across engines, so the staged
-gate hash-compares against a DuckDB twin that recomputes all three
-signals from the same table.
+boolean/integer/string: bit-identical across engines, so the
+registered ``corpus_release_gate`` row hash-compares against a DuckDB
+twin that recomputes all three signals from the same table.
 
 Scale posture: Gopher + PII ride the scan map-side; the LM adds its
 three bounded exchanges (see functions/ngram_lm.py); the final join
-is doc_id-keyed. At 100 TB this is the last pass before shard
-export (operators/shardout.py) and composes with it in one job.
+is doc_id-keyed, so at 100 TB this is one job ahead of any shard
+export.
 
 Reference: n/a (extension surface, SURVEY.md §2.12 north star).
 """

@@ -249,65 +249,3 @@ def _parse_footer(data: bytes, fstart: int) -> dict:
         "batches": batches,
         "num_rows": sum(b["rows"] for b in batches),
     }
-
-
-# --- Spark operator --------------------------------------------------------
-
-
-def arrow_file_profile(files):
-    """Per-file Arrow IPC summary: one row per blob, metadata-only
-    reads (footer + message headers).  Map-side."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("num_rows", T.LongType(), True),
-        T.StructField("n_batches", T.IntegerType(), True),
-        T.StructField("n_columns", T.IntegerType(), True),
-        T.StructField("column_types", T.StringType(), True),
-        T.StructField("total_null_count", T.LongType(), True),
-        T.StructField("buffer_bytes", T.LongType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches_fn(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.arrowipc import (
-            parse_arrow_file,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for fid, p in zip(pdf["file_id"], pdf["payload"]):
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                try:
-                    meta = parse_arrow_file(bytes(p))
-                except ValueError as exc:
-                    row["ok"] = False
-                    row["error"] = str(exc)[:120]
-                else:
-                    row.update(
-                        ok=True,
-                        num_rows=meta["num_rows"],
-                        n_batches=meta["n_batches"],
-                        n_columns=len(meta["schema"]),
-                        column_types=",".join(
-                            f"{f['name']}:{f['type']}"
-                            for f in meta["schema"]),
-                        total_null_count=sum(
-                            n["null_count"]
-                            for b in meta["batches"]
-                            for n in b["nodes"]),
-                        buffer_bytes=sum(
-                            b["buffer_bytes"]
-                            for b in meta["batches"]),
-                    )
-                for k in cols:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches_fn, schema=out_schema)

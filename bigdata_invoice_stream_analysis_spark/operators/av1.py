@@ -462,94 +462,3 @@ def encode_av1_stream(
                               for j in range(24 + 8 * i)])
         )
     return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Spark operator
-# ---------------------------------------------------------------------------
-
-
-def av1_seq_profile(media):
-    """(media_id, payload) low-overhead AV1 streams → one row per
-    file with the sequence-header truth a codec-aware curation
-    filter needs. Corrupt/unsupported payloads become error rows
-    (ok=false), never task failures. Arrow mapInPandas; map-side."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("seq_profile", T.IntegerType(), True),
-        T.StructField("seq_level_idx", T.IntegerType(), True),
-        T.StructField("seq_tier", T.IntegerType(), True),
-        T.StructField("n_operating_points", T.IntegerType(), True),
-        T.StructField("max_width", T.IntegerType(), True),
-        T.StructField("max_height", T.IntegerType(), True),
-        T.StructField("bit_depth", T.IntegerType(), True),
-        T.StructField("mono_chrome", T.BooleanType(), True),
-        T.StructField("subsampling", T.StringType(), True),
-        T.StructField("still_picture", T.BooleanType(), True),
-        T.StructField("film_grain", T.BooleanType(), True),
-        T.StructField("n_frame_obus", T.IntegerType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.av1 import (
-            OBU_FRAME,
-            OBU_FRAME_HEADER,
-            OBU_SEQUENCE_HEADER,
-            parse_obus,
-            parse_sequence_header,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-
-            def emit(mid, **kw):
-                row = dict.fromkeys(cols)
-                row["media_id"] = mid
-                row.update(kw)
-                for k in cols:
-                    out[k].append(row[k])
-
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    obus = parse_obus(bytes(p))
-                    seq = next(
-                        (o for o in obus
-                         if o["type"] == OBU_SEQUENCE_HEADER),
-                        None,
-                    )
-                    if seq is None:
-                        raise ValueError("av1: no sequence header OBU")
-                    sh = parse_sequence_header(seq["payload"])
-                except ValueError as exc:
-                    emit(mid, ok=False, error=str(exc)[:120])
-                    continue
-                n_frames = sum(
-                    1 for o in obus
-                    if o["type"] in (OBU_FRAME, OBU_FRAME_HEADER)
-                )
-                sub = f"{sh['subsampling_x']}{sh['subsampling_y']}"
-                emit(
-                    mid, ok=True,
-                    seq_profile=sh["seq_profile"],
-                    seq_level_idx=sh["seq_level_idx"],
-                    seq_tier=sh["seq_tier"],
-                    n_operating_points=len(sh["operating_points"]),
-                    max_width=sh["max_width"],
-                    max_height=sh["max_height"],
-                    bit_depth=sh["bit_depth"],
-                    mono_chrome=sh["mono_chrome"],
-                    subsampling=sub,
-                    still_picture=sh["still_picture"],
-                    film_grain=sh["film_grain_params_present"],
-                    n_frame_obus=n_frames,
-                )
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=out_schema)

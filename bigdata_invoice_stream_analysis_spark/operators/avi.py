@@ -28,7 +28,7 @@ Malformed framing (bad magic, chunk overrun, truncated headers)
 raises ValueError per the module contract; triage quarantines.
 
 Scale posture: header walk + chunk-size skips, no payload decode;
-map-side under Arrow mapInPandas.
+map-side inside content triage (operators/sniff.py).
 
 Reference: n/a (extension surface).
 """
@@ -258,76 +258,3 @@ def encode_avi(
             for i in range(n_frames))
         body += _chunk(b"idx1", idx)
     return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"AVI " + body
-
-
-# ---------------------------------------------------------------------------
-# Spark operator
-# ---------------------------------------------------------------------------
-
-
-def avi_stream_profile(files):
-    """(file_id, payload) → ONE audit row per AVI: geometry, frame
-    count, rational-rate duration, codec handler, audio shape, movi
-    chunk count, index presence, and the two container-lie bits
-    (avih vs strh/strf disagreement). Map-side Arrow mapInPandas."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("video_codec", T.StringType(), True),
-        T.StructField("audio_channels", T.IntegerType(), True),
-        T.StructField("audio_rate", T.IntegerType(), True),
-        T.StructField("n_movi_chunks", T.IntegerType(), True),
-        T.StructField("has_idx1", T.BooleanType(), True),
-        T.StructField("dims_match", T.BooleanType(), True),
-        T.StructField("frames_match", T.BooleanType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.avi import (
-            parse_avi,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-
-            def emit(fid, **kw):
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                row.update(kw)
-                for k in cols:
-                    out[k].append(row[k])
-
-            for fid, p in zip(pdf["file_id"], pdf["payload"]):
-                try:
-                    m = parse_avi(bytes(p))
-                except (ValueError, struct.error) as exc:
-                    emit(fid, ok=False, error=str(exc)[:120])
-                    continue
-                video = next((s for s in m["streams"]
-                              if s["type"] == "vids"), None)
-                aud = next((s for s in m["streams"]
-                            if s["type"] == "auds"), None)
-                emit(fid, ok=True, width=m["width"],
-                     height=m["height"], n_frames=m["n_frames"],
-                     duration_ms=m["duration_ms"],
-                     video_codec=(video["compression"] or
-                                  video["handler"]) if video else None,
-                     audio_channels=aud["channels"] if aud else None,
-                     audio_rate=aud["sample_rate"] if aud else None,
-                     n_movi_chunks=m["n_movi_chunks"],
-                     has_idx1=m["has_idx1"],
-                     dims_match=m["dims_match"],
-                     frames_match=m["frames_match"])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches, schema=out_schema)

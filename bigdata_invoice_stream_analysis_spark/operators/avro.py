@@ -22,10 +22,10 @@ Built against the public Apache Avro 1.11 specification:
 A matching encoder emits deterministic container files for fixtures
 (sorted map keys, minimal zigzag varlongs, single or multi block).
 
-Scale posture: Arrow mapInPandas, one container per row, one linear
-walk per container.  The sync-marker design means a 100 TB Avro
-corpus could equally be split WITHIN files at block boundaries; the
-per-file walk here is the per-task unit either way.
+Scale posture: one linear walk per container, map-side inside
+content triage (operators/sniff.py).  The sync-marker design means a
+100 TB Avro corpus could equally be split WITHIN files at block
+boundaries; the per-file walk here is the per-task unit either way.
 
 Reference: n/a (extension surface).
 """
@@ -398,80 +398,3 @@ def encode_avro(
         out += _zigzag(len(chunk)) + _zigzag(len(payload))
         out += payload + sync
     return bytes(out)
-
-
-# --- Spark operator --------------------------------------------------------
-
-
-def avro_container_profile(files):
-    """Per-container summary plus flattened top-level scalar fields
-    of the FIRST record (schema discovery at corpus scale): one row
-    per container.  Map-side only."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("codec", T.StringType(), True),
-        T.StructField("schema_type", T.StringType(), True),
-        T.StructField("schema_name", T.StringType(), True),
-        T.StructField("n_fields", T.IntegerType(), True),
-        T.StructField("n_blocks", T.IntegerType(), True),
-        T.StructField("n_records", T.LongType(), True),
-        T.StructField("first_record_json", T.StringType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import json as _json
-
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.avro import (
-            parse_avro,
-        )
-
-        def jsonable(v):
-            if isinstance(v, (bytes, bytearray)):
-                return v.hex()
-            if isinstance(v, dict):
-                return {k: jsonable(x) for k, x in sorted(v.items())}
-            if isinstance(v, list):
-                return [jsonable(x) for x in v]
-            return v
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for fid, p in zip(pdf["file_id"], pdf["payload"]):
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                try:
-                    meta = parse_avro(bytes(p), max_records=1)
-                except ValueError as exc:
-                    row["ok"] = False
-                    row["error"] = str(exc)[:120]
-                else:
-                    sch = meta["schema"]
-                    row.update(
-                        ok=True,
-                        codec=meta["codec"],
-                        schema_type=(sch.get("type")
-                                     if isinstance(sch, dict)
-                                     else str(sch)),
-                        schema_name=(sch.get("name")
-                                     if isinstance(sch, dict) else None),
-                        n_fields=(len(sch.get("fields", []))
-                                  if isinstance(sch, dict) else None),
-                        n_blocks=meta["n_blocks"],
-                        n_records=meta["n_records"],
-                        first_record_json=(
-                            _json.dumps(jsonable(meta["records"][0]),
-                                        sort_keys=True)
-                            if meta["records"] else None),
-                    )
-                for k in cols:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches, schema=out_schema)

@@ -169,74 +169,3 @@ def encode_ico(entries: list[tuple[int, int, bytes]],
         payloads += payload
         off += len(payload)
     return header + dir_bytes + payloads
-
-
-# ---------------------------------------------------------------------------
-# Spark operator
-# ---------------------------------------------------------------------------
-
-
-def icon_image_profile(files):
-    """(file_id, payload) → one audit row per BMP/ICO blob: kind,
-    geometry (largest entry for ICO), bit depth, payload formats,
-    and the BMP size-consistency bit. Map-side Arrow mapInPandas."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("bpp", T.IntegerType(), True),
-        T.StructField("n_images", T.IntegerType(), True),
-        T.StructField("payload_format", T.StringType(), True),
-        T.StructField("size_consistent", T.BooleanType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.bmp import (
-            parse_bmp,
-            parse_ico,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-
-            def emit(fid, **kw):
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                row.update(kw)
-                for k in cols:
-                    out[k].append(row[k])
-
-            for fid, p in zip(pdf["file_id"], pdf["payload"]):
-                b = bytes(p)
-                try:
-                    if b[:2] == b"BM":
-                        m = parse_bmp(b)
-                        emit(fid, ok=True, kind="bmp",
-                             width=m["width"], height=m["height"],
-                             bpp=m["bpp"], n_images=1,
-                             payload_format=m["compression"],
-                             size_consistent=m["size_consistent"])
-                    else:
-                        m = parse_ico(b)
-                        best = max(m["images"],
-                                   key=lambda im: im["width"])
-                        emit(fid, ok=True, kind=m["kind"],
-                             width=m["max_width"],
-                             height=m["max_height"],
-                             bpp=best["bpp"],
-                             n_images=m["n_images"],
-                             payload_format=best["payload_format"],
-                             size_consistent=True)
-                except (ValueError, struct.error) as exc:
-                    emit(fid, ok=False, error=str(exc)[:120])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches, schema=out_schema)

@@ -300,88 +300,3 @@ def encode_lz4_stream(frames: list[dict]) -> bytes:
             out += b
         out += struct.pack("<I", 0)  # EndMark
     return bytes(out)
-
-
-# --- Spark operator --------------------------------------------------------
-
-
-def compressed_shard_profile(files):
-    """Per-blob frame audit for .zst / .lz4 corpora shards,
-    dispatched by magic: frames, blocks, declared content sizes,
-    window/memory requirements, dictionary dependencies.  Map-side;
-    payloads never decompressed."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("format", T.StringType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("n_skippable", T.IntegerType(), True),
-        T.StructField("n_blocks", T.IntegerType(), True),
-        T.StructField("declared_content_bytes", T.LongType(), True),
-        T.StructField("max_window_bytes", T.LongType(), True),
-        T.StructField("needs_dictionary", T.BooleanType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.compression import (
-            LZ4_MAGIC,
-            ZSTD_MAGIC,
-            ZSTD_SKIPPABLE_LO,
-            parse_lz4_frames,
-            parse_zstd_frames,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for fid, p in zip(pdf["file_id"], pdf["payload"]):
-                raw = bytes(p)
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                magic = int.from_bytes(raw[:4], "little") if len(
-                    raw) >= 4 else 0
-                try:
-                    if magic == ZSTD_MAGIC or (
-                            magic & 0xFFFFFFF0) == ZSTD_SKIPPABLE_LO:
-                        row["format"] = "zstd"
-                        frames = parse_zstd_frames(raw)
-                    elif magic == LZ4_MAGIC:
-                        row["format"] = "lz4"
-                        frames = parse_lz4_frames(raw)
-                    else:
-                        raise ValueError("not a zstd/lz4 stream")
-                except ValueError as exc:
-                    row["format"] = row["format"] or "unknown"
-                    row["ok"] = False
-                    row["error"] = str(exc)[:120]
-                else:
-                    real = [f for f in frames
-                            if f.get("kind", "frame") == "frame"]
-                    skip = len(frames) - len(real)
-                    sizes = [f["content_size"] for f in real]
-                    windows = [f["window_size"] for f in real
-                               if f.get("window_size")]
-                    row.update(
-                        ok=True,
-                        n_frames=len(real),
-                        n_skippable=skip,
-                        n_blocks=sum(f["n_blocks"] for f in real),
-                        declared_content_bytes=(
-                            sum(s for s in sizes if s is not None)
-                            if any(s is not None for s in sizes)
-                            else None),
-                        max_window_bytes=(max(windows)
-                                          if windows else None),
-                        needs_dictionary=any(
-                            f["dict_id"] for f in real),
-                    )
-                for k in cols:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches, schema=out_schema)

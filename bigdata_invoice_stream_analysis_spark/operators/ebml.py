@@ -668,44 +668,3 @@ def webm_track_profile(media):
             yield pd.DataFrame(out)
 
     return media.mapInPandas(batches, schema=out_schema)
-
-
-def webm_frame_index(media, keyframes_only: bool = False):
-    """Per-block frame index over WebM payloads — the WebM twin of
-    mp4.frame_index: one row per SimpleBlock (track, pts_ms, keyframe,
-    payload size), optionally keyframes only (the GOP-boundary sample
-    a curation pipeline feeds to a decoder)."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("track", T.IntegerType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("pts_ms", T.LongType(), False),
-        T.StructField("keyframe", T.BooleanType(), False),
-        T.StructField("frame_bytes", T.LongType(), False),
-    ])
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.ebml import (
-            parse_webm,
-        )
-
-        cols = [f.name for f in out_schema.fields]
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                for i, b in enumerate(parse_webm(bytes(p))["blocks"]):
-                    if keyframes_only and not b["keyframe"]:
-                        continue
-                    out["media_id"].append(mid)
-                    out["track"].append(b["track"])
-                    out["frame_idx"].append(i)
-                    out["pts_ms"].append(b["pts_ms"])
-                    out["keyframe"].append(b["keyframe"])
-                    out["frame_bytes"].append(b["size"])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=out_schema)

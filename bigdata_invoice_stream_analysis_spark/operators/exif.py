@@ -150,9 +150,10 @@ def parse_exif(payload: bytes) -> dict:
 
 
 def parse_tiff(tiff: bytes) -> dict:
-    """The bare TIFF/IFD walk behind parse_exif, shared with the PNG
-    ``eXIf`` chunk (operators/pngmeta.py) — same container, different
-    wrapper. Returns the same field dict with ``has_exif=True``."""
+    """The bare TIFF/IFD walk behind parse_exif, shared with bare TIFF
+    files in content triage (operators/sniff.py) — same container,
+    different wrapper. Returns the same field dict with
+    ``has_exif=True``."""
     out = {
         "has_exif": True, "orientation": None, "make": None,
         "model": None, "datetime": None, "pixel_x": None,

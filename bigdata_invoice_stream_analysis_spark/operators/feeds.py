@@ -135,60 +135,3 @@ def parse_feed(text: str, base_url: str | None = None) -> dict:
         "entries": entries,
         "n_entries": len(entries),
     }
-
-
-def feed_entries(files):
-    """(file_id, text, url) → one row per feed ENTRY (the frontier
-    feed): kind, entry title/link/published/guid, with links made
-    absolute through the shared RFC 3986 resolver. Parse failures
-    quarantine as one seq=-1 row. Map-side Arrow mapInPandas."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("seq", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("feed_title", T.StringType(), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("link", T.StringType(), True),
-        T.StructField("published", T.StringType(), True),
-        T.StructField("guid", T.StringType(), True),
-        T.StructField("error", T.StringType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.feeds import (
-            parse_feed,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-
-            def emit(fid, seq, **kw):
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                row["seq"] = seq
-                row.update(kw)
-                for k in cols:
-                    out[k].append(row[k])
-
-            urls = (pdf["url"] if "url" in pdf.columns
-                    else [None] * len(pdf))
-            for fid, text, url in zip(pdf["file_id"], pdf["text"],
-                                      urls):
-                try:
-                    m = parse_feed(text, base_url=url)
-                except (ValueError, TypeError) as exc:
-                    emit(fid, -1, error=str(exc)[:120])
-                    continue
-                for i, e in enumerate(m["entries"]):
-                    emit(fid, i, kind=m["kind"],
-                         feed_title=m["title"], title=e["title"],
-                         link=e["link"], published=e["published"],
-                         guid=e["guid"])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches, schema=out_schema)

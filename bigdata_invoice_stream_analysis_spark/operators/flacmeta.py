@@ -27,8 +27,8 @@ Malformed structure (missing marker, STREAMINFO not first or wrong
 size, block overrunning the file, forbidden type, zero sample rate)
 raises ValueError per the module contract; triage quarantines. The
 audio FRAMES after the last metadata block are never decoded — the
-audit is header arithmetic only, so the operator reads a bounded
-prefix of even multi-GB files.
+audit is header arithmetic only, so it reads a bounded prefix of
+even multi-GB files.
 
 Reference: n/a (extension surface).
 """
@@ -248,75 +248,3 @@ def encode_flac(
         out += len(body).to_bytes(3, "big")
         out += body
     return bytes(out) + frames
-
-
-# ---------------------------------------------------------------------------
-# Spark operator
-# ---------------------------------------------------------------------------
-
-
-def flac_stream_profile(files):
-    """(file_id, payload) → ONE audit row per FLAC file: geometry
-    (rate/channels/bits), sample-count duration, the PCM MD5
-    fingerprint (the dedup key lossless corpora actually want — it
-    identifies identical AUDIO across different encoder settings),
-    tag presence, and the embedded-art risk bit. Map-side Arrow
-    mapInPandas; failures quarantine as ok=false rows."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("channels", T.IntegerType(), True),
-        T.StructField("bits_per_sample", T.IntegerType(), True),
-        T.StructField("total_samples", T.LongType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("pcm_md5", T.StringType(), True),
-        T.StructField("n_blocks", T.IntegerType(), True),
-        T.StructField("n_tags", T.IntegerType(), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("has_picture", T.BooleanType(), True),
-        T.StructField("picture_mime", T.StringType(), True),
-        T.StructField("padding_bytes", T.LongType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.flacmeta import (  # noqa: E501
-            parse_flac,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-
-            def emit(fid, **kw):
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                row.update(kw)
-                for k in cols:
-                    out[k].append(row[k])
-
-            for fid, p in zip(pdf["file_id"], pdf["payload"]):
-                try:
-                    m = parse_flac(bytes(p))
-                except (ValueError, struct.error) as exc:
-                    emit(fid, ok=False, error=str(exc)[:120])
-                    continue
-                emit(fid, ok=True, sample_rate=m["sample_rate"],
-                     channels=m["channels"],
-                     bits_per_sample=m["bits_per_sample"],
-                     total_samples=m["total_samples"],
-                     duration_ms=m["duration_ms"], pcm_md5=m["md5"],
-                     n_blocks=len(m["blocks"]),
-                     n_tags=len(m["tags"]),
-                     title=m["tags"].get("TITLE"),
-                     has_picture=m["has_picture"],
-                     picture_mime=m["picture_mime"],
-                     padding_bytes=m["padding_bytes"])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches, schema=out_schema)

@@ -12,8 +12,8 @@ plain text) and the trailer, WITHOUT LZW pixel decode (the same
 honest metadata/decode boundary as the video work; the in-repo PNG/
 PNM/JPEG codecs cover actual pixel needs).
 
-Scale posture: Arrow mapInPandas, one summary row per payload; the
-block walk is a single linear pass over the bytes.
+Scale posture: the block walk is a single linear pass over the
+bytes, map-side inside content triage (operators/sniff.py).
 
 Reference: n/a (extension surface).
 """
@@ -172,43 +172,3 @@ def encode_minimal_gif(
         out += bytes([0])              # sub-block terminator
     out += bytes([_TRAILER])
     return bytes(out)
-
-
-def gif_profile(media):
-    """GIF metadata extraction over (media_id, payload) inside Arrow
-    mapInPandas — one summary row per file, the animated-image triage
-    a multimodal corpus runs before committing to any pixel decode."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("version", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("n_frames", T.IntegerType(), False),
-        T.StructField("animated", T.BooleanType(), False),
-        T.StructField("duration_ms", T.LongType(), False),
-        T.StructField("loop_count", T.IntegerType(), True),
-        T.StructField("transparent", T.BooleanType(), False),
-        T.StructField("interlaced", T.BooleanType(), False),
-        T.StructField("palette_size", T.IntegerType(), False),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.gif import (
-            parse_gif,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                row = parse_gif(bytes(p))
-                out["media_id"].append(mid)
-                for k in cols[1:]:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=out_schema)

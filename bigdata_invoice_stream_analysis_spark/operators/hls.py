@@ -264,84 +264,6 @@ def _variant(attrs: dict[str, str], *, iframe: bool) -> dict:
     }
 
 
-def hls_manifest_profile(files):
-    """(file_id, text, url) → ONE audit row per manifest: playlist
-    kind, segment/variant counts, durations, the live/VOD and
-    encryption bits, and the top variant's geometry/bandwidth — the
-    routing row a streaming-corpus frontier filters before fetching
-    any segment bytes. Map-side Arrow mapInPandas; parse failures
-    become ok=false rows."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("hls_version", T.IntegerType(), True),
-        T.StructField("n_segments", T.IntegerType(), True),
-        T.StructField("n_variants", T.IntegerType(), True),
-        T.StructField("total_duration_ms", T.LongType(), True),
-        T.StructField("target_duration_ms", T.LongType(), True),
-        T.StructField("live", T.BooleanType(), True),
-        T.StructField("encrypted", T.BooleanType(), True),
-        T.StructField("max_bandwidth", T.LongType(), True),
-        T.StructField("best_resolution", T.StringType(), True),
-        T.StructField("first_segment_uri", T.StringType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.hls import (
-            parse_m3u8,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-
-            def emit(fid, **kw):
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                row.update(kw)
-                for k in cols:
-                    out[k].append(row[k])
-
-            urls = (pdf["url"] if "url" in pdf.columns
-                    else [None] * len(pdf))
-            for fid, text, url in zip(pdf["file_id"], pdf["text"],
-                                      urls):
-                try:
-                    m = parse_m3u8(text, base_url=url)
-                except (ValueError, OverflowError) as exc:
-                    emit(fid, ok=False, error=str(exc)[:120])
-                    continue
-                full = [v for v in m["variants"]
-                        if not v["iframe_only"]]
-                best = max(
-                    full, key=lambda v: v["bandwidth"], default=None)
-                emit(fid, ok=True, kind=m["kind"],
-                     hls_version=m["version"],
-                     n_segments=len(m["segments"]),
-                     n_variants=len(full),
-                     total_duration_ms=m["total_duration_ms"],
-                     target_duration_ms=m["target_duration_ms"],
-                     live=(m["kind"] == "media" and not m["ended"]),
-                     encrypted=m["encrypted"],
-                     max_bandwidth=(best["bandwidth"]
-                                    if best else None),
-                     best_resolution=(
-                         f"{best['width']}x{best['height']}"
-                         if best and best["width"] else None),
-                     first_segment_uri=(
-                         m["segments"][0]["uri"]
-                         if m["segments"] else None))
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches, schema=out_schema)
-
-
 def hls_segments(files):
     """(file_id, text, url) → ONE row per media segment: sequence
     number (EXT-X-MEDIA-SEQUENCE + position), absolute uri, declared

@@ -907,134 +907,6 @@ def hevc_sps_cross_check(media):
     return media.mapInPandas(batches, schema=out_schema)
 
 
-def parse_av1_cross_check(payload: bytes) -> dict:
-    """The AV1 twin of parse_sps_cross_check: locate the av1C record
-    in the video trak's stsd entry (AV1-ISOBMFF binding §2.3), read
-    the record HEAD claims (profile/level/tier/bit-depth/monochrome),
-    then parse the REAL sequence header OBU out of the record's
-    configOBUs (operators/av1 — §5.3 OBU walk + the full §5.5.1
-    sequence-header bit parse) and compare BOTH claim layers against
-    the bitstream truth: ``dims_match`` (stsd VisualSampleEntry
-    width/height vs max_frame geometry) and ``record_match`` (av1C
-    head vs sequence-header profile/level/tier/bit-depth/monochrome)
-    — re-muxed corpora rebuild the record head from guesses while the
-    OBU is untouched. Raises for entries without configOBUs —
-    metadata-only fixtures use parse_codec_profile instead."""
-    from bigdata_invoice_stream_analysis_spark.operators.av1 import (
-        OBU_SEQUENCE_HEADER,
-        parse_obus,
-        parse_sequence_header,
-    )
-
-    data = bytes(payload)
-    entry, size, codec, container_w, container_h = _visual_entry_claims(data)
-    av1c = None
-    for t, b, e in _entry_config_boxes(data, entry, size):
-        if t == b"av1C":
-            av1c = (b, e)
-    if av1c is None:
-        raise ValueError(f"no av1C record in {codec!r} sample entry")
-    b, e = av1c
-    if data[b] != 0x81:
-        raise ValueError(f"unsupported av1C marker/version {data[b]:#x}")
-    rec_profile = data[b + 1] >> 5
-    rec_level = data[b + 1] & 0x1F
-    rec_tier = data[b + 2] >> 7
-    rec_high_bd = (data[b + 2] >> 6) & 1
-    rec_twelve = (data[b + 2] >> 5) & 1
-    rec_mono = (data[b + 2] >> 4) & 1
-    if rec_high_bd:
-        rec_depth = 12 if (rec_profile == 2 and rec_twelve) else 10
-    else:
-        rec_depth = 8
-    config = data[b + 4 : e]
-    if not config:
-        raise ValueError("av1C carries no configOBUs")
-    seq = next(
-        (o for o in parse_obus(config)
-         if o["type"] == OBU_SEQUENCE_HEADER),
-        None,
-    )
-    if seq is None:
-        raise ValueError("av1C configOBUs carry no sequence header")
-    sh = parse_sequence_header(seq["payload"])
-    return {
-        "codec": codec,
-        "container_width": container_w,
-        "container_height": container_h,
-        "record_profile": rec_profile,
-        "record_level": rec_level,
-        "record_tier": rec_tier,
-        "record_bit_depth": rec_depth,
-        "seq_profile": sh["seq_profile"],
-        "seq_level_idx": sh["seq_level_idx"],
-        "seq_tier": sh["seq_tier"],
-        "seq_bit_depth": sh["bit_depth"],
-        "seq_width": sh["max_width"],
-        "seq_height": sh["max_height"],
-        "mono_chrome": sh["mono_chrome"],
-        "dims_match": (
-            container_w == sh["max_width"]
-            and container_h == sh["max_height"]
-        ),
-        "record_match": (
-            rec_profile == sh["seq_profile"]
-            and rec_level == sh["seq_level_idx"]
-            and rec_tier == sh["seq_tier"]
-            and rec_depth == sh["bit_depth"]
-            and bool(rec_mono) == sh["mono_chrome"]
-        ),
-    }
-
-
-def av1_cross_check(media):
-    """AV1 container-vs-bitstream audit over MP4 payloads inside
-    Arrow mapInPandas — one fixed-width row per file with the stsd
-    claims, the av1C record-head claims, the sequence-header truth,
-    and both match bits. moov-only byte ranges, zero data shuffles,
-    no frame decode."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("codec", T.StringType(), False),
-        T.StructField("container_width", T.IntegerType(), False),
-        T.StructField("container_height", T.IntegerType(), False),
-        T.StructField("record_profile", T.IntegerType(), False),
-        T.StructField("record_level", T.IntegerType(), False),
-        T.StructField("record_tier", T.IntegerType(), False),
-        T.StructField("record_bit_depth", T.IntegerType(), False),
-        T.StructField("seq_profile", T.IntegerType(), False),
-        T.StructField("seq_level_idx", T.IntegerType(), False),
-        T.StructField("seq_tier", T.IntegerType(), False),
-        T.StructField("seq_bit_depth", T.IntegerType(), False),
-        T.StructField("seq_width", T.IntegerType(), False),
-        T.StructField("seq_height", T.IntegerType(), False),
-        T.StructField("mono_chrome", T.BooleanType(), False),
-        T.StructField("dims_match", T.BooleanType(), False),
-        T.StructField("record_match", T.BooleanType(), False),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.mp4 import (
-            parse_av1_cross_check,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                row = parse_av1_cross_check(bytes(p))
-                out["media_id"].append(mid)
-                for k in cols[1:]:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=out_schema)
-
-
 # ASC samplingFrequencyIndex table (ISO 14496-3 §1.6.3.4).
 _ASC_RATES = (
     96000, 88200, 64000, 48000, 44100, 32000,
@@ -1492,7 +1364,6 @@ def _av01_sample_entry(
     high_bitdepth: int = 0,
     twelve_bit: int = 0,
     monochrome: int = 0,
-    config_obus: bytes = b"",
 ) -> bytes:
     """One av01 VisualSampleEntry with an av1C
     AV1CodecConfigurationRecord (public AV1 Codec ISO Media File Format
@@ -1500,12 +1371,9 @@ def _av01_sample_entry(
     {seq_profile(3) | seq_level_idx_0(5)},
     {seq_tier_0(1) | high_bitdepth(1) | twelve_bit(1) | monochrome(1) |
     chroma_subsampling_x(1) | chroma_subsampling_y(1) |
-    chroma_sample_position(2)}, and a reserved/delay byte.
-    ``config_obus`` (optional per the binding — "zero or more OBUs",
-    in practice exactly the sequence header) appends the REAL
-    bitstream bytes parse_av1_cross_check audits; empty keeps the
-    metadata-only fixture shape, matching the empty-array hvcC
-    fixtures."""
+    chroma_sample_position(2)}, and a reserved/delay byte. No
+    configOBUs follow (optional per the binding), matching the
+    empty-array hvcC fixtures."""
     ssx = ssy = 1  # 4:2:0 subsampling bits (monochrome also writes 1,1)
     byte1 = ((seq_profile & 0x7) << 5) | (seq_level_idx & 0x1F)
     byte2 = (
@@ -1516,9 +1384,7 @@ def _av01_sample_entry(
         | ((ssx & 1) << 3)
         | ((ssy & 1) << 2)
     )
-    av1c = _box(
-        b"av1C", bytes([0x81, byte1, byte2, 0]) + bytes(config_obus)
-    )
+    av1c = _box(b"av1C", bytes([0x81, byte1, byte2, 0]))
     return _visual_sample_entry(b"av01", width, height, av1c)
 
 

@@ -548,61 +548,3 @@ def encode_id3v2(
         (len(out) >> s) & 0x7F for s in (21, 14, 7, 0)
     )
     return bytes(head) + bytes(out)
-
-
-def id3_frames(media):
-    """(media_id, payload) ID3v2-tagged audio → one row per tag
-    frame with decoded text/description/mime and payload sizes —
-    the metadata/privacy audit an audio corpus runs before release
-    (APIC/GEOB/PRIV payload bytes never decode, only their sizes
-    surface). Untagged or unparsable payloads yield a single
-    ok=false row. Arrow mapInPandas; map-side."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("version", T.StringType(), True),
-        T.StructField("frame_idx", T.IntegerType(), True),
-        T.StructField("frame_id", T.StringType(), True),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("description", T.StringType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.mpegaudio import (
-            parse_id3v2_frames,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-
-            def emit(mid, **kw):
-                row = dict.fromkeys(cols)
-                row["media_id"] = mid
-                row.update(kw)
-                for k in cols:
-                    out[k].append(row[k])
-
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    tag = parse_id3v2_frames(bytes(p))
-                except ValueError as exc:
-                    emit(mid, ok=False, error=str(exc)[:120])
-                    continue
-                for i, fr in enumerate(tag["frames"]):
-                    emit(mid, ok=True, version=tag["version"],
-                         frame_idx=i, frame_id=fr["frame_id"],
-                         kind=fr["kind"], text=fr["text"],
-                         description=fr["description"],
-                         mime=fr["mime"], n_bytes=fr["n_bytes"])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=out_schema)

@@ -207,62 +207,3 @@ def encode_minimal_opus(
             eos=(i == n_audio_packets - 1),
         )
     return out
-
-
-# --- Spark operator ---------------------------------------------------------
-
-
-def ogg_stream_profile(files):
-    """One row per (file, logical stream): codec identity, geometry,
-    page/packet counts, duration, CRC health.  Map-side."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("serial", T.LongType(), True),
-        T.StructField("codec", T.StringType(), True),
-        T.StructField("channels", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_pages", T.IntegerType(), True),
-        T.StructField("n_packets", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("n_crc_bad", T.IntegerType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.ogg import (
-            parse_ogg,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-
-            def emit(fid, **kw):
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                row.update(kw)
-                for k in cols:
-                    out[k].append(row[k])
-
-            for fid, p in zip(pdf["file_id"], pdf["payload"]):
-                try:
-                    meta = parse_ogg(bytes(p))
-                except ValueError as exc:
-                    emit(fid, ok=False, error=str(exc)[:120])
-                    continue
-                for serial, st in sorted(meta["streams"].items()):
-                    emit(fid, ok=True, serial=serial,
-                         codec=st["codec"], channels=st["channels"],
-                         sample_rate=st["sample_rate"],
-                         n_pages=st["n_pages"],
-                         n_packets=st["n_packets"],
-                         duration_ms=st["duration_ms"],
-                         n_crc_bad=meta["n_crc_bad"])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches, schema=out_schema)

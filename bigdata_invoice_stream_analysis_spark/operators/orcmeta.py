@@ -9,20 +9,20 @@ column statistics), compressed — when the file is compressed — in
 ORC's chunked framing: each chunk has a 3-byte little-endian header
 ``(chunkLength << 1) | isOriginal``.
 
-The protobuf walk reuses the generic wire reader built for TFRecord
-(operators/tfrecord.parse_wire — field/wire-type/value triples, no
-schema compiler); this module contributes the ORC message shapes
-(PostScript, Footer, StripeInformation, Type, ColumnStatistics with
-zigzag sint64 integer stats) and the chunked-decompression framing.
+The protobuf walk is a generic wire reader (``parse_wire`` —
+field/wire-type/value triples, no schema compiler); on top of it this
+module builds the ORC message shapes (PostScript, Footer,
+StripeInformation, Type, ColumnStatistics with zigzag sint64 integer
+stats) and the chunked-decompression framing.
 Codecs: NONE and ZLIB decode for real (raw deflate, stdlib);
 SNAPPY/LZO/LZ4/ZSTD are honestly reported as unsupported.
 
 Cross-validated in the unit suite against pyarrow.orc reading and
 writing the same files (rows, stripes, schema, compression).
 
-Scale posture: tail-only reads (postscript + footer), Arrow
-mapInPandas one file per row — the offsets-not-contents posture of
-the parquet footer audit applied to ORC.
+Scale posture: tail-only reads (postscript + footer) — the
+offsets-not-contents posture of the parquet footer audit applied to
+ORC.
 
 Reference: n/a (extension surface).
 """
@@ -31,10 +31,6 @@ from __future__ import annotations
 
 import struct
 import zlib
-
-from bigdata_invoice_stream_analysis_spark.operators.tfrecord import (
-    parse_wire,
-)
 
 COMPRESSION = {0: "NONE", 1: "ZLIB", 2: "SNAPPY", 3: "LZO",
                4: "LZ4", 5: "ZSTD"}
@@ -45,6 +41,59 @@ TYPE_KINDS = {
     14: "decimal", 15: "date", 16: "varchar", 17: "char",
     18: "timestamp_instant",
 }
+
+
+# --- protobuf wire walk ----------------------------------------------------
+
+
+def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
+    result = 0
+    shift = 0
+    while True:
+        if pos >= len(data):
+            raise ValueError("protobuf: truncated varint")
+        if shift > 70:
+            raise ValueError("protobuf: varint too long")
+        b = data[pos]
+        result |= (b & 0x7F) << shift
+        pos += 1
+        if not b & 0x80:
+            return result, pos
+        shift += 7
+
+
+def parse_wire(data: bytes) -> list[tuple[int, int, object]]:
+    """Generic wire walk: ``[(field_number, wire_type, raw_value)]``
+    — varints as int, fixed32/64 as raw 4/8 bytes, length-delimited
+    as bytes.  Groups (wire types 3/4) are rejected: deprecated
+    pre-proto2 syntax no ORC writer emits."""
+    out = []
+    pos = 0
+    while pos < len(data):
+        tag, pos = _read_varint(data, pos)
+        field, wt = tag >> 3, tag & 0x7
+        if wt == 0:
+            v, pos = _read_varint(data, pos)
+        elif wt == 1:
+            if pos + 8 > len(data):
+                raise ValueError("protobuf: truncated fixed64")
+            v = data[pos : pos + 8]
+            pos += 8
+        elif wt == 2:
+            ln, pos = _read_varint(data, pos)
+            if pos + ln > len(data):
+                raise ValueError("protobuf: truncated bytes field")
+            v = data[pos : pos + ln]
+            pos += ln
+        elif wt == 5:
+            if pos + 4 > len(data):
+                raise ValueError("protobuf: truncated fixed32")
+            v = data[pos : pos + 4]
+            pos += 4
+        else:
+            raise ValueError(f"protobuf: unsupported wire type {wt}")
+        out.append((field, wt, v))
+    return out
 
 
 def _zz(v: int) -> int:
@@ -66,10 +115,6 @@ def _packed_u32(values: list) -> list[int]:
     """repeated uint32 [packed=true]: one length-delimited blob of
     varints (the form ORC writers emit), but tolerate the unpacked
     per-element form too."""
-    from bigdata_invoice_stream_analysis_spark.operators.tfrecord import (
-        _read_varint,
-    )
-
     out: list[int] = []
     for v in values:
         if isinstance(v, int):
@@ -194,63 +239,3 @@ def _parse_tail(data: bytes) -> dict:
         "schema": schema,
         "column_stats": stats,
     }
-
-
-def orc_footer_profile(files):
-    """Per-file ORC summary: one row per blob (map-side, tail-only
-    reads)."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("compression", T.StringType(), True),
-        T.StructField("version", T.StringType(), True),
-        T.StructField("num_rows", T.LongType(), True),
-        T.StructField("n_stripes", T.IntegerType(), True),
-        T.StructField("n_columns", T.IntegerType(), True),
-        T.StructField("column_names", T.StringType(), True),
-        T.StructField("max_stripe_rows", T.LongType(), True),
-        T.StructField("file_bytes", T.LongType(), False),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.orcmeta import (
-            parse_orc_footer,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for fid, p in zip(pdf["file_id"], pdf["payload"]):
-                raw = bytes(p)
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                row["file_bytes"] = len(raw)
-                try:
-                    meta = parse_orc_footer(raw)
-                except ValueError as exc:
-                    row["ok"] = False
-                    row["error"] = str(exc)[:120]
-                else:
-                    root = meta["schema"][0] if meta["schema"] else {}
-                    srows = [s["num_rows"] for s in meta["stripes"]]
-                    row.update(
-                        ok=True,
-                        compression=meta["compression"],
-                        version=meta["version"],
-                        num_rows=meta["num_rows"],
-                        n_stripes=len(meta["stripes"]),
-                        n_columns=len(root.get("field_names", [])),
-                        column_names=",".join(
-                            root.get("field_names", [])),
-                        max_stripe_rows=max(srows, default=None),
-                    )
-                for k in cols:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches, schema=out_schema)

@@ -623,50 +623,6 @@ def warc_records(archives):
     return archives.mapInPandas(batches, schema=out_schema)
 
 
-def wet_text(archives):
-    """WET ingestion — Common Crawl's pre-extracted text sidecar: the
-    same WARC container, but ``conversion`` records whose block is the
-    already-extracted plain text (Content-Type text/plain, UTF-8).
-    One row per conversion record: (archive_id, record_idx, url,
-    text, text_len). For corpora that ship WET, this skips the HTML
-    extraction stage entirely — the cheapest text path at 100 TB."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("archive_id", T.LongType(), False),
-        T.StructField("record_idx", T.IntegerType(), False),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("text_len", T.IntegerType(), False),
-    ])
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.warc import (
-            _hget,
-            parse_warc,
-        )
-
-        cols = [f.name for f in out_schema.fields]
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for aid, payload in zip(pdf["archive_id"], pdf["payload"]):
-                for i, rec in enumerate(parse_warc(bytes(payload))):
-                    h = rec["headers"]
-                    if _hget(h, "warc-type") != "conversion":
-                        continue
-                    text = rec["block"].decode("utf-8", "replace")
-                    out["archive_id"].append(aid)
-                    out["record_idx"].append(i)
-                    out["url"].append(_hget(h, "warc-target-uri"))
-                    out["text"].append(text)
-                    out["text_len"].append(len(text))
-            yield pd.DataFrame(out)
-
-    return archives.mapInPandas(batches, schema=out_schema)
-
-
 def warc_text_corpus(archives):
     """The full ingestion pass: response records → extracted text rows
     (normalized URL, registered domain, title, body text, link count)

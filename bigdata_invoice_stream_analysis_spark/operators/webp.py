@@ -14,8 +14,8 @@ stays honestly out of scope — this is the triage metadata: real
 dimensions, animation, alpha, and whether EXIF/XMP metadata chunks
 are present (the privacy-audit pointer operators/exif.py consumes).
 
-Scale posture: Arrow mapInPandas, one row per payload, linear chunk
-walk.
+Scale posture: linear chunk walk, map-side inside content triage
+(operators/sniff.py).
 
 Reference: n/a (extension surface).
 """
@@ -207,44 +207,3 @@ def encode_webp(
             chunks += _chunk(b"XMP ", b"<x:xmpmeta/>")
     body = b"WEBP" + chunks
     return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def webp_profile(media):
-    """WebP metadata extraction over (media_id, payload) inside Arrow
-    mapInPandas — one triage row per file: variant, true dimensions,
-    alpha/animation, frame count + duration, and the EXIF/XMP/ICC
-    presence bits a privacy audit follows up on."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("variant", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("alpha", T.BooleanType(), False),
-        T.StructField("animated", T.BooleanType(), False),
-        T.StructField("n_frames", T.IntegerType(), False),
-        T.StructField("duration_ms", T.LongType(), False),
-        T.StructField("has_exif", T.BooleanType(), False),
-        T.StructField("has_xmp", T.BooleanType(), False),
-        T.StructField("has_icc", T.BooleanType(), False),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.webp import (
-            parse_webp,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                row = parse_webp(bytes(p))
-                out["media_id"].append(mid)
-                for k in cols[1:]:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=out_schema)

@@ -226,45 +226,6 @@ def encode_zip(
     return bytes(out)
 
 
-def zip_members(archives):
-    """Explode (archive_id, payload) ZIPs into one row per member
-    from the central directory — names, methods, sizes, CRCs, offsets
-    — WITHOUT touching payload bytes (the triage pass). Arrow
-    mapInPandas."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("archive_id", T.LongType(), False),
-        T.StructField("member_idx", T.IntegerType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("method", T.IntegerType(), False),
-        T.StructField("compressed_size", T.LongType(), False),
-        T.StructField("uncompressed_size", T.LongType(), False),
-        T.StructField("crc32", T.LongType(), False),
-        T.StructField("is_dir", T.BooleanType(), False),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.zip import (
-            parse_zip,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for aid, p in zip(pdf["archive_id"], pdf["payload"]):
-                for i, m in enumerate(parse_zip(bytes(p))):
-                    out["archive_id"].append(aid)
-                    out["member_idx"].append(i)
-                    for k in cols[2:]:
-                        out[k].append(m[k])
-            yield pd.DataFrame(out)
-
-    return archives.mapInPandas(batches, schema=out_schema)
-
-
 def zip_text_members(archives, *, suffixes: tuple[str, ...] = (".txt",
                                                                ".xml",
                                                                ".html",

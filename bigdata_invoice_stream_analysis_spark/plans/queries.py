@@ -1625,5 +1625,5 @@ from bigdata_invoice_stream_analysis_spark.plans import warehouse  # noqa: E402,
 from bigdata_invoice_stream_analysis_spark.plans import eventlog  # noqa: E402,F401
 from bigdata_invoice_stream_analysis_spark.plans import drains  # noqa: E402,F401
 from bigdata_invoice_stream_analysis_spark.plans import pipelines  # noqa: E402,F401
-# staged comes last: its registered rows follow every other family
+# staged comes last: its 23 late-registered rows close queries()
 from bigdata_invoice_stream_analysis_spark.plans import staged  # noqa: E402,F401

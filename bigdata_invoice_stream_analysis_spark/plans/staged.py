@@ -1,46 +1,25 @@
-"""Staged builders and the registered rows that grew out of them,
-all built to one house pattern: bounded deterministic codebooks keyed
+"""The 23 late-registered rows: codebook and corpus audits over the
+parsers and text gates, each registered with ``@query`` where it is
+defined and parity-gated by tests/test_oracle_parity.py like every
+other registered row (plans/queries.py imports this module last, so
+these rows keep their place at the end of ``queries()``).
+
+All follow one house pattern: bounded deterministic codebooks keyed
 by ``doc_id % K``; closed-form DuckDB oracles computed from fixture
 PARAMETERS or an independent reference implementation — never by
-running the parser under test.
-
-* 23 rows register with ``@query`` where they are defined: they are
-  driver-facing and parity-gated by tests/test_oracle_parity.py like
-  every other registered row (plans/queries.py imports this module
-  last).
-* 28 rows stay unregistered in ``STAGED_QUERIES`` / ``STAGED_ORACLES``:
-  23 staging candidates plus 5 retired twins — gif/webp/id3 profiles
-  whose fixtures are content_triage codebook variants k=39..42, and
-  zip/wds offsets-only twins of the registered ``zip_text_members`` /
-  ``wds_samples`` extraction rows. tests/test_staged_parity.py runs
-  the driver's own compare over them.
-
-Where a candidate can gate on REAL table data instead of a codebook
-(the VARIANT shred over orders, the drift histogram over events),
-it does — those oracles recompute from the same tables and stay
-scale-covariant at any sf.
+running the parser under test. Where a row can gate on REAL table
+data instead of a codebook (the VARIANT shred over orders, the drift
+histogram over events), it does — those oracles recompute from the
+same tables and stay scale-covariant at any sf.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_invoice_stream_analysis_spark.plans.queries import query
 from bigdata_invoice_stream_analysis_spark.sources.tables import load_table
-
-STAGED_QUERIES: dict = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def staged(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -235,524 +214,6 @@ def q_parquet_chunk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# delta_snapshot_audit — log-replay gate over k-scoped fixture logs
-# ---------------------------------------------------------------------------
-
-_DELTA_K = 5
-
-
-def _delta_commits(k: int) -> list[list[dict]]:
-    base = [
-        [{"add": f"k{k}/p0.parquet", "size": 100 + k, "rows": 10 + k},
-         {"add": f"k{k}/p1.parquet", "size": 200, "rows": 20}],
-        [{"remove": f"k{k}/p0.parquet"},
-         {"add": f"k{k}/p2.parquet", "size": 300, "rows": 30}],
-    ]
-    if k % 2 == 0:  # re-add pattern
-        base.append([{"add": f"k{k}/p0.parquet", "size": 150,
-                      "rows": 15}])
-    if k % 3 == 0:  # same-commit remove+add (OPTIMIZE shape)
-        base.append([{"remove": f"k{k}/p1.parquet"},
-                     {"add": f"k{k}/p1.parquet", "size": 210,
-                      "rows": 20}])
-    return base
-
-
-def _delta_replay(k: int) -> list[tuple[str, int, int, int]]:
-    live: dict[str, tuple[int, int, int]] = {}
-    for v, specs in enumerate(_delta_commits(k)):
-        removed = set()
-        for s in specs:
-            if "remove" in s:
-                removed.add(s["remove"])
-            if "add" in s:
-                live[s["add"]] = (v, s["size"], s["rows"])
-        for p in removed:
-            if p in live and live[p][0] == v:
-                continue
-            live.pop(p, None)
-    return sorted(
-        (p, sz, rows, v) for p, (v, sz, rows) in live.items())
-
-
-def _delta_oracle() -> str:
-    rows = []
-    for k in range(_DELTA_K):
-        for p, sz, nrec, v in _delta_replay(k):
-            rows.append(f"({k}, '{p}', {sz}, {nrec}, {v})")
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS table_id, CAST(doc_id % {_DELTA_K} AS INT) AS k
-  FROM documents
-),
-cb(k, path, size, num_records, version) AS (VALUES {values})
-SELECT table_id, path, CAST(size AS BIGINT) AS size,
-       CAST(num_records AS BIGINT) AS num_records,
-       CAST(version AS BIGINT) AS version
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("delta_snapshot_audit", _delta_oracle())
-def q_delta_snapshot_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELTA LOG REPLAY — pure-Catalyst snapshot computation gated
-    against an independent Python replay: 5 commit-log variants
-    (plain appends, remove+compact, re-add-after-remove, same-commit
-    remove+add OPTIMIZE shape) with k-scoped paths replay in ONE
-    global window pass; every doc then joins its variant's live set.
-    The oracle pins path/size/rows/version literals from the replay
-    model.  Plan: one metadata-scale path window + one broadcast
-    join; zero Python."""
-    from bigdata_invoice_stream_analysis_spark.operators.deltalog import (
-        delta_actions,
-        delta_snapshot,
-        encode_delta_log,
-    )
-
-    lines = [
-        (v, line)
-        for k in range(_DELTA_K)
-        for v, body in encode_delta_log(_delta_commits(k))
-        for line in body.split("\n")
-    ]
-    log = spark.createDataFrame(lines, "version long, line string")
-    snap = delta_snapshot(delta_actions(log)).select(
-        "path", "size", "num_records", "version",
-        F.regexp_extract("path", r"^k(\d+)/", 1).cast("int").alias("k"),
-    )
-    d = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("table_id"),
-        (F.col("doc_id") % _DELTA_K).cast("int").alias("k"),
-    )
-    return d.join(F.broadcast(snap), "k").select(
-        "table_id", "path", "size", "num_records", "version")
-
-
-# ---------------------------------------------------------------------------
-# tfrecord_feature_audit — framing + Example decode over shard codebook
-# ---------------------------------------------------------------------------
-
-_TF_K = 5
-
-
-def _tf_specs(k: int) -> list[dict]:
-    recs = [
-        {"img": [bytes((k + j) % 256 for j in range(32 + k))],
-         "label": [k, k + 1, -k]},
-        {"score": [0.5 * (k + 1), -1.5], "ids": [10 * k]},
-    ]
-    if k % 2 == 1:
-        recs.append({"txt": [f"doc{k}".encode(), b"x" * k]})
-    return recs
-
-
-def _tf_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.tfrecord import (
-        encode_example,
-        encode_tfrecords,
-    )
-
-    blob = encode_tfrecords(
-        [encode_example(spec) for spec in _tf_specs(k)])
-    if k == 4:  # planted corruption: flip the first payload byte
-        b = bytearray(blob)
-        b[12] ^= 0xFF
-        blob = bytes(b)
-    return blob
-
-
-def _tf_oracle() -> str:
-    rows = []
-    for k in range(_TF_K):
-        if k == 4:
-            # record 0 quarantines; later records keep valid CRCs
-            rows.append(
-                f"({k}, 0, FALSE, '!undecodable', 'error', 0, "
-                "NULL, NULL, NULL, NULL)")
-            specs = _tf_specs(k)[1:]
-            base = 1
-        else:
-            specs = _tf_specs(k)
-            base = 0
-        for ri, spec in enumerate(specs, start=base):
-            for name in sorted(spec):
-                vals = spec[name]
-                if isinstance(vals[0], (bytes, str)):
-                    kind, fb = "bytes", len(vals[0])
-                    int_sum = vmin = vmax = None
-                elif isinstance(vals[0], float):
-                    kind, fb, int_sum = "float", None, None
-                    vmin, vmax = min(vals), max(vals)
-                else:
-                    kind, fb = "int64", None
-                    int_sum, vmin, vmax = sum(vals), None, None
-                q = lambda v: "NULL" if v is None else str(v)
-                rows.append(
-                    f"({k}, {ri}, TRUE, '{name}', '{kind}', "
-                    f"{len(vals)}, {q(fb)}, {q(int_sum)}, "
-                    f"{q(vmin)}, {q(vmax)})")
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS blob_id, CAST(doc_id % {_TF_K} AS INT) AS k
-  FROM documents
-),
-cb(k, record_idx, crc_ok, feature, kind, n_values, first_bytes_len,
-   int_sum, float_min, float_max) AS (VALUES {values})
-SELECT CAST(blob_id AS VARCHAR) || '#' || CAST(record_idx AS VARCHAR)
-         || '#' || feature AS audit_key,
-       blob_id, CAST(record_idx AS INT) AS record_idx, crc_ok,
-       feature, kind, CAST(n_values AS INT) AS n_values,
-       CAST(first_bytes_len AS INT) AS first_bytes_len,
-       CAST(int_sum AS BIGINT) AS int_sum,
-       CAST(float_min AS DOUBLE) AS float_min,
-       CAST(float_max AS DOUBLE) AS float_max
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("tfrecord_feature_audit", _tf_oracle())
-def q_tfrecord_feature_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TFRECORD SHARD AUDIT — CRC-32C framing + protobuf Example
-    decode: 5 shard variants (bytes/int64/float/string features, a
-    variant with a PLANTED corrupt first record whose CRC must flag
-    and whose payload must quarantine as an !undecodable row while
-    the rest of the shard survives).  The oracle recomputes feature
-    kinds, counts, byte lengths, int sums and float ranges from the
-    fixture SPECS.  audit_key leads the projection per the non-null
-    sort-prefix convention (PERF §40).  Map-side; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.tfrecord import (
-        tfrecord_features,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_tf_payload(k))) for k in range(_TF_K)],
-        "k int, payload binary",
-    )
-    shards = d.select(
-        F.col("doc_id").alias("shard_id"),
-        (F.col("doc_id") % _TF_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    feats = tfrecord_features(shards.select("shard_id", "payload"))
-    return feats.select(
-        F.concat_ws(
-            "#", F.col("shard_id"), F.col("record_idx"),
-            F.col("feature")).alias("audit_key"),
-        F.col("shard_id").alias("blob_id"),
-        "record_idx", "crc_ok", "feature", "kind", "n_values",
-        "first_bytes_len", "int_sum", "float_min", "float_max",
-    )
-
-
-# ---------------------------------------------------------------------------
-# avro_container_audit — schema-driven decode across all stdlib codecs
-# ---------------------------------------------------------------------------
-
-_AVRO_K = 5
-_AVRO_SCHEMA = {
-    "type": "record", "name": "Evt",
-    "fields": [
-        {"name": "id", "type": "long"},
-        {"name": "tag", "type": "string"},
-        {"name": "score", "type": ["null", "double"]},
-    ],
-}
-
-
-def _avro_records(k: int) -> list[dict]:
-    return [
-        {"id": 10 * k + j, "tag": f"t{k}_{j}",
-         "score": None if j % 2 else 0.5 * j + k}
-        for j in range(3 + k)
-    ]
-
-
-def _avro_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.avro import (
-        encode_avro,
-    )
-
-    if k == 4:
-        return b"not an avro container at all"
-    codec = ["null", "deflate", "bzip2", "xz"][k]
-    return encode_avro(
-        _AVRO_SCHEMA, _avro_records(k), codec=codec,
-        records_per_block=2)
-
-
-def _avro_oracle() -> str:
-    rows = []
-    for k in range(_AVRO_K):
-        if k == 4:
-            rows.append(
-                f"({k}, FALSE, NULL, NULL, NULL, NULL, NULL, NULL)")
-            continue
-        recs = _avro_records(k)
-        codec = ["null", "deflate", "bzip2", "xz"][k]
-        n_blocks = (len(recs) + 1) // 2
-        first = dict(sorted(recs[0].items()))
-        fr = json.dumps(first, sort_keys=True).replace("'", "''")
-        rows.append(
-            f"({k}, TRUE, '{codec}', 'Evt', 3, {n_blocks}, "
-            f"{len(recs)}, '{fr}')")
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS archive_id, CAST(doc_id % {_AVRO_K} AS INT) AS k
-  FROM documents
-),
-cb(k, ok, codec, schema_name, n_fields, n_blocks, n_records,
-   first_record_json) AS (VALUES {values})
-SELECT archive_id, ok, codec, schema_name,
-       CAST(n_fields AS INT) AS n_fields,
-       CAST(n_blocks AS INT) AS n_blocks,
-       CAST(n_records AS BIGINT) AS n_records, first_record_json
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("avro_container_audit", _avro_oracle())
-def q_avro_container_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AVRO CONTAINER AUDIT — schema-driven binary decode over a
-    5-variant codebook spanning every stdlib codec (null, deflate,
-    bzip2, xz), multi-block layout, nullable-union fields, and one
-    not-an-avro blob that must quarantine (ok=false row).  The
-    oracle pins codec, block/record counts and the first record's
-    JSON rendering from the fixture specs.  archive_id (unique,
-    alphabetically first) per the sort-prefix convention.
-    Map-side; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.avro import (
-        avro_container_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_avro_payload(k))) for k in range(_AVRO_K)],
-        "k int, payload binary",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _AVRO_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return avro_container_profile(
-        files.select("file_id", "payload")
-    ).select(
-        F.col("file_id").alias("archive_id"), "ok", "codec",
-        "schema_name", "n_fields", "n_blocks", "n_records",
-        "first_record_json",
-    )
-
-
-# ---------------------------------------------------------------------------
-# orc_footer_audit — the remaining columnar control plane
-# ---------------------------------------------------------------------------
-
-_ORC_K = 4
-
-
-def _orc_payload(k: int) -> bytes:
-    if k == 3:
-        return b"ORC\x01but not a real orc tail"
-    import io
-
-    import pyarrow as pa
-    import pyarrow.orc as pa_orc
-
-    n = 5 + k
-    table = pa.table({
-        f"c{k}_a": list(range(n)),
-        f"c{k}_b": [f"v{j}" for j in range(n)],
-    })
-    buf = io.BytesIO()
-    pa_orc.write_table(
-        table, buf,
-        compression="zlib" if k % 2 == 0 else "uncompressed")
-    return buf.getvalue()
-
-
-def _orc_oracle() -> str:
-    rows = []
-    for k in range(_ORC_K):
-        if k == 3:
-            rows.append(f"({k}, FALSE, NULL, NULL, NULL, NULL)")
-            continue
-        n = 5 + k
-        codec = "ZLIB" if k % 2 == 0 else "NONE"
-        rows.append(
-            f"({k}, TRUE, '{codec}', {n}, 2, 'c{k}_a,c{k}_b')")
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS archive_id, CAST(doc_id % {_ORC_K} AS INT) AS k
-  FROM documents
-),
-cb(k, ok, compression, num_rows, n_columns, column_names)
-  AS (VALUES {values})
-SELECT archive_id, ok, compression,
-       CAST(num_rows AS BIGINT) AS num_rows,
-       CAST(n_columns AS INT) AS n_columns, column_names
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("orc_footer_audit", _orc_oracle())
-def q_orc_footer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC FOOTER AUDIT — postscript + chunked-zlib protobuf footer
-    (operators/orcmeta, via the generic wire walker) over a codebook
-    of pyarrow-written files (ZLIB and uncompressed) plus one
-    corrupt tail that must quarantine.  The oracle pins compression,
-    row count, column count and names from the fixture parameters —
-    pyarrow is the INDEPENDENT writer here, so the gate
-    cross-validates our reader against a third-party implementation
-    inside the graded path itself.  Map-side tail reads; 0 data
-    shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.orcmeta import (
-        orc_footer_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_orc_payload(k))) for k in range(_ORC_K)],
-        "k int, payload binary",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _ORC_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return orc_footer_profile(
-        files.select("file_id", "payload")
-    ).select(
-        F.col("file_id").alias("archive_id"), "ok", "compression",
-        "num_rows", "n_columns", "column_names",
-    )
-
-
-# ---------------------------------------------------------------------------
-# tensor_file_audit — npy / npz / safetensors over one dispatch pass
-# ---------------------------------------------------------------------------
-
-_TENSOR_K = 5
-
-
-def _tensor_payload(k: int) -> bytes:
-    import io
-    import struct as _struct
-
-    import numpy as np
-
-    if k == 0:
-        buf = io.BytesIO()
-        np.save(buf, np.arange(12, dtype=np.int64).reshape(3, 4))
-        return buf.getvalue()
-    if k == 1:
-        buf = io.BytesIO()
-        np.save(buf, np.array([0.5, -1.5, 2.5], dtype=np.float32))
-        return buf.getvalue()
-    if k == 2:
-        buf = io.BytesIO()
-        np.savez(buf,
-                 emb=np.array([1.0, 2.0], dtype=np.float64),
-                 ids=np.array([7, 8, 9], dtype=np.int64))
-        return buf.getvalue()
-    if k == 3:
-        w = np.arange(6, dtype=np.float32).reshape(2, 3)
-        b = np.array([1, 2], dtype=np.int64)
-        header: dict = {}
-        body = b""
-        for name, arr, dt in (("w", w, "F32"), ("b", b, "I64")):
-            raw = arr.tobytes()
-            header[name] = {"dtype": dt, "shape": list(arr.shape),
-                            "data_offsets": [len(body),
-                                             len(body) + len(raw)]}
-            body += raw
-        hjson = json.dumps(header, sort_keys=True).encode()
-        return _struct.pack("<Q", len(hjson)) + hjson + body
-    return b"\x00\x01 not any tensor format"
-
-
-def _tensor_oracle() -> str:
-    rows = [
-        "(0, 'npy', NULL, 'i8', '[3, 4]', 12, 96, 0.0, 11.0)",
-        "(1, 'npy', NULL, 'f4', '[3]', 3, 12, -1.5, 2.5)",
-        "(2, 'npz', 'emb', 'f8', '[2]', 2, 16, 1.0, 2.0)",
-        "(2, 'npz', 'ids', 'i8', '[3]', 3, 24, 7.0, 9.0)",
-        "(3, 'safetensors', 'w', 'F32', '[2, 3]', 6, 24, NULL, NULL)",
-        "(3, 'safetensors', 'b', 'I64', '[2]', 2, 16, NULL, NULL)",
-        "(4, 'error', NULL, NULL, NULL, NULL, NULL, NULL, NULL)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS blob_id, CAST(doc_id % {_TENSOR_K} AS INT) AS k
-  FROM documents
-),
-cb(k, format, tensor, dtype, shape_json, n_elements, n_bytes,
-   vmin, vmax) AS (VALUES {values})
-SELECT CAST(blob_id AS VARCHAR) || '#' || COALESCE(tensor, '-')
-         || '#' || format AS audit_key,
-       blob_id, format, tensor, dtype, shape_json,
-       CAST(n_elements AS BIGINT) AS n_elements,
-       CAST(n_bytes AS BIGINT) AS n_bytes,
-       CAST(vmin AS DOUBLE) AS vmin, CAST(vmax AS DOUBLE) AS vmax
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("tensor_file_audit", _tensor_oracle())
-def q_tensor_file_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TENSOR FILE AUDIT — .npy (v1 header walk), .npz (through our
-    own ZIP central-directory reader), and .safetensors (u64+JSON
-    header with offset validation) dispatched by magic in one pass,
-    plus a garbage blob that must quarantine.  numpy is the
-    independent writer for the npy/npz variants; expected dtypes,
-    shapes, element/byte counts and min/max stats are fixture
-    literals.  audit_key leads per the sort-prefix convention.
-    Map-side; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.tensorfile import (
-        tensor_file_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_tensor_payload(k)))
-         for k in range(_TENSOR_K)],
-        "k int, payload binary",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _TENSOR_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    prof = tensor_file_profile(files.select("file_id", "payload"))
-    return prof.select(
-        F.concat_ws(
-            "#", F.col("file_id"),
-            F.coalesce(F.col("tensor"), F.lit("-")),
-            F.col("format")).alias("audit_key"),
-        F.col("file_id").alias("blob_id"), "format", "tensor",
-        "dtype", "shape_json", "n_elements", "n_bytes", "vmin",
-        "vmax",
-    )
-
-
-# ---------------------------------------------------------------------------
 # bpe_corpus_tokens — distributed training gated vs an inline reference
 # ---------------------------------------------------------------------------
 
@@ -894,278 +355,6 @@ def q_bpe_corpus_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# duplicate_span_audit — exact shared-passage extraction
-# ---------------------------------------------------------------------------
-
-_SPAN_K = 3
-_SPAN_SHARED = [
-    "the quick brown fox jumps over the lazy dog tonight",
-    "pack my box with five dozen liquor jugs right now ok",
-    "zzzz shared shard of repeated text zzzz",
-]
-_SPAN_PAIRS = [
-    (f"HEAD{k} " + _SPAN_SHARED[k] + f" TAIL{k}",
-     f"B{k}START " + _SPAN_SHARED[k] + " BEND")
-    for k in range(_SPAN_K)
-]
-_SPAN_GRAM = 8
-_SPAN_MINLEN = 16
-
-
-def _span_reference(k: int) -> list[tuple[int, int, int]]:
-    a, b = _SPAN_PAIRS[k]
-    grams_b: dict = {}
-    for j in range(len(b) - _SPAN_GRAM + 1):
-        grams_b.setdefault(b[j:j + _SPAN_GRAM], []).append(j)
-    matches = set()
-    for i in range(len(a) - _SPAN_GRAM + 1):
-        for j in grams_b.get(a[i:i + _SPAN_GRAM], ()):
-            matches.add((i, j))
-    spans = []
-    for (i, j) in sorted(matches):
-        if (i - 1, j - 1) in matches:
-            continue
-        run = 0
-        while (i + run + 1, j + run + 1) in matches:
-            run += 1
-        if run + _SPAN_GRAM >= _SPAN_MINLEN:
-            spans.append((i, j, run + _SPAN_GRAM))
-    return spans
-
-
-def _span_oracle() -> str:
-    rows = []
-    for k in range(_SPAN_K):
-        for a_start, b_start, length in _span_reference(k):
-            rows.append(f"({k}, {a_start}, {b_start}, {length})")
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id, CAST(doc_id % {_SPAN_K} AS INT) AS k
-  FROM documents
-),
-cb(k, a_start, b_start, length) AS (VALUES {values})
-SELECT doc_id, CAST(a_start AS BIGINT) AS a_start,
-       CAST(b_start AS BIGINT) AS b_start,
-       CAST(length AS BIGINT) AS length
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("duplicate_span_audit", _span_oracle())
-def q_duplicate_span_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT DUPLICATED-SPAN EXTRACTION (Lee et al. 2021 shape): the
-    3 codebook text pairs each share one planted passage; the
-    relational extractor (k-gram diagonal islands,
-    operators/spandup) must recover exactly the maximal spans the
-    inline brute-force reference computes, and every doc joins its
-    variant's spans.  Plan: candidate-bounded equi-joins + one
-    islands window on the (tiny) codebook side, broadcast to the
-    corpus-scale doc join."""
-    from bigdata_invoice_stream_analysis_spark.operators.spandup import (
-        duplicate_spans,
-    )
-
-    texts = spark.createDataFrame(
-        [(2 * k + side, _SPAN_PAIRS[k][side])
-         for k in range(_SPAN_K) for side in (0, 1)],
-        "doc_id long, text string",
-    )
-    pairs = spark.createDataFrame(
-        [(2 * k, 2 * k + 1) for k in range(_SPAN_K)],
-        "doc_a long, doc_b long",
-    )
-    spans = duplicate_spans(
-        texts, pairs, k=_SPAN_GRAM, min_len=_SPAN_MINLEN,
-    ).select(
-        (F.col("doc_a") / 2).cast("int").alias("k"),
-        "a_start", "b_start", "length",
-    )
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", (F.col("doc_id") % _SPAN_K).cast("int").alias("k"))
-    return d.join(F.broadcast(spans), "k").select(
-        "doc_id", "a_start", "b_start", "length")
-
-
-# ---------------------------------------------------------------------------
-# arrow_file_audit — Feather v2 metadata over pyarrow-written fixtures
-# ---------------------------------------------------------------------------
-
-_ARROW_K = 4
-
-
-def _arrow_payload(k: int) -> bytes:
-    if k == 3:
-        return b"ARROW1\x00\x00 truncated artifact"
-    import io
-
-    import pyarrow as pa
-    import pyarrow.ipc as ipc
-
-    n = 4 + k
-    table = pa.table({
-        f"a{k}": [None if j == 0 and k % 2 else j for j in range(n)],
-        f"s{k}": [f"v{j}" for j in range(n)],
-    })
-    buf = io.BytesIO()
-    with ipc.new_file(buf, table.schema) as w:
-        w.write_table(table, max_chunksize=3)
-    return buf.getvalue()
-
-
-def _arrow_oracle() -> str:
-    rows = []
-    for k in range(_ARROW_K):
-        if k == 3:
-            rows.append(f"({k}, FALSE, NULL, NULL, NULL, NULL, NULL)")
-            continue
-        n = 4 + k
-        n_batches = (n + 2) // 3
-        nulls = 1 if k % 2 else 0
-        types = f"a{k}:int64,s{k}:utf8"
-        rows.append(
-            f"({k}, TRUE, {n}, {n_batches}, 2, '{types}', {nulls})")
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS archive_id, CAST(doc_id % {_ARROW_K} AS INT) AS k
-  FROM documents
-),
-cb(k, ok, num_rows, n_batches, n_columns, column_types,
-   total_null_count) AS (VALUES {values})
-SELECT archive_id, ok, CAST(num_rows AS BIGINT) AS num_rows,
-       CAST(n_batches AS INT) AS n_batches,
-       CAST(n_columns AS INT) AS n_columns, column_types,
-       CAST(total_null_count AS BIGINT) AS total_null_count
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("arrow_file_audit", _arrow_oracle())
-def q_arrow_file_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ARROW IPC / FEATHER AUDIT — the from-scratch flatbuffers
-    reader (operators/arrowipc) over pyarrow-written fixtures:
-    footer Block directory, schema type union, per-batch RecordBatch
-    headers with null counts; one corrupt blob must quarantine.
-    pyarrow is the independent writer inside the graded path, like
-    the ORC gate.  Metadata-only map-side reads; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.arrowipc import (
-        arrow_file_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_arrow_payload(k))) for k in range(_ARROW_K)],
-        "k int, payload binary",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _ARROW_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return arrow_file_profile(
-        files.select("file_id", "payload")
-    ).select(
-        F.col("file_id").alias("archive_id"), "ok", "num_rows",
-        "n_batches", "n_columns", "column_types", "total_null_count",
-    )
-
-
-# ---------------------------------------------------------------------------
-# compressed_shard_audit — zstd/lz4 frame structure without decode
-# ---------------------------------------------------------------------------
-
-_COMP_K = 4
-
-
-def _comp_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.compression import (
-        encode_lz4_stream,
-        encode_zstd_stream,
-    )
-
-    if k == 0:
-        return encode_zstd_stream([
-            {"blocks": [b"a" * 40, b"b" * 24], "content_size": 64},
-            {"skippable": b"sidecar-metadata"},
-        ])
-    if k == 1:
-        return encode_zstd_stream([
-            {"blocks": [b"x" * 10], "dict_id": 321,
-             "checksum": True},
-        ])
-    if k == 2:
-        return encode_lz4_stream([
-            {"blocks": [b"p" * 30, b"q" * 12], "content_size": 42},
-            {"blocks": [b"r" * 5]},
-        ])
-    return b"plain text, not a compressed frame"
-
-
-def _comp_oracle() -> str:
-    rows = [
-        "(0, 'zstd', TRUE, 1, 1, 2, 64, FALSE)",
-        "(1, 'zstd', TRUE, 1, 0, 1, NULL, TRUE)",
-        "(2, 'lz4', TRUE, 2, 0, 3, 42, FALSE)",
-        "(3, 'unknown', FALSE, NULL, NULL, NULL, NULL, NULL)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS archive_id, CAST(doc_id % {_COMP_K} AS INT) AS k
-  FROM documents
-),
-cb(k, format, ok, n_frames, n_skippable, n_blocks,
-   declared_content_bytes, needs_dictionary) AS (VALUES {values})
-SELECT archive_id, format, ok, CAST(n_frames AS INT) AS n_frames,
-       CAST(n_skippable AS INT) AS n_skippable,
-       CAST(n_blocks AS INT) AS n_blocks,
-       CAST(declared_content_bytes AS BIGINT)
-         AS declared_content_bytes,
-       needs_dictionary
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("compressed_shard_audit", _comp_oracle())
-def q_compressed_shard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPRESSED-SHARD AUDIT — zstd/LZ4 frame walks (RFC 8878 +
-    the LZ4 frame spec) over a 4-variant codebook: multi-frame with
-    a skippable sidecar, dictionary-dependent frame with checksum,
-    multi-frame LZ4, and a plain-text blob that must quarantine.
-    Payloads are never decompressed; the oracle pins frame/block
-    directories and declared content sizes from the fixture specs.
-    Map-side; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.compression import (
-        compressed_shard_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_comp_payload(k))) for k in range(_COMP_K)],
-        "k int, payload binary",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _COMP_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return compressed_shard_profile(
-        files.select("file_id", "payload")
-    ).select(
-        F.col("file_id").alias("archive_id"), "format", "ok",
-        "n_frames", "n_skippable", "n_blocks",
-        "declared_content_bytes", "needs_dictionary",
-    )
-
-
-# ---------------------------------------------------------------------------
 # streaming_content_triage — the ingestion layer under the streaming engine
 # ---------------------------------------------------------------------------
 
@@ -1193,8 +382,7 @@ _STREAM_TRIAGE_ROWS = [
     (34, "svg", "image", 4), (35, "feed", "web", 2),
     (36, "jsonl", "table", 3), (37, "eml", "document", 3),
     (38, "mbox", "document", 2),
-    # r9 staging retirements folded into the codebook (VERDICT r8
-    # item 6): interlaced 87a GIF, lossless + animated WebP, v2.3 MP3
+    # interlaced 87a GIF, lossless + animated WebP, v2.3 MP3
     (39, "gif", "image", 1), (40, "webp", "image", 1),
     (41, "webp", "image", 3), (42, "mp3", "audio", 2),
 ]
@@ -1305,187 +493,6 @@ def q_streaming_content_triage(
 
 
 # ---------------------------------------------------------------------------
-# encoding_repair_audit — mojibake unwinding gated on exact literals
-# ---------------------------------------------------------------------------
-
-_ENC_K = 5
-_ENC_CLEAN = [
-    "café déjà vu — naïve ’quotes’",
-    "größer über äußerst",
-    "plain ascii needs no repair at all",
-    "résumé – emphasis",
-    "日本語テキスト",
-]
-
-
-def _enc_damage(s: str, times: int) -> str:
-    from bigdata_invoice_stream_analysis_spark.functions.encfix import (
-        _cp1252_char,
-    )
-
-    for _ in range(times):
-        s = "".join(_cp1252_char(b) for b in s.encode("utf-8"))
-    return s
-
-
-def _enc_damaged(k: int) -> str:
-    # k2 is clean ascii (0 passes); k0/k3 single-damaged; k1/k4
-    # double-damaged — the repair must stop exactly at the original
-    return _enc_damage(_ENC_CLEAN[k], {0: 1, 1: 2, 3: 1, 4: 2}.get(k, 0))
-
-
-def _enc_oracle() -> str:
-    rows = []
-    for k in range(_ENC_K):
-        passes = {0: 1, 1: 2, 3: 1, 4: 2}.get(k, 0)
-        text = _ENC_CLEAN[k].replace("'", "''")
-        rows.append(f"({k}, '{text}', {passes})")
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id, CAST(doc_id % {_ENC_K} AS INT) AS k FROM documents
-),
-cb(k, text, repair_passes) AS (VALUES {values})
-SELECT doc_id, text, CAST(repair_passes AS INT) AS repair_passes,
-       CAST(0 AS INT) AS score_after
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("encoding_repair_audit", _enc_oracle())
-def q_encoding_repair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ENCODING REPAIR — the pre-tokenization mojibake pass: docs
-    carry codebook texts damaged 0/1/2 times through the canonical
-    utf8-as-cp1252 process; the JVM regexp screen routes only the
-    damaged rows to the Arrow repair, which must unwind EXACTLY to
-    the original literals (the oracle pins the clean text and the
-    pass count — an over-eager or partial repair flips the hash,
-    and the clean-ascii variant proves clean text is untouched)."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.functions.encfix import (
-        encoding_repair,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, _enc_damaged(k)) for k in range(_ENC_K)],
-        "k int, damaged string",
-    )
-    docs = d.select(
-        "doc_id", (F.col("doc_id") % _ENC_K).cast("int").alias("k")
-    ).join(F.broadcast(codebook), "k")
-    return encoding_repair(
-        docs.select("doc_id", F.col("damaged").alias("text"))
-    ).select("doc_id", "text", "repair_passes", "score_after")
-
-
-# ---------------------------------------------------------------------------
-# ogg_audio_profile — RFC 3533 container walk with real page CRCs
-# ---------------------------------------------------------------------------
-
-_OGG_K = 4
-
-
-def _ogg_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.ogg import (
-        encode_minimal_opus,
-        encode_ogg_page,
-    )
-
-    if k == 0:
-        # 2 header pages + 5 audio pages; duration = 5*960/48k = 100ms
-        return encode_minimal_opus(
-            serial=0x1234, channels=2, pre_skip=312,
-            input_rate=48000, n_audio_packets=5,
-            samples_per_packet=960,
-        )
-    if k == 1:
-        # hand-built Vorbis: BOS id header + one EOS audio page at
-        # granule 22050 @ 44100 Hz → 500 ms
-        idh = (b"\x01vorbis" + bytes(4) + bytes([2])
-               + (44100).to_bytes(4, "little"))
-        idh += bytes(30 - len(idh))
-        out = encode_ogg_page(7, 0, 0, [idh], bos=True)
-        out += encode_ogg_page(7, 1, 22050, [b"v" * 50], eos=True)
-        return out
-    if k == 2:
-        # valid framing, one corrupted page body byte → n_crc_bad=1
-        raw = bytearray(encode_minimal_opus(
-            serial=9, channels=1, pre_skip=0, input_rate=24000,
-            n_audio_packets=2, samples_per_packet=480,
-        ))
-        raw[-1] ^= 0xFF
-        return bytes(raw)
-    return b"RIFF not an ogg stream"
-
-
-def _ogg_oracle() -> str:
-    rows = [
-        "(0, TRUE, NULL, 4660, 'opus', 2, 48000, 7, 7, 100, 0)",
-        "(1, TRUE, NULL, 7, 'vorbis', 2, 44100, 2, 2, 500, 0)",
-        "(2, TRUE, NULL, 9, 'opus', 1, 24000, 4, 4, 20, 1)",
-        "(3, FALSE, 'ogg: missing OggS capture pattern', "
-        "NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS file_id, CAST(doc_id % {_OGG_K} AS INT) AS k
-  FROM documents
-),
-cb(k, ok, error, serial, codec, channels, sample_rate, n_pages,
-   n_packets, duration_ms, n_crc_bad) AS (VALUES {values})
-SELECT file_id AS archive_id, ok, error,
-       CAST(serial AS BIGINT) AS serial, codec,
-       CAST(channels AS INT) AS channels,
-       CAST(sample_rate AS INT) AS sample_rate,
-       CAST(n_pages AS INT) AS n_pages,
-       CAST(n_packets AS INT) AS n_packets,
-       CAST(duration_ms AS BIGINT) AS duration_ms,
-       CAST(n_crc_bad AS INT) AS n_crc_bad
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("ogg_audio_profile", _ogg_oracle())
-def q_ogg_audio_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OGG AUDIO PROFILE — the RFC 3533 page walk (operators/ogg)
-    over a 4-variant codebook: a spec-complete Ogg-Opus file, a
-    hand-built Vorbis stream, an Opus file with one corrupted page
-    body (the real CRC must catch it without failing the file), and
-    a non-Ogg blob that must quarantine to an error row. Oracle pins
-    codec identity, page/packet counts, granule-derived durations,
-    and the CRC-health count from the fixture PARAMETERS.  Map-side;
-    0 data shuffles, 1 bounded broadcast."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.ogg import (
-        ogg_stream_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_ogg_payload(k))) for k in range(_OGG_K)],
-        "k int, payload binary",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _OGG_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    # archive_id leads the column-name sort and is unique per row
-    # (one stream per fixture) — the non-null sort prefix the
-    # driver's hash-compare needs (PERF §40).
-    return ogg_stream_profile(
-        files.select("file_id", "payload")
-    ).withColumnRenamed("file_id", "archive_id")
-
-
-# ---------------------------------------------------------------------------
 # pdf_text_extract — ISO 32000-1 salvage walk + ObjStm + text ops
 # ---------------------------------------------------------------------------
 
@@ -1569,639 +576,6 @@ def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", (F.col("doc_id") % _PDF_K).cast("int").alias("k"),
     ).join(F.broadcast(codebook), "k")
     return pdf_text_pages(docs.select("doc_id", "payload"))
-
-
-# ---------------------------------------------------------------------------
-# png_metadata_audit — text chunks, XMP, eXIf GPS through parse_tiff
-# ---------------------------------------------------------------------------
-
-_PNG_K = 4
-
-
-def _png_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.exif import (
-        encode_tiff,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.pngmeta import (
-        encode_png_with_metadata,
-    )
-
-    if k == 0:
-        return encode_png_with_metadata(
-            texts={"Author": "ann", "Comment": "hi"},
-            ztxt={"Description": "long text"}, time_chunk=True,
-        )
-    if k == 1:
-        return encode_png_with_metadata(xmp="<x:xmpmeta/>")
-    if k == 2:
-        return encode_png_with_metadata(
-            width=9, height=7,
-            exif_tiff=encode_tiff(9, 7, gps=True, byte_order="MM"),
-            phys=True,
-        )
-    return encode_png_with_metadata(width=16, height=2)
-
-
-def _png_oracle() -> str:
-    rows = [
-        "(0, 4, 3, 7, 3, 'Author,Comment,Description', FALSE, FALSE,"
-        " FALSE, TRUE, FALSE)",
-        "(1, 4, 3, 4, 1, 'XML:com.adobe.xmp', TRUE, FALSE, FALSE,"
-        " FALSE, FALSE)",
-        "(2, 9, 7, 5, 0, '', FALSE, TRUE, TRUE, FALSE, TRUE)",
-        "(3, 16, 2, 3, 0, '', FALSE, FALSE, FALSE, FALSE, FALSE)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS media_id, CAST(doc_id % {_PNG_K} AS INT) AS k
-  FROM documents
-),
-cb(k, width, height, n_chunks, n_texts, keywords, has_xmp, has_exif,
-   has_gps, has_time, has_phys) AS (VALUES {values})
-SELECT media_id, CAST(width AS INT) AS width,
-       CAST(height AS INT) AS height, CAST(8 AS INT) AS bit_depth,
-       CAST(0 AS INT) AS color_type,
-       CAST(n_chunks AS INT) AS n_chunks,
-       CAST(n_texts AS INT) AS n_texts, keywords, has_xmp, has_exif,
-       has_gps, has_time, has_phys
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("png_metadata_audit", _png_oracle())
-def q_png_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PNG METADATA / PRIVACY AUDIT — chunk walk with real CRCs
-    (operators/pngmeta): tEXt + really-inflated zTXt keywords, the
-    XMP iTXt, and an eXIf chunk whose big-endian TIFF payload runs
-    the SAME parse_tiff GPS walk as JPEG EXIF (the privacy bit a
-    release pipeline gates on).  Oracle pins geometry, chunk/text
-    counts, sorted keyword lists, and every presence flag from the
-    fixture parameters.  Map-side; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.pngmeta import (
-        png_metadata_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_png_payload(k))) for k in range(_PNG_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        (F.col("doc_id") % _PNG_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return png_metadata_profile(media.select("media_id", "payload"))
-
-
-# ---------------------------------------------------------------------------
-# gif_structure_profile — animated-image triage before any decode
-# ---------------------------------------------------------------------------
-
-_GIF_K = 4
-
-
-def _gif_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.gif import (
-        encode_minimal_gif,
-    )
-
-    if k == 0:
-        return encode_minimal_gif([10, 20, 30], loop_count=0)
-    if k == 1:
-        return encode_minimal_gif([50], loop_count=None)
-    if k == 2:
-        return encode_minimal_gif(
-            [5, 5], loop_count=3, transparent=True,
-        )
-    return encode_minimal_gif(
-        [0], loop_count=None, interlaced=True, version=b"87a",
-        width=64, height=64,
-    )
-
-
-def _gif_oracle() -> str:
-    rows = [
-        "(0, '89a', 32, 24, 3, TRUE, 600, 0, FALSE, FALSE)",
-        "(1, '89a', 32, 24, 1, FALSE, 500, NULL, FALSE, FALSE)",
-        "(2, '89a', 32, 24, 2, TRUE, 100, 3, TRUE, FALSE)",
-        "(3, '87a', 64, 64, 1, FALSE, 0, NULL, FALSE, TRUE)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS media_id, CAST(doc_id % {_GIF_K} AS INT) AS k
-  FROM documents
-),
-cb(k, version, width, height, n_frames, animated, duration_ms,
-   loop_count, transparent, interlaced) AS (VALUES {values})
-SELECT media_id, version, CAST(width AS INT) AS width,
-       CAST(height AS INT) AS height,
-       CAST(n_frames AS INT) AS n_frames, animated,
-       CAST(duration_ms AS BIGINT) AS duration_ms,
-       CAST(loop_count AS INT) AS loop_count, transparent,
-       interlaced, CAST(4 AS INT) AS palette_size
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("gif_structure_profile", _gif_oracle())
-def q_gif_structure_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GIF STRUCTURE PROFILE — the 89a block walk (operators/gif):
-    NETSCAPE loop extension, graphic-control delays summed to a
-    duration, transparency/interlace flags, and an 87a still image.
-    The oracle recomputes every field from the fixture parameters
-    (delays are centiseconds → ms; the global table is always the
-    4-entry fixture palette).  Map-side; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.gif import (
-        gif_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_gif_payload(k))) for k in range(_GIF_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        (F.col("doc_id") % _GIF_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return gif_profile(media.select("media_id", "payload"))
-
-
-# ---------------------------------------------------------------------------
-# webp_structure_profile — RIFF walk: simple, lossless, extended
-# ---------------------------------------------------------------------------
-
-_WEBP_K = 4
-
-
-def _webp_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.webp import (
-        encode_webp,
-    )
-
-    if k == 0:
-        return encode_webp(320, 240, variant="lossy")
-    if k == 1:
-        return encode_webp(64, 48, variant="lossless", alpha=True)
-    if k == 2:
-        return encode_webp(
-            100, 80, variant="lossy", frames=[40, 60, 100],
-            has_exif=True, has_xmp=True,
-        )
-    return encode_webp(33, 21, variant="lossy", alpha=True)
-
-
-def _webp_oracle() -> str:
-    rows = [
-        "(0, 'lossy', 320, 240, FALSE, FALSE, 1, 0, FALSE, FALSE)",
-        "(1, 'lossless', 64, 48, TRUE, FALSE, 1, 0, FALSE, FALSE)",
-        "(2, 'extended', 100, 80, FALSE, TRUE, 3, 200, TRUE, TRUE)",
-        "(3, 'extended', 33, 21, TRUE, FALSE, 1, 0, FALSE, FALSE)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS media_id, CAST(doc_id % {_WEBP_K} AS INT) AS k
-  FROM documents
-),
-cb(k, variant, width, height, alpha, animated, n_frames,
-   duration_ms, has_exif, has_xmp) AS (VALUES {values})
-SELECT media_id, variant, CAST(width AS INT) AS width,
-       CAST(height AS INT) AS height, alpha, animated,
-       CAST(n_frames AS INT) AS n_frames,
-       CAST(duration_ms AS BIGINT) AS duration_ms, has_exif,
-       has_xmp, CAST(FALSE AS BOOLEAN) AS has_icc
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("webp_structure_profile", _webp_oracle())
-def q_webp_structure_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WEBP STRUCTURE PROFILE — the RIFF chunk walk (operators/webp)
-    across all three container shapes: simple lossy (VP8 frame-tag
-    dimensions), simple lossless (VP8L 14-bit packed dimensions with
-    the alpha bit), animated extended (ANMF frame count + summed
-    durations, EXIF/XMP presence), and the alpha-on-lossy promotion
-    to VP8X.  Oracle literals come from the encoder arguments.
-    Map-side; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.webp import (
-        webp_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_webp_payload(k))) for k in range(_WEBP_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        (F.col("doc_id") % _WEBP_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return webp_profile(media.select("media_id", "payload"))
-
-
-# ---------------------------------------------------------------------------
-# sitemap_url_audit — sitemaps.org 0.9: urlset, index, .xml.gz
-# ---------------------------------------------------------------------------
-
-_SITEMAP_K = 4
-
-
-def _sitemap_payload(k: int) -> bytes:
-    import gzip as _gzip
-
-    if k == 0:
-        return (
-            b'<?xml version="1.0" encoding="UTF-8"?>\n'
-            b'<urlset xmlns="http://www.sitemaps.org/schemas/'
-            b'sitemap/0.9">\n'
-            b"<url><loc>https://ex.com/</loc>"
-            b"<lastmod>2026-01-01</lastmod>"
-            b"<changefreq>daily</changefreq>"
-            b"<priority>0.8</priority></url>\n"
-            b"<url><loc>https://ex.com/a</loc>"
-            b"<priority>0.5</priority></url>\n"
-            b"<url><loc>https://ex.com/b</loc></url>\n"
-            b"</urlset>"
-        )
-    if k == 1:
-        return (
-            b"<sitemapindex>"
-            b"<sitemap><loc>https://ex.com/s1.xml</loc>"
-            b"<lastmod>2026-02-02</lastmod></sitemap>"
-            b"<sitemap><loc>https://ex.com/s2.xml</loc></sitemap>"
-            b"</sitemapindex>"
-        )
-    if k == 2:
-        xml = (
-            b"<urlset><url><loc>https://gz.example/page</loc>"
-            b"<lastmod>2026-03-03</lastmod>"
-            b"<changefreq>weekly</changefreq>"
-            b"<priority>1.0</priority></url></urlset>"
-        )
-        return _gzip.compress(xml, 9, mtime=0)
-    return (
-        b"<urlset><url><lastmod>2026-01-01</lastmod></url>"
-        b"<url><loc>https://ex.com/c</loc>"
-        b"<priority>high</priority></url></urlset>"
-    )
-
-
-def _sitemap_oracle() -> str:
-    rows = [
-        "(0, FALSE, 'https://ex.com/', '2026-01-01', 'daily', 0.8)",
-        "(0, FALSE, 'https://ex.com/a', NULL, NULL, 0.5)",
-        "(0, FALSE, 'https://ex.com/b', NULL, NULL, NULL)",
-        "(1, TRUE, 'https://ex.com/s1.xml', '2026-02-02', NULL,"
-        " NULL)",
-        "(1, TRUE, 'https://ex.com/s2.xml', NULL, NULL, NULL)",
-        "(2, FALSE, 'https://gz.example/page', '2026-03-03',"
-        " 'weekly', 1.0)",
-        "(3, FALSE, 'https://ex.com/c', NULL, NULL, NULL)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS sitemap_id, CAST(doc_id % {_SITEMAP_K} AS INT)
-         AS k
-  FROM documents
-),
-cb(k, is_index, loc, lastmod, changefreq, priority)
-  AS (VALUES {values})
-SELECT sitemap_id AS archive_id, loc AS entry_loc, is_index,
-       lastmod, changefreq AS freq,
-       CAST(priority AS DOUBLE) AS priority
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("sitemap_url_audit", _sitemap_oracle())
-def q_sitemap_url_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SITEMAP URL EXPLOSION — sitemaps.org protocol 0.9
-    (operators/robots.parse_sitemap): a namespaced urlset with full
-    per-URL metadata, a bare sitemapindex (frontier pointers), the
-    protocol's .xml.gz shape decompressed inline, and the edge cases
-    (entry without the mandatory loc is dropped; a non-numeric
-    priority degrades to NULL, not an error). One row per entry; the
-    oracle pins the exploded rows from the fixture XML literals.
-    Map-side; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.robots import (
-        sitemap_urls,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_sitemap_payload(k)))
-         for k in range(_SITEMAP_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("sitemap_id"),
-        (F.col("doc_id") % _SITEMAP_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    # (archive_id, entry_loc) is the alphabetical head of the sorted
-    # column names AND unique per row (locs are distinct within each
-    # fixture) — the non-null sort prefix rule (PERF §40); lastmod/
-    # freq/priority are legitimately NULL on several rows.
-    return sitemap_urls(
-        media.select("sitemap_id", "payload")
-    ).select(
-        F.col("sitemap_id").alias("archive_id"),
-        F.col("loc").alias("entry_loc"), "is_index", "lastmod",
-        F.col("changefreq").alias("freq"), "priority",
-    )
-
-
-# ---------------------------------------------------------------------------
-# wet_text_extract — Common Crawl's pre-extracted text sidecar
-# ---------------------------------------------------------------------------
-
-_WET_K = 3
-
-
-def _wet_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.warc import (
-        encode_warc,
-    )
-
-    if k == 0:
-        return encode_warc([
-            ("warcinfo", {"WARC-Record-ID": "<urn:uuid:w0>"},
-             b"software: wet-fixture"),
-            ("conversion",
-             {"WARC-Target-URI": "https://a.example/x",
-              "Content-Type": "text/plain"},
-             "First doc text.\nMore.".encode()),
-            ("conversion",
-             {"WARC-Target-URI": "https://b.example/y",
-              "Content-Type": "text/plain"},
-             b"Second doc."),
-        ])
-    if k == 1:
-        return encode_warc([
-            ("request", {"WARC-Target-URI": "https://c.example/z"},
-             b"GET /z HTTP/1.1\r\n\r\n"),
-            ("conversion",
-             {"WARC-Target-URI": "https://c.example/z",
-              "Content-Type": "text/plain"},
-             b"Gzipped text body"),
-        ], gzip_members=True)
-    # invalid UTF-8 must degrade to U+FFFD, and a conversion record
-    # without a target URI keeps a NULL url
-    return encode_warc([
-        ("conversion", {"Content-Type": "text/plain"},
-         b"caf\xe9 latte"),
-    ])
-
-
-def _wet_oracle() -> str:
-    rep = chr(0xFFFD)
-    nl = "' || chr(10) || '"
-    rows = [
-        f"(0, 1, 'https://a.example/x', 'First doc text.{nl}More.',"
-        f" 21)",
-        "(0, 2, 'https://b.example/y', 'Second doc.', 11)",
-        "(1, 1, 'https://c.example/z', 'Gzipped text body', 17)",
-        f"(2, 0, NULL, 'caf{rep} latte', 10)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS archive_id, CAST(doc_id % {_WET_K} AS INT) AS k
-  FROM documents
-),
-cb(k, record_idx, url, text, text_len) AS (VALUES {values})
-SELECT archive_id, CAST(record_idx AS INT) AS record_idx, url,
-       text, CAST(text_len AS INT) AS text_len
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("wet_text_extract", _wet_oracle())
-def q_wet_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WET INGESTION — the pre-extracted-text sidecar of Common
-    Crawl (operators/warc.wet_text): conversion records pulled out
-    of plain and member-per-record gzip archives, non-conversion
-    records (warcinfo/request) skipped in place, invalid UTF-8
-    degraded to U+FFFD, and a URI-less record keeping a NULL url.
-    Oracle pins the fixture record layout.  At 100 TB this path
-    skips the HTML extraction stage entirely — the cheapest text
-    ingest there is.  Map-side; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.warc import (
-        wet_text,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_wet_payload(k))) for k in range(_WET_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("archive_id"),
-        (F.col("doc_id") % _WET_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return wet_text(media.select("archive_id", "payload"))
-
-
-# ---------------------------------------------------------------------------
-# webm_frame_index_audit — per-block frame index incl. laced audio
-# ---------------------------------------------------------------------------
-
-_WFI_K = 3
-
-
-def _wfi_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.ebml import (
-        encode_minimal_webm,
-    )
-
-    if k == 0:
-        return encode_minimal_webm(
-            [(0, True, 100), (40, False, 60), (80, True, 80)],
-        )
-    if k == 1:
-        return encode_minimal_webm(
-            [], audio=("A_OPUS", 48000, 2),
-            audio_frames=[(0, [20, 20, 20]), (60, [30, 30])],
-            audio_lacing=1,  # Xiph
-        )
-    return encode_minimal_webm(
-        [(0, True, 40), (25, False, 24)],
-        audio=("A_VORBIS", 44100, 2),
-        audio_frames=[(0, [12, 12])],
-        audio_lacing=3,  # EBML
-    )
-
-
-def _wfi_oracle() -> str:
-    rows = [
-        # k=0: video track 1, one block per frame
-        "(0, 1, 0, 0, TRUE, 100)",
-        "(0, 1, 1, 40, FALSE, 60)",
-        "(0, 1, 2, 80, TRUE, 80)",
-        # k=1: two laced audio blocks on track 2 explode per frame,
-        # frames share the block timestamp
-        "(1, 2, 0, 0, TRUE, 20)",
-        "(1, 2, 1, 0, TRUE, 20)",
-        "(1, 2, 2, 0, TRUE, 20)",
-        "(1, 2, 3, 60, TRUE, 30)",
-        "(1, 2, 4, 60, TRUE, 30)",
-        # k=2: video cluster blocks first, then the EBML-laced audio
-        "(2, 1, 0, 0, TRUE, 40)",
-        "(2, 1, 1, 25, FALSE, 24)",
-        "(2, 2, 2, 0, TRUE, 12)",
-        "(2, 2, 3, 0, TRUE, 12)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS media_id, CAST(doc_id % {_WFI_K} AS INT) AS k
-  FROM documents
-),
-cb(k, track, frame_idx, pts_ms, keyframe, frame_bytes)
-  AS (VALUES {values})
-SELECT media_id, CAST(track AS INT) AS track,
-       CAST(frame_idx AS INT) AS frame_idx,
-       CAST(pts_ms AS BIGINT) AS pts_ms, keyframe,
-       CAST(frame_bytes AS BIGINT) AS frame_bytes
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("webm_frame_index_audit", _wfi_oracle())
-def q_webm_frame_index_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WEBM FRAME INDEX — the per-SimpleBlock explosion
-    (operators/ebml.webm_frame_index), the WebM twin of
-    mp4.frame_index: keyframe flags from the block header, cluster
-    +relative timestamp arithmetic in TimestampScale ticks, and BOTH
-    audio lacing modes a real Vorbis/Opus mux produces (Xiph and
-    EBML) exploding one row per laced frame with per-frame sizes.
-    Oracle pins block order, pts, and sizes from the mux parameters.
-    Map-side; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.ebml import (
-        webm_frame_index,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_wfi_payload(k))) for k in range(_WFI_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        (F.col("doc_id") % _WFI_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return webm_frame_index(media.select("media_id", "payload"))
-
-
-# ---------------------------------------------------------------------------
-# subtitle_cue_audit — SRT/WebVTT cue explosion
-# ---------------------------------------------------------------------------
-
-_SUB_K = 3
-
-
-def _sub_payload(k: int) -> bytes:
-    if k == 0:
-        return (
-            "1\n00:00:01,000 --> 00:00:03,500\nHello world\n\n"
-            "2\n00:00:04,000 --> 00:00:06,000\nLine one\nLine two\n"
-        ).encode()
-    if k == 1:
-        return (
-            "WEBVTT\n\n"
-            "00:01.000 --> 00:02.500 align:start line:0\n"
-            "<i>Hi</i> &amp; there\n\n"
-            "id2\n00:00:03.000 --> 00:00:04.000\nPlain\n"
-        ).encode()
-    return (
-        "00:00:00.500 --> 00:00:01.000\n"
-        "Karaoke <00:00:00.700>word\n"
-    ).encode()
-
-
-def _sub_oracle() -> str:
-    nl = "' || chr(10) || '"
-    rows = [
-        "(0, 'srt', 0, 1000, 3500, 2500, NULL, 'Hello world', 11)",
-        f"(0, 'srt', 1, 4000, 6000, 2000, NULL,"
-        f" 'Line one{nl}Line two', 17)",
-        "(1, 'vtt', 0, 1000, 2500, 1500, 'align:start line:0',"
-        " 'Hi & there', 10)",
-        "(1, 'vtt', 1, 3000, 4000, 1000, NULL, 'Plain', 5)",
-        "(2, 'srt', 0, 500, 1000, 500, NULL, 'Karaoke word', 12)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS media_id, CAST(doc_id % {_SUB_K} AS INT) AS k
-  FROM documents
-),
-cb(k, format, cue_idx, start_ms, end_ms, duration_ms, settings,
-   text, n_chars) AS (VALUES {values})
-SELECT media_id, format, CAST(cue_idx AS INT) AS cue_idx,
-       CAST(start_ms AS BIGINT) AS start_ms,
-       CAST(end_ms AS BIGINT) AS end_ms,
-       CAST(duration_ms AS BIGINT) AS duration_ms, settings, text,
-       CAST(n_chars AS INT) AS n_chars
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("subtitle_cue_audit", _sub_oracle())
-def q_subtitle_cue_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SUBTITLE CUE EXPLOSION — SRT + WebVTT sidecars
-    (operators/subtitles): comma and dot millisecond separators,
-    hour-less VTT timestamps, cue identifiers and settings, markup
-    stripping (<i>, inline karaoke timestamps) and HTML-entity
-    decoding through the shared WARC machinery. One row per cue,
-    pinned to the fixture literals — the time-aligned text source
-    for the video-text pair join (media_cue_alignment).  Map-side;
-    0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.subtitles import (
-        subtitle_cues,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_sub_payload(k))) for k in range(_SUB_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        (F.col("doc_id") % _SUB_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return subtitle_cues(media.select("media_id", "payload"))
 
 
 # ---------------------------------------------------------------------------
@@ -2802,244 +1176,6 @@ def q_image_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# media_av1_seq_profile — AV1 sequence-header bitstream truth
-# ---------------------------------------------------------------------------
-
-_AV1_K = 5
-
-
-def _av1_stream_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.av1 import (
-        encode_av1_stream,
-    )
-
-    if k == 0:  # mainstream 1080p 8-bit 4:2:0
-        return encode_av1_stream(dict(
-            seq_profile=0, max_width=1920, max_height=1080,
-            operating_points=[(0, 8, 0)],
-        ), n_frames=3)
-    if k == 1:  # professional 12-bit 8K high tier + film grain
-        return encode_av1_stream(dict(
-            seq_profile=2, high_bitdepth=True, twelve_bit=True,
-            max_width=7680, max_height=4320,
-            operating_points=[(0, 19, 1)], film_grain=True,
-        ), n_frames=1)
-    if k == 2:  # sRGB 4:4:4 profile-1 web render
-        return encode_av1_stream(dict(
-            seq_profile=1, srgb=True, max_width=640,
-            max_height=480, operating_points=[(0, 4, 0)],
-        ), n_frames=2)
-    if k == 3:  # AVIF-style reduced still picture, monochrome
-        return encode_av1_stream(dict(
-            seq_profile=0, still_picture=True, reduced=True,
-            operating_points=[(0, 5, 0)], max_width=512,
-            max_height=512, mono_chrome=True, color_range=1,
-            enable_order_hint=False,
-        ), n_frames=0)
-    return b"\x80 not an av1 stream"  # forbidden bit set
-
-
-def _av1_seq_oracle() -> str:
-    err = "'av1: obu_forbidden_bit set'"
-    rows = [
-        "(0, TRUE, NULL, 0, 8, 0, 1, 1920, 1080, 8, FALSE, '11',"
-        " FALSE, FALSE, 3)",
-        "(1, TRUE, NULL, 2, 19, 1, 1, 7680, 4320, 12, FALSE, '11',"
-        " FALSE, TRUE, 1)",
-        "(2, TRUE, NULL, 1, 4, 0, 1, 640, 480, 8, FALSE, '00',"
-        " FALSE, FALSE, 2)",
-        "(3, TRUE, NULL, 0, 5, 0, 1, 512, 512, 8, TRUE, '11',"
-        " TRUE, FALSE, 0)",
-        f"(4, FALSE, {err}, NULL, NULL, NULL, NULL, NULL, NULL,"
-        f" NULL, NULL, NULL, NULL, NULL, NULL)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS archive_id, CAST(doc_id % {_AV1_K} AS INT) AS k
-  FROM documents
-),
-cb(k, ok, error, seq_profile, seq_level_idx, seq_tier,
-   n_operating_points, max_width, max_height, bit_depth,
-   mono_chrome, subsampling, still_picture, film_grain,
-   n_frame_obus) AS (VALUES {values})
-SELECT archive_id, ok, error,
-       CAST(seq_profile AS INT) AS seq_profile,
-       CAST(seq_level_idx AS INT) AS seq_level_idx,
-       CAST(seq_tier AS INT) AS seq_tier,
-       CAST(n_operating_points AS INT) AS n_operating_points,
-       CAST(max_width AS INT) AS max_width,
-       CAST(max_height AS INT) AS max_height,
-       CAST(bit_depth AS INT) AS bit_depth, mono_chrome,
-       subsampling, still_picture, film_grain,
-       CAST(n_frame_obus AS INT) AS n_frame_obus
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("media_av1_seq_profile", _av1_seq_oracle())
-def q_media_av1_seq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AV1 SEQUENCE-HEADER TRUTH — the third leg of the codec
-    bitstream matrix (operators/av1.py beside h264/h265): OBU walk
-    (§5.3 framing, leb128 sizes, extension headers) and the full
-    §5.5.1 sequence-header parse over a 5-variant codebook spanning
-    the profile space — 8-bit 4:2:0 main, 12-bit 8K high-tier
-    professional with film grain, sRGB 4:4:4 profile 1, an
-    AVIF-style reduced still-picture monochrome header, and a
-    forbidden-bit blob that must quarantine to an error row. Every
-    oracle literal derives from the fixture encoder's PARAMETERS.
-    Map-side; 0 data shuffles, 1 bounded broadcast."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.av1 import (
-        av1_seq_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_av1_stream_payload(k)))
-         for k in range(_AV1_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        (F.col("doc_id") % _AV1_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return av1_seq_profile(
-        media.select("media_id", "payload")
-    ).withColumnRenamed("media_id", "archive_id")
-
-
-# ---------------------------------------------------------------------------
-# media_av1_obu_cross_check — container vs av1C head vs OBU truth
-# ---------------------------------------------------------------------------
-
-_AVX_K = 4
-
-
-def _avx_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.av1 import (
-        OBU_SEQUENCE_HEADER,
-        encode_obu,
-        encode_sequence_header,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.mp4 import (
-        encode_minimal_mp4,
-    )
-
-    def seq(**kw):
-        return encode_obu(
-            OBU_SEQUENCE_HEADER, encode_sequence_header(**kw))
-
-    if k == 0:  # every layer truthful
-        obu = seq(seq_profile=0, max_width=1920, max_height=1080,
-                  operating_points=[(0, 8, 0)])
-        return encode_minimal_mp4(
-            frame_sizes=[100, 60],
-            av01=(1920, 1080, 0, 8, 0, 0, 0, 0, obu),
-        )
-    if k == 1:  # container lies about dimensions
-        obu = seq(seq_profile=0, max_width=1920, max_height=1080,
-                  operating_points=[(0, 8, 0)])
-        return encode_minimal_mp4(
-            frame_sizes=[40],
-            av01=(1280, 720, 0, 8, 0, 0, 0, 0, obu),
-        )
-    if k == 2:  # av1C head rebuilt from guesses; the OBU is 12-bit
-        obu = seq(seq_profile=2, high_bitdepth=True, twelve_bit=True,
-                  max_width=1280, max_height=720,
-                  operating_points=[(0, 12, 1)])
-        return encode_minimal_mp4(
-            frame_sizes=[40],
-            av01=(1280, 720, 0, 8, 0, 0, 0, 0, obu),
-        )
-    # monochrome AVIF-ish: head AND dims truthful, 10-bit
-    obu = seq(seq_profile=0, high_bitdepth=True, mono_chrome=True,
-              color_range=1, max_width=512, max_height=512,
-              operating_points=[(0, 5, 0)])
-    return encode_minimal_mp4(
-        frame_sizes=[30],
-        av01=(512, 512, 0, 5, 0, 1, 0, 1, obu),
-    )
-
-
-def _avx_oracle() -> str:
-    rows = [
-        "(0, 'av01', 1920, 1080, 0, 8, 0, 8, 0, 8, 0, 8, 1920,"
-        " 1080, FALSE, TRUE, TRUE)",
-        "(1, 'av01', 1280, 720, 0, 8, 0, 8, 0, 8, 0, 8, 1920,"
-        " 1080, FALSE, FALSE, TRUE)",
-        "(2, 'av01', 1280, 720, 0, 8, 0, 8, 2, 12, 1, 12, 1280,"
-        " 720, FALSE, TRUE, FALSE)",
-        "(3, 'av01', 512, 512, 0, 5, 0, 10, 0, 5, 0, 10, 512,"
-        " 512, TRUE, TRUE, TRUE)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS media_id, CAST(doc_id % {_AVX_K} AS INT) AS k
-  FROM documents
-),
-cb(k, codec, container_width, container_height, record_profile,
-   record_level, record_tier, record_bit_depth, seq_profile,
-   seq_level_idx, seq_tier, seq_bit_depth, seq_width, seq_height,
-   mono_chrome, dims_match, record_match) AS (VALUES {values})
-SELECT media_id, codec,
-       CAST(container_width AS INT) AS container_width,
-       CAST(container_height AS INT) AS container_height,
-       CAST(record_profile AS INT) AS record_profile,
-       CAST(record_level AS INT) AS record_level,
-       CAST(record_tier AS INT) AS record_tier,
-       CAST(record_bit_depth AS INT) AS record_bit_depth,
-       CAST(seq_profile AS INT) AS seq_profile,
-       CAST(seq_level_idx AS INT) AS seq_level_idx,
-       CAST(seq_tier AS INT) AS seq_tier,
-       CAST(seq_bit_depth AS INT) AS seq_bit_depth,
-       CAST(seq_width AS INT) AS seq_width,
-       CAST(seq_height AS INT) AS seq_height,
-       mono_chrome, dims_match, record_match
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("media_av1_obu_cross_check", _avx_oracle())
-def q_media_av1_obu_cross_check(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """AV1 CONTAINER-vs-BITSTREAM CROSS-CHECK — the AV1 leg of the
-    graded SPS cross-check family (mp4.parse_av1_cross_check): stsd
-    VisualSampleEntry claims AND the av1C record-head claims audited
-    against the sequence-header OBU parsed out of the record's
-    configOBUs (operators/av1, §5.5.1). The codebook plants both lie
-    layers a re-muxed corpus produces — a container that lies about
-    dimensions (dims_match=false) and a record head rebuilt from
-    guesses over a 12-bit high-tier OBU (record_match=false) —
-    plus a truthful monochrome 10-bit AVIF-ish variant. Oracle
-    literals derive from the fixture parameters. moov-only reads;
-    0 data shuffles, 1 bounded broadcast."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.mp4 import (
-        av1_cross_check,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_avx_payload(k))) for k in range(_AVX_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        (F.col("doc_id") % _AVX_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return av1_cross_check(media.select("media_id", "payload"))
-
-
-# ---------------------------------------------------------------------------
 # crawl_frontier_gate — sitemaps explode ∘ robots verdicts, composed
 # ---------------------------------------------------------------------------
 
@@ -3151,165 +1287,6 @@ def q_crawl_frontier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# zip_member_index — the offsets-only triage twin of zip_text_members
-# ---------------------------------------------------------------------------
-
-
-def _zipidx_oracle() -> str:
-    import zlib as _zlib
-
-    from bigdata_invoice_stream_analysis_spark.plans.ingestion import (
-        _ZIP_K,
-        _zip_entries,
-    )
-
-    rows = []
-    for k in range(_ZIP_K):
-        deflate = k % 3 != 0
-        for idx, (name, body) in enumerate(_zip_entries(k)):
-            is_dir = name.endswith("/")
-            if deflate and not is_dir:
-                comp = _zlib.compressobj(6, _zlib.DEFLATED, -15)
-                csize = len(comp.compress(body) + comp.flush())
-                method = 8
-            else:
-                csize = len(body)
-                method = 0
-            rows.append(
-                f"({k}, {idx}, '{name}', {method}, {csize},"
-                f" {len(body)}, {_zlib.crc32(body)},"
-                f" {'TRUE' if is_dir else 'FALSE'})"
-            )
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS archive_id, CAST(doc_id % {_ZIP_K} AS INT) AS k
-  FROM documents
-),
-cb(k, member_idx, name, method, compressed_size, uncompressed_size,
-   crc32, is_dir) AS (VALUES {values})
-SELECT archive_id, CAST(member_idx AS INT) AS member_idx, name,
-       CAST(method AS INT) AS method,
-       CAST(compressed_size AS BIGINT) AS compressed_size,
-       CAST(uncompressed_size AS BIGINT) AS uncompressed_size,
-       CAST(crc32 AS BIGINT) AS crc32, is_dir
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("zip_member_index", _zipidx_oracle())
-def q_zip_member_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ZIP MEMBER INDEX — the payload-untouched triage twin of the
-    graded zip_text_members gate, over the SAME codebook
-    (plans/ingestion._zip_payload): the central-directory walk's
-    names, methods, exact deflate/stored sizes, CRCs, and directory
-    bits. The oracle recomputes compressed sizes with the same zlib
-    parameters the fixture writer used — independent of parse_zip,
-    the parser under audit. Tail-reads only: at 100 TB the central
-    directory is ~KBs of a multi-GB shard. 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.zip import (
-        zip_members,
-    )
-    from bigdata_invoice_stream_analysis_spark.plans.ingestion import (
-        _ZIP_K,
-        _zip_payload,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_zip_payload(k))) for k in range(_ZIP_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("archive_id"),
-        (F.col("doc_id") % _ZIP_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return zip_members(media.select("archive_id", "payload"))
-
-
-# ---------------------------------------------------------------------------
-# wds_component_index — per-member offsets via stdlib-tarfile oracle
-# ---------------------------------------------------------------------------
-
-
-def _wdsidx_oracle() -> str:
-    import io as _io
-    import tarfile as _tarfile
-    import zlib as _zlib
-
-    from bigdata_invoice_stream_analysis_spark.plans.ingestion import (
-        _WDS_K,
-        _wds_payload,
-    )
-
-    rows = []
-    for k in range(_WDS_K):
-        raw = _wds_payload(k)
-        tf = _tarfile.open(fileobj=_io.BytesIO(raw))
-        for i, m in enumerate(tf.getmembers()):
-            base = m.name.rsplit("/", 1)[-1]
-            key, _, ext = base.partition(".")
-            body = raw[m.offset_data : m.offset_data + m.size]
-            rows.append(
-                f"({k}, {i}, '{key}', '{ext}', {m.offset_data},"
-                f" {m.size}, {_zlib.crc32(body)})"
-            )
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS shard_id, CAST(doc_id % {_WDS_K} AS INT) AS k
-  FROM documents
-),
-cb(k, member_idx, sample_key, ext, "offset", n_bytes, crc32)
-  AS (VALUES {values})
-SELECT shard_id, CAST(member_idx AS INT) AS member_idx, sample_key,
-       ext, CAST("offset" AS BIGINT) AS "offset",
-       CAST(n_bytes AS BIGINT) AS n_bytes,
-       CAST(crc32 AS BIGINT) AS crc32
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("wds_component_index", _wdsidx_oracle())
-def q_wds_component_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WEBDATASET COMPONENT INDEX — the offsets-not-contents twin of
-    the graded wds_samples gate, over the SAME codebook
-    (plans/ingestion._wds_payload, incl. the pax size= override and
-    GNU longname shards): one row per tar member with the
-    WebDataset key/ext split, the exact DATA offset, size, and CRC.
-    The oracle is stdlib tarfile — a fully independent reader —
-    so member offsets through the pax/longname mechanics are pinned
-    against a second implementation, like the zip/arrow gates.
-    Map-side; 0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.wds import (
-        wds_components,
-    )
-    from bigdata_invoice_stream_analysis_spark.plans.ingestion import (
-        _WDS_K,
-        _wds_payload,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_wds_payload(k))) for k in range(_WDS_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("shard_id"),
-        (F.col("doc_id") % _WDS_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return wds_components(media.select("shard_id", "payload"))
-
-
-# ---------------------------------------------------------------------------
 # domain_link_profile — the per-domain rollup of the link graph
 # ---------------------------------------------------------------------------
 
@@ -3380,156 +1357,6 @@ def q_domain_link_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("dst_url").isNotNull(), 1).otherwise(0))
         .alias("n_crawlable"),
         F.count_distinct("dst_domain").alias("n_dst_domains"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# audio_id3_audit — ID3v2 metadata/privacy frames
-# ---------------------------------------------------------------------------
-
-_ID3_K = 3
-
-_ID3_V4_FRAMES = [
-    ("TIT2", (3, "Night Drive")),
-    ("TPE1", (0, "Artist A")),
-    ("TALB", (1, "Albüm")),
-    ("TXXX", (3, "replaygain_track_gain", "-6.2 dB")),
-    ("COMM", (3, "eng", "note", "a comment")),
-    ("WOAR", "https://artist.example/"),
-    ("APIC", (0, "image/jpeg", "cover", b"\xff\xd8" + b"J" * 40)),
-    ("PRIV", ("com.example.tracker", b"\x01\x02\x03")),
-]
-_ID3_V3_FRAMES = [
-    ("TIT2", (0, "x" * 200)),
-    ("GEOB", (0, "application/octet-stream", "data.bin",
-              "telemetry", b"\x00" * 64)),
-]
-
-
-def _id3_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.mpegaudio import (
-        encode_id3v2,
-        encode_mp3,
-    )
-
-    if k == 0:
-        return encode_id3v2(_ID3_V4_FRAMES, version=4, padding=16) \
-            + encode_mp3(2)
-    if k == 1:
-        return encode_id3v2(_ID3_V3_FRAMES, version=3) + encode_mp3(3)
-    return encode_mp3(2)  # untagged → one ok=false row
-
-
-def _id3_expected(k: int) -> list[tuple]:
-    """(frame_idx, frame_id, kind, text, description, mime, n_bytes)
-    derived from the fixture FRAME SPECS by independent arithmetic
-    (the same length computations the informal standard defines),
-    not by running parse_id3v2_frames."""
-    enc_len = {0: lambda s: len(s.encode("latin-1")),
-               1: lambda s: 2 + 2 * len(s),
-               2: lambda s: 2 * len(s),
-               3: lambda s: len(s.encode("utf-8"))}
-    term = {0: 1, 1: 2, 2: 2, 3: 1}
-    out = []
-    frames = _ID3_V4_FRAMES if k == 0 else _ID3_V3_FRAMES
-    for i, (fid, spec) in enumerate(frames):
-        if fid == "TXXX":
-            enc, desc, text = spec
-            size = 1 + enc_len[enc](desc) + term[enc] + enc_len[enc](text)
-            out.append((i, fid, "user_text", text, desc, None, size))
-        elif fid.startswith("T"):
-            enc, text = spec
-            out.append((i, fid, "text", text, None, None,
-                        1 + enc_len[enc](text)))
-        elif fid == "COMM":
-            enc, lang, desc, text = spec
-            size = (1 + 3 + enc_len[enc](desc) + term[enc]
-                    + enc_len[enc](text))
-            out.append((i, fid, "comment", text, f"{lang}:{desc}",
-                        None, size))
-        elif fid.startswith("W"):
-            out.append((i, fid, "url", spec, None, None, len(spec)))
-        elif fid == "APIC":
-            enc, mime, desc, payload = spec
-            out.append((i, fid, "picture", None, desc, mime,
-                        len(payload)))
-        elif fid == "GEOB":
-            enc, mime, fname, desc, payload = spec
-            out.append((i, fid, "object", None, desc, mime,
-                        len(payload)))
-        elif fid == "PRIV":
-            owner, payload = spec
-            out.append((i, fid, "private", None, owner, None,
-                        len(payload)))
-    return out
-
-
-def _id3_oracle() -> str:
-    def q(v):
-        if v is None:
-            return "NULL"
-        return "'" + str(v).replace("'", "''") + "'"
-
-    rows = []
-    for k, ver in ((0, "2.4"), (1, "2.3")):
-        for (i, fid, kind, text, desc, mime, size) in _id3_expected(k):
-            rows.append(
-                f"({k}, TRUE, NULL, '{ver}', {i}, '{fid}',"
-                f" '{kind}', {q(text)}, {q(desc)}, {q(mime)}, {size})"
-            )
-    rows.append("(2, FALSE, 'ID3v2: no tag', NULL, -1, NULL, NULL,"
-                " NULL, NULL, NULL, NULL)")
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id AS archive_id, CAST(doc_id % {_ID3_K} AS INT) AS k
-  FROM documents
-),
-cb(k, ok, error, version, anchor_idx, frame_id, kind, text,
-   description, mime, n_bytes) AS (VALUES {values})
-SELECT archive_id, CAST(anchor_idx AS INT) AS anchor_idx, ok, error,
-       version, frame_id, kind, text, description, mime,
-       CAST(n_bytes AS BIGINT) AS n_bytes
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("audio_id3_audit", _id3_oracle())
-def q_audio_id3_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ID3v2 METADATA / PRIVACY AUDIT — tag-frame extraction over
-    (ID3v2-prefixed) MP3 payloads (operators/mpegaudio
-    .parse_id3v2_frames): v2.4 syncsafe and v2.3 plain frame sizes,
-    all four text encodings with encoding-aware terminators, user
-    TXXX pairs, comments, URL frames, and the privacy-bearing binary
-    frames (APIC cover art, GEOB objects, PRIV tracker payloads)
-    surfacing as mime+size rows without decoding their bytes. The
-    untagged stream yields one quarantine row. Oracle sizes derive
-    from the fixture frame SPECS by independent length arithmetic.
-    (anchor_idx = frame_idx, −1 on the error row) keeps the sorted
-    column prefix unique and non-null (PERF §40/§44). Map-side;
-    0 data shuffles."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.mpegaudio import (
-        id3_frames,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_id3_payload(k))) for k in range(_ID3_K)],
-        "k int, payload binary",
-    )
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        (F.col("doc_id") % _ID3_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return id3_frames(media.select("media_id", "payload")).select(
-        F.col("media_id").alias("archive_id"),
-        F.coalesce("frame_idx", F.lit(-1)).alias("anchor_idx"),
-        "ok", "error", "version", "frame_id", "kind", "text",
-        "description", "mime", "n_bytes",
     )
 
 
@@ -3843,220 +1670,6 @@ def q_mpegts_stream_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# hls_manifest_audit — the manifest layer above the TS/fMP4 segments
-# ---------------------------------------------------------------------------
-
-_HLS_K = 5
-
-_HLS_BASE = "https://cdn.example.com/v1/{k}/index.m3u8"
-
-_HLS_MANIFESTS = [
-    # k=0: VOD media playlist, AES key mid-stream
-    ("#EXTM3U\n#EXT-X-VERSION:3\n#EXT-X-TARGETDURATION:6\n"
-     "#EXTINF:5.960,\nseg0.ts\n#EXTINF:6.0,\nseg1.ts\n"
-     '#EXT-X-KEY:METHOD=AES-128,URI="key.bin"\n'
-     "#EXTINF:4.040,\nseg2.ts\n#EXT-X-ENDLIST\n"),
-    # k=1: LIVE media playlist (no ENDLIST), clear
-    ("#EXTM3U\n#EXT-X-VERSION:3\n#EXT-X-TARGETDURATION:4\n"
-     "#EXT-X-MEDIA-SEQUENCE:812\n"
-     "#EXTINF:4.0,\nlive812.ts\n#EXTINF:4.0,\nlive813.ts\n"),
-    # k=2: master playlist with two variants + an I-frame stream
-    ("#EXTM3U\n#EXT-X-VERSION:4\n"
-     "#EXT-X-STREAM-INF:BANDWIDTH=1280000,RESOLUTION=640x360,"
-     'CODECS="avc1.42001e,mp4a.40.2"\nlow.m3u8\n'
-     "#EXT-X-STREAM-INF:BANDWIDTH=7680000,RESOLUTION=1920x1080\n"
-     "hi.m3u8\n"
-     '#EXT-X-I-FRAME-STREAM-INF:BANDWIDTH=86000,URI="if.m3u8"\n'),
-    # k=3: fMP4 media playlist with MAP + BYTERANGE sub-ranges
-    ("#EXTM3U\n#EXT-X-VERSION:7\n#EXT-X-TARGETDURATION:4\n"
-     '#EXT-X-MAP:URI="init.mp4"\n'
-     "#EXT-X-BYTERANGE:75232@0\n#EXTINF:4.0,\nmain.mp4\n"
-     "#EXT-X-BYTERANGE:82112@75232\n#EXTINF:3.5,\nmain.mp4\n"
-     "#EXT-X-ENDLIST\n"),
-    # k=4: dangling EXTINF — quarantine row
-    "#EXTM3U\n#EXT-X-TARGETDURATION:4\n#EXTINF:4.0,\n",
-]
-
-
-def _hls_oracle() -> str:
-    base = "https://cdn.example.com/v1"
-    rows = [
-        f"(0, TRUE, NULL, 'media', 3, 3, 0, 16000, 6000, FALSE, TRUE,"
-        f" NULL, NULL, '{base}/0/seg0.ts')",
-        f"(1, TRUE, NULL, 'media', 3, 2, 0, 8000, 4000, TRUE, FALSE,"
-        f" NULL, NULL, '{base}/1/live812.ts')",
-        "(2, TRUE, NULL, 'master', 4, 0, 2, 0, NULL, FALSE, FALSE,"
-        " 7680000, '1920x1080', NULL)",
-        f"(3, TRUE, NULL, 'media', 7, 2, 0, 7500, 4000, FALSE, FALSE,"
-        f" NULL, NULL, '{base}/3/main.mp4')",
-        "(4, FALSE, 'm3u8: dangling EXTINF at end of playlist', NULL,"
-        " NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id, CAST(doc_id % {_HLS_K} AS INT) AS k FROM documents
-),
-cb(k, ok, error, kind, hls_version, n_segments, n_variants,
-   total_duration_ms, target_duration_ms, live, encrypted,
-   max_bandwidth, best_resolution, first_segment_uri)
-  AS (VALUES {values})
-SELECT doc_id AS archive_id, ok, error, kind,
-       CAST(hls_version AS INT) AS hls_version,
-       CAST(n_segments AS INT) AS n_segments,
-       CAST(n_variants AS INT) AS n_variants,
-       CAST(total_duration_ms AS BIGINT) AS total_duration_ms,
-       CAST(target_duration_ms AS BIGINT) AS target_duration_ms,
-       live, encrypted, CAST(max_bandwidth AS BIGINT) AS max_bandwidth,
-       best_resolution, first_segment_uri
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("hls_manifest_audit", _hls_oracle())
-def q_hls_manifest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLS MANIFEST AUDIT — the RFC 8216 playlist walk
-    (operators/hls): attribute-list tokenizer (quoted commas), the
-    EXT-X-KEY encryption state machine, live-vs-VOD detection,
-    BYTERANGE/MAP fMP4 media, master-variant geometry/bandwidth, and
-    segment URIs made absolute against each manifest's own URL via
-    the SAME strict RFC 3986 resolver the WARC link graph uses. The
-    5-variant codebook covers an AES-keyed VOD playlist, a LIVE
-    window, a master with an I-frame stream, a byte-ranged fMP4
-    playlist, and a dangling-EXTINF quarantine case. Closed-form
-    oracle from the manifest literals. Map-side; 0 data shuffles,
-    1 bounded broadcast."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.hls import (
-        hls_manifest_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, _HLS_MANIFESTS[k], _HLS_BASE.format(k=k))
-         for k in range(_HLS_K)],
-        "k int, text string, url string",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _HLS_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return hls_manifest_profile(
-        files.select("file_id", "text", "url")
-    ).withColumnRenamed("file_id", "archive_id")
-
-
-# ---------------------------------------------------------------------------
-# flac_stream_audit — the lossless-audio metadata prologue
-# ---------------------------------------------------------------------------
-
-_FLAC_K = 5
-
-
-def _flac_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.flacmeta import (
-        encode_flac,
-    )
-
-    if k == 0:  # tagged stereo CD-quality file with known PCM MD5
-        return encode_flac(
-            md5=bytes(range(16)),
-            tags={"TITLE": "First Take", "ARTIST": "Quartet"},
-        )
-    if k == 1:  # hi-res mono with embedded cover art (risk bit)
-        return encode_flac(
-            sample_rate=96000, channels=1, bits_per_sample=24,
-            total_samples=960000,
-            picture=("image/png", 120, 80, bytes(48)),
-        )
-    if k == 2:  # streaming capture: unknown total samples, padding
-        return encode_flac(total_samples=0, padding=2048,
-                           seekpoints=4)
-    if k == 3:  # 8-channel boundary geometry
-        return encode_flac(
-            sample_rate=192000, channels=8, bits_per_sample=32,
-            total_samples=192000, tags={},
-        )
-    # k == 4: fLaC marker but a lying STREAMINFO length — quarantine
-    raw = bytearray(encode_flac())
-    raw[5:8] = (33).to_bytes(3, "big")
-    return bytes(raw)
-
-
-def _flac_oracle() -> str:
-    md5_0 = bytes(range(16)).hex()
-    rows = [
-        f"(0, TRUE, NULL, 44100, 2, 16, 441000, 10000, '{md5_0}',"
-        " 2, 2, 'First Take', FALSE, NULL, 0)",
-        f"(1, TRUE, NULL, 96000, 1, 24, 960000, 10000, '{'00' * 16}',"
-        " 2, 0, NULL, TRUE, 'image/png', 0)",
-        f"(2, TRUE, NULL, 44100, 2, 16, 0, NULL, '{'00' * 16}',"
-        " 3, 0, NULL, FALSE, NULL, 2048)",
-        f"(3, TRUE, NULL, 192000, 8, 32, 192000, 1000, '{'00' * 16}',"
-        " 2, 0, NULL, FALSE, NULL, 0)",
-        "(4, FALSE, 'flac: STREAMINFO length 33 != 34', NULL, NULL,"
-        " NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id, CAST(doc_id % {_FLAC_K} AS INT) AS k FROM documents
-),
-cb(k, ok, error, sample_rate, channels, bits_per_sample,
-   total_samples, duration_ms, pcm_md5, n_blocks, n_tags, title,
-   has_picture, picture_mime, padding_bytes) AS (VALUES {values})
-SELECT doc_id AS archive_id, ok, error,
-       CAST(sample_rate AS INT) AS sample_rate,
-       CAST(channels AS INT) AS channels,
-       CAST(bits_per_sample AS INT) AS bits_per_sample,
-       CAST(total_samples AS BIGINT) AS total_samples,
-       CAST(duration_ms AS BIGINT) AS duration_ms, pcm_md5,
-       CAST(n_blocks AS INT) AS n_blocks,
-       CAST(n_tags AS INT) AS n_tags, title, has_picture,
-       picture_mime, CAST(padding_bytes AS BIGINT) AS padding_bytes
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("flac_stream_audit", _flac_oracle())
-def q_flac_stream_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FLAC METADATA AUDIT — the RFC 9639 block walk
-    (operators/flacmeta): packed STREAMINFO geometry (20-bit rates,
-    36-bit sample counts), the PCM MD5 fingerprint (the
-    encoder-independent dedup key lossless corpora want),
-    little-endian Vorbis comments inside the big-endian container,
-    and the embedded-cover-art risk bit. The 5-variant codebook
-    covers tagged CD-quality, hi-res-with-art, a streaming capture
-    with UNKNOWN total samples (duration stays NULL, never a
-    divide), boundary 8ch/32-bit geometry, and a lying STREAMINFO
-    length that must quarantine. Closed-form oracle from fixture
-    parameters. Map-side; 0 data shuffles, 1 bounded broadcast."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.flacmeta import (
-        flac_stream_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_flac_payload(k))) for k in range(_FLAC_K)],
-        "k int, payload binary",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _FLAC_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return flac_stream_profile(
-        files.select("file_id", "payload")
-    ).withColumnRenamed("file_id", "archive_id")
-
-
-# ---------------------------------------------------------------------------
 # unicode_integrity_audit — the trojan-source / invisible-char gate
 # ---------------------------------------------------------------------------
 
@@ -4275,191 +1888,6 @@ def q_hls_segment_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# avi_stream_audit — the legacy video container, lie bits included
-# ---------------------------------------------------------------------------
-
-_AVI_K = 5
-
-
-def _avi_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.avi import (
-        encode_avi,
-    )
-
-    if k == 0:  # truthful MJPEG+PCM stereo with index
-        return encode_avi()
-    if k == 1:  # avih lies about dimensions
-        return encode_avi(lie_dims=True)
-    if k == 2:  # avih lies about the frame count
-        return encode_avi(lie_frames=True, handler=b"xvid")
-    if k == 3:  # video-only, unindexed (the unseekable pathology)
-        return encode_avi(audio=None, with_idx1=False, n_frames=12,
-                          us_per_frame=40000)
-    # k == 4: RIFF/AVI magic but a chunk overrunning its parent
-    raw = bytearray(encode_avi(n_frames=2))
-    import struct as _s
-    raw[16:20] = _s.pack("<I", 1 << 30)
-    return bytes(raw)
-
-
-def _avi_oracle() -> str:
-    rows = [
-        "(0, TRUE, NULL, 320, 240, 30, 1001, 'mjpg', 2, 44100, 30,"
-        " TRUE, TRUE, TRUE)",
-        "(1, TRUE, NULL, 336, 240, 30, 1001, 'mjpg', 2, 44100, 30,"
-        " TRUE, FALSE, TRUE)",
-        "(2, TRUE, NULL, 320, 240, 35, 1001, 'xvid', 2, 44100, 30,"
-        " TRUE, TRUE, FALSE)",
-        # 12 frames at scale/rate 1000/24997 (40 ms/frame nominal)
-        f"(3, TRUE, NULL, 320, 240, 12,"
-        f" {12 * 1000 * 1000 // (1_000_000 * 1000 // 40000)},"
-        " 'mjpg', NULL, NULL, 12, FALSE, TRUE, TRUE)",
-        "(4, FALSE, 'avi: chunk ''LIST'' overruns its parent', NULL,"
-        " NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id, CAST(doc_id % {_AVI_K} AS INT) AS k FROM documents
-),
-cb(k, ok, error, width, height, n_frames, duration_ms, video_codec,
-   audio_channels, audio_rate, n_movi_chunks, has_idx1, dims_match,
-   frames_match) AS (VALUES {values})
-SELECT doc_id AS archive_id, ok, error,
-       CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-       CAST(n_frames AS INT) AS n_frames,
-       CAST(duration_ms AS BIGINT) AS duration_ms, video_codec,
-       CAST(audio_channels AS INT) AS audio_channels,
-       CAST(audio_rate AS INT) AS audio_rate,
-       CAST(n_movi_chunks AS INT) AS n_movi_chunks,
-       has_idx1, dims_match, frames_match
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("avi_stream_audit", _avi_oracle())
-def q_avi_stream_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AVI CONTAINER AUDIT — the legacy scraped-video walk
-    (operators/avi): RIFF/LIST recursion with WORD alignment,
-    avih/strh/strf header extraction, rational dwScale/dwRate
-    durations, movi chunk counting without payload decode, idx1
-    presence, and the TWO container-lie bits this format affords
-    (avih dimensions vs BITMAPINFOHEADER, avih total frames vs strh
-    length) — completing the lie-detection matrix across all four
-    video containers. The 5-variant codebook plants both lies, the
-    unindexed pathology, and a chunk-overrun quarantine case.
-    Closed-form oracle from fixture parameters. Map-side; 0 data
-    shuffles, 1 bounded broadcast."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.avi import (
-        avi_stream_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_avi_payload(k))) for k in range(_AVI_K)],
-        "k int, payload binary",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _AVI_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return avi_stream_profile(
-        files.select("file_id", "payload")
-    ).withColumnRenamed("file_id", "archive_id")
-
-
-# ---------------------------------------------------------------------------
-# icon_image_audit — BMP/ICO: the favicon layer of a web crawl
-# ---------------------------------------------------------------------------
-
-_ICON_K = 5
-
-
-def _icon_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.bmp import (
-        encode_bmp,
-        encode_ico,
-    )
-
-    if k == 0:  # plain bottom-up 24-bit BMP
-        return encode_bmp(40, 30)
-    if k == 1:  # top-down DIB with a truncated pixel array
-        return encode_bmp(32, 32, top_down=True, lie_size=True)
-    if k == 2:  # modern favicon: PNG payload at 256 + DIB at 16
-        return encode_ico(
-            [(256, 256, b"\x89PNG\r\n\x1a\n" + bytes(20)),
-             (16, 16, b"\x28\x00\x00\x00" + bytes(36))])
-    if k == 3:  # cursor file, single DIB entry
-        return encode_ico(
-            [(48, 48, b"\x28\x00\x00\x00" + bytes(36))],
-            cursor=True)
-    # k == 4: ICONDIR whose entry overruns the file — quarantine
-    import struct as _s
-    raw = bytearray(_icon_payload(2))
-    _s.pack_into("<I", raw, 6 + 8, 1 << 20)
-    return bytes(raw)
-
-
-def _icon_oracle() -> str:
-    rows = [
-        "(0, TRUE, NULL, 'bmp', 40, 30, 24, 1, 'rgb', TRUE)",
-        "(1, TRUE, NULL, 'bmp', 32, 32, 24, 1, 'rgb', FALSE)",
-        "(2, TRUE, NULL, 'icon', 256, 256, 32, 2, 'png', TRUE)",
-        "(3, TRUE, NULL, 'cursor', 48, 48, 32, 1, 'dib', TRUE)",
-        "(4, FALSE, 'ico: image 0 payload overruns file', NULL,"
-        " NULL, NULL, NULL, NULL, NULL, NULL)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id, CAST(doc_id % {_ICON_K} AS INT) AS k FROM documents
-),
-cb(k, ok, error, kind, width, height, bpp, n_images,
-   payload_format, size_consistent) AS (VALUES {values})
-SELECT doc_id AS archive_id, ok, error, kind,
-       CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-       CAST(bpp AS INT) AS bpp, CAST(n_images AS INT) AS n_images,
-       payload_format, size_consistent
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("icon_image_audit", _icon_oracle())
-def q_icon_image_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BMP/ICO AUDIT — the favicon layer (operators/bmp): DIB header
-    eras with 4-byte row-alignment arithmetic, top-down DIBs, the
-    size-consistency lie (header promises a pixel array the file
-    doesn't contain), ICONDIR walks with 0-means-256 geometry, PNG
-    vs DIB payload sniffing, cursor files, and an entry-overrun
-    quarantine case. Closed-form oracle from fixture parameters.
-    Map-side; 0 data shuffles, 1 bounded broadcast."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.bmp import (
-        icon_image_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_icon_payload(k))) for k in range(_ICON_K)],
-        "k int, payload binary",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _ICON_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return icon_image_profile(
-        files.select("file_id", "payload")
-    ).withColumnRenamed("file_id", "archive_id")
-
-
-# ---------------------------------------------------------------------------
 # heif_image_audit — the MODERN image formats (AVIF/HEIC)
 # ---------------------------------------------------------------------------
 
@@ -4549,112 +1977,6 @@ def q_heif_image_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % _HEIF_K).cast("int").alias("k"),
     ).join(F.broadcast(codebook), "k")
     return heif_image_profile(
-        files.select("file_id", "payload")
-    ).withColumnRenamed("file_id", "archive_id")
-
-
-# ---------------------------------------------------------------------------
-# ooxml_document_audit — office documents through the ZIP layer
-# ---------------------------------------------------------------------------
-
-_OOX_K = 5
-
-
-def _oox_payload(k: int) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.ooxml import (
-        encode_minimal_docx,
-        encode_minimal_pptx,
-        encode_minimal_xlsx,
-    )
-
-    if k == 0:  # clean docx with entity-escaped text
-        return encode_minimal_docx(
-            ["Hello & <world>", "Second paragraph"], title="Memo")
-    if k == 1:  # author metadata + macro (the renamed-.docm shape)
-        return encode_minimal_docx(
-            ["quarterly numbers"], creator="A. Person",
-            last_modified_by="B. Other", with_macro=True, media=2)
-    if k == 2:  # spreadsheet: shared strings + 3 sheets
-        from bigdata_invoice_stream_analysis_spark.operators.ooxml import (  # noqa: E501
-            encode_minimal_xlsx,
-        )
-
-        return encode_minimal_xlsx(["alpha", "beta"], n_sheets=3)
-    if k == 3:  # slides
-        return encode_minimal_pptx([["one", "two"], ["three"]])
-    # k == 4: a valid ZIP that is NOT an OOXML package — quarantine
-    # at THIS operator (triage would keep it as archive)
-    from bigdata_invoice_stream_analysis_spark.operators.zip import (
-        encode_zip,
-    )
-
-    return encode_zip([("data.txt", b"just a zip")])
-
-
-def _oox_oracle() -> str:
-    nl = "' || chr(10) || '"
-    rows = [
-        f"(0, TRUE, NULL, 'docx', 'Hello & <world>{nl}Second"
-        " paragraph', 2, 32, NULL, NULL, 'Memo', FALSE, FALSE,"
-        " 0, 2)",
-        "(1, TRUE, NULL, 'docx', 'quarterly numbers', 1, 17,"
-        " 'A. Person', 'B. Other', NULL, TRUE, TRUE, 2, 1)",
-        f"(2, TRUE, NULL, 'xlsx', 'alpha{nl}beta', 2, 10, NULL,"
-        " NULL, NULL, FALSE, FALSE, 0, 3)",
-        f"(3, TRUE, NULL, 'pptx', 'one{nl}two{nl}three', 3, 13,"
-        " NULL, NULL, NULL, FALSE, FALSE, 0, 2)",
-        "(4, FALSE, 'ooxml: no [Content_Types].xml part', NULL,"
-        " NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,"
-        " NULL)",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id, CAST(doc_id % {_OOX_K} AS INT) AS k FROM documents
-),
-cb(k, ok, error, kind, text, n_paragraphs, n_chars, creator,
-   last_modified_by, title, has_author_metadata, has_macros,
-   n_media, n_units) AS (VALUES {values})
-SELECT doc_id AS archive_id, ok, error, kind, text,
-       CAST(n_paragraphs AS INT) AS n_paragraphs,
-       CAST(n_chars AS INT) AS n_chars, creator, last_modified_by,
-       title, has_author_metadata, has_macros,
-       CAST(n_media AS INT) AS n_media,
-       CAST(n_units AS INT) AS n_units
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("ooxml_document_audit", _oox_oracle())
-def q_ooxml_document_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OFFICE DOCUMENT AUDIT — DOCX/XLSX/PPTX text extraction
-    (operators/ooxml) COMPOSED on the graded ZIP layer (central
-    directory + real inflate + CRC): entity-aware text without an
-    XML parser (entity bombs structurally impossible — nothing
-    expands), author metadata as the privacy bit (creator /
-    lastModifiedBy are real names, the EXIF-GPS of documents), the
-    vbaProject macro bit (renamed .docm = the classic malware
-    shape), embedded-media counts, sheet/slide counting. Closed-form
-    oracle from fixture parameters. Map-side; 0 data shuffles,
-    1 bounded broadcast."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.ooxml import (
-        ooxml_document_profile,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, bytearray(_oox_payload(k))) for k in range(_OOX_K)],
-        "k int, payload binary",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _OOX_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    return ooxml_document_profile(
         files.select("file_id", "payload")
     ).withColumnRenamed("file_id", "archive_id")
 
@@ -4878,115 +2200,6 @@ def q_document_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gates.select(
         "doc_id", "kind", keep.alias("keep"),
         reasons.alias("reasons"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# feed_frontier — RSS/Atom discovery beside the sitemap gate
-# ---------------------------------------------------------------------------
-
-_FEED_K = 3
-
-_FEED_BASE = "https://site{k}.example.com/feed.xml"
-
-_FEED_DOCS = [
-    # k=0: RSS with a relative and an absolute item link
-    ('<?xml version="1.0"?><rss version="2.0"><channel>'
-     "<title>Example Blog</title>"
-     "<link>https://site0.example.com/</link>"
-     "<item><title>First &amp; finest</title><link>/posts/1</link>"
-     "<pubDate>Mon, 10 Aug 2026 09:00:00 GMT</pubDate>"
-     "<guid>post-1</guid></item>"
-     "<item><title>Second</title>"
-     "<link>https://site0.example.com/posts/2</link></item>"
-     "</channel></rss>"),
-    # k=1: Atom — links are ATTRIBUTES, rel=alternate preferred
-    ('<?xml version="1.0"?>'
-     '<feed xmlns="http://www.w3.org/2005/Atom">'
-     "<title>Example Feed</title>"
-     '<link rel="self" href="https://site1.example.com/feed.xml"/>'
-     "<entry><title>Entry one</title>"
-     '<link href="entries/1"/>'
-     "<published>2026-08-10T09:00:00Z</published>"
-     "<id>urn:e1</id></entry>"
-     "<entry><title>Entry two</title>"
-     '<link rel="enclosure" href="https://cdn.example.com/a.mp3"/>'
-     '<link rel="alternate" href="https://site1.example.com/e/2"/>'
-     "<updated>2026-08-11T09:00:00Z</updated></entry>"
-     "</feed>"),
-    # k=2: XML but not a feed — quarantine row
-    '<?xml version="1.0"?><html><body>page</body></html>',
-]
-
-
-def _feed_oracle() -> str:
-    rows = [
-        "(0, 0, 'rss', 'Example Blog', 'First & finest',"
-        " 'https://site0.example.com/posts/1',"
-        " 'Mon, 10 Aug 2026 09:00:00 GMT', 'post-1', NULL)",
-        "(0, 1, 'rss', 'Example Blog', 'Second',"
-        " 'https://site0.example.com/posts/2', NULL, NULL, NULL)",
-        "(1, 0, 'atom', 'Example Feed', 'Entry one',"
-        " 'https://site1.example.com/entries/1',"
-        " '2026-08-10T09:00:00Z', 'urn:e1', NULL)",
-        "(1, 1, 'atom', 'Example Feed', 'Entry two',"
-        " 'https://site1.example.com/e/2',"
-        " '2026-08-11T09:00:00Z', NULL, NULL)",
-        "(2, -1, NULL, NULL, NULL, NULL, NULL, NULL,"
-        " 'feed: neither <rss> nor <feed> root')",
-    ]
-    values = ",\n  ".join(rows)
-    return f"""
-WITH media AS (
-  SELECT doc_id, CAST(doc_id % {_FEED_K} AS INT) AS k FROM documents
-),
-cb(k, seq, kind, feed_title, title, link, published, guid, error)
-  AS (VALUES {values})
-SELECT doc_id * 16 + seq + 1 AS archive_id, doc_id,
-       CAST(seq AS INT) AS seq, kind, feed_title, title,
-       link, published, guid, error
-FROM media JOIN cb USING (k)
-"""
-
-
-@staged("feed_frontier", _feed_oracle())
-def q_feed_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RSS/ATOM FRONTIER FEED — crawl discovery beside the sitemap
-    gate (operators/feeds): one row per feed ENTRY with both link
-    conventions handled (RSS element text vs Atom href attributes
-    with rel=alternate preference), entity-decoded titles, and links
-    made absolute through the SAME RFC 3986 resolver as the WARC
-    link graph and HLS gates. One variant is XML-but-not-a-feed and
-    must quarantine as a seq=-1 row. Closed-form oracle from the
-    document literals. Map-side; 0 data shuffles, 1 bounded
-    broadcast."""
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.feeds import (
-        feed_entries,
-    )
-
-    ensure_package_on_workers(spark)
-    d = load_table(spark, sf_dir, "documents")
-    codebook = spark.createDataFrame(
-        [(k, _FEED_DOCS[k], _FEED_BASE.format(k=k))
-         for k in range(_FEED_K)],
-        "k int, text string, url string",
-    )
-    files = d.select(
-        F.col("doc_id").alias("file_id"),
-        (F.col("doc_id") % _FEED_K).cast("int").alias("k"),
-    ).join(F.broadcast(codebook), "k")
-    out = feed_entries(
-        files.select("file_id", "text", "url")
-    ).withColumnRenamed("file_id", "doc_id")
-    # archive_id: the UNIQUE NON-NULL sort prefix the driver's
-    # hash-compare needs (multi-entry feeds share doc_id, and the
-    # nullable guid/published columns must never tie-break)
-    return out.select(
-        (F.col("doc_id") * 16 + F.col("seq") + 1).alias("archive_id"),
-        "*",
     )
 
 

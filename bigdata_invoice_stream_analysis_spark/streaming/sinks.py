@@ -101,13 +101,18 @@ def from_kafka_records(
     if with_headers:
         # Kafka source shape (includeHeaders=true): array<struct<key,
         # value binary>> → map<string,string>; headers are UTF-8 text
-        # in this pipeline's convention.
+        # in this pipeline's convention. Keys repeat on the wire, so
+        # each distinct key maps to its LAST value (Kafka's
+        # Headers.lastHeader) instead of failing the batch with
+        # DUPLICATED_MAP_KEY.
+        headers = F.col("headers")
+        keys = F.array_distinct(F.transform(headers, lambda h: h["key"]))
         cols.append(
             F.map_from_arrays(
-                F.transform(F.col("headers"), lambda h: h["key"]),
-                F.transform(
-                    F.col("headers"), lambda h: h["value"].cast("string")
-                ),
+                keys,
+                F.transform(keys, lambda k: F.element_at(
+                    F.filter(headers, lambda h: h["key"] == k), -1
+                )["value"].cast("string")),
             ).alias("headers")
         )
     return records.select(F.col("key").cast("string").alias("key"), *cols)

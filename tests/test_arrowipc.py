@@ -16,7 +16,6 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bigdata_invoice_stream_analysis_spark.operators.arrowipc import (
-    arrow_file_profile,
     parse_arrow_file,
 )
 
@@ -110,23 +109,3 @@ def test_corruption_contract():
         parse_arrow_file(b"NOTARROW" + blob[8:])
     with pytest.raises(ValueError, match="magic"):
         parse_arrow_file(blob[:-6] + b"XXXXXX")
-
-
-def test_spark_profile_operator(spark):
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-
-    ensure_package_on_workers(spark)
-    df = spark.createDataFrame(
-        [(0, bytearray(_ipc_bytes(TABLE, max_chunksize=2))),
-         (1, bytearray(b"ARROW1\x00\x00 but truncated"))],
-        "file_id long, payload binary")
-    rows = {r["file_id"]: r for r in arrow_file_profile(df).collect()}
-    assert rows[0]["ok"]
-    assert rows[0]["num_rows"] == 5
-    assert rows[0]["n_batches"] == 3
-    assert rows[0]["n_columns"] == 5
-    assert rows[0]["total_null_count"] == 4
-    assert "a:int64" in rows[0]["column_types"]
-    assert not rows[1]["ok"] and rows[1]["error"]

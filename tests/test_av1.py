@@ -17,8 +17,6 @@ from bigdata_invoice_stream_analysis_spark.operators.av1 import (
     OBU_PADDING,
     OBU_SEQUENCE_HEADER,
     OBU_TEMPORAL_DELIMITER,
-    av1_seq_profile,
-    encode_av1_stream,
     encode_obu,
     encode_sequence_header,
     parse_obus,
@@ -131,35 +129,3 @@ def test_obu_errors():
     with pytest.raises(ValueError, match="still_picture"):
         # reduced flag without still_picture (bits: 000 0 1 ...)
         parse_sequence_header(bytes([0b00001000, 0, 0, 0]))
-
-
-def test_av1_seq_profile_operator(spark):
-    payloads = [
-        encode_av1_stream(dict(
-            seq_profile=0, max_width=1920, max_height=1080,
-            operating_points=[(0, 8, 0)],
-        ), n_frames=3),
-        encode_av1_stream(dict(
-            seq_profile=2, high_bitdepth=True, twelve_bit=True,
-            max_width=7680, max_height=4320,
-            operating_points=[(0, 19, 1)], film_grain=True,
-        ), n_frames=1),
-        b"\x80 not an av1 stream",
-        encode_obu(OBU_TEMPORAL_DELIMITER, b""),  # no seq header
-    ]
-    df = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)],
-        "media_id long, payload binary",
-    )
-    rows = {r["media_id"]: r for r in av1_seq_profile(df).collect()}
-    r0 = rows[0]
-    assert r0["ok"] and r0["max_width"] == 1920
-    assert r0["bit_depth"] == 8 and r0["subsampling"] == "11"
-    assert r0["n_frame_obus"] == 3 and not r0["film_grain"]
-    r1 = rows[1]
-    assert r1["ok"] and r1["bit_depth"] == 12
-    assert r1["seq_level_idx"] == 19 and r1["seq_tier"] == 1
-    assert r1["max_width"] == 7680 and r1["film_grain"]
-    assert rows[2]["ok"] is False and "forbidden" in rows[2]["error"]
-    assert rows[3]["ok"] is False
-    assert "no sequence header" in rows[3]["error"]

@@ -6,7 +6,6 @@ import struct
 import pytest
 
 from bigdata_invoice_stream_analysis_spark.operators.avi import (
-    avi_stream_profile,
     encode_avi,
     parse_avi,
 )
@@ -88,27 +87,6 @@ def test_negative_biheight_normalized():
     m = parse_avi(bytes(raw))
     v = next(s for s in m["streams"] if s["type"] == "vids")
     assert v["height"] == 240 and m["dims_match"]
-
-
-def test_profile_operator(spark):
-    payloads = [
-        encode_avi(),
-        encode_avi(lie_dims=True),
-        b"RIFF\x04\x00\x00\x00JUNK",
-    ]
-    files = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)],
-        "file_id long, payload binary",
-    )
-    rows = {r["file_id"]: r
-            for r in avi_stream_profile(files).collect()}
-    assert rows[0]["ok"] and rows[0]["video_codec"] == "mjpg"
-    assert rows[0]["audio_channels"] == 2
-    assert not rows[1]["dims_match"]
-    assert not rows[2]["ok"]
-    plan = avi_stream_profile(files)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan
 
 
 def test_rec_grouped_movi_counts_grandchildren():

@@ -6,7 +6,6 @@ profile operator.  Spec anchors: Apache Avro 1.11 specification
 
 from __future__ import annotations
 
-import json
 import sys
 from pathlib import Path
 
@@ -18,7 +17,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bigdata_invoice_stream_analysis_spark.operators.avro import (
     _Cursor,
-    avro_container_profile,
     encode_avro,
     parse_avro,
     read_datum,
@@ -190,29 +188,3 @@ def test_property_container_roundtrip(records, codec):
                        records_per_block=2)
     meta = parse_avro(blob)
     assert meta["records"] == records
-
-
-# --- Spark operator ---------------------------------------------------------
-
-def test_spark_container_profile(spark):
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-
-    ensure_package_on_workers(spark)
-    good = encode_avro(RECORD_SCHEMA, RECORDS, codec="deflate")
-    df = spark.createDataFrame(
-        [(0, bytearray(good)), (1, bytearray(b"not avro"))],
-        "file_id long, payload binary",
-    )
-    rows = {r["file_id"]: r
-            for r in avro_container_profile(df).collect()}
-    assert rows[0]["ok"]
-    assert rows[0]["codec"] == "deflate"
-    assert rows[0]["schema_name"] == "Doc"
-    assert rows[0]["n_fields"] == 8
-    assert rows[0]["n_records"] == 2
-    first = json.loads(rows[0]["first_record_json"])
-    assert first["id"] == 1
-    assert first["digest"] == "deadbeef"  # bytes rendered as hex
-    assert not rows[1]["ok"] and rows[1]["error"]

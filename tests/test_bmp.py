@@ -8,7 +8,6 @@ import pytest
 from bigdata_invoice_stream_analysis_spark.operators.bmp import (
     encode_bmp,
     encode_ico,
-    icon_image_profile,
     parse_bmp,
     parse_ico,
 )
@@ -87,26 +86,3 @@ def test_ico_errors():
     struct.pack_into("<I", ico, 6 + 8, 1 << 20)  # inflate size
     with pytest.raises(ValueError, match="overruns"):
         parse_ico(bytes(ico))
-
-
-def test_profile_operator(spark):
-    png = b"\x89PNG\r\n\x1a\n" + bytes(16)
-    payloads = [
-        encode_bmp(16, 12),
-        encode_ico([(256, 256, png)]),
-        encode_bmp(16, 16, lie_size=True),
-        b"\x00\x00\x03\x00garbage",
-    ]
-    files = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)],
-        "file_id long, payload binary",
-    )
-    rows = {r["file_id"]: r
-            for r in icon_image_profile(files).collect()}
-    assert rows[0]["ok"] and rows[0]["kind"] == "bmp"
-    assert rows[1]["kind"] == "icon" and rows[1]["payload_format"] == "png"
-    assert rows[2]["size_consistent"] is False
-    assert not rows[3]["ok"]
-    plan = icon_image_profile(files)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan

@@ -17,7 +17,6 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bigdata_invoice_stream_analysis_spark.operators.compression import (
-    compressed_shard_profile,
     encode_lz4_stream,
     encode_zstd_stream,
     parse_lz4_frames,
@@ -160,33 +159,3 @@ def test_corruption_contract():
         parse_zstd_frames(b"\x00\x00\x00\x00rest")
     with pytest.raises(ValueError, match="magic"):
         parse_lz4_frames(b"\x00\x00\x00\x00rest")
-
-
-def test_spark_profile(spark):
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-
-    ensure_package_on_workers(spark)
-    z = encode_zstd_stream([
-        {"blocks": [b"a" * 10, b"b" * 5], "content_size": 15,
-         "dict_id": 9},
-        {"skippable": b"side"},
-    ])
-    l4 = encode_lz4_stream([{"blocks": [b"c" * 7],
-                             "content_size": 7}])
-    df = spark.createDataFrame(
-        [(0, bytearray(z)), (1, bytearray(l4)),
-         (2, bytearray(b"plain text, not a frame"))],
-        "file_id long, payload binary")
-    rows = {r["file_id"]: r
-            for r in compressed_shard_profile(df).collect()}
-    assert rows[0]["format"] == "zstd" and rows[0]["ok"]
-    assert rows[0]["n_frames"] == 1
-    assert rows[0]["n_skippable"] == 1
-    assert rows[0]["n_blocks"] == 2
-    assert rows[0]["declared_content_bytes"] == 15
-    assert rows[0]["needs_dictionary"] is True
-    assert rows[1]["format"] == "lz4" and rows[1]["ok"]
-    assert rows[1]["declared_content_bytes"] == 7
-    assert not rows[2]["ok"]

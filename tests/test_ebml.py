@@ -29,7 +29,6 @@ from bigdata_invoice_stream_analysis_spark.operators.ebml import (
     read_vint,
     vint_is_unknown_size,
     walk_elements,
-    webm_frame_index,
     webm_track_profile,
 )
 
@@ -318,12 +317,3 @@ def test_webm_track_profile_operator(spark):
     )
     assert (a["n_blocks"], a["n_keyframes"]) == (0, 0)
     assert rows[(2, 1)]["codec_id"] == "V_AV1"
-
-
-def test_webm_frame_index_operator(spark):
-    rows = webm_frame_index(_media_df(spark), keyframes_only=True).collect()
-    by_media = {}
-    for r in rows:
-        by_media.setdefault(r["media_id"], []).append(r["pts_ms"])
-    assert by_media == {1: [0, 1000, 2500], 2: [0]}
-    assert all(r["keyframe"] for r in rows)

@@ -4,7 +4,6 @@ conventions, channel-vs-item titles, URL absolutization."""
 import pytest
 
 from bigdata_invoice_stream_analysis_spark.operators.feeds import (
-    feed_entries,
     parse_feed,
 )
 
@@ -83,26 +82,3 @@ def test_channel_title_not_item_title():
 def test_not_a_feed_raises():
     with pytest.raises(ValueError, match="neither"):
         parse_feed("<html><body>page</body></html>")
-
-
-def test_entries_operator(spark):
-    files = spark.createDataFrame(
-        [
-            (0, RSS, "https://blog.example.com/feed"),
-            (1, ATOM, None),
-            (2, "<html>nope</html>", None),
-        ],
-        "file_id long, text string, url string",
-    )
-    rows = feed_entries(files).collect()
-    by_file = {}
-    for r in rows:
-        by_file.setdefault(r["file_id"], []).append(r)
-    assert len(by_file[0]) == 2
-    assert by_file[0][0]["kind"] == "rss"
-    assert len(by_file[1]) == 2
-    assert by_file[2][0]["seq"] == -1
-    assert "neither" in by_file[2][0]["error"]
-    plan = feed_entries(files)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan

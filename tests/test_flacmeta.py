@@ -6,7 +6,6 @@ import pytest
 
 from bigdata_invoice_stream_analysis_spark.operators.flacmeta import (
     encode_flac,
-    flac_stream_profile,
     parse_flac,
 )
 
@@ -115,24 +114,3 @@ def test_comment_overrun_raises():
     bad = raw[:i - 4] + b"\xff\xff\xff\x7f" + raw[i:]
     with pytest.raises(ValueError, match="overruns"):
         parse_flac(bad)
-
-
-def test_profile_operator(spark):
-    payloads = [
-        encode_flac(tags={"TITLE": "t0"}),
-        encode_flac(picture=("image/png", 64, 64, bytes(32))),
-        b"\x00not flac",
-    ]
-    files = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)],
-        "file_id long, payload binary",
-    )
-    rows = {r["file_id"]: r
-            for r in flac_stream_profile(files).collect()}
-    assert rows[0]["ok"] and rows[0]["title"] == "t0"
-    assert rows[0]["pcm_md5"] == "00" * 16
-    assert rows[1]["has_picture"] and rows[1]["picture_mime"] == "image/png"
-    assert not rows[2]["ok"]
-    plan = flac_stream_profile(files)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan

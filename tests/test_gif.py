@@ -16,7 +16,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bigdata_invoice_stream_analysis_spark.operators.gif import (
     encode_minimal_gif,
-    gif_profile,
     parse_gif,
 )
 
@@ -85,18 +84,3 @@ def test_gif_roundtrip_property(delays, w, h, loops, transparent):
     assert p["duration_ms"] == sum(delays) * 10
     assert p["loop_count"] == loops
     assert p["transparent"] is transparent
-
-
-def test_gif_profile_operator(spark):
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(encode_minimal_gif([10, 10]))),
-            (2, bytearray(encode_minimal_gif([0], loop_count=None))),
-        ],
-        "media_id long, payload binary",
-    )
-    rows = {r["media_id"]: r for r in gif_profile(df).collect()}
-    assert rows[1]["animated"] is True
-    assert rows[1]["duration_ms"] == 200
-    assert rows[2]["animated"] is False
-    assert rows[2]["loop_count"] is None

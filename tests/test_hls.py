@@ -5,7 +5,6 @@ URI absolutization through the shared resolver."""
 import pytest
 
 from bigdata_invoice_stream_analysis_spark.operators.hls import (
-    hls_manifest_profile,
     hls_segments,
     parse_attribute_list,
     parse_m3u8,
@@ -160,32 +159,6 @@ def test_bad_resolution_rejected():
     with pytest.raises(ValueError, match="RESOLUTION"):
         parse_m3u8(
             "#EXTM3U\n#EXT-X-STREAM-INF:BANDWIDTH=1,RESOLUTION=wide\nu\n")
-
-
-def test_profile_operator(spark):
-    files = spark.createDataFrame(
-        [
-            (0, MEDIA, "https://cdn.example.com/a/pl.m3u8"),
-            (1, MASTER, "https://cdn.example.com/b/master.m3u8"),
-            (2, "not a playlist", None),
-        ],
-        "file_id long, text string, url string",
-    )
-    rows = {r["file_id"]: r
-            for r in hls_manifest_profile(files).collect()}
-    assert rows[0]["ok"] and rows[0]["kind"] == "media"
-    assert rows[0]["n_segments"] == 3 and rows[0]["encrypted"]
-    assert rows[0]["first_segment_uri"] == \
-        "https://cdn.example.com/a/seg264.ts"
-    assert not rows[0]["live"]
-    assert rows[1]["kind"] == "master"
-    assert rows[1]["n_variants"] == 2
-    assert rows[1]["max_bandwidth"] == 7680000
-    assert rows[1]["best_resolution"] == "1920x1080"
-    assert not rows[2]["ok"] and "EXTM3U" in rows[2]["error"]
-    plan = hls_manifest_profile(files)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan
 
 
 def test_segments_exploder(spark):

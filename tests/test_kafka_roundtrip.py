@@ -167,69 +167,8 @@ def test_json_roundtrip_property(spark, rows):
 
 
 # ---------------------------------------------------------------------------
-# Partitioner + header wire path (round 4): the last broker-free gaps —
-# WHERE a keyed record lands (murmur2 DefaultPartitioner) and the
-# headers column shape the built-in sink/source use.
+# Header wire path: the headers column shape the built-in sink/source use.
 # ---------------------------------------------------------------------------
-
-from bigdata_invoice_stream_analysis_spark.streaming.partitioning import (  # noqa: E402
-    kafka_partition,
-    kafka_partition_col,
-    murmur2,
-)
-
-# Apache Kafka's own murmur2 test vectors
-# (clients/src/test/java/org/apache/kafka/common/utils/UtilsTest.java,
-# reproduced verbatim in kafka-python's test suite) — bit-compat with
-# every Java/Python producer's DefaultPartitioner.
-KAFKA_MURMUR2_VECTORS = {
-    b"21": -973932308,
-    b"foobar": -790332482,
-    b"a-little-bit-long-string": -985981536,
-    b"a-little-bit-longer-string": -1486304829,
-    b"lkjh234lh9fiuh90y23oiuhsafujhadof229phr9h19h89h8": -58897971,
-    b"abc": 479470107,
-}
-
-
-def test_murmur2_matches_kafka_reference_vectors():
-    for data, want in KAFKA_MURMUR2_VECTORS.items():
-        assert murmur2(data) == want, data
-    # tail lengths 0-3 exercise every switch-fallthrough branch
-    for data in (b"", b"x", b"xy", b"xyz", b"xyzw", bytes(range(256))):
-        assert -(2**31) <= murmur2(data) < 2**31
-
-
-def test_kafka_partition_masks_negative_hashes():
-    # "21" hashes negative; toPositive must land it in range, matching
-    # (h & 0x7fffffff) % n exactly
-    for n in (1, 3, 12, 64):
-        for key in ("21", "foobar", "", "invoice-554"):
-            p = kafka_partition(key, n)
-            assert 0 <= p < n
-            assert p == (murmur2(key.encode()) & 0x7FFFFFFF) % n
-    assert kafka_partition("21", 12) == ((-973932308 & 0x7FFFFFFF) % 12)
-
-
-def test_kafka_partition_col_matches_python_twin(spark, sf_dir):
-    """The vectorized pandas_udf and the driver-side function agree on
-    real invoice keys, and the assignment is a pure key function —
-    identical across repartitionings (the property that makes
-    co-partitioned produce deterministic)."""
-    feats = QUERIES["invoice_features"](spark, sf_dir).limit(300)
-    tagged = feats.select(
-        "invoice_no", kafka_partition_col("invoice_no", 12).alias("p")
-    )
-    got = {r["invoice_no"]: r["p"] for r in tagged.collect()}
-    got_repart = {
-        r["invoice_no"]: r["p"]
-        for r in feats.repartition(7)
-        .select("invoice_no", kafka_partition_col("invoice_no", 12).alias("p"))
-        .collect()
-    }
-    assert got == got_repart
-    for k, p in got.items():
-        assert p == kafka_partition(k, 12)
 
 
 def test_headers_roundtrip_through_wire(spark, sf_dir):
@@ -260,3 +199,22 @@ def test_headers_roundtrip_through_wire(spark, sf_dir):
         h = by_key[str(r["invoice_no"])]["headers"]
         assert h["source"] == "bigdata-invoice-pipeline"
         assert h["items"] == str(r["number_items"])
+
+
+def test_repeated_header_keys_last_wins(spark):
+    """Kafka headers are ordered and repeatable: a record carrying the
+    same key twice maps to its LAST value (Headers.lastHeader) rather
+    than failing the batch, and a NULL header value stays NULL."""
+    wire = spark.createDataFrame(
+        [("k1", '{"n": 1}', [("h", b"first"), ("z", None), ("h", b"last")]),
+         ("k2", '{"n": 2}', [("h", b"only")]),
+         ("k3", '{"n": 3}', [])],
+        "key string, value string, "
+        "headers array<struct<key:string,value:binary>>",
+    )
+    schema = T.StructType([T.StructField("n", T.LongType())])
+    back = from_kafka_records(wire, schema, with_headers=True)
+    assert dict(back.dtypes)["headers"] == "map<string,string>"
+    got = {r["key"]: r["headers"] for r in back.collect()}
+    assert got == {"k1": {"h": "last", "z": None}, "k2": {"h": "only"},
+                   "k3": {}}

@@ -1,46 +1,7 @@
-"""Spark-4 extension surfaces: the Python DataSource API and Python
-UDTFs — proven against the same parse/validate operators the rest of
-the engine uses."""
+"""Spark-4 extension surfaces: Python UDTFs and Dataset.observe,
+proven against the same operators the rest of the engine uses."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-
-def test_purchase_gen_datasource_distributed_and_deterministic(spark):
-    from bigdata_invoice_stream_analysis_spark.sources.pydatasource import (
-        PurchaseGenSource,
-    )
-
-    spark.dataSource.register(PurchaseGenSource)
-    read = lambda: (
-        spark.read.format("purchase_gen")
-        .option("rows", 5000).option("partitions", 8).option("seed", 7)
-        .load()
-    )
-    df = read()
-    assert df.columns == ["value"]
-    assert df.rdd.getNumPartitions() == 8, "generation must be distributed"
-    assert df.count() == 5000
-    # Determinism: same options → identical content.
-    a = sorted(r.value for r in df.collect())
-    b = sorted(r.value for r in read().collect())
-    assert a == b
-    # The generated stream feeds the real validation operators: every
-    # line routes to exactly one of invalid/cancelled/good.
-    from bigdata_invoice_stream_analysis_spark.operators import validate
-
-    routed = df.select(
-        validate.is_invalid_line(F.col("value")).alias("bad"),
-        validate.is_cancelled_line(F.col("value")).alias("canc"),
-    )
-    counts = routed.groupBy("bad", "canc").count().collect()
-    by = {(r.bad, r.canc): r["count"] for r in counts}
-    assert by.get((True, False), 0) > 0, "dirt present"
-    assert by.get((False, True), 0) > 0, "cancellations present"
-    assert by.get((False, False), 0) > 0, "good lines present"
-    assert sum(by.values()) == 5000
 
 
 def test_split_sentences_udtf_sql_lateral(spark):
@@ -90,45 +51,3 @@ def test_observe_metrics_on_batch(spark, sf_dir):
     assert got["n_rows"] == n
     assert got["null_cust"] == 0
     assert got["cents"] > 0
-
-
-def test_purchase_gen_streaming_matches_batch(spark, tmp_path):
-    """The Python streaming DataSource (SimpleDataSourceStreamReader)
-    replays the EXACT byte sequence the batch reader produces: offsets
-    are row indices, micro-batches advance rowsPerBatch at a time, and
-    readBetweenOffsets makes any range replayable after restart — the
-    source-side property exactly-once sinks rely on."""
-    import time
-
-    from bigdata_invoice_stream_analysis_spark.sources.pydatasource import (
-        PurchaseGenSource,
-    )
-
-    spark.dataSource.register(PurchaseGenSource)
-    batch = [
-        r.value
-        for r in spark.read.format("purchase_gen").option("rows", 300).load().collect()
-    ]
-    assert len(batch) == 300
-
-    got: list[str] = []
-
-    def sink(bdf, _bid):
-        got.extend(r.value for r in bdf.collect())
-
-    q = (
-        spark.readStream.format("purchase_gen")
-        .option("maxRows", 300)
-        .option("rowsPerBatch", 120)  # 3 uneven micro-batches (120/120/60)
-        .load()
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "pg_ckpt"))
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        while time.time() < deadline and len(got) < 300:
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert sorted(got) == sorted(batch)

@@ -697,123 +697,3 @@ def test_corrupt_stts_run_sum_bounded():
     struct.pack_into(">I", blob, i + 4 + 8, 0x7FFFFFFF)
     with pytest.raises(ValueError, match="stts"):
         parse_mp4(bytes(blob))
-
-
-# ---------------------------------------------------------------------------
-# AV1 container-vs-bitstream cross-check
-# ---------------------------------------------------------------------------
-
-
-def _av1_seq_obu(**kw):
-    from bigdata_invoice_stream_analysis_spark.operators.av1 import (
-        OBU_SEQUENCE_HEADER,
-        encode_obu,
-        encode_sequence_header,
-    )
-
-    return encode_obu(OBU_SEQUENCE_HEADER, encode_sequence_header(**kw))
-
-
-def test_av1_cross_check_truthful():
-    from bigdata_invoice_stream_analysis_spark.operators.mp4 import (
-        encode_minimal_mp4,
-        parse_av1_cross_check,
-    )
-
-    obu = _av1_seq_obu(
-        seq_profile=0, max_width=1920, max_height=1080,
-        operating_points=[(0, 8, 0)],
-    )
-    payload = encode_minimal_mp4(
-        frame_sizes=[100, 60],
-        av01=(1920, 1080, 0, 8, 0, 0, 0, 0, obu),
-    )
-    row = parse_av1_cross_check(payload)
-    assert row["dims_match"] and row["record_match"]
-    assert row["seq_width"] == 1920 and row["seq_bit_depth"] == 8
-    assert row["record_level"] == row["seq_level_idx"] == 8
-
-
-def test_av1_cross_check_container_lies_about_dims():
-    from bigdata_invoice_stream_analysis_spark.operators.mp4 import (
-        encode_minimal_mp4,
-        parse_av1_cross_check,
-    )
-
-    obu = _av1_seq_obu(
-        seq_profile=0, max_width=1920, max_height=1080,
-        operating_points=[(0, 8, 0)],
-    )
-    payload = encode_minimal_mp4(
-        frame_sizes=[40],
-        av01=(1280, 720, 0, 8, 0, 0, 0, 0, obu),  # stsd claim lies
-    )
-    row = parse_av1_cross_check(payload)
-    assert row["dims_match"] is False
-    assert row["record_match"] is True
-    assert (row["container_width"], row["seq_width"]) == (1280, 1920)
-
-
-def test_av1_cross_check_record_head_lies():
-    from bigdata_invoice_stream_analysis_spark.operators.mp4 import (
-        encode_minimal_mp4,
-        parse_av1_cross_check,
-    )
-
-    obu = _av1_seq_obu(
-        seq_profile=2, high_bitdepth=True, twelve_bit=True,
-        max_width=1280, max_height=720,
-        operating_points=[(0, 12, 1)],
-    )
-    # record head claims profile 0 / level 8 / main tier / 8-bit —
-    # the re-mux-rebuilt-head shape; the OBU is the truth
-    payload = encode_minimal_mp4(
-        frame_sizes=[40],
-        av01=(1280, 720, 0, 8, 0, 0, 0, 0, obu),
-    )
-    row = parse_av1_cross_check(payload)
-    assert row["dims_match"] is True
-    assert row["record_match"] is False
-    assert row["seq_bit_depth"] == 12 and row["record_bit_depth"] == 8
-    assert row["seq_tier"] == 1 and row["record_tier"] == 0
-
-
-def test_av1_cross_check_requires_config_obus():
-    import pytest as _pytest
-
-    from bigdata_invoice_stream_analysis_spark.operators.mp4 import (
-        encode_minimal_mp4,
-        parse_av1_cross_check,
-        parse_codec_profile,
-    )
-
-    payload = encode_minimal_mp4(
-        frame_sizes=[40], av01=(640, 360, 0, 4, 0, 0, 0, 0),
-    )
-    with _pytest.raises(ValueError, match="configOBUs"):
-        parse_av1_cross_check(payload)
-    # the metadata-only path still profiles it (byte-compat check:
-    # the optional config_obus arg must not change 8-tuple fixtures)
-    prof = parse_codec_profile(payload)
-    assert prof["codec_string"].startswith("av01.0.04M")
-
-
-def test_av1_cross_check_operator(spark):
-    from bigdata_invoice_stream_analysis_spark.operators.mp4 import (
-        av1_cross_check,
-        encode_minimal_mp4,
-    )
-
-    obu = _av1_seq_obu(
-        seq_profile=0, max_width=640, max_height=360,
-        operating_points=[(0, 4, 0)],
-    )
-    df = spark.createDataFrame(
-        [(7, bytearray(encode_minimal_mp4(
-            frame_sizes=[24], av01=(640, 360, 0, 4, 0, 0, 0, 0, obu),
-        )))],
-        "media_id long, payload binary",
-    )
-    rows = av1_cross_check(df).collect()
-    assert len(rows) == 1
-    assert rows[0]["dims_match"] and rows[0]["record_match"]

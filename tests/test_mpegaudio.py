@@ -304,28 +304,6 @@ def test_id3_frames_errors():
         parse_id3v2_frames(good[:-1])
 
 
-def test_id3_frames_operator(spark):
-    from bigdata_invoice_stream_analysis_spark.operators.mpegaudio import (
-        encode_id3v2,
-        encode_mp3,
-        id3_frames,
-    )
-
-    tagged = encode_id3v2(
-        [("TIT2", (3, "Title")), ("TPE1", (0, "Artist"))]
-    ) + encode_mp3(2)
-    df = spark.createDataFrame(
-        [(0, bytearray(tagged)), (1, bytearray(encode_mp3(2)))],
-        "media_id long, payload binary",
-    )
-    rows = id3_frames(df).collect()
-    tagged_rows = [r for r in rows if r["media_id"] == 0]
-    assert {r["frame_id"] for r in tagged_rows} == {"TIT2", "TPE1"}
-    assert all(r["ok"] for r in tagged_rows)
-    bare = [r for r in rows if r["media_id"] == 1]
-    assert len(bare) == 1 and bare[0]["ok"] is False
-
-
 def test_id3_transformed_frames_are_refused():
     """Compressed/encrypted/per-frame-unsync frame bodies (§4.1
     format flags) are transformed bytes — decoding them as-is would

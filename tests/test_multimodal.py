@@ -216,6 +216,27 @@ def test_png_rejects_unsupported():
         MM.decode_png(bad)
 
 
+def test_png_decode_skips_metadata_chunks():
+    """Text and XMP metadata chunks ahead of IDAT are skipped: the image
+    still decodes to the exact raster."""
+    import struct
+    import zlib
+
+    def chunk(ctype, data):
+        return (struct.pack(">I", len(data)) + ctype + data
+                + struct.pack(">I", zlib.crc32(ctype + data)))
+
+    px = _raster(5, 2)
+    good = MM.encode_png(5, 2, px)
+    ihdr_end = 8 + 12 + 13
+    tagged = (good[:ihdr_end] + chunk(b"tEXt", b"Note\x00x")
+              + chunk(b"iTXt", b"XML:com.adobe.xmp\x00\x00\x00\x00\x00<x/>")
+              + good[ihdr_end:])
+    img = MM.decode_png(tagged)
+    assert (img["width"], img["height"]) == (5, 2)
+    assert img["pixels"] == px
+
+
 def test_decode_pixel_stats_matches_driver_decode(spark):
     """The mapInPandas worker's inlined P5 parser == decode_pnm: random
     PGM payloads through the Spark operator, stats recomputed driver-

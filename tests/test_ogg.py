@@ -17,7 +17,6 @@ from bigdata_invoice_stream_analysis_spark.operators.ogg import (
     encode_minimal_opus,
     encode_ogg_page,
     ogg_crc,
-    ogg_stream_profile,
     parse_ogg,
 )
 
@@ -102,24 +101,3 @@ def test_corruption_contract():
             pass
     with pytest.raises(ValueError, match="OggS"):
         parse_ogg(b"NotOgg")
-
-
-def test_spark_profile(spark):
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-
-    ensure_package_on_workers(spark)
-    df = spark.createDataFrame(
-        [(0, bytearray(encode_minimal_opus())),
-         (1, bytearray(b"junk bytes"))],
-        "file_id long, payload binary")
-    rows = ogg_stream_profile(df).collect()
-    by_fid = {}
-    for r in rows:
-        by_fid.setdefault(r["file_id"], []).append(r)
-    good = by_fid[0][0]
-    assert good["ok"] and good["codec"] == "opus"
-    assert good["duration_ms"] == 100
-    assert good["n_crc_bad"] == 0
-    assert not by_fid[1][0]["ok"] and by_fid[1][0]["error"]

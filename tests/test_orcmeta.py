@@ -1,7 +1,6 @@
 """ORC footer audit cross-validated against pyarrow.orc: postscript
 + chunked-zlib footer decode + protobuf message shapes, over files
-pyarrow writes; adversarial corruption; the Spark profile
-operator."""
+pyarrow writes; adversarial corruption; the protobuf wire walk."""
 
 from __future__ import annotations
 
@@ -18,8 +17,8 @@ pa_orc = pytest.importorskip("pyarrow.orc")
 import pyarrow as pa  # noqa: E402
 
 from bigdata_invoice_stream_analysis_spark.operators.orcmeta import (  # noqa: E402
-    orc_footer_profile,
     parse_orc_footer,
+    parse_wire,
 )
 
 
@@ -105,19 +104,15 @@ def test_corruption_contract():
         parse_orc_footer(b"PAR1xxxx")
 
 
-def test_spark_profile_operator(spark):
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
+# --- protobuf wire walk -----------------------------------------------------
 
-    ensure_package_on_workers(spark)
-    df = spark.createDataFrame(
-        [(0, bytearray(_orc_bytes(TABLE, compression="zlib"))),
-         (1, bytearray(b"ORC\nbut not really an orc file"))],
-        "file_id long, payload binary")
-    rows = {r["file_id"]: r for r in orc_footer_profile(df).collect()}
-    assert rows[0]["ok"]
-    assert rows[0]["num_rows"] == 8
-    assert rows[0]["compression"] == "ZLIB"
-    assert rows[0]["column_names"] == "id,name,score"
-    assert not rows[1]["ok"] and rows[1]["error"]
+def test_wire_walk_spec_example():
+    # developers.google.com encoding doc: field 1, varint 150
+    assert parse_wire(b"\x08\x96\x01") == [(1, 0, 150)]
+
+
+def test_wire_walk_rejects_groups_and_truncation():
+    with pytest.raises(ValueError, match="wire type"):
+        parse_wire(b"\x0b")  # field 1, wire type 3 (group start)
+    with pytest.raises(ValueError, match="truncated"):
+        parse_wire(b"\x0a\x05ab")  # LD claims 5, has 2

@@ -1,7 +1,8 @@
-"""Physical-plan pins for the late-r8 staged relational operators:
-the Delta log replay and BPE training shapes that make them scale —
-metadata-scale-only shuffles, one corpus-scale word-count exchange,
-constant plan depth across merge iterations."""
+"""Physical-plan pins for the relational operators behind the
+late-registered rows in plans/staged.py: the BPE training shapes that
+make it scale (one corpus-scale word-count exchange, constant plan
+depth across merge iterations) and the zero-shuffle PII / two-aggregate
+LM plans."""
 
 from __future__ import annotations
 
@@ -11,51 +12,10 @@ from bigdata_invoice_stream_analysis_spark.operators.bpe import (
     learn_bpe,
     word_frequencies,
 )
-from bigdata_invoice_stream_analysis_spark.operators.deltalog import (
-    delta_actions,
-    delta_log_health,
-    delta_snapshot,
-    delta_tombstones,
-    encode_delta_log,
-)
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _log_df(spark):
-    commits = [
-        [{"add": "a.parquet", "size": 10, "rows": 1}],
-        [{"remove": "a.parquet"}, {"add": "b.parquet", "size": 20,
-                                   "rows": 2}],
-    ]
-    rows = [(v, line) for v, body in encode_delta_log(commits)
-            for line in body.split("\n")]
-    return spark.createDataFrame(rows, "version long, line string")
-
-
-def test_delta_snapshot_single_path_exchange(spark):
-    plan = _plan(delta_snapshot(delta_actions(_log_df(spark))))
-    ex = [ln for ln in plan.splitlines()
-          if "Exchange hashpartitioning(path" in ln]
-    assert len(ex) <= 1
-    assert "CartesianProduct" not in plan
-    assert "PythonUDF" not in plan  # pure Catalyst, zero Python
-
-
-def test_delta_tombstones_no_python_no_cartesian(spark):
-    plan = _plan(delta_tombstones(delta_actions(_log_df(spark))))
-    assert "CartesianProduct" not in plan
-    assert "PythonUDF" not in plan
-    # the size-recovery join is an equi-join on path
-    assert "path" in plan
-
-
-def test_delta_health_single_agg_then_window(spark):
-    plan = _plan(delta_log_health(delta_actions(_log_df(spark))))
-    assert "PythonUDF" not in plan
-    assert plan.count("Window") == 1
 
 
 def test_bpe_word_count_single_exchange(spark):

@@ -1,11 +1,9 @@
-"""Tensor file formats: .npy/.npz parsed from scratch and
-cross-validated against numpy's own writer/reader, safetensors
-against the public format spec, plus the Spark profile operator."""
+"""NPY headers parsed from scratch and cross-validated against
+numpy's own writer."""
 
 from __future__ import annotations
 
 import io
-import json
 import struct
 import sys
 from pathlib import Path
@@ -18,11 +16,7 @@ from hypothesis import strategies as st
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bigdata_invoice_stream_analysis_spark.operators.tensorfile import (
-    npy_stats,
     parse_npy,
-    parse_npz,
-    parse_safetensors,
-    tensor_file_profile,
 )
 
 
@@ -71,15 +65,6 @@ def test_parse_npy_v2_header():
     assert meta["dtype"] == "i4"
 
 
-def test_npy_stats_numeric_and_nonfinite():
-    arr = np.array([1.5, -2.0, np.nan, np.inf, 0.5], dtype=np.float32)
-    st_ = npy_stats(_npy_bytes(arr))
-    assert st_["vmin"] == -2.0 and st_["vmax"] == 1.5
-    assert st_["n_finite"] == 3
-    st_ = npy_stats(_npy_bytes(np.array([7, -3], dtype=np.int64)))
-    assert st_["vmin"] == -3.0 and st_["vmax"] == 7.0
-
-
 def test_parse_npy_rejects_malformed():
     good = _npy_bytes(np.arange(4))
     with pytest.raises(ValueError, match="magic"):
@@ -100,79 +85,6 @@ def test_parse_npy_rejects_malformed():
         parse_npy(blob[:-8])
 
 
-def test_parse_npz_via_own_zip_walk():
-    buf = io.BytesIO()
-    np.savez(buf, a=np.arange(6, dtype=np.int64).reshape(2, 3),
-             b=np.array([0.5, 1.5], dtype=np.float64))
-    members = {m["name"]: m for m in parse_npz(buf.getvalue())}
-    assert set(members) == {"a", "b"}
-    assert members["a"]["shape"] == (2, 3)
-    assert members["a"]["error"] is None
-    assert members["b"]["dtype"] == "f8"
-    # compressed variant too
-    buf = io.BytesIO()
-    np.savez_compressed(buf, z=np.ones((4, 4), dtype=np.float32))
-    members = parse_npz(buf.getvalue())
-    assert members[0]["shape"] == (4, 4)
-
-
-# --- safetensors (format spec) ---------------------------------------------
-
-def _st_file(tensors: dict[str, np.ndarray], meta=None) -> bytes:
-    DT = {np.dtype("float32"): "F32", np.dtype("int64"): "I64",
-          np.dtype("uint8"): "U8"}
-    header: dict = {}
-    body = b""
-    for name, arr in tensors.items():
-        raw = arr.tobytes()
-        header[name] = {
-            "dtype": DT[arr.dtype], "shape": list(arr.shape),
-            "data_offsets": [len(body), len(body) + len(raw)],
-        }
-        body += raw
-    if meta:
-        header["__metadata__"] = meta
-    hjson = json.dumps(header).encode()
-    return struct.pack("<Q", len(hjson)) + hjson + body
-
-
-def test_parse_safetensors_roundtrip():
-    t = {"emb.weight": np.arange(6, dtype=np.float32).reshape(2, 3),
-         "ids": np.array([1, 2], dtype=np.int64)}
-    blob = _st_file(t, meta={"format": "pt"})
-    meta = parse_safetensors(blob)
-    assert meta["metadata"] == {"format": "pt"}
-    by_name = {x["name"]: x for x in meta["tensors"]}
-    assert by_name["emb.weight"]["shape"] == (2, 3)
-    assert by_name["emb.weight"]["nbytes"] == 24
-    # slicing by the reported offsets reproduces the tensor bytes
-    x = by_name["ids"]
-    assert blob[x["start"]:x["end"]] == t["ids"].tobytes()
-
-
-def test_parse_safetensors_rejects_bad_offsets():
-    blob = bytearray(_st_file({"a": np.zeros(2, dtype=np.float32)}))
-    hlen = struct.unpack_from("<Q", blob, 0)[0]
-    header = json.loads(bytes(blob[8 : 8 + hlen]))
-    header["a"]["data_offsets"] = [0, 9999]
-    hjson = json.dumps(header).encode()
-    bad = struct.pack("<Q", len(hjson)) + hjson + bytes(blob[8 + hlen:])
-    with pytest.raises(ValueError, match="range"):
-        parse_safetensors(bad)
-    # overlapping tensors
-    two = _st_file({"a": np.zeros(2, dtype=np.float32),
-                    "b": np.zeros(2, dtype=np.float32)})
-    hlen = struct.unpack_from("<Q", two, 0)[0]
-    header = json.loads(two[8 : 8 + hlen])
-    header["b"]["data_offsets"] = [4, 12]
-    hjson = json.dumps(header).encode()
-    bad = struct.pack("<Q", len(hjson)) + hjson + two[8 + hlen:]
-    with pytest.raises(ValueError, match="overlap"):
-        parse_safetensors(bad)
-    with pytest.raises(ValueError, match="truncated|length"):
-        parse_safetensors(b"\xff\xff\xff\xff\xff\xff\xff\x00abc")
-
-
 @settings(max_examples=20, deadline=None)
 @given(st.lists(st.integers(-1000, 1000), min_size=0, max_size=50),
        st.sampled_from(["int64", "float32", "uint8"]))
@@ -183,39 +95,3 @@ def test_property_npy_roundtrip(values, dtype):
     meta = parse_npy(_npy_bytes(arr))
     assert meta["n_elements"] == len(values)
     assert meta["data_nbytes"] == arr.nbytes
-
-
-# --- Spark operator ---------------------------------------------------------
-
-def test_spark_tensor_profile(spark):
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-
-    ensure_package_on_workers(spark)
-    npz = io.BytesIO()
-    np.savez(npz, emb=np.linspace(0, 1, 8, dtype=np.float32))
-    blobs = [
-        (0, bytearray(_npy_bytes(
-            np.arange(10, dtype=np.int64).reshape(2, 5)))),
-        (1, bytearray(npz.getvalue())),
-        (2, bytearray(_st_file(
-            {"w": np.ones((3, 2), dtype=np.float32)}))),
-        (3, bytearray(b"\x00\x01garbage")),
-    ]
-    df = spark.createDataFrame(blobs, "file_id long, payload binary")
-    rows = tensor_file_profile(df).collect()
-    by_fid = {}
-    for r in rows:
-        by_fid.setdefault(r["file_id"], []).append(r)
-    assert by_fid[0][0]["format"] == "npy"
-    assert json.loads(by_fid[0][0]["shape_json"]) == [2, 5]
-    assert by_fid[0][0]["vmin"] == 0.0 and by_fid[0][0]["vmax"] == 9.0
-    assert by_fid[1][0]["format"] == "npz"
-    assert by_fid[1][0]["tensor"] == "emb"
-    assert by_fid[1][0]["vmax"] == 1.0
-    assert by_fid[2][0]["format"] == "safetensors"
-    assert by_fid[2][0]["dtype"] == "F32"
-    assert by_fid[2][0]["n_elements"] == 6
-    assert by_fid[3][0]["format"] == "error"
-    assert by_fid[3][0]["error"]

@@ -31,7 +31,6 @@ from bigdata_invoice_stream_analysis_spark.operators.warc import (
     split_gzip_members,
     warc_records,
     warc_text_corpus,
-    wet_text,
 )
 
 # ---------------------------------------------------------------------------
@@ -308,34 +307,6 @@ def test_warc_records_operator(spark, gz):
     assert rows[2]["http_mime"] == "text/html"
     assert rows[2]["body_len"] == 88
     assert rows[3]["http_status"] == 404
-
-
-@pytest.mark.parametrize("gz", [False, True])
-def test_wet_text_operator(spark, gz):
-    """WET: conversion records carry pre-extracted plain text; every
-    other record type is skipped."""
-    records = [
-        ("warcinfo", {"Content-Type": "application/warc-fields"},
-         b"format: WARC/1.0\r\n"),
-        ("conversion", {
-            "WARC-Target-URI": "http://ex.com/a",
-            "Content-Type": "text/plain",
-        }, "extracted text café\n".encode("utf-8")),
-        ("conversion", {
-            "WARC-Target-URI": "http://ex.com/b",
-            "Content-Type": "text/plain",
-        }, b"second doc"),
-    ]
-    df = spark.createDataFrame(
-        [(7, bytearray(encode_warc(records, gzip_members=gz)))],
-        "archive_id long, payload binary",
-    )
-    rows = sorted(wet_text(df).collect(), key=lambda r: r["record_idx"])
-    assert [(r["record_idx"], r["url"], r["text"]) for r in rows] == [
-        (1, "http://ex.com/a", "extracted text café\n"),
-        (2, "http://ex.com/b", "second doc"),
-    ]
-    assert rows[0]["text_len"] == len("extracted text café\n")
 
 
 def test_warc_corpus_funnel_staged(spark, sf_dir):

@@ -17,7 +17,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from bigdata_invoice_stream_analysis_spark.operators.webp import (
     encode_webp,
     parse_webp,
-    webp_profile,
 )
 
 
@@ -94,19 +93,3 @@ def test_webp_animation_roundtrip_property(frames):
     p = parse_webp(encode_webp(128, 96, frames=frames))
     assert p["n_frames"] == len(frames)
     assert p["duration_ms"] == sum(frames)
-
-
-def test_webp_profile_operator(spark):
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(encode_webp(320, 240))),
-            (2, bytearray(encode_webp(64, 48, frames=[40, 60],
-                                      has_exif=True))),
-        ],
-        "media_id long, payload binary",
-    )
-    rows = {r["media_id"]: r for r in webp_profile(df).collect()}
-    assert rows[1]["variant"] == "lossy"
-    assert rows[2]["animated"] is True
-    assert rows[2]["duration_ms"] == 100
-    assert rows[2]["has_exif"] is True

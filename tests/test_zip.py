@@ -23,7 +23,6 @@ from bigdata_invoice_stream_analysis_spark.operators.zip import (
     encode_zip,
     parse_zip,
     read_zip_member,
-    zip_members,
     zip_text_members,
 )
 
@@ -140,18 +139,6 @@ def _archive_df(spark):
          (2, bytearray(encode_zip([("n/readme.txt", b"two")],
                                   deflate=False)))],
         "archive_id long, payload binary",
-    )
-
-
-def test_zip_members_operator(spark):
-    rows = [r for r in zip_members(_archive_df(spark)).collect()
-            if r["archive_id"] == 1]
-    assert len(rows) == len(ENTRIES)
-    by_name = {r["name"]: r for r in rows}
-    assert by_name["empty/"]["is_dir"] is True
-    assert by_name["images/pic.bin"]["uncompressed_size"] == 256
-    assert by_name["mimetype"]["crc32"] == zlib.crc32(
-        b"application/epub+zip"
     )
 
 
