@@ -1,13 +1,14 @@
 """Distinct-payload-memoized video frame decode (r9 optimization).
 
-``decode_video_frames_memo`` is the drop-in twin of
-``operators.mp4.decode_video_frames`` with one change: inside each
-task it decodes every DISTINCT payload once and reuses the per-frame
-stat rows (guide §8 — decode heavy bytes once, reuse the lightweight
-result). Real corpora carry repeated blobs (re-uploads, codebooked
-fixture media: 10-16 distinct payloads fanned over thousands of
-rows), and the MJPEG demux+decode is a pure function of the payload
-bytes, so the memo changes nothing about the output. The memo lives
+``decode_video_frames_memo`` is the package's MJPEG-in-MP4 frame
+decode operator: it runs ``operators.mp4.decode_mjpeg_frames`` inside
+Arrow mapInPandas, and inside each task it decodes every DISTINCT
+payload once and reuses the per-frame stat rows (guide §8 — decode
+heavy bytes once, reuse the lightweight result). Real corpora carry
+repeated blobs (re-uploads, codebooked fixture media: 10-16 distinct
+payloads fanned over thousands of rows), and the MJPEG demux+decode
+is a pure function of the payload bytes, so the memo changes nothing
+about the output. The memo lives
 in the task closure only — nothing persists across tasks, queries,
 or runs.
 
@@ -21,8 +22,10 @@ from __future__ import annotations
 
 def decode_video_frames_memo(media, every_n: int = 1):
     """(media_id, payload) → one row per kept frame with exact pixel
-    stats — semantics identical to mp4.decode_video_frames, decode
-    memoized per distinct payload within each task."""
+    stats (frame index, pts, size, pixel sum/min/max), decode memoized
+    per distinct payload within each task. Payloads and pixel buffers
+    never leave the executors; the package is imported on workers
+    (deploy.ensure_package_on_workers)."""
     from pyspark.sql import types as T
 
     out_schema = T.StructType([

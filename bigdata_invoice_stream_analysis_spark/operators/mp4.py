@@ -1730,55 +1730,6 @@ def decode_mjpeg_frames(
     return out
 
 
-def decode_video_frames(media, every_n: int = 1):
-    """REAL frame decode over MJPEG-in-MP4 payloads inside Arrow
-    mapInPandas: demux sample tables, slice each kept frame's byte
-    range, decode it with the baseline JPEG codec, and emit exact
-    per-frame pixel stats — the row-expanding shape of a production
-    frame-extraction stage (one fixed-width row per kept frame;
-    payloads and pixel buffers never leave the executors). Package is
-    imported on workers (deploy.ensure_package_on_workers)."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("pts", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("pixel_sum", T.LongType(), False),
-        T.StructField("pixel_min", T.IntegerType(), False),
-        T.StructField("pixel_max", T.IntegerType(), False),
-    ])
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.mp4 import (
-            decode_mjpeg_frames,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in (
-                "media_id", "frame_idx", "pts", "width", "height",
-                "pixel_sum", "pixel_min", "pixel_max",
-            )}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                for fr in decode_mjpeg_frames(bytes(p), every_n=every_n):
-                    px = fr["pixels"]
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(fr["frame_idx"])
-                    out["pts"].append(fr["pts"])
-                    out["width"].append(fr["width"])
-                    out["height"].append(fr["height"])
-                    out["pixel_sum"].append(sum(px))
-                    out["pixel_min"].append(min(px))
-                    out["pixel_max"].append(max(px))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=out_schema)
-
-
 def frame_index(media, every_n: int = 1, keyframes_only: bool = False):
     """REAL frame sampling over MP4 payloads: parse the ISO BMFF sample
     tables inside Arrow mapInPandas and emit one row per kept frame

@@ -28,7 +28,11 @@ from bigdata_invoice_stream_analysis_spark.plans.queries import (
     raw_lines,
 )
 from bigdata_invoice_stream_analysis_spark.scratch import fresh_checkpoint
-from bigdata_invoice_stream_analysis_spark.sources.tables import load_table
+from bigdata_invoice_stream_analysis_spark.sources.tables import (
+    load_table,
+    normalize_timestamps,
+    table_schema,
+)
 from bigdata_invoice_stream_analysis_spark.streaming.runtime import (
     rocksdb_provider,
     shuffle_partitions,
@@ -69,10 +73,10 @@ def q_streaming_error_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     append mode would hold back every window newer than the final
     watermark). The oracle is plain batch SQL: the gate proves the
     state store + watermark machinery reproduce the declarative
-    semantics byte-for-byte. Schema/timestamp handling mirrors
-    load_table (NTZ → session-UTC timestamp; nanos → micros)."""
+    semantics byte-for-byte. Schema and timestamp handling are
+    load_table's own (table_schema, normalize_timestamps)."""
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = table_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(raw_schema)
         # file source wants a directory; the glob filter selects just
@@ -80,14 +84,7 @@ def q_streaming_error_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    stream = _drain_input_diet(stream)
-    for col, dtype in stream.dtypes:
-        if col == "ts" and dtype == "bigint":  # TIMESTAMP(NANOS) round
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
-            )
-        elif col == "ts" and dtype.startswith("timestamp_ntz"):
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = normalize_timestamps(_drain_input_diet(stream))
     agg = (
         stream.filter(F.col("event_type") == "error")
         .withWatermark("ts", "1 minute")
@@ -138,7 +135,7 @@ def q_streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge in the graded path; money stays in exact integer cents
     inside the state."""
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = table_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -189,7 +186,7 @@ def q_streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate must land within 5% of the batch-exact distinct
     (deterministic for fixed data); the exact count itself is
     hash-checked against the oracle."""
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = table_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -860,7 +857,7 @@ def q_streaming_dedup_fingerprints(spark: SparkSession, sf_dir: str) -> DataFram
     aggregate, not survivor identity — same contract a replayed Kafka
     topic gives you)."""
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = table_schema(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -919,7 +916,7 @@ def q_streaming_error_purchase_join(spark: SparkSession, sf_dir: str) -> DataFra
     batch interval join — the gate proves the streaming join planner
     and state manager reproduce relational semantics exactly."""
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = table_schema(spark, sf_dir, "events")
 
     def side(evt: str):
         s = (
@@ -927,14 +924,7 @@ def q_streaming_error_purchase_join(spark: SparkSession, sf_dir: str) -> DataFra
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-        s = _drain_input_diet(s)
-        for col, dtype in s.dtypes:
-            if col == "ts" and dtype == "bigint":
-                s = s.withColumn(
-                    "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
-                )
-            elif col == "ts" and dtype.startswith("timestamp_ntz"):
-                s = s.withColumn("ts", F.col("ts").cast("timestamp"))
+        s = normalize_timestamps(_drain_input_diet(s))
         return (
             s.filter(F.col("event_type") == evt)
             .select("user_id", "event_id", "ts")
@@ -1019,20 +1009,13 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle mirrors that. State is O(open sessions per user), the
     cluster-scale bound."""
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = table_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    stream = _drain_input_diet(stream)
-    for col, dtype in stream.dtypes:
-        if col == "ts" and dtype == "bigint":  # TIMESTAMP(NANOS) round
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-            )
-        elif col == "ts" and dtype.startswith("timestamp_ntz"):
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = normalize_timestamps(_drain_input_diet(stream))
     agg = (
         stream.withWatermark("ts", "1 minute")
         .groupBy("user_id", F.session_window("ts", "240 minutes").alias("w"))
@@ -1096,7 +1079,7 @@ def q_streaming_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame
     data), while the hashed percentile columns are the batch-exact
     interpolated values (Spark ``percentile`` ≡ DuckDB ``quantile_cont``
     on integer cents)."""
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = table_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")

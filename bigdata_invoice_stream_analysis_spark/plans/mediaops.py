@@ -488,7 +488,7 @@ def q_media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse the box tree and stts/stsz/stsc/stco sample tables, slice
     every-2nd frame's byte range out of the payload, and decode each
     slice with the from-scratch T.81 baseline JPEG decoder
-    (operators/mp4.decode_video_frames). The oracle predicts the
+    (operators/mediadecode.decode_video_frames_memo). The oracle predicts the
     decoded pixels in closed form — at quality 75 the Annex-K luma DC
     step equals the DCT DC scale, so constant blocks round-trip
     EXACTLY (the media_jpeg_roundtrip identity, proven for all 256
@@ -1202,7 +1202,7 @@ def q_media_fmp4_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs (trex defaults, default-base-is-moof addressing, tfdt time
     anchors, trun data-offset + per-sample sizes), slice every-2nd
     frame, and decode each slice with the T.81 codec — all inside one
-    Arrow mapInPandas (the same decode_video_frames operator as the
+    Arrow mapInPandas (the same decode_video_frames_memo operator as the
     progressive gate: parse_mp4 dispatches on the empty-stsz
     fragmented shape). The closed-form pixel oracle makes any drift in
     the moof math undecodable or wrong-gray — either flips the hash.

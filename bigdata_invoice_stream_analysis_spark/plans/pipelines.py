@@ -30,7 +30,7 @@ from bigdata_invoice_stream_analysis_spark.plans.extensions import (
 )
 from bigdata_invoice_stream_analysis_spark.plans.queries import query, r6
 from bigdata_invoice_stream_analysis_spark.scratch import fresh_checkpoint, scratch_dir
-from bigdata_invoice_stream_analysis_spark.sources.tables import load_table
+from bigdata_invoice_stream_analysis_spark.sources.tables import load_table, table_schema
 
 # ---------------------------------------------------------------------------
 # Sub-document (chunk-level) exact dedup — C4-style paragraph dedup
@@ -1028,7 +1028,7 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bigdata_invoice_stream_analysis_spark.plans.queries import _run_drain
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = table_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -1332,7 +1332,7 @@ def q_streaming_centroid_anomalies(spark: SparkSession, sf_dir: str) -> DataFram
         score_with_centroids,
     )
 
-    li_schema = spark.read.parquet(f"{sf_dir}/lineitem.parquet").schema
+    li_schema = table_schema(spark, sf_dir, "lineitem")
     sli = (
         spark.readStream.schema(li_schema)
         .option("pathGlobFilter", "lineitem.parquet")

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_invoice_stream_analysis_spark.plans.queries import query
-from bigdata_invoice_stream_analysis_spark.sources.tables import load_table
+from bigdata_invoice_stream_analysis_spark.sources.tables import load_table, table_schema
 
 
 # ---------------------------------------------------------------------------
@@ -441,8 +441,7 @@ def q_streaming_content_triage(
     )
 
     ensure_package_on_workers(spark)
-    raw_schema = spark.read.parquet(
-        f"{sf_dir}/documents.parquet").schema
+    raw_schema = table_schema(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -993,8 +992,7 @@ def q_streaming_pii_monitor(
         fresh_checkpoint,
     )
 
-    raw_schema = spark.read.parquet(
-        f"{sf_dir}/documents.parquet").schema
+    raw_schema = table_schema(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -1501,8 +1499,7 @@ def q_streaming_release_monitor(
     # two ints), broadcast into the stream
     support = lm_support(batch_docs.select("doc_id", "text"))
 
-    raw_schema = spark.read.parquet(
-        f"{sf_dir}/documents.parquet").schema
+    raw_schema = table_schema(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")

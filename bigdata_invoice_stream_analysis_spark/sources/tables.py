@@ -2,51 +2,134 @@
 
 The reference reads CSV with header + inferSchema via the external
 spark-csv package (Clustering.scala:37-41). The rebuild prefers parquet
-(columnar, statistics, predicate pushdown) and explicit schemas for CSV.
+(columnar, statistics, predicate pushdown) and explicit schemas: for
+CSV a declared one, for the driver's parquet tables the one their
+footer already holds (footer_schema), so no read runs a Spark job to
+infer it.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bigdata_invoice_stream_analysis_spark.schemas import PURCHASE_RAW_SCHEMA, TESTDATA_TABLES
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver test table. Plain parquet scan — Catalyst handles
-    column pruning + filter pushdown at the source.
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
 
-    Timestamp normalization (the driver's generator has shipped BOTH
-    encodings across rounds):
-      * TIMESTAMP(NANOS): Spark's vectorized reader rejects it; read
-        nanos as long and convert (integer division truncates to
-        micros, matching how DuckDB reads the same file).
-      * TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark infers
-        TIMESTAMP_NTZ, which time-instant functions (unix_micros,
-        window) reject or treat differently; cast to the session-TZ
-        timestamp type. The session is pinned UTC, so the wall-clock
-        values — and every derived hash — are unchanged, and DuckDB
-        reads the same naive micros."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+
+# Spark's parquet inference for the plain types driver tables hold.
+_SPARK_TYPES = {
+    pa.int32(): T.IntegerType(),
+    pa.int64(): T.LongType(),
+    pa.float32(): T.FloatType(),
+    pa.float64(): T.DoubleType(),
+    pa.string(): T.StringType(),
+}
+# Spark writes its own schema into this footer key and reads it back
+# in place of the parquet types.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _timestamp_type(column) -> T.DataType | None:
+    """A timestamp column as Spark reads it, decided by its parquet
+    logical type rather than the arrow type (pyarrow reads INT96 as a
+    ns timestamp too): NANOS → long (what Spark infers under
+    ``spark.sql.legacy.parquet.nanosAsLong``, and reads without that
+    conf once the schema is given), UTC-adjusted → timestamp, not
+    UTC-adjusted → timestamp_ntz. None for INT96."""
+    if column is None or column.logical_type.type != "TIMESTAMP":
+        return None
+    logical = json.loads(column.logical_type.to_json())
+    if logical["timeUnit"] == "nanoseconds":
+        return T.LongType()
+    return T.TimestampType() if logical["isAdjustedToUTC"] else T.TimestampNTZType()
+
+
+def _spark_type(t: pa.DataType, column) -> T.DataType | None:
+    if pa.types.is_timestamp(t):
+        return _timestamp_type(column)
+    if pa.types.is_list(t):
+        elem = _SPARK_TYPES.get(t.value_type)
+        return None if elem is None else T.ArrayType(elem, True)
+    return _SPARK_TYPES.get(t)
+
+
+def footer_schema(path: str) -> T.StructType | None:
+    """Spark schema of a single parquet file, built from its footer
+    with no Spark job and no session state — exactly what
+    ``spark.read.parquet(path).schema`` infers (every field nullable),
+    or None when the footer holds something not mapped here: a
+    directory, a file Spark wrote with its own schema in the footer,
+    INT96 timestamps, or any type outside _SPARK_TYPES and lists of
+    them (binary, for one, reads as string under
+    ``spark.sql.parquet.binaryAsString``)."""
+    try:
+        meta = pq.read_metadata(path)
+    except (OSError, pa.ArrowException):
+        return None
+    if _SPARK_ROW_METADATA in (meta.metadata or {}):
+        return None
+    columns = {c.path: c for c in map(meta.schema.column, range(meta.num_columns))}
+    fields = [
+        (f.name, _spark_type(f.type, columns.get(f.name)))
+        for f in meta.schema.to_arrow_schema()
+    ]
+    if any(dtype is None for _, dtype in fields):
+        return None
+    return T.StructType([T.StructField(name, dtype, True) for name, dtype in fields])
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """Spark schema of one driver table: its parquet footer mapped by
+    footer_schema, or Spark's own inference (one job) for a footer that
+    function cannot map. Streaming file sources need this schema up
+    front; batch reads pass it to skip inference."""
+    path = table_path(sf_dir, name)
+    return footer_schema(path) or spark.read.parquet(path).schema
+
+
+def normalize_timestamps(df: DataFrame) -> DataFrame:
+    """The one timestamp rule for driver tables, batch or streaming
+    (the driver's generator has shipped BOTH encodings across rounds):
+
+      * TIMESTAMP(NANOS) ``ts``, read as long: ``ts DIV 1000`` to
+        micros. Integer division, NOT ``/ 1000`` in double: 2024
+        epochs are ~2^60 ns, beyond double's 53-bit mantissa, so float
+        division perturbs the microsecond digit. DuckDB truncates
+        ns→us integrally; this matches it exactly.
+      * TIMESTAMP(MICROS, isAdjustedToUTC=false), read as
+        timestamp_ntz: cast to the session-TZ timestamp type, which
+        time-instant functions (unix_micros, window) need. The session
+        is pinned UTC, so the wall-clock values — and every derived
+        hash — are unchanged, and DuckDB reads the same naive micros."""
+    cols = {}
     for col, dtype in df.dtypes:
-        if name == "events" and col == "ts" and dtype == "bigint":
-            from pyspark.sql import functions as F
-
-            # Integer division, NOT `/1000` in double: 2024 epochs are
-            # ~2^60 ns, beyond double's 53-bit mantissa, so float
-            # division perturbs the microsecond digit. DuckDB truncates
-            # ns→us integrally; match it exactly.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        if col == "ts" and dtype == "bigint":
+            cols[col] = F.timestamp_micros(F.expr("ts DIV 1000"))
         elif dtype == "timestamp_ntz":
-            from pyspark.sql import functions as F
+            cols[col] = F.col(col).cast("timestamp")
+    return df.withColumns(cols) if cols else df
 
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
-    return df
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one driver test table: a plain parquet scan (Catalyst
+    handles column pruning + filter pushdown at the source) under the
+    schema table_schema reads from the file's footer, so the load
+    fires no schema-inference job and sets no session conf, then
+    normalize_timestamps."""
+    path = table_path(sf_dir, name)
+    return normalize_timestamps(
+        spark.read.schema(table_schema(spark, sf_dir, name)).parquet(path)
+    )
 
 
 def ensure_min_parallelism(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -23,22 +23,56 @@ def _write_chunk(src, idx, lines):
     os.utime(p, (1_700_000_000 + idx, 1_700_000_000 + idx))
 
 
+class _Drain:
+    """foreachBatch callback that keeps every emitted row and sets
+    ``drained`` once a later empty batch proves the last data batch
+    COMMITTED (a batch is only invoked after the previous one
+    committed; stopping right when the sink sees rows could interrupt
+    the commit and replay the batch after restart)."""
+
+    def __init__(self):
+        import threading
+
+        self.rows: list = []
+        self.data_bids: list[int] = []
+        self.drained = threading.Event()
+
+    def __call__(self, bdf, bid):
+        got = bdf.collect()
+        if got:
+            self.rows.extend(got)
+            self.data_bids.append(bid)
+        elif self.data_bids and bid > max(self.data_bids):
+            self.drained.set()
+
+    def wait(self, q, timeout_s=120):
+        """Return once ``q`` terminated by itself or its data batch
+        committed, and always stop it: a query under a processing-time
+        timeout never terminates (timer-evaluation batches keep
+        scheduling, even under availableNow)."""
+        try:
+            for _ in range(int(timeout_s / 0.5)):
+                if self.drained.is_set() or q.awaitTermination(0.5):
+                    break
+            else:
+                raise TimeoutError(f"drain did not commit its data batch in {timeout_s}s")
+        finally:
+            q.stop()
+            q.awaitTermination(60)
+        return {r.InvoiceNo: r for r in self.rows}
+
+
 def _run_once(spark, src, ckpt, evict_after_ms=None):
     lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
     updates = state.apply_invoice_state(
         P.good_purchases(lines), evict_after_ms=evict_after_ms
     )
-    rows = []
-
-    def collect(bdf, bid):
-        rows.extend(bdf.collect())
-
+    drain = _Drain()
     q = sinks.foreach_batch_collector(
-        updates, collect, output_mode="update", checkpoint=str(ckpt),
+        updates, drain, output_mode="update", checkpoint=str(ckpt),
         trigger_available_now=True,
     )
-    q.awaitTermination(120)
-    return {r.InvoiceNo: r for r in rows}
+    return drain.wait(q)
 
 
 def line(inv, qty, date, price):
@@ -107,55 +141,25 @@ def test_state_v2_survives_restart(spark, tmp_path):
 
 def _run_v2_stop_after(spark, src, ckpt, build):
     """Drive a ProcessingTime-timeMode v2 transform over the staged file
-    source and stop it from the driver once the data batch has COMMITTED
-    (availableNow never terminates under ProcessingTime — empty
-    timer-evaluation batches keep scheduling; and stopping right when
-    the sink sees rows could interrupt the commit, replaying the batch
-    after restart). Commit proof: a later empty batch (bid > the last
-    data bid) is only invoked after the data batch committed."""
-    import threading
-
-    from bigdata_invoice_stream_analysis_spark.streaming.sources import (
-        file_lines_source,
-    )
-
+    source and stop it from the driver once the data batch has
+    COMMITTED (see _Drain)."""
     lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
     updates = build(lines)
-    rows: list = []
-    data_bids: list[int] = []
-    drained = threading.Event()
+    drain = _Drain()
     # One RocksDB state store spins up per shuffle partition per
     # micro-batch; these single-key fixtures need exactly 2.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "2")
-
-    def collect(bdf, bid):
-        got = bdf.collect()
-        if got:
-            rows.extend(got)
-            data_bids.append(bid)
-        elif data_bids and bid > max(data_bids):
-            drained.set()
-
-    q = (
-        updates.writeStream.outputMode("update")
-        .foreachBatch(collect)
-        .option("checkpointLocation", str(ckpt))
-        .start()
-    )
     try:
-        for _ in range(240):
-            if drained.wait(0.5):
-                break
-            if q.exception() is not None:
-                raise q.exception()
-        else:
-            raise TimeoutError("v2 drain did not commit its data batch in 120s")
+        q = (
+            updates.writeStream.outputMode("update")
+            .foreachBatch(drain)
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+        return drain.wait(q)
     finally:
-        q.stop()
-        q.awaitTermination(60)
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return {r.InvoiceNo: r for r in rows}
 
 
 def test_state_v2_timers_survive_restart(spark, tmp_path):
