@@ -400,13 +400,12 @@ def run_custom_state_drain(
         apply_invoice_state,
     )
 
-    # The v1 updater closure references module-level helpers
-    # (_fold_batch/_emit_row), which cloudpickle serializes BY NAME —
-    # workers must be able to import the package regardless of the
-    # driver's cwd (measured: the gate run in ISOLATION from a foreign
-    # cwd failed with ModuleNotFoundError; in full sweeps an earlier
-    # media gate happened to ship the zip — an order dependency this
-    # call removes).
+    # Anything a transform's closure reaches by module name, cloudpickle
+    # serializes BY NAME — workers must be able to import the package
+    # regardless of the driver's cwd (measured: the v1 gate run in
+    # ISOLATION from a foreign cwd failed with ModuleNotFoundError; in
+    # full sweeps an earlier media gate happened to ship the zip — an
+    # order dependency this call removes).
     ensure_package_on_workers(spark)
     transform = transform or apply_invoice_state
     n_files = 3

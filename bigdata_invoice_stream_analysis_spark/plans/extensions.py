@@ -20,6 +20,7 @@ arithmetic:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1717,8 +1718,6 @@ def q_source_char_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batch path is bit-correct (numpy linear-interp median ==
     SQL quantile_cont(0.5)). One shuffle on the group key, same as
     the native agg."""
-    import pandas as pd
-
     docs = load_table(spark, sf_dir, "documents").select("source", "n_chars")
 
     def profile(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1939,8 +1938,7 @@ def q_udaf_segment_weighted_balance(spark: SparkSession, sf_dir: str) -> DataFra
     int64 sums are order-free, so partition order can't move the hash.
     The plan is a real partial-agg shape: Spark ships Arrow batches
     per group to one python worker per task, not per group."""
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("segment"),
@@ -1948,16 +1946,17 @@ def q_udaf_segment_weighted_balance(spark: SparkSession, sf_dir: str) -> DataFra
         (F.col("c_custkey") % 10 + 1).cast("long").alias("weight"),
     )
 
-    # functionType passed explicitly: this module uses
-    # `from __future__ import annotations`, which stringifies the type
-    # hints pandas_udf would otherwise infer GROUPED_AGG from.
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
+    # pandas_udf infers GROUPED_AGG from the (Series, ...) -> scalar
+    # hints. This module's annotations are strings (`from __future__
+    # import annotations`), so they resolve only because `pd` is a
+    # module global.
+    @pandas_udf("double")
     def wmean(bal_cents: pd.Series, weight: pd.Series) -> float:
         num = int((bal_cents * weight).sum())
         den = int(weight.sum())
         return round(num / (100.0 * den), 6)
 
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
+    @pandas_udf("long")
     def wsum(weight: pd.Series) -> int:
         return int(weight.sum())
 

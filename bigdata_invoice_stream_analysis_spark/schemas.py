@@ -63,7 +63,8 @@ INVOICE_FEATURES_SCHEMA = T.StructType(
 )
 
 # Streaming keyed-state value (InvoicePipeline.scala:22-24 `case class
-# Invoice` + bookkeeping). Used by streaming.state.apply_invoice_state.
+# Invoice` + bookkeeping). The rows of streaming.pipeline.exact_invoice_state
+# and of its Python twins in streaming.state.
 INVOICE_STATE_SCHEMA = T.StructType(
     [
         T.StructField("InvoiceNo", T.StringType(), True),

@@ -11,8 +11,8 @@ Topology (one readStream, four outputs):
 
 Modules:
   sources   — Kafka / file / rate streaming sources (S3, test stand-ins)
-  pipeline  — declarative branch builders (P1-P4, W1, A3/A4)
-  state     — applyInPandasWithState legacy-exact keyed state (W2/A4)
+  pipeline  — declarative branch builders (P1-P4, W1, A3/A4, W2 exact state)
+  state     — Python keyed-state twins of W2 (applyInPandasWithState, v2)
   scoring   — stream-safe centroid scoring (M3/M4, pure column math)
   sinks     — Kafka / parquet / memory sinks + foreachBatch router (S4/W4/W6)
   runtime   — per-query state-partition sizing and the RocksDB scope

@@ -11,7 +11,11 @@ Reference topics → rebuild sinks:
 Sink modes: "kafka" (production), "parquet" (broker-free golden runs),
 "memory" (tests). Models arrive as plain centroid lists + thresholds
 (ml.anomaly.load_model → streaming.scoring.centers_of), so scoring is
-plan-literal — no model broadcast, no Python in the stream.
+plan-literal — no model broadcast, no Python in the stream. The
+per-invoice feature state is a JVM streaming aggregation either way:
+pipeline.invoice_updates by default, pipeline.exact_invoice_state (the
+reference's batch-head Time and batch-count Lines) with
+``legacy_state``; no query of the app runs a Python worker.
 
 Scale posture: each query checkpoints independently (replayable Kafka
 offsets ⇒ at-least-once per sink, no receiver data-loss window like the
@@ -19,7 +23,8 @@ reference's WAL-less ZK receiver); state lives in the partitioned state
 store (RocksDB via conf for large key spaces). AQE is off in streaming,
 so each query starts with its own state-partition count from
 streaming.runtime.state_partitions (the topology's cores split across
-its concurrent queries); the caller's session keeps its own count.
+its concurrent queries, one count for all of them since all their state
+is JVM state); the caller's session keeps its own count.
 """
 
 from __future__ import annotations
@@ -30,12 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from bigdata_invoice_stream_analysis_spark.streaming import pipeline as P
-from bigdata_invoice_stream_analysis_spark.streaming import (
-    runtime,
-    scoring,
-    sinks,
-    state,
-)
+from bigdata_invoice_stream_analysis_spark.streaming import runtime, scoring, sinks
 
 TOPIC_INVALID = "facturas_erroneas"  # IP:27
 TOPIC_CANCELLATIONS = "cancelaciones"  # IP:28
@@ -67,7 +67,9 @@ class PipelineConfig:
     window: str = P.DEFAULT_WINDOW
     slide: str = P.DEFAULT_SLIDE
     watermark: str = P.DEFAULT_WATERMARK
-    legacy_state: bool = False  # True → applyInPandasWithState W2 exact
+    # True → the reference's exact per-invoice state (W2: batch-head Time,
+    # batch-count Lines) as one JVM aggregation, pipeline.exact_invoice_state
+    legacy_state: bool = False
     weighted_avg: bool = True
     available_now: bool = False  # drain-and-stop (tests/golden runs)
     models: dict[str, ModelSpec] = field(default_factory=dict)
@@ -116,11 +118,11 @@ def _wire(
     cancellation queries, then the anomaly queries on the per-invoice
     feature stream — one per model, or with ``shared_scan`` one
     foreachBatch router for all of them. Every query starts under the
-    state-partition count for its kind of state in a topology of that
-    many concurrent queries. If wiring fails after some queries started
-    (bad checkpoint dir, broken sink), the survivors are stopped before
-    the error propagates — a partial topology must not leak active
-    streams into the session."""
+    JVM state-partition count for a topology of that many concurrent
+    queries. If wiring fails after some queries started (bad checkpoint
+    dir, broken sink), the survivors are stopped before the error
+    propagates — a partial topology must not leak active streams into
+    the session."""
     spark = lines.sparkSession
     model_queries = min(1, len(cfg.models)) if shared_scan else len(cfg.models)
     concurrent = 2 + model_queries
@@ -141,20 +143,14 @@ def _wire(
                     TOPIC_CANCELLATIONS, cfg, "append",
                 )
             )
-        if cfg.models:
-            purchases = P.good_purchases(lines, time_mode=cfg.time_mode)
-            if cfg.legacy_state:
-                updates = state.apply_invoice_state(purchases)
-            else:
-                updates = P.invoice_updates(
-                    purchases, weighted_avg=cfg.weighted_avg
-                )
-            with runtime.shuffle_partitions(
-                spark,
-                runtime.state_partitions(
-                    spark, python_state=cfg.legacy_state, concurrent=concurrent
-                ),
-            ):
+            if cfg.models:
+                purchases = P.good_purchases(lines, time_mode=cfg.time_mode)
+                if cfg.legacy_state:
+                    updates = P.exact_invoice_state(purchases)
+                else:
+                    updates = P.invoice_updates(
+                        purchases, weighted_avg=cfg.weighted_avg
+                    )
                 if shared_scan:
                     specs = [(_topic(m), sp) for m, sp in cfg.models.items()]
                     queries.append(_model_router(updates, specs, cfg))

@@ -2,8 +2,9 @@
 
 Every function takes the normalized line stream (key, value, ingest_ts —
 see sources.py) and returns an unbounded DataFrame; callers attach sinks
-(sinks.py). All expressions are native Columns — the only Python in any
-hot path is the optional legacy-exact state module (state.py).
+(sinks.py). All expressions are native Columns, including the
+legacy-exact per-invoice state (exact_invoice_state); the Python keyed
+state operators in state.py are its twins, not on the app's path.
 
 Window-time modes (SURVEY.md §2.5 late-data note): the reference counts
 by *arrival* time (processing-time DStream windows). The rebuild
@@ -17,12 +18,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bigdata_invoice_stream_analysis_spark.functions.time_fns import parse_invoice_ts
+from bigdata_invoice_stream_analysis_spark.functions.time_fns import (
+    fractional_hour,
+    parse_invoice_ts,
+)
 from bigdata_invoice_stream_analysis_spark.operators import validate
 
 DEFAULT_WINDOW = "8 minutes"  # InvoicePipeline.scala:77 Minutes(8)
 DEFAULT_SLIDE = "1 minute"  # InvoicePipeline.scala:77 Minutes(1)
 DEFAULT_WATERMARK = "10 minutes"
+# The reference's max-price seed, Double.MinPositiveValue
+# (InvoicePipeline.scala:96): a running max never reads below it.
+MAX_PRICE_SEED = 4.9e-324
 
 
 def event_time(line: Column) -> Column:
@@ -246,6 +253,28 @@ def cancellation_matches(
     )
 
 
+def _price_aggs(
+    weighted_avg: bool = True,
+) -> tuple[Column, Column, Column, Column]:
+    """The per-invoice aggregates invoice_updates and exact_invoice_state
+    share: the mean unit price, min and max unit price, and the item
+    count Σq as a double (unaliased, in that order).
+
+    weighted_avg=True is the reference's streaming recurrence
+    (InvoicePipeline.scala:110: quantity-weighted running mean) in its
+    closed form Σ(p·q)/Σq; False matches batch-training row-mean
+    semantics. The weighted division is try_divide: an invoice whose
+    quantities sum to 0 (a zero-quantity line, or 5 and -5) gets a
+    NULL mean — NULL distance, never flagged — instead of failing the
+    whole micro-batch with ANSI DIVIDE_BY_ZERO."""
+    qty = F.col("Quantity")
+    if weighted_avg:
+        avg = F.try_divide(F.sum(F.col("UnitPrice") * qty), F.sum(qty))
+    else:
+        avg = F.avg("UnitPrice")
+    return avg, F.min("UnitPrice"), F.max("UnitPrice"), F.sum(qty).cast("double")
+
+
 def invoice_updates(
     purchases: DataFrame,
     watermark: str | None = None,
@@ -261,33 +290,88 @@ def invoice_updates(
     against every 20 s batch, InvoicePipeline.scala:136 — O(all keys)
     per batch).
 
-    weighted_avg=True is the reference's streaming recurrence
-    (InvoicePipeline.scala:110: quantity-weighted running mean); False
-    matches batch-training row-mean semantics — the train/serve-skew
+    weighted_avg picks the mean (see _price_aggs) — the train/serve-skew
     flag (SURVEY.md §3.1), default chosen to match serving.
 
     Time semantics: mean fractional hour over all of the invoice's
     lines (the reference stored the hour of the *latest batch's head
-    purchase* — an arrival-order artifact; state.py reproduces it).
+    purchase* — an arrival-order artifact; exact_invoice_state keeps
+    it).
     """
-    from bigdata_invoice_stream_analysis_spark.functions.time_fns import fractional_hour
-
     if watermark:
         purchases = purchases.withWatermark("ts", watermark)
-    if weighted_avg:
-        avg_price = (
-            F.sum(F.col("UnitPrice") * F.col("Quantity")) / F.sum("Quantity")
-        ).alias("AvgUnitPrice")
-    else:
-        avg_price = F.avg("UnitPrice").alias("AvgUnitPrice")
+    avg, mn, mx, items = _price_aggs(weighted_avg)
     return purchases.groupBy("InvoiceNo").agg(
-        avg_price,
-        F.min("UnitPrice").alias("MinUnitPrice"),
-        F.max("UnitPrice").alias("MaxUnitPrice"),
+        avg.alias("AvgUnitPrice"),
+        mn.alias("MinUnitPrice"),
+        mx.alias("MaxUnitPrice"),
         F.avg(fractional_hour(F.col("ts"))).alias("Time"),
-        F.sum("Quantity").cast("double").alias("NumberItems"),
+        items.alias("NumberItems"),
         F.count(F.lit(1)).alias("Lines"),
         F.last("CustomerID").alias("CustomerID"),
+    )
+
+
+def exact_invoice_state(purchases: DataFrame) -> DataFrame:
+    """W2 — the reference's per-invoice state (``updateInvoiceState``,
+    InvoicePipeline.scala:93-130) as ONE update-mode streaming
+    aggregation: the same INVOICE_STATE_SCHEMA rows as
+    state.apply_invoice_state, computed by the JVM state store with no
+    Python worker and no per-key Python cost.
+
+      * AvgUnitPrice/MinUnitPrice/NumberItems: _price_aggs (the closed
+        form of the reference's line-by-line fold);
+      * MaxUnitPrice: floored at the reference's 4.9e-324 seed
+        (Double.MinPositiveValue, InvoicePipeline.scala:96);
+      * Lines: the number of micro-batches that touched the invoice —
+        the distinct batch timestamps. ``_bts`` is projected before the
+        groupBy because Spark rejects current_timestamp() inside an
+        aggregate; micro-batch execution fixes it to the batch's logged
+        timestamp, so a replayed batch adds no new value;
+      * Time/CustomerID: the head of the latest batch, defined without
+        arrival order (a text source has no arrival index): the
+        batch's line with the earliest event time, NULL ``ts`` ranked
+        last, ties going to the greatest CustomerID; Time is 0.0 when
+        every line of that batch has a NULL ``ts``. The reference took
+        the batch's first-arriving line, which is the same line when
+        a batch's lines for a key arrive in event-time order;
+      * LastUpdated: the latest batch timestamp in ms (the reference
+        and the Python twin stamp wall-clock time in the worker).
+
+    The state row holds one collect_set of batch timestamps per
+    invoice, so its state grows with the batches an invoice spans."""
+    bts = F.col("_bts")
+    avg, mn, mx, items = _price_aggs()
+    head = F.max(
+        F.struct(
+            bts.alias("bts"),
+            (-F.unix_micros(F.col("ts"))).alias("neg_us"),
+            F.col("CustomerID").alias("customer"),
+            F.coalesce(fractional_hour(F.col("ts")), F.lit(0.0)).alias("hour"),
+        )
+    )
+    return (
+        purchases.withColumn("_bts", F.current_timestamp())
+        .groupBy("InvoiceNo")
+        .agg(
+            avg.alias("AvgUnitPrice"),
+            mn.alias("MinUnitPrice"),
+            F.greatest(mx, F.lit(MAX_PRICE_SEED)).alias("MaxUnitPrice"),
+            head.alias("_head"),
+            items.alias("NumberItems"),
+            F.size(F.collect_set(bts)).alias("Lines"),
+        )
+        .select(
+            "InvoiceNo",
+            "AvgUnitPrice",
+            "MinUnitPrice",
+            "MaxUnitPrice",
+            F.col("_head.hour").alias("Time"),
+            "NumberItems",
+            F.unix_millis(F.col("_head.bts")).alias("LastUpdated"),
+            "Lines",
+            F.col("_head.customer").alias("CustomerID"),
+        )
     )
 
 

@@ -1,16 +1,19 @@
-"""Legacy-exact keyed invoice state via applyInPandasWithState (W2/A4).
+"""The legacy-exact keyed invoice state in Python: applyInPandasWithState
+(v1) and transformWithStateInPandas (state v2) twins (W2/A4).
 
 Reproduces ``updateInvoiceState`` (InvoicePipeline.scala:93-130)
 semantics exactly, per micro-batch and per key:
 
   * quantity-weighted running mean:
-      avg ← (avg·n + price·qty) / (n + qty), folded line by line;
+      avg ← (avg·n + price·qty) / (n + qty), folded line by line; a
+      running quantity of 0 has no mean, so avg turns NaN (the
+      reference's double division) and is emitted as NULL;
   * running min/max of UnitPrice (seeded min=+inf, max=4.9e-324 — the
     reference's Double.MaxValue / Double.MinPositiveValue dummy,
     InvoicePipeline.scala:96);
   * Time = fractional hour of the *head purchase of this batch*
     (InvoicePipeline.scala:104-105 — an arrival-order artifact kept for
-    fidelity; pipeline.invoice_updates is the order-free variant);
+    fidelity);
   * Lines = number of micro-batches that touched the invoice (the
     reference's ``previous.lines + 1``, InvoicePipeline.scala:126);
   * emits only keys that received data this batch (updateStateByKey
@@ -19,12 +22,14 @@ semantics exactly, per micro-batch and per key:
     reproduces that eviction, default keeps state — strictly more
     correct for invoices spanning quiet batches).
 
-This is the one operator whose semantics genuinely need custom state —
-Arrow-batched (not row-at-a-time), grouped by InvoiceNo so each state
-row is ~60 bytes; with the RocksDB state store this scales to billions
-of keys per Structured Streaming's state partitioning (state lives with
-the shuffle partition that owns the key — no global rescan per batch,
-unlike the reference's updateStateByKey cogroup).
+The deployed app does not run these: pipeline.exact_invoice_state
+computes the same rows as one JVM streaming aggregation (every field
+but the wall-clock LastUpdated, with the batch head defined by event
+time instead of arrival). The Python operators stay as the showcase of
+the keyed-state APIs — the streaming_custom_state and state-v2 drain
+gates run them — and as the arrival-order reference the JVM builder is
+tested against. They are Arrow-batched (not row-at-a-time) and pay a
+fixed Python cost per key per micro-batch.
 """
 
 from __future__ import annotations
@@ -36,10 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from bigdata_invoice_stream_analysis_spark.schemas import INVOICE_STATE_SCHEMA
-
-# Reference dummy-state seeds (InvoicePipeline.scala:96).
-_SEED_MIN = float("inf")  # Double.MaxValue (dominates min identically)
-_SEED_MAX = 4.9e-324  # Double.MinPositiveValue
+from bigdata_invoice_stream_analysis_spark.streaming.pipeline import MAX_PRICE_SEED
 
 _STATE_SCHEMA = (
     "avg double, mn double, mx double, number_items double, "
@@ -47,52 +49,85 @@ _STATE_SCHEMA = (
 )
 
 
-def _fold_batch(pdf_iter, avg, mn, mx, number_items):
-    """The reference's line-by-line fold (InvoicePipeline.scala:104-114)
-    over one micro-batch's Arrow chunks. Returns the updated running
-    values plus the head-of-batch hour/customer artifacts."""
-    head_hour = 0.0
-    customer = ""
-    saw_data = False
-    for pdf in pdf_iter:
-        if len(pdf) == 0:
-            continue
+def _invoice_fold():
+    """Build the reference's per-key step (InvoicePipeline.scala:93-130),
+    the ONE fold the v1 updater and the v2 processor share. It is
+    defined inside this factory, imports what it uses in its own body
+    and reads its seeds from this scope, so cloudpickle ships it BY
+    VALUE: the v2 processor runs in a Python worker whose sys.path need
+    not contain this package (see _make_processor).
+
+    ``fold(key, prev, pdf_iter, batch_ms)`` folds one micro-batch's
+    Arrow chunks for ``key`` into ``prev`` (the state tuple of
+    _STATE_SCHEMA, or None for a new key). It returns None when the
+    batch had no rows for the key, else ``(state, row)``: the new state
+    tuple and the one-row INVOICE_STATE_SCHEMA frame. ``batch_ms``
+    stamps LastUpdated; None or a value ≤ 0 means wall-clock now."""
+    # Reference dummy-state seeds (InvoicePipeline.scala:96): +inf
+    # dominates min like Double.MaxValue; max starts at MinPositiveValue.
+    seed_min, seed_max = float("inf"), MAX_PRICE_SEED
+
+    def fold(key, prev, pdf_iter, batch_ms):
+        import math
+        import time
+
+        import pandas as pd
+
+        if prev is not None:
+            avg, mn, mx, number_items, _last, lines = prev
+        else:
+            avg, mn, mx, number_items, lines = 0.0, seed_min, seed_max, 0.0, 0
+        head_hour, customer, saw_data = 0.0, "", False
+        for pdf in pdf_iter:
+            if len(pdf) == 0:
+                continue
+            if not saw_data:
+                # Head purchase of this batch (InvoicePipeline.scala:104).
+                head = pdf.iloc[0]
+                ts = head["ts"]
+                head_hour = (
+                    0.0 if pd.isna(ts) else float(ts.hour + ts.minute / 60.0)
+                )
+                customer = str(head["CustomerID"])
+                saw_data = True
+            # Line-by-line weighted-mean fold (InvoicePipeline.scala:109-114).
+            for price, qty in zip(pdf["UnitPrice"], pdf["Quantity"]):
+                price, qty = float(price), float(qty)
+                total = number_items + qty
+                avg = (
+                    (avg * number_items + price * qty) / total
+                    if total
+                    else math.nan
+                )
+                mn = min(mn, price)
+                mx = max(mx, price)
+                number_items = total
         if not saw_data:
-            # Head purchase of this batch (InvoicePipeline.scala:104).
-            head = pdf.iloc[0]
-            ts = head["ts"]
-            head_hour = (
-                0.0 if pd.isna(ts) else float(ts.hour + ts.minute / 60.0)
-            )
-            customer = str(head["CustomerID"])
-            saw_data = True
-        # Line-by-line weighted-mean fold (InvoicePipeline.scala:109-114).
-        for price, qty in zip(pdf["UnitPrice"], pdf["Quantity"]):
-            price, qty = float(price), float(qty)
-            avg = (avg * number_items + price * qty) / (number_items + qty)
-            mn = min(mn, price)
-            mx = max(mx, price)
-            number_items += qty
-    return avg, mn, mx, number_items, head_hour, customer, saw_data
+            return None
+        lines += 1
+        if batch_ms is None or batch_ms <= 0:
+            batch_ms = time.time_ns() // 1_000_000
+        row = pd.DataFrame(
+            {
+                "InvoiceNo": [key[0]],
+                "AvgUnitPrice": [avg],
+                "MinUnitPrice": [mn],
+                "MaxUnitPrice": [mx],
+                "Time": [head_hour],
+                "NumberItems": [number_items],
+                "LastUpdated": [batch_ms],
+                "Lines": [lines],
+                "CustomerID": [customer],
+            }
+        )
+        return (avg, mn, mx, number_items, batch_ms, lines), row
 
-
-def _emit_row(invoice_no, avg, mn, mx, head_hour, number_items, batch_ms, lines, customer):
-    return pd.DataFrame(
-        {
-            "InvoiceNo": [invoice_no],
-            "AvgUnitPrice": [avg],
-            "MinUnitPrice": [mn],
-            "MaxUnitPrice": [mx],
-            "Time": [head_hour],
-            "NumberItems": [number_items],
-            "LastUpdated": [batch_ms],
-            "Lines": [int(lines)],
-            "CustomerID": [customer],
-        }
-    )
+    return fold
 
 
 def _make_updater(evict_after_ms: int | None):
+    fold = _invoice_fold()
+
     def update(
         key: tuple[str],
         pdf_iter: Iterator[pd.DataFrame],
@@ -103,24 +138,14 @@ def _make_updater(evict_after_ms: int | None):
             # key returns None → state dropped (InvoicePipeline.scala:99).
             state.remove()
             return
-        if state.exists:
-            avg, mn, mx, number_items, _last, lines = state.get
-        else:
-            avg, mn, mx, number_items, lines = 0.0, _SEED_MIN, _SEED_MAX, 0.0, 0
-
-        avg, mn, mx, number_items, head_hour, customer, saw_data = _fold_batch(
-            pdf_iter, avg, mn, mx, number_items
-        )
-        if not saw_data:
+        out = fold(key, state.get if state.exists else None, pdf_iter, None)
+        if out is None:
             return
-        lines += 1
-        batch_ms = int(pd.Timestamp.utcnow().value // 1_000_000)
-        state.update((avg, mn, mx, number_items, batch_ms, lines))
+        new_state, row = out
+        state.update(new_state)
         if evict_after_ms is not None:
             state.setTimeoutDuration(evict_after_ms)
-        yield _emit_row(
-            key[0], avg, mn, mx, head_hour, number_items, batch_ms, lines, customer
-        )
+        yield row
 
     return update
 
@@ -155,13 +180,12 @@ def _make_processor(evict_after_ms: int | None):
     this package, so the class (and every helper it touches) must
     cloudpickle BY VALUE — a module-level class would serialize as a
     by-name import and crash that worker with ModuleNotFoundError.
-    Only pyspark/pandas (always on the worker path) are imported."""
+    Only pyspark/pandas (always on the worker path) are imported; the
+    fold comes from the by-value _invoice_fold factory."""
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-    state_schema = (
-        "avg double, mn double, mx double, number_items double, "
-        "last_updated long, lines int"
-    )
+    fold = _invoice_fold()
+    state_schema = _STATE_SCHEMA
 
     class InvoiceStateProcessor(StatefulProcessor):
         def init(self, handle) -> None:
@@ -170,57 +194,17 @@ def _make_processor(evict_after_ms: int | None):
             )
 
         def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            prev = self._state.get()
-            if prev is not None:
-                avg, mn, mx, number_items, _last, lines = prev
-            else:
-                # Reference dummy seeds (InvoicePipeline.scala:96):
-                # Double.MaxValue-equivalent min, MinPositiveValue max.
-                avg, mn, mx, number_items, lines = (
-                    0.0, float("inf"), 4.9e-324, 0.0, 0,
-                )
-            head_hour, customer, saw_data = 0.0, "", False
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                if not saw_data:
-                    head = pdf.iloc[0]
-                    ts = head["ts"]
-                    head_hour = (
-                        0.0 if pd.isna(ts) else float(ts.hour + ts.minute / 60.0)
-                    )
-                    customer = str(head["CustomerID"])
-                    saw_data = True
-                for price, qty in zip(pdf["UnitPrice"], pdf["Quantity"]):
-                    price, qty = float(price), float(qty)
-                    avg = (avg * number_items + price * qty) / (
-                        number_items + qty
-                    )
-                    mn = min(mn, price)
-                    mx = max(mx, price)
-                    number_items += qty
-            if not saw_data:
-                return
-            lines += 1
-            batch_ms = int(timer_values.getCurrentProcessingTimeInMs())
-            if batch_ms <= 0:
-                batch_ms = int(pd.Timestamp.utcnow().value // 1_000_000)
-            self._state.update((avg, mn, mx, number_items, batch_ms, lines))
-            yield pd.DataFrame(
-                {
-                    "InvoiceNo": [key[0]],
-                    "AvgUnitPrice": [avg],
-                    "MinUnitPrice": [mn],
-                    "MaxUnitPrice": [mx],
-                    "Time": [head_hour],
-                    "NumberItems": [number_items],
-                    "LastUpdated": [batch_ms],
-                    "Lines": [int(lines)],
-                    "CustomerID": [customer],
-                }
+            out = fold(
+                key,
+                self._state.get(),
+                rows,
+                int(timer_values.getCurrentProcessingTimeInMs()),
             )
+            if out is None:
+                return
+            new_state, row = out
+            self._state.update(new_state)
+            yield row
 
         def close(self) -> None:
             pass

@@ -46,10 +46,10 @@ SINKS = (
 )
 
 
-def _replay(tmp_path, name: str, chunk: int):
-    """LINES replayed as chunk-line files into ``tmp_path / name``."""
+def _replay(tmp_path, name: str, chunk: int, lines=LINES):
+    """``lines`` replayed as chunk-line files into ``tmp_path / name``."""
     raw = tmp_path / "raw.csv"
-    raw.write_text("\n".join(LINES) + "\n")
+    raw.write_text("\n".join(lines) + "\n")
     replay_to_dir(str(raw), str(tmp_path / name), chunk=chunk)
     return tmp_path / name
 
@@ -86,8 +86,9 @@ def _drain(queries) -> None:
 def _sink_rows(spark, out_dir: str, sink: str):
     """A sink's columns and sorted rows, without the replay-bookkeeping
     batch_id (batch numbering differs between topologies and across
-    restarts)."""
-    df = spark.read.parquet(f"{out_dir}/{sink}").drop("batch_id")
+    restarts) and without legacy_state's LastUpdated (the batch
+    timestamp, which differs between any two runs)."""
+    df = spark.read.parquet(f"{out_dir}/{sink}").drop("batch_id", "LastUpdated")
     cols = sorted(df.columns)
     return cols, sorted(map(tuple, df.select(*cols).collect()))
 
@@ -171,9 +172,10 @@ def test_run_pipeline_sizes_state_partitions_per_query(
     spark, tmp_path, monkeypatch, legacy_state
 ):
     """Each stateful query starts with the streaming.runtime rule for a
-    four-query topology (Python keyed state when legacy_state), and the
-    caller's session keeps its own shuffle-partition count. The rule
-    sees 32 cores, where JVM and Python state get different counts."""
+    four-query topology, and the caller's session keeps its own
+    shuffle-partition count. The rule sees 32 cores, where JVM and
+    Python state would get different counts: every query, the exact
+    legacy_state one included, holds JVM state and gets the JVM count."""
     monkeypatch.delenv("SPARK_GRAFT_DRAIN_STATE_PARTITIONS", raising=False)
     monkeypatch.setattr(
         type(spark.sparkContext), "defaultParallelism", property(lambda sc: 32)
@@ -187,11 +189,32 @@ def test_run_pipeline_sizes_state_partitions_per_query(
     _drain(queries)
 
     jvm = state_partitions(spark, concurrent=4)
-    model = state_partitions(spark, python_state=legacy_state, concurrent=4)
-    assert (jvm, model) == (2, 8 if legacy_state else 2)
+    assert (jvm, state_partitions(spark, python_state=True, concurrent=4)) == (2, 8)
     # invalid lines are stateless; cancellations, then one query per model
-    assert _state_partition_counts(queries) == [{jvm}, {model}, {model}]
+    assert _state_partition_counts(queries) == [{jvm}] * 3
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+@pytest.mark.parametrize("legacy_state", [False, True])
+def test_zero_quantity_invoice_does_not_stop_scoring(
+    spark, tmp_path, legacy_state
+):
+    """An invoice without a mean — a zero-quantity line, or quantities
+    summing to 0 — is not flagged, and the stream keeps running and
+    flagging the other invoices."""
+    zero = [
+        line("Z0", 0, "1/4/2011 9:30", "10.0"),
+        line("Z5", 5, "1/4/2011 9:40", "9.0"),
+        line("Z5", -5, "1/4/2011 9:41", "11.0"),
+    ]
+    src = _replay(tmp_path, "in", chunk=6, lines=zero + LINES)
+    out = str(tmp_path / "out")
+    lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
+    _drain(run_pipeline(lines, _config(out, legacy_state=legacy_state)))
+    for sink in ("anomalias_kmeans", "anomalias_bisect_kmeans"):
+        flagged = {r.InvoiceNo for r in spark.read.parquet(f"{out}/{sink}").collect()}
+        assert "I9" in flagged
+        assert not flagged & {"Z0", "Z5"}
 
 
 def test_wiring_failure_restores_conf_and_stops_started_queries(
@@ -243,6 +266,14 @@ def test_wiring_failure_restores_conf_and_stops_started_queries(
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
 
 
+def _feed(staged, src, names) -> None:
+    """Move staged replay files into the watched dir; a rename keeps the
+    replay's increasing mtimes."""
+    src.mkdir(exist_ok=True)
+    for n in names:
+        os.rename(staged / n, src / n)
+
+
 def test_restart_keeps_checkpointed_state_partitions(
     spark, tmp_path, monkeypatch
 ):
@@ -253,11 +284,6 @@ def test_restart_keeps_checkpointed_state_partitions(
     staged, src = _replay(tmp_path, "staged", chunk=2), tmp_path / "in"
     files = sorted(os.listdir(staged))
     assert len(files) == 4
-    src.mkdir()
-
-    def feed(names) -> None:
-        for n in names:  # rename keeps the replay's increasing mtimes
-            os.rename(staged / n, src / n)
 
     def run(out_dir: str):
         lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
@@ -266,11 +292,11 @@ def test_restart_keeps_checkpointed_state_partitions(
         return queries
 
     resumed_out = str(tmp_path / "resumed")
-    feed(files[:2])
+    _feed(staged, src, files[:2])
     monkeypatch.setenv("SPARK_GRAFT_DRAIN_STATE_PARTITIONS", "3")
     assert _state_partition_counts(run(resumed_out)) == [{3}] * 3
     monkeypatch.delenv("SPARK_GRAFT_DRAIN_STATE_PARTITIONS")
-    feed(files[2:])
+    _feed(staged, src, files[2:])
     assert state_partitions(spark, concurrent=4) != 3
     assert _state_partition_counts(run(resumed_out)) == [{3}] * 3
 
@@ -280,6 +306,40 @@ def test_restart_keeps_checkpointed_state_partitions(
         assert _sink_rows(spark, resumed_out, sink) == _sink_rows(
             spark, clean_out, sink
         ), f"{sink}: the resumed run differs from a clean run"
+
+
+def test_legacy_state_restart_equals_clean_run(spark, tmp_path):
+    """legacy_state keeps the exact state in the checkpoint: half the
+    input drained, the rest resumed from the same checkpoint, leaves
+    all four sinks equal to one clean run — Lines and the batch-head
+    Time included — for an outlier whose lines straddle the restart."""
+    straddle = [
+        line("I1", 2, "1/4/2011 9:15", "10.0"),
+        line("I9", 1, "1/4/2011 10:50", "480.0"),  # before the restart
+        *LINES[1:],  # I9's 500.0 line lands after it
+    ]
+    staged = _replay(tmp_path, "staged", chunk=3, lines=straddle)
+    src = tmp_path / "in"
+    files = sorted(os.listdir(staged))
+    assert len(files) == 3
+
+    def run(out_dir: str) -> None:
+        lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
+        _drain(run_pipeline(lines, _config(out_dir, legacy_state=True)))
+
+    resumed_out, clean_out = str(tmp_path / "resumed"), str(tmp_path / "clean")
+    _feed(staged, src, files[:1])
+    run(resumed_out)
+    _feed(staged, src, files[1:])
+    run(resumed_out)
+    run(clean_out)
+    for sink in SINKS:
+        assert _sink_rows(spark, resumed_out, sink) == _sink_rows(
+            spark, clean_out, sink
+        ), f"{sink}: the resumed run differs from a clean run"
+    km = spark.read.parquet(f"{resumed_out}/anomalias_kmeans")
+    last = max((r for r in km.collect() if r.InvoiceNo == "I9"), key=lambda r: r.batch_id)
+    assert (last.Lines, last.Time) == (2, 11.0)
 
 
 def test_train_all_cli(spark, tmp_path):

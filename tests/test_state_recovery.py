@@ -62,11 +62,15 @@ class _Drain:
         return {r.InvoiceNo: r for r in self.rows}
 
 
-def _run_once(spark, src, ckpt, evict_after_ms=None):
+def _run_once(spark, src, ckpt, evict_after_ms=None, build=None):
+    """Drain the staged lines through ``build`` (default: the v1 Python
+    state with ``evict_after_ms``) on the checkpoint ``ckpt``."""
     lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
-    updates = state.apply_invoice_state(
-        P.good_purchases(lines), evict_after_ms=evict_after_ms
-    )
+    purchases = P.good_purchases(lines)
+    if build is None:
+        updates = state.apply_invoice_state(purchases, evict_after_ms=evict_after_ms)
+    else:
+        updates = build(purchases)
     drain = _Drain()
     q = sinks.foreach_batch_collector(
         updates, drain, output_mode="update", checkpoint=str(ckpt),
@@ -94,6 +98,24 @@ def test_state_survives_restart(spark, tmp_path):
     assert r2["I1"].Lines == 2  # batch count carried over the restart
     assert r2["I1"].AvgUnitPrice == pytest.approx((2 * 10 + 2 * 30) / 4)
     assert r2["I1"].Time == pytest.approx(11.0)  # head of the new batch
+
+
+def test_exact_state_survives_restart(spark, tmp_path):
+    """The JVM twin (pipeline.exact_invoice_state) recovers the same
+    state: run 2 folds into run 1's sums, and its set of batch
+    timestamps carries Lines over the restart."""
+    src, ckpt = tmp_path / "in", tmp_path / "ckpt_jvm"
+    _write_chunk(src, 0, [line("I1", 2, "1/4/2011 9:15", "10.0")])
+    r1 = _run_once(spark, src, ckpt, build=P.exact_invoice_state)
+    assert (r1["I1"].Lines, r1["I1"].Time) == (1, pytest.approx(9.25))
+
+    _write_chunk(src, 1, [line("I1", 2, "1/4/2011 11:00", "30.0")])
+    r2 = _run_once(spark, src, ckpt, build=P.exact_invoice_state)
+    assert set(r2) == {"I1"}
+    assert r2["I1"].Lines == 2
+    assert r2["I1"].AvgUnitPrice == pytest.approx((2 * 10 + 2 * 30) / 4)
+    assert r2["I1"].Time == pytest.approx(11.0)
+    assert r2["I1"].LastUpdated > r1["I1"].LastUpdated
 
 
 def test_state_v2_survives_restart(spark, tmp_path):
