@@ -38,6 +38,7 @@ from bigdata_invoice_stream_analysis_spark.streaming.app import (
     PipelineConfig,
     run_pipeline,
 )
+from bigdata_invoice_stream_analysis_spark.streaming.runtime import await_all
 from bigdata_invoice_stream_analysis_spark.streaming.sources import file_lines_source
 
 FEATURE_COLS = [
@@ -80,9 +81,8 @@ def drain(spark, sf_dir: str, n_chunks: int = 8) -> dict:
             spark, src, max_files_per_trigger=max(1, n_chunks // 4)
         )
         t0 = time.perf_counter()
-        queries = run_pipeline(stream, cfg)
-        for q in queries:
-            q.awaitTermination(600)
+        # Raises instead of reporting a rate over a drain that timed out.
+        await_all(run_pipeline(stream, cfg), 600)
         wall = time.perf_counter() - t0
         return {
             "lines": n,

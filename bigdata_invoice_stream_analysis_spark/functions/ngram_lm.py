@@ -11,26 +11,17 @@ that operator re-expressed as Catalyst algebra:
 * corpus bigram counts = one hash aggregate (map-side partial
   combine, one shuffle on the bigram key);
 * per-document scoring = one join against the counts keyed on the
-  bigram (AQE broadcasts it when a pruned model is small enough)
-  followed by one hash aggregate back on ``doc_id``.
+  bigram followed by one hash aggregate back on ``doc_id``.
 
-Two score surfaces:
+The score surface is **integer support statistics** (``lm_support``)
+— per document: bigram volume, summed corpus support, and the count
+of rare bigrams (corpus frequency below ``rare_below``). Integers are
+exactly reproducible across engines, so this is the gate shape (a
+DuckDB twin recomputes it bit-for-bit on real tables at any scale
+factor).
 
-* **Integer support statistics** (``lm_support``) — per document:
-  bigram volume, summed corpus support, and the count of rare
-  bigrams (corpus frequency below ``rare_below``). Integers are
-  exactly reproducible across engines, so this is the gate shape
-  (a DuckDB twin recomputes it bit-for-bit on real tables at any
-  scale factor).
-* **Add-k log-probability** (``bigram_logprob``) — the classic
-  avg-log P(w2|w1) with add-k smoothing; floating point, so it is
-  unit-tested against a pure-Python reference with tolerance
-  rather than hash-gated.
-
-Scale posture: the model is the (w1, w2, cnt) DataFrame itself —
-prune with ``min_count`` to bound its size (Zipf: min_count=2
-typically drops ~half the distinct mass); the scoring join then
-broadcasts. Training over 100 TB is exactly one shuffle.
+Scale posture: the model is the (n-gram, cnt) DataFrame itself;
+training over 100 TB is exactly one shuffle.
 
 Reference: n/a (extension surface — SURVEY.md §2.12's
 text-analysis north star; the reference engine has no LM).
@@ -75,28 +66,6 @@ def doc_ngrams(
     )
 
 
-def doc_bigrams(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, w1, w2) — the n=2 specialization the bigram model
-    and the graded gate use."""
-    return doc_ngrams(docs, 2, text_col)
-
-
-def train_bigram_counts(
-    docs: DataFrame, text_col: str = "text", min_count: int = 1
-) -> DataFrame:
-    """The model: (w1, w2, cnt) corpus bigram frequencies. One
-    map-side-combined hash aggregate; ``min_count`` prunes the
-    Zipf tail so the scoring join can broadcast."""
-    counts = (
-        doc_bigrams(docs, text_col)
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    if min_count > 1:
-        counts = counts.filter(F.col("cnt") >= min_count)
-    return counts
-
-
 def lm_support(
     docs: DataFrame, text_col: str = "text", rare_below: int = 2,
     n: int = 2,
@@ -138,42 +107,4 @@ def lm_support(
             F.coalesce("support_sum", F.lit(0)).alias("support_sum"),
             F.coalesce("n_rare", F.lit(0)).alias("n_rare"),
         )
-    )
-
-
-def bigram_logprob(
-    docs: DataFrame,
-    model: DataFrame,
-    text_col: str = "text",
-    k: float = 1.0,
-) -> DataFrame:
-    """Per-document average log P(w2|w1) under ``model`` (a
-    train_bigram_counts output) with add-k smoothing:
-
-        P(w2|w1) = (C(w1,w2) + k) / (C(w1,·) + k·V)
-
-    where V is the model's distinct-w2 vocabulary. OOV bigrams get
-    the unseen-mass probability. Returns (doc_id, n_bigrams,
-    avg_logprob); floating point — filter thresholds on it, don't
-    hash-gate it."""
-    v = model.select("w2").distinct().count()
-    ctx = model.groupBy("w1").agg(F.sum("cnt").alias("ctx_cnt"))
-    bg = doc_bigrams(docs, text_col)
-    scored = (
-        bg.join(F.broadcast(model), ["w1", "w2"], "left")
-        .join(F.broadcast(ctx), ["w1"], "left")
-        .select(
-            "doc_id",
-            (
-                F.log(
-                    (F.coalesce(F.col("cnt"), F.lit(0)) + F.lit(k))
-                    / (F.coalesce(F.col("ctx_cnt"), F.lit(0))
-                       + F.lit(k * v))
-                )
-            ).alias("lp"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.avg("lp").alias("avg_logprob"),
     )

@@ -46,11 +46,6 @@ SQL_TOKENIZE = (
 )
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace/punctuation token count."""
-    return F.size(tokenize(text))
-
-
 def poly_hash(token: Column) -> Column:
     """Deterministic polynomial hash of a string → [0, 1e9+7).
     h = fold(chars, h*31 + ascii(char)) mod p. Cross-engine exact."""
@@ -331,21 +326,6 @@ def sql_fingerprint(col: str) -> str:
 COMPOSE_MULT = 1_000_003  # shingle-composition multiplier (th < p ⇒ acc·B + th < 2^63)
 
 
-def ordered_shingle_hashes(text: Column, n: int = 3) -> Column:
-    """Positional (non-distinct) hashes of word n-grams — the winnowing
-    input sequence. Unlike shingle_hashes, order and multiplicity are
-    preserved.
-
-    COMPOSED hashing: each token is poly-hashed ONCE, then a shingle's
-    hash folds its n token hashes ((acc·B + th) mod p). Work per doc is
-    O(chars + n·shingles) instead of O(n·chars) — the string-rehash
-    form walked every character n times (once per shingle covering it).
-    Measured 2.5-3× on the winnowing query at sf0.1. Also strictly
-    better-behaved than hashing the joined string: token boundaries
-    can't collide ('ab c' vs 'a bc')."""
-    return compose_token_hashes(token_hashes(text), n)
-
-
 def token_hashes(text: Column) -> Column:
     """Per-token polynomial hashes, in order (the one pass that walks
     every character)."""
@@ -380,7 +360,8 @@ def compose_token_hashes(th: Column, n: int = 3) -> Column:
 
 
 def sql_ordered_shingle_hashes(col: str, n: int = 3) -> str:
-    """DuckDB twin of ordered_shingle_hashes()."""
+    """DuckDB twin of compose_token_hashes(token_hashes(col), n): the
+    positional (non-distinct) shingle hashes winnowing reads."""
     toks = SQL_TOKENIZE.format(col=col)
     th = f"list_transform({toks}, t -> {SQL_POLY_HASH.format(t='t')})"
     compose = (

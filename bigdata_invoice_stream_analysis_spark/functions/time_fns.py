@@ -27,10 +27,3 @@ def fractional_hour(ts: Column) -> Column:
     """P6 — hour + minute/60.0 ∈ [0, 24) (Clustering.scala:55-58;
     streaming twin InvoicePipeline.scala:104-105)."""
     return F.hour(ts) + F.minute(ts) / F.lit(60.0)
-
-
-def fractional_hour_from_string(date_str: Column) -> Column:
-    """Streaming-path twin: the reference splits the raw string
-    (InvoicePipeline.scala:104-105). Canonical rebuild: parse then
-    extract — identical result, NULL-safe."""
-    return fractional_hour(parse_invoice_ts(date_str))

@@ -16,10 +16,7 @@ token) rather than the full confusables table, so both engines
 compute the identical answer from a plain character-class regex.
 
 Everything is Column algebra over ``regexp_count`` (JVM codegen,
-zero Python); ``sql_unicode_integrity_flags`` emits the DuckDB twin
-from the SAME pattern constants, so the two engines cannot drift
-apart silently. ``strip_invisibles`` is the matching repair: it
-removes exactly the characters the audit counts as bidi/invisible.
+zero Python).
 
 Scale posture: map-side, one projection, no shuffle; the flags
 funnel into a corpus release gate exactly like the Gopher rules
@@ -100,52 +97,3 @@ def unicode_integrity_flags(text: Column) -> dict[str, Column]:
         clean = cond if clean is None else (clean & cond)
     out["unicode_clean"] = clean
     return out
-
-
-def sql_unicode_integrity_flags(col: str) -> dict[str, str]:
-    """The DuckDB twin, emitted from the SAME pattern constants:
-    ``len(regexp_extract_all(col, pat))`` is RE2's non-overlapping
-    match count — identical semantics to Spark's regexp_count."""
-    out: dict[str, str] = {}
-    parts = []
-    for name, pat in COUNT_PATTERNS.items():
-        expr = (f"CAST(len(regexp_extract_all("
-                f"COALESCE({col}, ''), '{pat}')) AS INT)")
-        out[name] = expr
-        parts.append(f"{expr} = 0")
-    out["unicode_clean"] = "(" + " AND ".join(parts) + ")"
-    return out
-
-
-def strip_invisibles(text: Column) -> Column:
-    """The repair projection: remove exactly the bidi + invisible
-    characters the audit counts (controls/PUA/noncharacters are NOT
-    stripped — their presence means quarantine, not cleanup)."""
-    return F.regexp_replace(
-        F.regexp_replace(text, BIDI_PATTERN, ""),
-        INVISIBLE_PATTERN, "",
-    )
-
-
-def nfc_divergent(text: Column) -> Column:
-    """TRUE when the text is not NFC-normalized (composition would
-    change the byte sequence — a dedup-key hazard: visually identical
-    strings hash apart). Unicode normalization has no JVM builtin, so
-    this one check is an Arrow-batched pandas UDF — keep it OUT of
-    hot release gates and run it on survivors."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.BooleanType())
-    def _udf(s):
-        import unicodedata
-
-        import pandas as pd
-
-        return pd.Series([
-            (unicodedata.normalize("NFC", v) != v)
-            if isinstance(v, str) else False
-            for v in s
-        ])
-
-    return _udf(text)

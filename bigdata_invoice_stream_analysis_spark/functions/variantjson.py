@@ -18,11 +18,7 @@ Three operators:
   ``schema_of_variant`` over each extracted path: the audit that
   catches producers changing ``"id": 7`` to ``"id": "7"`` before a
   rigid pipeline nulls a quarter of the corpus.
-* ``variant_field_profile`` — top-level field inventory through the
-  ``variant_explode`` table function (presence counts + value-type
-  histogram), for corpora where the field set itself is unknown.
-
-All three are single-projection / single-aggregation Column algebra
+Both are single-projection / single-aggregation Column algebra
 over the VARIANT binary encoding — no Python, no per-query
 re-parse.  Malformed JSON: ``try_parse_json`` rows surface as
 ``_corrupt = true`` rather than failing the task.
@@ -89,27 +85,4 @@ def json_schema_drift(
             F.col("p.path").alias("path"),
             F.col("p.value_schema").alias("value_schema"))
         .agg(F.count("*").alias("n"))
-    )
-
-
-def variant_field_profile(
-    df: DataFrame, json_col: str, *, id_col: str | None = None
-) -> DataFrame:
-    """Top-level field inventory when the field set is unknown:
-    (field, value_schema, n_docs) via the ``variant_explode`` table
-    function (a lateral join, fully JVM-side)."""
-    src = df.select(
-        *( [F.col(id_col)] if id_col else [] ),
-        F.try_parse_json(F.col(json_col)).alias("v"),
-    ).where(F.col("v").isNotNull())
-    src.createOrReplaceTempView("_variant_profile_src")
-    return src.sparkSession.sql(
-        """
-        SELECT f.key AS field,
-               schema_of_variant(f.value) AS value_schema,
-               COUNT(*) AS n_docs
-        FROM _variant_profile_src,
-             LATERAL variant_explode(v) AS f
-        GROUP BY f.key, schema_of_variant(f.value)
-        """
     )

@@ -35,10 +35,3 @@ def dot(a: Column, b: Column) -> Column:
 def norm(a: Column) -> Column:
     """L2 norm of an array column."""
     return F.sqrt(dot(a, a))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL-safe on zero vectors (returns NULL via
-    division by zero → NaN guarded to NULL)."""
-    denom = norm(a) * norm(b)
-    return F.when(denom > 0, dot(a, b) / denom)

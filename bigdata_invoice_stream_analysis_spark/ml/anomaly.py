@@ -47,12 +47,6 @@ def score(df: DataFrame, model, spark: SparkSession | None = None) -> DataFrame:
     ).drop("centroid")
 
 
-def anomalies(df: DataFrame, model, threshold: float) -> DataFrame:
-    """M4 — rows whose distance exceeds the threshold
-    (InvoicePipeline.scala:216-219)."""
-    return score(df, model).filter(F.col("dist") > threshold)
-
-
 def train_threshold(train_features: DataFrame, model, rank: int = THRESHOLD_RANK) -> float:
     """T1 — the rank-th largest squared training distance
     (train.scala:45-46). For small inputs (< rank rows) this degrades

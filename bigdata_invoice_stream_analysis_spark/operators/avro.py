@@ -253,148 +253,3 @@ def parse_avro(data: bytes, *, max_records: int | None = None) -> dict:
 
 
 # --- encoder (fixtures) ----------------------------------------------------
-
-
-def _zigzag(n: int) -> bytes:
-    u = (n << 1) ^ (n >> 63) if n >= 0 else ((-n << 1) - 1)
-    out = bytearray()
-    while True:
-        if u < 0x80:
-            out.append(u)
-            return bytes(out)
-        out.append((u & 0x7F) | 0x80)
-        u >>= 7
-
-
-def write_datum(schema, value, names: dict | None = None) -> bytes:
-    names = names if names is not None else {}
-    schema = _named(schema, names)
-    if isinstance(schema, list):  # union: first matching branch
-        for idx, branch in enumerate(schema):
-            if _matches(branch, value, names):
-                return _zigzag(idx) + write_datum(branch, value, names)
-        raise ValueError(f"avro: no union branch for {value!r}")
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            return b"".join(
-                write_datum(f["type"], value[f["name"]], names)
-                for f in schema["fields"]
-            )
-        if t == "enum":
-            return _zigzag(schema["symbols"].index(value))
-        if t == "fixed":
-            if len(value) != schema["size"]:
-                raise ValueError("avro: fixed size mismatch")
-            return bytes(value)
-        if t == "array":
-            if not value:
-                return _zigzag(0)
-            body = b"".join(
-                write_datum(schema["items"], v, names) for v in value)
-            return _zigzag(len(value)) + body + _zigzag(0)
-        if t == "map":
-            if not value:
-                return _zigzag(0)
-            body = b""
-            for k in sorted(value):
-                kb = k.encode()
-                body += _zigzag(len(kb)) + kb
-                body += write_datum(schema["values"], value[k], names)
-            return _zigzag(len(value)) + body + _zigzag(0)
-        return write_datum(t, value, names)
-    if schema == "null":
-        return b""
-    if schema == "boolean":
-        return b"\x01" if value else b"\x00"
-    if schema in ("int", "long"):
-        return _zigzag(value)
-    if schema == "float":
-        return struct.pack("<f", value)
-    if schema == "double":
-        return struct.pack("<d", value)
-    if schema == "bytes":
-        return _zigzag(len(value)) + bytes(value)
-    if schema == "string":
-        b = value.encode()
-        return _zigzag(len(b)) + b
-    if isinstance(schema, str) and schema in names:
-        return write_datum(names[schema], value, names)
-    raise ValueError(f"avro: unknown schema {schema!r}")
-
-
-def _matches(branch, value, names: dict) -> bool:
-    branch = _named(branch, names)
-    if branch == "null":
-        return value is None
-    if branch == "boolean":
-        return isinstance(value, bool)
-    if branch in ("int", "long"):
-        return isinstance(value, int) and not isinstance(value, bool)
-    if branch in ("float", "double"):
-        return isinstance(value, float)
-    if branch == "bytes":
-        return isinstance(value, (bytes, bytearray))
-    if branch == "string":
-        return isinstance(value, str)
-    if isinstance(branch, dict):
-        t = branch["type"]
-        if t == "record":
-            return isinstance(value, dict)
-        if t == "enum":
-            return isinstance(value, str) and value in branch["symbols"]
-        if t == "array":
-            return isinstance(value, list)
-        if t == "map":
-            return isinstance(value, dict)
-        if t == "fixed":
-            return isinstance(value, (bytes, bytearray))
-    return False
-
-
-def encode_avro(
-    schema,
-    records: list,
-    *,
-    codec: str = "deflate",
-    sync: bytes = b"\x00\x01\x02\x03\x04\x05\x06\x07"
-                  b"\x08\x09\x0a\x0b\x0c\x0d\x0e\x0f",
-    records_per_block: int | None = None,
-) -> bytes:
-    """Deterministic container file (fixed sync marker, sorted map
-    keys)."""
-    if len(sync) != 16:
-        raise ValueError("avro: sync marker must be 16 bytes")
-    names: dict = {}
-    out = bytearray(MAGIC)
-    meta = {
-        "avro.schema": json.dumps(
-            schema, sort_keys=True, separators=(",", ":")).encode(),
-        "avro.codec": codec.encode(),
-    }
-    out += _zigzag(len(meta))
-    for k in sorted(meta):
-        kb = k.encode()
-        out += _zigzag(len(kb)) + kb
-        out += _zigzag(len(meta[k])) + meta[k]
-    out += _zigzag(0)
-    out += sync
-
-    step = records_per_block or max(len(records), 1)
-    for start in range(0, len(records), step):
-        chunk = records[start : start + step]
-        body = b"".join(write_datum(schema, r, names) for r in chunk)
-        if codec == "deflate":
-            comp = zlib.compressobj(6, zlib.DEFLATED, -15)
-            payload = comp.compress(body) + comp.flush()
-        elif codec == "bzip2":
-            payload = bz2.compress(body)
-        elif codec == "xz":
-            payload = lzma.compress(body)
-        elif codec in ("null", ""):
-            payload = body
-        else:
-            raise ValueError(f"avro: unsupported codec {codec!r}")
-        out += _zigzag(len(chunk)) + _zigzag(len(payload))
-        out += payload + sync
-    return bytes(out)

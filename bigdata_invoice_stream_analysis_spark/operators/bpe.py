@@ -219,63 +219,3 @@ def bpe_encode(
             })
 
     return pre.mapInPandas(batches, schema=out_schema)
-
-
-def merges_to_text(merges: list[tuple[str, str]]) -> str:
-    """Serialize a merge table in the interchange format tokenizer
-    ecosystems use for BPE (one ``left right`` pair per line, rank =
-    line order, ``#version`` header line).  Symbols here never
-    contain spaces (the pre-tokenizer splits on whitespace), so the
-    space-separated line format is unambiguous."""
-    lines = ["#version: 0.2"]
-    lines += [f"{a} {b}" for a, b in merges]
-    return "\n".join(lines) + "\n"
-
-
-def merges_from_text(text: str) -> list[tuple[str, str]]:
-    merges: list[tuple[str, str]] = []
-    for line in text.splitlines():
-        line = line.strip()
-        if not line or line.startswith("#"):
-            continue
-        parts = line.split(" ")
-        if len(parts) != 2:
-            raise ValueError(f"bad merges line: {line!r}")
-        merges.append((parts[0], parts[1]))
-    return merges
-
-
-def bpe_vocab(
-    word_freqs: DataFrame, merges: list[tuple[str, str]]
-) -> DataFrame:
-    """(token, freq) over the corpus after segmentation — the vocab
-    report a tokenizer ships with.  Segmentation runs once per
-    DISTINCT word (the vocabulary table), not per occurrence."""
-    from pyspark.sql import types as T
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    out_schema = T.StructType([
-        T.StructField("token", T.StringType(), False),
-        T.StructField("freq", T.LongType(), False),
-    ])
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.bpe import (
-            bpe_segment,
-        )
-
-        for pdf in it:
-            toks, freqs = [], []
-            for w, f in zip(pdf["word"], pdf["freq"]):
-                for s in bpe_segment(w, ranks):
-                    toks.append(s)
-                    freqs.append(f)
-            yield pd.DataFrame({"token": toks, "freq": freqs})
-
-    return (
-        word_freqs.mapInPandas(batches, schema=out_schema)
-        .groupBy("token")
-        .agg(F.sum("freq").alias("freq"))
-    )

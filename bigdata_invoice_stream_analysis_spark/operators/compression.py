@@ -230,73 +230,3 @@ def parse_lz4_frames(data: bytes) -> list[dict]:
 
 
 # --- fixture encoders (framing-valid; payload bytes are opaque) ------------
-
-
-def encode_zstd_stream(
-    frames: list[dict],
-) -> bytes:
-    """Framing-valid zstd stream for fixtures: each spec ``{blocks:
-    [bytes...], content_size, dict_id, checksum, skippable}`` emits
-    RAW blocks (stored, not compressed — RFC 8878 block type 0), so
-    real decoders can decode the result too."""
-    out = bytearray()
-    for spec in frames:
-        if spec.get("skippable") is not None:
-            body = spec["skippable"]
-            out += struct.pack("<I", ZSTD_SKIPPABLE_LO | 0xE)
-            out += struct.pack("<I", len(body)) + body
-            continue
-        blocks = spec.get("blocks", [b""])
-        content_size = spec.get("content_size")
-        dict_id = spec.get("dict_id")
-        checksum = spec.get("checksum", False)
-        out += struct.pack("<I", ZSTD_MAGIC)
-        fhd = 0
-        dsize = 0
-        if dict_id is not None:
-            fhd |= 0x2  # 2-byte dict id
-            dsize = 2
-        if checksum:
-            fhd |= 0x4
-        fcs_size = 0
-        if content_size is not None:
-            fhd |= 0x80  # fcs flag 2 → 4 bytes
-            fcs_size = 4
-        out.append(fhd)
-        out.append(0x58)  # window descriptor: 8MB-ish
-        if dsize:
-            out += int(dict_id).to_bytes(2, "little")
-        if fcs_size:
-            out += int(content_size).to_bytes(4, "little")
-        for i, b in enumerate(blocks):
-            last = 1 if i == len(blocks) - 1 else 0
-            head = (len(b) << 3) | (0 << 1) | last  # raw block
-            out += bytes((head & 0xFF, (head >> 8) & 0xFF,
-                          (head >> 16) & 0xFF))
-            out += b
-        if checksum:
-            out += b"\x00\x00\x00\x00"  # not validated by this walk
-    return bytes(out)
-
-
-def encode_lz4_stream(frames: list[dict]) -> bytes:
-    """Framing-valid LZ4 stream: uncompressed blocks (high bit set),
-    64KB block max."""
-    out = bytearray()
-    for spec in frames:
-        blocks = spec.get("blocks", [b""])
-        content_size = spec.get("content_size")
-        out += struct.pack("<I", LZ4_MAGIC)
-        flg = 0x40 | 0x20  # version 1, independent
-        if content_size is not None:
-            flg |= 0x08
-        out.append(flg)
-        out.append(0x40)  # BD: 64KB max
-        if content_size is not None:
-            out += struct.pack("<Q", content_size)
-        out.append(0x00)  # header checksum (not validated here)
-        for b in blocks:
-            out += struct.pack("<I", 0x80000000 | len(b))
-            out += b
-        out += struct.pack("<I", 0)  # EndMark
-    return bytes(out)

@@ -443,65 +443,3 @@ def split_mbox(text: str) -> list[str]:
     if current is not None:
         messages.append("".join(current))
     return messages
-
-
-def mbox_corpus_profile(files):
-    """(file_id, text) → one row per MESSAGE in each mbox archive
-    (file_id, msg_idx, then the eml_message_profile columns) —
-    the mail-archive twin of the WARC record exploder. A broken
-    archive quarantines as one msg_idx=-1 row; a broken MESSAGE
-    quarantines as its own row without costing its neighbors."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("msg_idx", T.IntegerType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("subject", T.StringType(), True),
-        T.StructField("from_addr", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("n_parts", T.IntegerType(), True),
-        T.StructField("n_attachments", T.IntegerType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.eml import (
-            parse_eml,
-            split_mbox,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-
-            def emit(fid, idx, **kw):
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                row["msg_idx"] = idx
-                row.update(kw)
-                for k in cols:
-                    out[k].append(row[k])
-
-            for fid, text in zip(pdf["file_id"], pdf["text"]):
-                try:
-                    msgs = split_mbox(text)
-                except (ValueError, TypeError) as exc:
-                    emit(fid, -1, ok=False, error=str(exc)[:120])
-                    continue
-                for i, msg in enumerate(msgs):
-                    try:
-                        m = parse_eml(msg)
-                    except ValueError as exc:
-                        emit(fid, i, ok=False,
-                             error=str(exc)[:120])
-                        continue
-                    emit(fid, i, ok=True, subject=m["subject"],
-                         from_addr=m["from_addr"], text=m["text"],
-                         n_parts=m["n_parts"],
-                         n_attachments=m["n_attachments"])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches, schema=out_schema)

@@ -303,54 +303,6 @@ def encode_exif_jpeg(
     return b"\xff\xd8" + app1 + tail
 
 
-def encode_tiff(
-    width: int,
-    height: int,
-    *,
-    orientation: int = 1,
-    gps: bool = False,
-    byte_order: str = "II",
-) -> bytes:
-    """A minimal standalone baseline-TIFF fixture: header + IFD0 with
-    ImageWidth/ImageLength/Orientation (+ a GPS sub-IFD when asked) —
-    the .tif shape content_triage routes through the same parse_tiff
-    walk as JPEG EXIF and the PNG eXIf chunk."""
-    end = "<" if byte_order == "II" else ">"
-
-    def entry(tag, typ, count, raw4):
-        return struct.pack(end + "HHI", tag, typ, count) + raw4
-
-    def short4(v):
-        return struct.pack(end + "H", v) + b"\x00\x00"
-
-    n0 = 3 + (1 if gps else 0)
-    ifd0_size = 2 + 12 * n0 + 4
-    cursor = 8 + ifd0_size
-    entries = [
-        entry(TAG_IMAGE_WIDTH, 3, 1, short4(width)),
-        entry(TAG_IMAGE_LENGTH, 3, 1, short4(height)),
-        entry(TAG_ORIENTATION, 3, 1, short4(orientation)),
-    ]
-    sub = b""
-    if gps:
-        entries.append(
-            entry(TAG_GPS_IFD, 4, 1, struct.pack(end + "I", cursor))
-        )
-        sub = (
-            struct.pack(end + "H", 1)
-            + entry(0x0000, 1, 4, bytes([2, 3, 0, 0]))
-            + b"\x00\x00\x00\x00"
-        )
-    return (
-        byte_order.encode("ascii")
-        + struct.pack(end + "HI", 42, 8)
-        + struct.pack(end + "H", n0)
-        + b"".join(entries)
-        + b"\x00\x00\x00\x00"
-        + sub
-    )
-
-
 def exif_profile(media):
     """EXIF privacy/curation profile over (media_id, payload) JPEG
     columns inside Arrow mapInPandas — one row per image: orientation

@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 HASH_SIZE = 8  # 64-bit hashes
 
@@ -180,73 +179,3 @@ def image_phash(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(batches, schema=out_schema)
-
-
-def near_dup_pairs(
-    hashes: DataFrame,
-    max_distance: int = 6,
-    hash_col: str = "dhash",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """All (id_a < id_b) pairs whose ``hash_col`` values lie within
-    ``max_distance`` Hamming bits — banded exactly like the SimHash
-    text dedup: ``max_distance+1`` bands of the 64-bit hash, any
-    true pair collides on ≥1 band (pigeonhole), equi-join on
-    (band_idx, band_value), verify with bit_count(a^b), and keep a
-    pair only at its FIRST matching band so deduplication is
-    arithmetic, not a shuffle. Zero Python; no cartesian product."""
-    nb = max_distance + 1
-    width = 64 // nb
-    h = F.col(hash_col)
-    bands = F.array(*[
-        F.struct(
-            F.lit(i).alias("band_idx"),
-            # unsigned band slice via shiftrightunsigned + mask
-            F.shiftrightunsigned(h, i * width).bitwiseAND(
-                F.lit((1 << width) - 1)
-            ).alias("band_val") if i < nb - 1 else
-            # last band takes the remaining high bits
-            F.shiftrightunsigned(h, i * width).alias("band_val"),
-        )
-        for i in range(nb)
-    ])
-    exploded = hashes.select(
-        F.col(id_col), h.alias("h"), F.explode(bands).alias("b")
-    ).select(id_col, "h", "b.band_idx", "b.band_val")
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    jc = (
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_val") == F.col("b.band_val"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    )
-    pairs = a.join(b, jc)
-    xor = F.col("a.h").bitwiseXOR(F.col("b.h"))
-    dist = F.bit_count(xor)
-
-    def band_zero(i):
-        sliced = F.shiftrightunsigned(xor, i * width)
-        if i < nb - 1:
-            sliced = sliced.bitwiseAND(F.lit((1 << width) - 1))
-        return sliced == 0
-
-    # First-matching-band ownership (the MinHash-LSH trick reused by
-    # the SimHash dedup): a true pair collides on every band where
-    # its hashes agree, so emit it ONLY at the lowest agreeing band —
-    # dedup by arithmetic, not by a distinct shuffle.
-    owns = F.lit(False)
-    for i in range(nb):
-        no_earlier = F.lit(True)
-        for j in range(i):
-            no_earlier = no_earlier & ~band_zero(j)
-        owns = F.when(F.col("a.band_idx") == i, no_earlier) \
-            .otherwise(owns)
-    return (
-        pairs.filter(owns)
-        .filter(dist <= max_distance)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            dist.cast("int").alias("distance"),
-        )
-    )

@@ -12,7 +12,7 @@ Annex C prescribes, and the Annex K table CONTENTS are normative spec
 constants (the same numbers every JPEG implementation ships).
 
 Scale posture: decode runs inside Arrow mapInPandas on executors like
-the PNM/PNG/WAV codecs (operators/multimodal.decode_media dispatch) —
+the PNM/PNG/WAV codecs (operators/multimodal) —
 payload bytes never reach the driver. numpy does the per-block
 8x8 matmuls, so a 1-megapixel image is ~16k small GEMMs per component,
 vectorized as one (n_blocks, 8, 8) einsum.
@@ -124,10 +124,6 @@ for _k in range(8):
         _C[_k, _n] = np.cos(np.pi * (2 * _n + 1) * _k / 16.0)
 _C[0, :] *= np.sqrt(1.0 / 8.0)
 _C[1:, :] *= np.sqrt(2.0 / 8.0)
-
-
-def dct2(block: np.ndarray) -> np.ndarray:
-    return _C @ block @ _C.T
 
 
 def idct2(coeffs: np.ndarray) -> np.ndarray:

@@ -10,7 +10,8 @@ RIFF/WAVE PCM, baseline JPEG (operators/jpeg.py), and ISO-BMFF/MP4
 demux + MJPEG frame decode (operators/mp4.py — every sample of a
 Motion-JPEG track is a standalone JPEG, so demux + the JPEG codec
 close video END-TO-END). Only inter-frame codecs (H.264 et al.) still
-raise in decode_media — those genuinely need a codec library. The
+raise (mp4.decode_mjpeg_frames) — those genuinely need a codec
+library. The
 byte_stats extractor remains as the format-agnostic plumbing baseline
 (schema, partitioning, UDF signature, Arrow batch shape), and the
 graded queries gate the real decoders on exact integer oracles.
@@ -69,46 +70,6 @@ BYTE_STATS_SCHEMA = T.StructType(
         T.StructField("kind", T.StringType(), True),
     ]
 )
-
-
-def decode_media(payload: bytes, fmt: str) -> Any:
-    """Real codec step. From-scratch decoders exist for every format a
-    library-less container can honestly support: binary PNM (P5/P6),
-    8-bit PNG (zlib inflate + full scanline unfilter), RIFF/WAVE PCM
-    (8/16-bit), and baseline JPEG (operators/jpeg.py — Huffman + IDCT
-    per ITU T.81, grayscale + YCbCr with subsampling). The graded
-    queries gate the PNM and WAV paths on exact integer sums
-    (media_decoded_pixels, media_audio_samples); PNG and JPEG carry
-    spec-level unit matrices. Video: ISO-BMFF DEMUX is real
-    (operators/mp4.py — box tree + stts/stsz/stsc/stco sample tables,
-    gated by media_mp4_frame_index), and MJPEG tracks decode
-    END-TO-END (demux → per-sample baseline JPEG, gated by
-    media_video_frames). Inter-frame codecs (H.264 et al.) raise from
-    decode_mjpeg_frames — a real codec library is dispatched behind
-    this same signature in production."""
-    if fmt in ("pgm", "ppm", "pnm"):
-        return decode_pnm(payload)
-    if fmt == "png":
-        return decode_png(payload)
-    if fmt == "wav":
-        return decode_wav(payload)
-    if fmt in ("jpeg", "jpg"):
-        from bigdata_invoice_stream_analysis_spark.operators.jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
-    if fmt in ("mp4", "mjpeg"):
-        from bigdata_invoice_stream_analysis_spark.operators.mp4 import (
-            decode_mjpeg_frames,
-        )
-
-        frames = decode_mjpeg_frames(payload)
-        return {"kind": "video", "n_frames": len(frames), "frames": frames}
-    raise NotImplementedError(
-        f"no media codec for {fmt!r} in this environment; "
-        "use byte_stats / fake_decode for the tested plumbing — for "
-        "inter-frame video (h264/h265) codec METADATA is still "
-        "extractable via mp4.parse_codec_profile (media_codec_profile)"
-    )
 
 
 def decode_pnm(payload: bytes) -> dict[str, Any]:
@@ -470,20 +431,6 @@ def audio_sample_stats(media: DataFrame, chunk_seconds: int = 1) -> DataFrame:
     return media.mapInPandas(batches, schema=AUDIO_SAMPLE_STATS_SCHEMA)
 
 
-def fake_decode(payload: bytes) -> dict[str, int]:
-    """Deterministic stand-in decoder: byte-level stats (exact integer
-    math, reproducible anywhere — the oracle twin computes the same
-    numbers from the source text)."""
-    if payload is None or len(payload) == 0:
-        return {"n_bytes": 0, "byte_sum": 0, "byte_min": None, "byte_max": None}
-    return {
-        "n_bytes": len(payload),
-        "byte_sum": sum(payload),
-        "byte_min": min(payload),
-        "byte_max": max(payload),
-    }
-
-
 def documents_as_media(df: DataFrame) -> DataFrame:
     """Adapt the documents table into the canonical media shape: the
     UTF-8 text bytes play the opaque payload (ASCII corpus → bytes ==
@@ -506,8 +453,8 @@ def extract_byte_stats(media: DataFrame) -> DataFrame:
     """Feature-extract over the binary payload via mapInPandas: streams
     Arrow batches of (media_id, payload, meta) through a pandas
     iterator and emits BYTE_STATS_SCHEMA rows. This is the pattern a
-    real decode/resize/frame-sample pipeline uses — swap fake_decode
-    for decode_media and the plumbing is unchanged.
+    real decode/resize/frame-sample pipeline uses — swap the byte-stats
+    ``decode`` below for a real codec and the plumbing is unchanged.
 
     The worker function is a self-contained closure (no references to
     this module's globals): cloudpickle then ships it BY VALUE, so the
@@ -517,8 +464,8 @@ def extract_byte_stats(media: DataFrame) -> DataFrame:
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
 
-        # Nested (pickled by value), NOT the module-level fake_decode:
-        # a module-level function would serialize as a by-name import.
+        # Nested (pickled by value), NOT a module-level function: that
+        # would serialize as a by-name import.
         def decode(payload):
             if payload is None or len(payload) == 0:
                 return {"n_bytes": 0, "byte_sum": 0, "byte_min": None, "byte_max": None}
@@ -660,7 +607,7 @@ def resize_stub(
     media: DataFrame, target_w: int, target_h: int, resample: bool = False
 ) -> DataFrame:
     """Resize step of an image pipeline — stand-in for the PIL/opencv
-    resample (decode_media documents the stub policy), in two modes:
+    resample, in two modes:
 
     * default (``resample=False``): rewrite the meta dims only and pass
       the payload through untouched — the minimal stub for pipelines

@@ -232,42 +232,6 @@ def encode_minimal_docx(
     return encode_zip(entries)
 
 
-def encode_minimal_xlsx(strings: list[str], n_sheets: int = 1) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.zip import (
-        encode_zip,
-    )
-
-    shared = ('<?xml version="1.0"?><sst>' + "".join(
-        f"<si><t>{s}</t></si>" for s in strings) + "</sst>")
-    entries = [
-        ("[Content_Types].xml", _CT_XML.encode()),
-        ("xl/workbook.xml", b'<?xml version="1.0"?><workbook/>'),
-        ("xl/sharedStrings.xml", shared.encode()),
-    ]
-    for i in range(n_sheets):
-        entries.append((f"xl/worksheets/sheet{i + 1}.xml",
-                        b'<?xml version="1.0"?><worksheet/>'))
-    return encode_zip(entries)
-
-
-def encode_minimal_pptx(slide_texts: list[list[str]]) -> bytes:
-    from bigdata_invoice_stream_analysis_spark.operators.zip import (
-        encode_zip,
-    )
-
-    entries = [
-        ("[Content_Types].xml", _CT_XML.encode()),
-        ("ppt/presentation.xml",
-         b'<?xml version="1.0"?><p:presentation/>'),
-    ]
-    for i, runs in enumerate(slide_texts):
-        body = "".join(f"<a:t>{r}</a:t>" for r in runs)
-        entries.append((
-            f"ppt/slides/slide{i + 1}.xml",
-            f'<?xml version="1.0"?><p:sld>{body}</p:sld>'.encode()))
-    return encode_zip(entries)
-
-
 # ---------------------------------------------------------------------------
 # Spark operator
 # ---------------------------------------------------------------------------

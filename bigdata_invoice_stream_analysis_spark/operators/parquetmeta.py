@@ -564,67 +564,6 @@ def encode_parquet(
 
 # --- Spark operators -------------------------------------------------------
 
-def parquet_footer_profile(files):
-    """Per-file footer summary: one row per parquet blob.
-
-    Input: DataFrame(file_id long, payload binary).  Map-side only —
-    each task parses its own blobs' tails; nothing shuffles.
-    """
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("file_id", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("num_rows", T.LongType(), True),
-        T.StructField("num_row_groups", T.IntegerType(), True),
-        T.StructField("num_leaf_columns", T.IntegerType(), True),
-        T.StructField("created_by", T.StringType(), True),
-        T.StructField("footer_bytes", T.LongType(), True),
-        T.StructField("file_bytes", T.LongType(), False),
-        T.StructField("max_group_rows", T.LongType(), True),
-        T.StructField("min_group_rows", T.LongType(), True),
-    ])
-    cols = [f.name for f in out_schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        from bigdata_invoice_stream_analysis_spark.operators.parquetmeta import (
-            parse_parquet_footer,
-        )
-
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for fid, p in zip(pdf["file_id"], pdf["payload"]):
-                raw = bytes(p)
-                row = dict.fromkeys(cols)
-                row["file_id"] = fid
-                row["file_bytes"] = len(raw)
-                try:
-                    meta = parse_parquet_footer(raw)
-                except ValueError as exc:
-                    row["ok"] = False
-                    row["error"] = str(exc)[:120]
-                else:
-                    grp_rows = [g["num_rows"] or 0
-                                for g in meta["row_groups"]]
-                    row.update(
-                        ok=True,
-                        num_rows=meta["num_rows"],
-                        num_row_groups=len(meta["row_groups"]),
-                        num_leaf_columns=meta["num_leaf_columns"],
-                        created_by=meta["created_by"],
-                        footer_bytes=meta["footer_bytes"],
-                        max_group_rows=max(grp_rows, default=None),
-                        min_group_rows=min(grp_rows, default=None),
-                    )
-                for k in cols:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(batches, schema=out_schema)
-
 
 def parquet_column_chunks(files):
     """Per-column-chunk audit: one row per (file, row group, column)

@@ -446,12 +446,6 @@ def parse_cmap(cmap: bytes) -> tuple[int, dict[int, str]]:
     return (src_width or bf_width or 1), out
 
 
-def parse_tounicode(cmap: bytes) -> dict[int, str]:
-    """The {code: text} map alone (see parse_cmap for the code
-    width, which string decoding needs)."""
-    return parse_cmap(cmap)[1]
-
-
 def _page_cmaps(
     objects: dict, page: dict
 ) -> dict[str, tuple[int, dict[int, str]]]:

@@ -29,9 +29,9 @@ Scale design (100 TB posture)
   its own cell: the corpus side of the join shrinks by ~n_cells×. In a
   real deployment the cell assignment is written partitioned-by-cell so
   a probe prunes partitions at the scan.
-* Near-dup pairs: same quantized-cosine filter over candidate pairs;
-  for pair generation at scale use the sign-LSH blocking here
-  (hyperplane sketch → band join) rather than the all-pairs oracle.
+* Near-dup pairs: the quantized-cosine filter over candidate pairs
+  from the sign-LSH blocking here (hyperplane sketch → band join),
+  not all pairs.
 """
 
 from __future__ import annotations
@@ -273,77 +273,6 @@ def ivf_topk(
 # Embedding-cosine near-dup pairs
 # ---------------------------------------------------------------------------
 
-def cosine_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quantized: bool = False,
-) -> DataFrame:
-    """All pairs (id_a < id_b) with quantized cosine ≥ threshold.
-
-    All-pairs is the exact small-N baseline (the DuckDB-checkable
-    semantics); at corpus scale swap the pair source for the sign-LSH
-    bucketing in sign_lsh_pairs — same verify step, sub-quadratic
-    candidates.
-    """
-    v = F.col(vec_col) if quantized else quantize(F.col(vec_col))
-    # Precompute each vector's sqrt-norm ONCE (N rows) instead of per
-    # pair (N² rows): the pair expression then does a single integer
-    # dot. sqrt over the identical integer operand yields the identical
-    # double, so cosine values are bit-equal to the inline form the
-    # DuckDB oracle uses.
-    #
-    # Prefix-bound prune (exact, Cauchy-Schwarz): split v = [p | r] at
-    # dim 16. dot(a,b) = dot(pa,pb) + dot(ra,rb) ≤ dot(pa,pb) +
-    # ‖ra‖·‖rb‖, so  cosine ≤ (dot16 + ‖ra‖‖rb‖) / (‖a‖‖b‖).  The
-    # 16-dim bound costs ¼ of the full dot and eliminates every pair
-    # whose bound misses the threshold — for a high threshold that is
-    # almost all random pairs, so the 64-dim dot runs only on true
-    # near-dups. A 1e-9 slack absorbs double rounding in the bound (the
-    # integer dots themselves are exact).
-    from bigdata_invoice_stream_analysis_spark.sources.tables import ensure_min_parallelism
-
-    prefix = 16
-    # The pair loop is a broadcast nested-loop join; its STREAMED side
-    # inherits the scan's partitioning, so an under-parallel scan makes
-    # the whole N² probe serial. Repartition before the join when needed.
-    base = (
-        ensure_min_parallelism(df, df.sparkSession)
-        .select(F.col(id_col).alias("id"), v.alias("v"))
-        .withColumn("vp", F.slice("v", 1, prefix))
-        .withColumn("n2", int_norm2(F.col("v")))
-        .withColumn(
-            "rnrm",
-            F.sqrt((F.col("n2") - int_norm2(F.col("vp"))).cast("double")),
-        )
-        .withColumn("nrm", F.sqrt(F.col("n2").cast("double")))
-        .drop("n2")
-    )
-    a = base.withColumnsRenamed(
-        {"id": "id_a", "v": "va", "vp": "vpa", "nrm": "na", "rnrm": "ra"}
-    )
-    b = base.withColumnsRenamed(
-        {"id": "id_b", "v": "vb", "vp": "vpb", "nrm": "nb", "rnrm": "rb"}
-    )
-    bound = (
-        int_dot(F.col("vpa"), F.col("vpb")).cast("double")
-        + F.col("ra") * F.col("rb")
-    ) / (F.col("na") * F.col("nb"))
-    pairs = (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .filter(bound >= F.lit(threshold - 1e-9))
-        .select(
-            "id_a",
-            "id_b",
-            (
-                int_dot(F.col("va"), F.col("vb")).cast("double")
-                / (F.col("na") * F.col("nb"))
-            ).alias("cosine"),
-        )
-    )
-    return pairs.filter(F.col("cosine") >= threshold)
-
 
 # Sign-LSH (random-hyperplane sketch) — scalable candidate generation.
 # Hyperplane h_j has ±1 components decided by bit j of a per-dimension
@@ -397,8 +326,7 @@ def sign_lsh_pairs(
     shuffle keyed by the 16-bit sketch instead of an all-pairs NLJ:
     O(docs) rows over the wire, pair work confined to same-bucket
     groups (~N²/2¹⁶ random collisions, each killed by the exact
-    verify). This is the 100×-scale path; cosine_dup_pairs is the
-    small-N exact baseline."""
+    verify). This is the 100×-scale path."""
     from bigdata_invoice_stream_analysis_spark.operators.fence import optimizer_fence
     from bigdata_invoice_stream_analysis_spark.sources.tables import ensure_min_parallelism
 
@@ -524,111 +452,6 @@ def sq8_topk(
 PQ_M = 8  # subspaces (dim 64 -> 8 dims per subspace)
 
 
-def pq_encode_literal(
-    df: DataFrame,
-    codebooks: list[list[tuple[int, list[int]]]],
-    vec_col: str = "qv",
-) -> DataFrame:
-    """Encode vectors into per-subspace nearest-centroid codes with the
-    codebooks folded into the plan as literals (same reasoning as
-    assign_cells_literal: a codebook is small by definition, so
-    plan-literal beats a broadcast join — ZERO shuffle, the encode is
-    pure codegen). ``codebooks[m]`` is the subspace-m codebook as
-    (code_id, centroid-subvector) pairs; subvector length = dim / M.
-
-    Adds ``code_{m}`` int columns holding the POSITION of the nearest
-    centroid in the cid-sorted codebook (0-based) — positions, not raw
-    centroid ids, so downstream ADC lookups are plain array indexing.
-    At 100 TB the encoded table (M small ints per vector instead of
-    dim floats) is the resident index — the memory story that makes PQ
-    the scale path for ANN.
-
-    Implementation note: the argmin ranks centroids by
-    ||c||^2 - 2*x.c, which orders identically to ||x - c||^2 (the
-    ||x||^2 term is constant per row). The codebook is folded in as
-    ONE 2-D literal array per subspace and the argmin is a single
-    ``aggregate`` fold over centroid positions — a compact expression
-    tree. The earlier fully-unrolled arithmetic form generated >64 KB
-    of Java per stage, so janino failed, Spark burned seconds on the
-    failed compile, and the stage ran interpreted anyway; the fold
-    form plans/compiles in milliseconds, and the fold itself is the
-    same higher-order-function execution profile every hash/shingle
-    operator in this engine already runs at scale."""
-    sub_len = len(codebooks[0][0][1])
-    code_cols = []
-    for m, book in enumerate(codebooks):
-        ordered = sorted(book)
-        cents = F.array(
-            *[
-                F.array(*[F.lit(int(x)).cast("long") for x in cv])
-                for _, cv in ordered
-            ]
-        )
-        c2s = F.array(
-            *[
-                F.lit(sum(int(x) * int(x) for x in cv)).cast("long")
-                for _, cv in ordered
-            ]
-        )
-        sub = F.slice(F.col(vec_col), m * sub_len + 1, sub_len)
-
-        def score(p, cents=cents, c2s=c2s, sub=sub):
-            dot = F.aggregate(
-                F.zip_with(sub, F.element_at(cents, p + 1), lambda a, b: a * b),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            )
-            return F.element_at(c2s, p + 1) - F.lit(2) * dot
-
-        # Evaluate each centroid's score exactly once, then argmin via
-        # lexicographic struct-min (ties -> lowest position = lowest
-        # cid, matching the oracle's (dist, cid) ordering).
-        positions = F.sequence(F.lit(0), F.lit(len(ordered) - 1))
-        scores = F.transform(positions, lambda p: score(p))
-        best = F.array_min(
-            F.zip_with(
-                scores,
-                positions,
-                lambda s, p: F.struct(s.alias("d"), p.cast("int").alias("pos")),
-            )
-        )
-        code_cols.append(best["pos"].alias(f"code_{m}"))
-    return df.select("*", *code_cols)
-
-
-def pq_adc_dist(
-    query_vec: Column, codebooks: list[list[tuple[int, list[int]]]]
-) -> Column:
-    """Asymmetric-distance (ADC) estimate between a full-precision
-    query vector column and a PQ-encoded row (code_{m} position
-    columns): sum over subspaces of the exact integer squared distance
-    from the query subvector to the centroid the code names. The
-    centroid lookup is ``element_at`` into a literal array indexed by
-    code position — no join, no shuffle; all arithmetic stays in
-    BIGINT. For a FIXED query set, pq_adc_lut + adc_from_lut is the
-    faster form (the per-subspace distances collapse to a precomputed
-    table); this expression form is the one that works when the query
-    vector is itself a column."""
-    sub_len = len(codebooks[0][0][1])
-    total = F.lit(0).cast("long")
-    for m, book in enumerate(codebooks):
-        sub = F.slice(query_vec, m * sub_len + 1, sub_len)
-        cents = F.array(
-            *[
-                F.array(*[F.lit(int(x)).cast("long") for x in cv])
-                for _, cv in sorted(book)
-            ]
-        )
-        cv = F.element_at(cents, F.col(f"code_{m}") + 1)
-        d = F.aggregate(
-            F.zip_with(sub, cv, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, t: acc + t,
-        )
-        total = total + d
-    return total
-
-
 def pq_adc_lut(
     query: list[int], codebooks: list[list[tuple[int, list[int]]]]
 ) -> list[int]:
@@ -649,18 +472,6 @@ def pq_adc_lut(
     return lut
 
 
-def adc_from_lut(lut_col: Column, n_codes: int, n_subspaces: int) -> Column:
-    """ADC distance of an encoded row against a query's LUT column:
-    sum over subspaces of lut[m*K + code_m]. Pure array indexing —
-    the whole per-pair cost is M lookups, independent of dimension."""
-    total = F.lit(0).cast("long")
-    for m in range(n_subspaces):
-        total = total + F.element_at(
-            lut_col, F.lit(m * n_codes) + F.col(f"code_{m}") + 1
-        )
-    return total
-
-
 def pq_encode_np(
     df: DataFrame,
     codebooks: list[list[tuple[int, list[int]]]],
@@ -674,8 +485,8 @@ def pq_encode_np(
     per-centroid folds (measured ~50x: 3.2 s -> 0.06 s per 2k rows at
     dim 64, k 14). numpy int64 arithmetic is exact, and np.argmin
     returns the FIRST minimum — the same (distance, lowest-cid)
-    tie-break as pq_encode_literal and the SQL oracle, proven equal in
-    tests/test_pipelines.py. Adds a ``codes`` array<int> column
+    tie-break as the SQL oracle and the plan-literal reference encode
+    in tests/test_pipelines.py. Adds a ``codes`` array<int> column
     (positions into each cid-sorted codebook)."""
     from pyspark.sql.functions import pandas_udf
 

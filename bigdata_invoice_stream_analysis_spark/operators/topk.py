@@ -3,13 +3,10 @@
 T1: the anomaly threshold is the 2000th-largest squared training
 distance (`distances.top(2000).last`, train.scala:45-46).
 
-Two physical strategies, both distributed:
-  * ``kth_largest`` — orderBy desc + limit K: Catalyst compiles this to
-    TakeOrderedAndProject (per-partition top-K heaps + driver merge of
-    K·numPartitions rows) — no full sort, no full shuffle. Right answer
-    for K ≪ N (K=2000 vs 100 TB of rows).
-  * ``quantile_threshold`` — exact percentile for when K scales with N
-    (single aggregation, no sort at all).
+``kth_largest`` — orderBy desc + limit K: Catalyst compiles this to
+TakeOrderedAndProject (per-partition top-K heaps + driver merge of
+K·numPartitions rows) — no full sort, no full shuffle. Right answer for
+K ≪ N (K=2000 vs 100 TB of rows).
 """
 
 from __future__ import annotations
@@ -29,9 +26,3 @@ def kth_largest(df: DataFrame, col: str, k: int) -> float | None:
     ``top(k).last`` does the same)."""
     row = top_k(df, col, k).agg(F.min(col).alias("kth")).first()
     return None if row is None else row["kth"]
-
-
-def quantile_threshold(df: DataFrame, col: str, q: float) -> float:
-    """Exact q-quantile of ``col`` via a single aggregation — the
-    scale-proportional alternative to a fixed K (e.g. q = 1 - 2000/N)."""
-    return df.agg(F.percentile(col, F.lit(q)).alias("p")).first()["p"]

@@ -142,15 +142,3 @@ def coerce_purchase_types(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "Quantity", F.col("Quantity").try_cast("int")
     ).withColumn("UnitPrice", F.col("UnitPrice").try_cast("double"))
-
-
-def route_lines(df: DataFrame, line_col: str = "value") -> dict[str, DataFrame]:
-    """Split a raw-line DataFrame into the three reference routes
-    (invalid / cancelled / good) — the batch shape of the streaming
-    pipeline's branch structure (InvoicePipeline.scala:61-69,134)."""
-    line = F.col(line_col)
-    return {
-        "invalid": df.filter(is_invalid_line(line)),
-        "cancelled": df.filter(~is_invalid_line(line) & is_cancelled_line(line)),
-        "good": df.filter(is_good_line(line)),
-    }

@@ -34,6 +34,7 @@ from bigdata_invoice_stream_analysis_spark.sources.tables import (
     table_schema,
 )
 from bigdata_invoice_stream_analysis_spark.streaming.runtime import (
+    await_all,
     rocksdb_provider,
     shuffle_partitions,
     state_partitions,
@@ -1362,20 +1363,9 @@ def _run_full_pipeline_gate(
             "bisecting": ModelSpec(BISECT_CENTROIDS, BISECT_THRESHOLD),
         },
     )
-    queries = []
-    try:
-        queries = runner(lines, cfg)
-        for q_ in queries:
-            if not q_.awaitTermination(300):
-                raise TimeoutError(
-                    "full-pipeline drain did not finish within 300s"
-                )
-    finally:
-        # One failing sink must not leak the three concurrent survivors
-        # as active streams in the session.
-        for q_ in queries:
-            if q_.isActive:
-                q_.stop()
+    # One failing sink must not leak the three concurrent survivors as
+    # active streams in the session: await_all stops them on the way out.
+    await_all(runner(lines, cfg), 300)
 
     def _read(name: str, fallback_schema: str) -> DataFrame:
         import glob as globmod

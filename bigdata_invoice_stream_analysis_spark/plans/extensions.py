@@ -552,8 +552,7 @@ def q_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and agree on all 16 hyperplane signs; random pairs (< 0.6) land in
     the same 16-bit bucket only ~once per 65k pairs and die in the
     exact-cosine verify. The graded plan shuffles by sketch (O(N) rows),
-    NOT the all-pairs NLJ — cosine_dup_pairs remains the exact small-N
-    baseline, unit-tested against this path in test_similarity."""
+    NOT the all-pairs NLJ."""
     v = vecs_neardup(spark, sf_dir)
     return SIM.sign_lsh_pairs(
         v, threshold=0.99, id_col="vec_id", vec_col="qv",
@@ -1507,9 +1506,9 @@ def q_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-latest compaction (the CDC/upsert materialization step:
     many change rows per key → current state). row_number over
     (ts DESC, event_id DESC) with ONE shuffle on the key; at 100 TB
-    this is the exact plan of a snapshot rebuild, and the same window
-    runs incrementally under Structured Streaming via
-    dropDuplicatesWithinWatermark on the key (streaming/pipeline.py).
+    this is the exact plan of a snapshot rebuild; under Structured
+    Streaming the same keep-one-per-key step would be
+    dropDuplicatesWithinWatermark on the key.
     event_id breaks same-timestamp ties deterministically."""
     from pyspark.sql.window import Window
 

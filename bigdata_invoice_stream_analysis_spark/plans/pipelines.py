@@ -699,7 +699,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al. 2011): the corpus is
     encoded as 8 one-byte codes per vector against per-subspace
     codebooks folded into the plan as literals
-    (operators/similarity.pq_encode_literal — ZERO-shuffle encode);
+    (operators/similarity.pq_encode_np — ZERO-shuffle encode);
     each query then ranks the corpus by the asymmetric distance (ADC):
     the sum over subspaces of the exact integer squared distance from
     the query subvector to the centroid each code names. Completes the
@@ -724,8 +724,8 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_invoice_stream_analysis_spark.cache import scoped_cache
 
     # Vectorized Arrow encode (integer matmul argmin per batch) — the
-    # scale path; pq_encode_literal is its expression-form twin, proven
-    # code-identical in tests/test_pipelines.py. Cache the encoded
+    # scale path; tests/test_pipelines.py proves it code-identical to a
+    # plan-literal expression encode. Cache the encoded
     # table: it is the PQ index a production system would persist (M
     # small ints per vector), reused by every query of the batch.
     encoded = scoped_cache(SIM.pq_encode_np(base, codebooks, "qv").drop("qv"))

@@ -1537,11 +1537,6 @@ def q_elbow_selection_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def register(name: str):
-    """Expose the registry for __spark_entry__."""
-    return QUERIES[name]
-
-
 def _run_drain(
     spark: SparkSession,
     writer,

@@ -1,5 +1,5 @@
 """Batch + streaming sources and sinks."""
 
-from bigdata_invoice_stream_analysis_spark.sources.tables import load_table, load_tables, register_views
+from bigdata_invoice_stream_analysis_spark.sources.tables import load_table, register_views
 
-__all__ = ["load_table", "load_tables", "register_views"]
+__all__ = ["load_table", "register_views"]

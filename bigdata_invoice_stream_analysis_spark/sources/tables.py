@@ -148,10 +148,6 @@ def ensure_min_parallelism(df: DataFrame, spark: SparkSession) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every test table as a temp view for spark.sql queries."""
     for name in TESTDATA_TABLES:
@@ -195,39 +191,3 @@ def write_bucketed(
     if path:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-
-
-def read_raw_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Read a CSV file as unparsed lines (column ``value``) — the shape
-    a Kafka value stream has, so batch tests exercise the exact
-    streaming parse path."""
-    return spark.read.text(path).withColumnRenamed("value", "value")
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    sort_within: list[str] | None = None,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Persist a table hive-partitioned by low-cardinality columns —
-    the lakehouse layout for time/category-sliced scans at 100 TB:
-    a filter on a partition column prunes whole directories at planning
-    time (PartitionFilters, zero IO for excluded partitions), and
-    ``sortWithinPartitions`` clusters rows so parquet row-group min/max
-    stats prune within the files that remain.
-
-    Partition columns must be low-cardinality (dates, categories —
-    thousands of values, not millions): every distinct tuple is a
-    directory, and tiny partitions devolve into the small-files
-    problem. High-cardinality keys belong in write_bucketed instead.
-    ``max_records_per_file`` caps file size without coalescing the
-    write parallelism.
-    """
-    if sort_within:
-        df = df.sortWithinPartitions(*sort_within)
-    writer = df.write.mode("overwrite").format("parquet")
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(*partition_cols).save(path)

@@ -70,7 +70,6 @@ class PipelineConfig:
     # True → the reference's exact per-invoice state (W2: batch-head Time,
     # batch-count Lines) as one JVM aggregation, pipeline.exact_invoice_state
     legacy_state: bool = False
-    weighted_avg: bool = True
     available_now: bool = False  # drain-and-stop (tests/golden runs)
     models: dict[str, ModelSpec] = field(default_factory=dict)
     feature_cols: list[str] | None = None
@@ -148,9 +147,7 @@ def _wire(
                 if cfg.legacy_state:
                     updates = P.exact_invoice_state(purchases)
                 else:
-                    updates = P.invoice_updates(
-                        purchases, weighted_avg=cfg.weighted_avg
-                    )
+                    updates = P.invoice_updates(purchases)
                 if shared_scan:
                     specs = [(_topic(m), sp) for m, sp in cfg.models.items()]
                     queries.append(_model_router(updates, specs, cfg))
@@ -244,8 +241,3 @@ def run_pipeline_router(
     run_pipeline (the streaming_full_pipeline_router gate pins both
     against one oracle)."""
     return _wire(lines, cfg, shared_scan=True)
-
-
-def await_all(queries: list[StreamingQuery], timeout: int | None = None) -> None:
-    for q in queries:
-        q.awaitTermination(timeout)

@@ -137,149 +137,23 @@ def good_purchases(lines: DataFrame, time_mode: str = "event") -> DataFrame:
     )
 
 
-def deduped_lines(
-    lines: DataFrame,
-    watermark: str = DEFAULT_WATERMARK,
-    time_mode: str = "event",
-) -> DataFrame:
-    """A2 generalized across micro-batches: drop replayed duplicate
-    lines within the watermark horizon via
-    ``dropDuplicatesWithinWatermark``. The reference deduplicated only
-    WITHIN one 20 s batch (reduceByKey, InvoicePipeline.scala:70-71) —
-    an at-least-once Kafka source re-delivers lines across batch
-    boundaries on recovery, which this absorbs. State is bounded by the
-    watermark: a line's fingerprint is evicted once no duplicate can
-    still arrive. Lines whose event time cannot be parsed are passed
-    through (they route to the invalid sink downstream)."""
-    wt = with_time(lines, time_mode)
-    parsed = wt.filter(F.col("ts").isNotNull())
-    unparsed = wt.filter(F.col("ts").isNull())
-    deduped = parsed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["value"]
-    )
-    return deduped.unionByName(unparsed)
-
-
-def customer_sessions(
-    purchases: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = DEFAULT_WATERMARK,
-) -> DataFrame:
-    """Gap-based per-customer sessionization with Spark's native
-    ``session_window`` (absent from the reference — SURVEY.md §2.12
-    lists session windows as an explicit gap; the batch twin is
-    plans.queries.q_user_sessions).
-
-    The state store merges overlapping windows per key as events
-    arrive; the watermark closes a session once no event can extend it,
-    so output is append-mode final sessions — at scale, state is
-    O(open sessions), not O(events). Boundary note: an event exactly
-    ``gap`` after the previous one starts a NEW session here (window
-    span is half-open), while the batch twin's ``> gap`` rule keeps it
-    — tests use non-boundary data.
-    """
-    return (
-        purchases.withWatermark("ts", watermark)
-        .groupBy(
-            F.session_window(F.col("ts"), gap).alias("w"),
-            F.col("CustomerID"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum("Quantity").cast("double").alias("n_items"),
-            # exact count_distinct is unsupported in streaming aggs
-            # (would need the full value set in state); the HLL sketch
-            # is mergeable state — exact for small per-session counts
-            F.approx_count_distinct("InvoiceNo").alias("n_invoices"),
-        )
-        .select(
-            F.col("CustomerID"),
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_lines",
-            "n_items",
-            "n_invoices",
-        )
-    )
-
-
-def cancellation_matches(
-    lines: DataFrame,
-    watermark: str = DEFAULT_WATERMARK,
-    within: str = "2 hours",
-    time_mode: str = "event",
-) -> DataFrame:
-    """Stream-stream interval join (absent from the reference —
-    SURVEY.md §2.12): match each cancellation line ``C<no>`` to the
-    purchase lines of invoice ``<no>`` that arrived up to ``within``
-    before it. Both sides are branches of the SAME source stream.
-
-    Scale semantics: watermarks on both sides plus the time-range join
-    condition bound the join state — each side keeps only rows younger
-    than watermark + ``within``, so state is O(recent traffic), not
-    O(stream history). Output is append-mode (matches are final once
-    the watermark passes)."""
-    purchases = (
-        good_purchases(lines, time_mode)
-        .select(
-            F.col("InvoiceNo"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("Quantity"),
-            F.col("UnitPrice"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    with_t = with_time(lines, time_mode)
-    cancels = (
-        with_t.filter(
-            ~validate.is_invalid_line(F.col("value"))
-            & validate.is_cancelled_line(F.col("value"))
-        )
-        .select(
-            F.substring(
-                F.get(validate.split_line(F.col("value")), 0), 2, 1_000_000
-            ).alias("base_no"),
-            F.col("ts").alias("cancel_ts"),
-        )
-        .withWatermark("cancel_ts", watermark)
-    )
-    return purchases.join(
-        cancels,
-        (F.col("InvoiceNo") == F.col("base_no"))
-        & (F.col("cancel_ts") >= F.col("purchase_ts"))
-        & (F.col("cancel_ts") <= F.col("purchase_ts") + F.expr(f"INTERVAL {within}")),
-    ).select(
-        "InvoiceNo", "purchase_ts", "cancel_ts", "Quantity", "UnitPrice"
-    )
-
-
-def _price_aggs(
-    weighted_avg: bool = True,
-) -> tuple[Column, Column, Column, Column]:
+def _price_aggs() -> tuple[Column, Column, Column, Column]:
     """The per-invoice aggregates invoice_updates and exact_invoice_state
     share: the mean unit price, min and max unit price, and the item
     count Σq as a double (unaliased, in that order).
 
-    weighted_avg=True is the reference's streaming recurrence
+    The mean is the reference's streaming recurrence
     (InvoicePipeline.scala:110: quantity-weighted running mean) in its
-    closed form Σ(p·q)/Σq; False matches batch-training row-mean
-    semantics. The weighted division is try_divide: an invoice whose
+    closed form Σ(p·q)/Σq. The division is try_divide: an invoice whose
     quantities sum to 0 (a zero-quantity line, or 5 and -5) gets a
     NULL mean — NULL distance, never flagged — instead of failing the
     whole micro-batch with ANSI DIVIDE_BY_ZERO."""
     qty = F.col("Quantity")
-    if weighted_avg:
-        avg = F.try_divide(F.sum(F.col("UnitPrice") * qty), F.sum(qty))
-    else:
-        avg = F.avg("UnitPrice")
+    avg = F.try_divide(F.sum(F.col("UnitPrice") * qty), F.sum(qty))
     return avg, F.min("UnitPrice"), F.max("UnitPrice"), F.sum(qty).cast("double")
 
 
-def invoice_updates(
-    purchases: DataFrame,
-    watermark: str | None = None,
-    weighted_avg: bool = True,
-) -> DataFrame:
+def invoice_updates(purchases: DataFrame) -> DataFrame:
     """A4 as a plain streaming aggregation (update output mode): the
     running per-invoice feature row, recomputed incrementally by the
     state store — only keys touched by a micro-batch are emitted.
@@ -290,17 +164,16 @@ def invoice_updates(
     against every 20 s batch, InvoicePipeline.scala:136 — O(all keys)
     per batch).
 
-    weighted_avg picks the mean (see _price_aggs) — the train/serve-skew
-    flag (SURVEY.md §3.1), default chosen to match serving.
+    The mean is quantity-weighted (see _price_aggs), as serving runs
+    it; batch training's row mean is featurize's ``weighted_avg=False``
+    (the train/serve skew of SURVEY.md §3.1).
 
     Time semantics: mean fractional hour over all of the invoice's
     lines (the reference stored the hour of the *latest batch's head
     purchase* — an arrival-order artifact; exact_invoice_state keeps
     it).
     """
-    if watermark:
-        purchases = purchases.withWatermark("ts", watermark)
-    avg, mn, mx, items = _price_aggs(weighted_avg)
+    avg, mn, mx, items = _price_aggs()
     return purchases.groupBy("InvoiceNo").agg(
         avg.alias("AvgUnitPrice"),
         mn.alias("MinUnitPrice"),
@@ -373,25 +246,3 @@ def exact_invoice_state(purchases: DataFrame) -> DataFrame:
             F.col("_head.customer").alias("CustomerID"),
         )
     )
-
-
-def enriched_purchases(
-    purchases: DataFrame,
-    customers: DataFrame,
-    on_stream: str = "CustomerID",
-    on_static: str = "customer_id",
-) -> DataFrame:
-    """Stream-static join (absent from the reference — SURVEY.md
-    §2.12): enrich the purchase stream with customer dimension
-    attributes. Left join keeps purchases whose customer is unknown
-    (nulls beat dropped revenue rows in an enrichment).
-
-    Scale semantics: the static side BROADCASTS — each micro-batch
-    joins against the executor-local copy with no shuffle of the
-    stream and, critically, NO join state (a static side needs no
-    watermark bookkeeping: every batch re-reads the dim, which also
-    means slowly-changing dims refresh mid-query when the underlying
-    files change). A huge dim would instead be pre-bucketed on the key
-    (sources.tables.write_bucketed) so each micro-batch co-locates."""
-    dim = customers.withColumnRenamed(on_static, on_stream)
-    return purchases.join(F.broadcast(dim), on_stream, "left")

@@ -1,7 +1,7 @@
 """Streaming runtime rules shared by the deployed app (streaming/app.py)
 and the drain gates (plans/): the state-partition count of a stateful
-query, its application to one ``writeStream.start()``, and the RocksDB
-state-store scope.
+query, its application to one ``writeStream.start()``, the RocksDB
+state-store scope, and the checked wait for a set of queries.
 
 Stateful operators create one state-store instance per shuffle
 partition per micro-batch, and the count is fixed at the query's first
@@ -12,9 +12,12 @@ than inherited from the session's batch default.
 from __future__ import annotations
 
 import os
+import time
+from collections.abc import Iterable
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
@@ -89,3 +92,27 @@ def rocksdb_provider(spark: SparkSession):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def await_all(queries: Iterable[StreamingQuery], timeout: float) -> None:
+    """Wait for every query of a set to terminate, all within ONE
+    deadline of ``timeout`` seconds. Raises TimeoutError if a query is
+    still active at the deadline, and re-raises a query's
+    ``exception()`` if one failed. Every query still active is stopped
+    on the way out, whatever happened, so a failed or timed-out set
+    leaves no stream running in the session."""
+    queries = list(queries)
+    deadline = time.monotonic() + timeout
+    try:
+        for q in queries:
+            if not q.awaitTermination(max(0.0, deadline - time.monotonic())):
+                raise TimeoutError(
+                    f"streaming query {q.name or q.id} still active after {timeout}s"
+                )
+            err = q.exception()
+            if err is not None:
+                raise err
+    finally:
+        for q in queries:
+            if q.isActive:
+                q.stop()

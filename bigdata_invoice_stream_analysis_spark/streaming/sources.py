@@ -93,30 +93,3 @@ def file_lines_source(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return _normalize_lines(reader.load(path))
-
-
-def rate_lines_source(
-    spark: SparkSession, rows_per_second: int = 1000, n_invoices: int = 1000
-) -> DataFrame:
-    """Synthetic load source: the built-in rate source mapped into
-    deterministic purchase lines (for throughput soak tests without a
-    broker). Line shape matches the producer's CSV join
-    (InvoiceDataProducer.scala:28-32)."""
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", str(rows_per_second)
-    ).load()
-    inv = (F.col("value") % n_invoices).cast("string")
-    line = F.concat_ws(
-        ",",
-        inv,
-        (F.col("value") % 997).cast("string"),
-        F.lit("item"),
-        ((F.col("value") % 10) + 1).cast("string"),
-        F.date_format(F.col("timestamp"), "M/d/yyyy H:mm"),
-        F.round((F.col("value") % 10000) / 100.0 + 0.01, 2).cast("string"),
-        ((F.col("value") % 5000) + 1).cast("string"),
-        F.lit("ES"),
-    )
-    return rate.select(
-        inv.alias("key"), line.alias("value"), F.col("timestamp").alias("ingest_ts")
-    )

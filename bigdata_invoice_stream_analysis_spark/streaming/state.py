@@ -4,10 +4,10 @@
 Reproduces ``updateInvoiceState`` (InvoicePipeline.scala:93-130)
 semantics exactly, per micro-batch and per key:
 
-  * quantity-weighted running mean:
-      avg ← (avg·n + price·qty) / (n + qty), folded line by line; a
-      running quantity of 0 has no mean, so avg turns NaN (the
-      reference's double division) and is emitted as NULL;
+  * quantity-weighted mean Σ(price·qty) / Σqty over every line seen so
+    far; the state keeps both sums, so a running quantity of 0 gives NaN
+    (the reference's double division, emitted as NULL) for that batch
+    only, and the next batch's lines bring the mean back;
   * running min/max of UnitPrice (seeded min=+inf, max=4.9e-324 — the
     reference's Double.MaxValue / Double.MinPositiveValue dummy,
     InvoicePipeline.scala:96);
@@ -44,7 +44,7 @@ from bigdata_invoice_stream_analysis_spark.schemas import INVOICE_STATE_SCHEMA
 from bigdata_invoice_stream_analysis_spark.streaming.pipeline import MAX_PRICE_SEED
 
 _STATE_SCHEMA = (
-    "avg double, mn double, mx double, number_items double, "
+    "spq double, mn double, mx double, number_items double, "
     "last_updated long, lines int"
 )
 
@@ -74,9 +74,9 @@ def _invoice_fold():
         import pandas as pd
 
         if prev is not None:
-            avg, mn, mx, number_items, _last, lines = prev
+            spq, mn, mx, number_items, _last, lines = prev
         else:
-            avg, mn, mx, number_items, lines = 0.0, seed_min, seed_max, 0.0, 0
+            spq, mn, mx, number_items, lines = 0.0, seed_min, seed_max, 0.0, 0
         head_hour, customer, saw_data = 0.0, "", False
         for pdf in pdf_iter:
             if len(pdf) == 0:
@@ -90,20 +90,17 @@ def _invoice_fold():
                 )
                 customer = str(head["CustomerID"])
                 saw_data = True
-            # Line-by-line weighted-mean fold (InvoicePipeline.scala:109-114).
+            # Line-by-line sums of the weighted mean
+            # (InvoicePipeline.scala:109-114).
             for price, qty in zip(pdf["UnitPrice"], pdf["Quantity"]):
                 price, qty = float(price), float(qty)
-                total = number_items + qty
-                avg = (
-                    (avg * number_items + price * qty) / total
-                    if total
-                    else math.nan
-                )
+                spq += price * qty
                 mn = min(mn, price)
                 mx = max(mx, price)
-                number_items = total
+                number_items += qty
         if not saw_data:
             return None
+        avg = spq / number_items if number_items else math.nan
         lines += 1
         if batch_ms is None or batch_ms <= 0:
             batch_ms = time.time_ns() // 1_000_000
@@ -120,7 +117,7 @@ def _invoice_fold():
                 "CustomerID": [customer],
             }
         )
-        return (avg, mn, mx, number_items, batch_ms, lines), row
+        return (spq, mn, mx, number_items, batch_ms, lines), row
 
     return fold
 

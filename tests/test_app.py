@@ -15,7 +15,7 @@ from bigdata_invoice_stream_analysis_spark.streaming.app import (
     run_pipeline,
 )
 from bigdata_invoice_stream_analysis_spark.streaming.producer import replay_to_dir
-from bigdata_invoice_stream_analysis_spark.streaming.runtime import state_partitions
+from bigdata_invoice_stream_analysis_spark.streaming.runtime import await_all, state_partitions
 from bigdata_invoice_stream_analysis_spark.streaming.sources import file_lines_source
 
 
@@ -77,10 +77,6 @@ def _config(out_dir: str, **kw) -> PipelineConfig:
     )
 
 
-def _drain(queries) -> None:
-    for q in queries:
-        assert q.awaitTermination(120)
-        assert q.exception() is None
 
 
 def _sink_rows(spark, out_dir: str, sink: str):
@@ -112,8 +108,7 @@ def test_run_pipeline_parquet_sinks(spark, tmp_path):
     lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
     queries = run_pipeline(lines, cfg)
     assert len(queries) == 4
-    for q in queries:
-        q.awaitTermination(120)
+    await_all(queries, 120)
 
     invalid = spark.read.parquet(f"{out}/facturas_erroneas")
     assert [r.value for r in invalid.collect()] == ["too,few,fields"]
@@ -147,8 +142,7 @@ def test_run_pipeline_router_matches_four_query_topology(spark, tmp_path):
     out_b = str(tmp_path / "out_router")
     qb = run_pipeline_router(lines, _config(out_b))
     assert len(qb) == 3  # invalid + cancellations + ONE anomaly router
-    for q in (*qa, *qb):
-        q.awaitTermination(120)
+    await_all((*qa, *qb), 120)
 
     for sink in SINKS:
         assert _sink_rows(spark, out_a, sink) == _sink_rows(
@@ -186,7 +180,7 @@ def test_run_pipeline_sizes_state_partitions_per_query(
         lines, _config(str(tmp_path / "out"), legacy_state=legacy_state)
     )
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    _drain(queries)
+    await_all(queries, 120)
 
     jvm = state_partitions(spark, concurrent=4)
     assert (jvm, state_partitions(spark, python_state=True, concurrent=4)) == (2, 8)
@@ -210,7 +204,7 @@ def test_zero_quantity_invoice_does_not_stop_scoring(
     src = _replay(tmp_path, "in", chunk=6, lines=zero + LINES)
     out = str(tmp_path / "out")
     lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
-    _drain(run_pipeline(lines, _config(out, legacy_state=legacy_state)))
+    await_all(run_pipeline(lines, _config(out, legacy_state=legacy_state)), 120)
     for sink in ("anomalias_kmeans", "anomalias_bisect_kmeans"):
         flagged = {r.InvoiceNo for r in spark.read.parquet(f"{out}/{sink}").collect()}
         assert "I9" in flagged
@@ -288,7 +282,7 @@ def test_restart_keeps_checkpointed_state_partitions(
     def run(out_dir: str):
         lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
         queries = run_pipeline(lines, _config(out_dir))
-        _drain(queries)
+        await_all(queries, 120)
         return queries
 
     resumed_out = str(tmp_path / "resumed")
@@ -325,7 +319,7 @@ def test_legacy_state_restart_equals_clean_run(spark, tmp_path):
 
     def run(out_dir: str) -> None:
         lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
-        _drain(run_pipeline(lines, _config(out_dir, legacy_state=True)))
+        await_all(run_pipeline(lines, _config(out_dir, legacy_state=True)), 120)
 
     resumed_out, clean_out = str(tmp_path / "resumed"), str(tmp_path / "clean")
     _feed(staged, src, files[:1])

@@ -17,11 +17,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bigdata_invoice_stream_analysis_spark.operators.avro import (
     _Cursor,
-    encode_avro,
     parse_avro,
     read_datum,
-    write_datum,
 )
+from fixture_writers import encode_avro, write_datum
 
 RECORD_SCHEMA = {
     "type": "record",

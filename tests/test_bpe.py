@@ -18,7 +18,6 @@ from bigdata_invoice_stream_analysis_spark.operators.bpe import (
     EOW,
     bpe_encode,
     bpe_segment,
-    bpe_vocab,
     learn_bpe,
     word_frequencies,
 )
@@ -141,21 +140,6 @@ def test_encode_matches_per_word_reference(spark):
     assert [r["token"] for r in rows] == expect
 
 
-def test_vocab_report(spark):
-    wf = word_frequencies(_docs_df(spark))
-    merges = learn_bpe(wf, 20)
-    vocab = {r["token"]: r["freq"]
-             for r in bpe_vocab(wf, merges).collect()}
-    # every corpus occurrence is accounted for: sum of token freqs ==
-    # sum over words of (segments per word * word freq)
-    ranks = {p: i for i, p in enumerate(merges)}
-    ref = Counter()
-    for w, f in _ref_word_freqs(CORPUS).items():
-        for s in bpe_segment(w, ranks):
-            ref[s] += f
-    assert vocab == dict(ref)
-
-
 @settings(max_examples=8, deadline=None)
 @given(st.lists(
     st.text(alphabet="abcd ", min_size=1, max_size=30),
@@ -168,19 +152,3 @@ def test_property_spark_reference_agreement(spark, corpus):
     wf = word_frequencies(_docs_df(spark, corpus))
     assert learn_bpe(wf, 8) == _ref_learn_bpe(
         _ref_word_freqs(corpus), 8)
-
-
-def test_merges_text_roundtrip():
-    from bigdata_invoice_stream_analysis_spark.operators.bpe import (
-        merges_from_text,
-        merges_to_text,
-    )
-
-    merges = [("t", "h"), ("th", "e</w>"), ("c", "a")]
-    text = merges_to_text(merges)
-    assert text.startswith("#version")
-    assert merges_from_text(text) == merges
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="merges line"):
-        merges_from_text("a b c\n")

@@ -17,11 +17,10 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bigdata_invoice_stream_analysis_spark.operators.compression import (
-    encode_lz4_stream,
-    encode_zstd_stream,
     parse_lz4_frames,
     parse_zstd_frames,
 )
+from fixture_writers import encode_lz4_stream, encode_zstd_stream
 
 ZSTD = shutil.which("zstd")
 LZ4 = shutil.which("lz4")

@@ -172,33 +172,3 @@ def test_mbox_requires_envelope():
 
     with pytest.raises(ValueError, match="envelope"):
         split_mbox("From: not-an-envelope\r\n\r\nx")
-
-
-def test_mbox_operator(spark):
-    from bigdata_invoice_stream_analysis_spark.operators.eml import (
-        mbox_corpus_profile,
-    )
-
-    broken_msg_mbox = (
-        "From x@example.com Mon Aug 10 09:00:00 2026\r\n"
-        "From: a@b.c\r\n"
-        'Content-Type: multipart/mixed; boundary="gone"\r\n\r\nx\r\n'
-        "From y@example.com Mon Aug 10 09:05:00 2026\r\n"
-        + encode_eml(subject="survivor")
-    )
-    files = spark.createDataFrame(
-        [(0, MBOX), (1, broken_msg_mbox), (2, "not an mbox")],
-        "file_id long, text string",
-    )
-    rows = mbox_corpus_profile(files).collect()
-    by = {}
-    for r in rows:
-        by.setdefault(r["file_id"], []).append(r)
-    assert len(by[0]) == 2
-    assert {r["subject"] for r in by[0] if r["ok"]} == \
-        {"first", "second"}
-    # one broken message must not cost its neighbor
-    one = sorted(by[1], key=lambda r: r["msg_idx"])
-    assert not one[0]["ok"] and "boundary" in one[0]["error"]
-    assert one[1]["ok"] and one[1]["subject"] == "survivor"
-    assert by[2][0]["msg_idx"] == -1

@@ -73,8 +73,7 @@ def _run(spark, src: str, build, ckpt, partitions: int = 2) -> dict:
             build(stream), collect, output_mode="update",
             checkpoint=str(ckpt), trigger_available_now=True,
         )
-    assert q.awaitTermination(120), "drain did not finish"
-    assert q.exception() is None
+    runtime.await_all([q], 120)
     ops = q.lastProgress["stateOperators"]
     assert {op["numShufflePartitions"] for op in ops} == {partitions}
     return rows
@@ -201,3 +200,23 @@ def test_zero_quantity_invoice_has_no_mean(spark, tmp_path, build):
         (1, "NEXT"): 2.5,
     }
     assert got[(0, "Z5")]["NumberItems"] == 0.0
+
+
+@pytest.mark.parametrize(
+    "build",
+    [P.invoice_updates, P.exact_invoice_state, state.apply_invoice_state],
+    ids=["invoice_updates", "exact_invoice_state", "apply_invoice_state"],
+)
+def test_mean_recovers_after_quantity_sums_to_zero(spark, tmp_path, build):
+    """Quantities summing to 0 leave that batch's mean NULL, but the
+    invoice's next batch gets Σ(price·qty)/Σqty over every line again:
+    (5·2 - 5·4 + 3·6) / 3."""
+    batches = [
+        [(_at("9:00"), "R", 5, 2.0, "7"), (_at("9:05"), "R", -5, 4.0, "7")],
+        [(_at("10:00"), "R", 3, 6.0, "7")],
+    ]
+    src = _stage(tmp_path / "in", batches)
+    got = _run(spark, src, build, tmp_path / "ckpt", partitions=1)
+    assert got[(0, "R")]["AvgUnitPrice"] is None
+    assert got[(1, "R")]["AvgUnitPrice"] == pytest.approx(8 / 3)
+    assert got[(1, "R")]["NumberItems"] == 3.0

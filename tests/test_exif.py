@@ -176,10 +176,8 @@ def test_wrong_type_ifd_pointer_raises_valueerror_not_typeerror():
 def test_standalone_tiff_profile():
     """Baseline .tif files route through the SAME IFD walk: geometry
     from tags 0x0100/0x0101 plus the GPS bit, both byte orders."""
-    from bigdata_invoice_stream_analysis_spark.operators.exif import (
-        encode_tiff,
-        parse_tiff,
-    )
+    from bigdata_invoice_stream_analysis_spark.operators.exif import parse_tiff
+    from fixture_writers import encode_tiff
 
     for bo in ("II", "MM"):
         t = parse_tiff(encode_tiff(640, 480, orientation=3, gps=True,

@@ -19,7 +19,6 @@ from bigdata_invoice_stream_analysis_spark.operators.imagehash import (
     ahash,
     dhash,
     image_phash,
-    near_dup_pairs,
 )
 
 
@@ -91,59 +90,6 @@ def test_dhash_scale_invariance_exact_multiples():
 def test_tiny_image_rejected():
     with pytest.raises(ValueError):
         dhash(bytes(range(8)), 4, 2, 1)
-
-
-def _brute_pairs(hashes, d):
-    out = set()
-    ids = sorted(hashes)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            dist = bin(
-                (hashes[a] ^ hashes[b]) & ((1 << 64) - 1)
-            ).count("1")
-            if dist <= d:
-                out.add((a, b, dist))
-    return out
-
-
-def test_near_dup_pairs_vs_brute_force(spark):
-    rng = random.Random(23)
-    hashes = {}
-    base = rng.getrandbits(64)
-    for i in range(12):  # a near-dup cluster around base
-        h = base
-        for _ in range(rng.randint(0, 6)):
-            h ^= 1 << rng.randrange(64)
-        hashes[i] = h
-    for i in range(12, 40):  # far-apart random hashes
-        hashes[i] = rng.getrandbits(64)
-
-    def signed(v):
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    df = spark.createDataFrame(
-        [(i, signed(h)) for i, h in hashes.items()],
-        "media_id long, dhash long",
-    )
-    got = {
-        (r["id_a"], r["id_b"], r["distance"])
-        for r in near_dup_pairs(df, max_distance=6).collect()
-    }
-    assert got == _brute_pairs(hashes, 6)
-    # single emission per pair (first-matching-band ownership)
-    rows = near_dup_pairs(df, max_distance=6).collect()
-    assert len(rows) == len(got)
-
-
-def test_near_dup_plan_no_cartesian_no_python(spark):
-    df = spark.createDataFrame(
-        [(0, 1), (1, 2)], "media_id long, dhash long")
-    plan = (
-        near_dup_pairs(df)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "CartesianProduct" not in plan
-    assert "PythonUDF" not in plan
 
 
 def test_image_phash_operator_pgm_png(spark):

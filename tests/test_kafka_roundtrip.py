@@ -29,14 +29,63 @@ from bigdata_invoice_stream_analysis_spark.plans.queries import (  # noqa: E402
     QUERIES,
     raw_lines,
 )
-from bigdata_invoice_stream_analysis_spark.streaming.sinks import (  # noqa: E402
-    from_kafka_records,
-    to_kafka_records,
-)
+from bigdata_invoice_stream_analysis_spark.streaming.sinks import to_kafka_records  # noqa: E402
 from bigdata_invoice_stream_analysis_spark.streaming.sources import (  # noqa: E402
     _normalize_lines,
     decode_kafka_records,
 )
+
+
+def from_kafka_records(
+    records: DataFrame,
+    payload_schema,
+    legacy_tuple: bool = False,
+    with_headers: bool = False,
+) -> DataFrame:
+    """Inverse of ``to_kafka_records`` — what a consumer of the four
+    output topics runs after the Kafka source's binary→string cast
+    (no stage of the pipeline reads its own topics, so the reader lives
+    here, as the reference the writer is checked against):
+    value JSON (or the legacy ``Invoice(a,b,...)`` tuple format) back
+    to typed payload columns, key kept as string. ``payload_schema`` is
+    the StructType of the original non-key columns, in order.
+
+    Caveat carried over from the wire format itself: the legacy tuple
+    has no quoting or null marker (the reference emits Scala's
+    ``Invoice.toString``, InvoicePipeline.scala:141,147), so it only
+    round-trips payloads with non-null, comma-free fields — exactly the
+    reference's Invoice rows. The JSON value (default) round-trips
+    nulls and arbitrary strings."""
+    value = F.col("value").cast("string")
+    if legacy_tuple:
+        inner = F.regexp_extract(value, r"^Invoice\((.*)\)$", 1)
+        parts = F.split(inner, ",")
+        cols = [
+            parts.getItem(i).cast(f.dataType).alias(f.name)
+            for i, f in enumerate(payload_schema.fields)
+        ]
+    else:
+        parsed = F.from_json(value, payload_schema)
+        cols = [parsed[f.name].alias(f.name) for f in payload_schema.fields]
+    if with_headers:
+        # Kafka source shape (includeHeaders=true): array<struct<key,
+        # value binary>> → map<string,string>; headers are UTF-8 text
+        # in this pipeline's convention. Keys repeat on the wire, so
+        # each distinct key maps to its LAST value (Kafka's
+        # Headers.lastHeader) instead of failing the batch with
+        # DUPLICATED_MAP_KEY.
+        headers = F.col("headers")
+        keys = F.array_distinct(F.transform(headers, lambda h: h["key"]))
+        cols.append(
+            F.map_from_arrays(
+                keys,
+                F.transform(keys, lambda k: F.element_at(
+                    F.filter(headers, lambda h: h["key"] == k), -1
+                )["value"].cast("string")),
+            ).alias("headers")
+        )
+    return records.select(F.col("key").cast("string").alias("key"), *cols)
+
 
 
 def _to_wire(records):

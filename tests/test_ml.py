@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdata_invoice_stream_analysis_spark.ml.anomaly import (
-    anomalies,
     load_model,
     load_threshold,
     save_model,
@@ -79,7 +78,8 @@ def test_threshold_flags_planted_outliers(blobs, tmp_path):
     thr = train_threshold(inliers, model, rank=10)
     assert thr > 0
 
-    flagged = {r["id"] for r in anomalies(blobs, model, thr).select("id").collect()}
+    scored = score(blobs, model).filter(F.col("dist") > thr)
+    flagged = {r["id"] for r in scored.select("id").collect()}
     assert {f"out{i}" for i in range(5)} <= flagged
     # at most the 9 rank-slack inliers may be over threshold
     assert len(flagged - {f"out{i}" for i in range(5)}) < 10

@@ -629,22 +629,6 @@ def test_decode_mjpeg_frames_corrupt_tables_are_value_errors():
         M.decode_mjpeg_frames(zero)
 
 
-def test_decode_media_mp4_dispatch():
-    """decode_media('mp4') is no longer a stub: it returns the decoded
-    MJPEG frame list for fixture-covered containers."""
-    from bigdata_invoice_stream_analysis_spark.operators.jpeg import encode_jpeg
-    from bigdata_invoice_stream_analysis_spark.operators.multimodal import (
-        decode_media,
-    )
-
-    payload = M.encode_minimal_mp4(
-        frames=[encode_jpeg(bytes([60] * 64), 8, 8, quality=75)]
-    )
-    out = decode_media(payload, "mp4")
-    assert out["kind"] == "video" and out["n_frames"] == 1
-    assert bytes(out["frames"][0]["pixels"]) == bytes([60] * 64)
-
-
 def test_corrupt_table_counts_bounded_not_hung():
     """A lying count field (stts run of 4 billion, stsz/stco/stsc/
     stss entry counts beyond their box, trun sample counts beyond the

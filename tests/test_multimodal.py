@@ -35,29 +35,6 @@ def test_extract_byte_stats(media):
     assert rows[1]["kind"] == "image"
 
 
-def test_decode_media_stubbed_for_heavy_codecs():
-    # pnm/png/wav/jpeg are REAL from-scratch decoders (tests below +
-    # test_jpeg.py) and mp4 dispatches to the MJPEG-in-MP4 path since
-    # r5 — the only remaining honest stubs are formats with no codec
-    # at all, and inter-frame video codecs inside a valid container.
-    with pytest.raises(NotImplementedError):
-        MM.decode_media(b"\x00\x01", "heic")
-    # a VALID container whose samples are not JPEG = a real inter-frame
-    # codec — that still honestly raises
-    from bigdata_invoice_stream_analysis_spark.operators.mp4 import (
-        encode_minimal_mp4,
-    )
-
-    with pytest.raises(NotImplementedError):
-        MM.decode_media(encode_minimal_mp4(frame_sizes=[64, 64]), "mp4")
-    # malformed input to a real codec is a codec ValueError, not
-    # NotImplementedError
-    with pytest.raises(ValueError):
-        MM.decode_media(b"\xff\xd8\xff", "jpeg")
-    with pytest.raises(ValueError):
-        MM.decode_media(b"\x00\x00\x00\x18ftyp", "mp4")
-
-
 def test_resize_stub_rewrites_meta(media):
     out = MM.resize_stub(media, 32, 16)
     assert out.schema.simpleString() == MM.MEDIA_SCHEMA.simpleString()
@@ -147,7 +124,7 @@ def test_audio_chunk_stub_spans(spark):
 
 
 # ---------------------------------------------------------------------------
-# Real stdlib codecs (PNM + PNG) — decode_media's non-stub dispatch
+# Real stdlib codecs (PNM + PNG)
 # ---------------------------------------------------------------------------
 
 
@@ -161,7 +138,7 @@ def _raster(w, h, channels=1, seed=3):
 def test_pnm_roundtrip_p5_p6():
     for ch in (1, 3):
         px = _raster(7, 5, ch)
-        img = MM.decode_media(MM.encode_pnm(7, 5, px, channels=ch), "pgm")
+        img = MM.decode_pnm(MM.encode_pnm(7, 5, px, channels=ch))
         assert (img["width"], img["height"], img["channels"]) == (7, 5, ch)
         assert img["pixels"] == px
 
@@ -189,7 +166,7 @@ def test_png_roundtrip_all_filters_all_colortypes():
         px = _raster(6, 4, channels, seed=channels)
         for ftype in range(5):
             payload = MM.encode_png(6, 4, px, channels=channels, filter_type=ftype)
-            img = MM.decode_media(payload, "png")
+            img = MM.decode_png(payload)
             assert (img["width"], img["height"], img["channels"]) == (6, 4, channels)
             assert img["pixels"] == px, f"filter {ftype} channels {channels}"
 

@@ -1,11 +1,9 @@
 """n-gram LM statistics (functions/ngram_lm.py): bigram explosion
-vs a Python reference, integer support stats hand-computed on a toy
-corpus, add-k log-prob vs an exact reference, and the zero-Python
-plan pin."""
+and trigram explosion vs a Python reference, integer support stats
+hand-computed on a toy corpus, and the zero-Python plan pin."""
 
 from __future__ import annotations
 
-import math
 import re
 import sys
 from collections import Counter
@@ -14,10 +12,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bigdata_invoice_stream_analysis_spark.functions.ngram_lm import (
-    bigram_logprob,
-    doc_bigrams,
+    doc_ngrams,
     lm_support,
-    train_bigram_counts,
 )
 
 DOCS = [
@@ -42,7 +38,7 @@ def test_doc_bigrams_matches_reference(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     got = sorted(
         (r["doc_id"], r["w1"], r["w2"])
-        for r in doc_bigrams(df).collect()
+        for r in doc_ngrams(df, 2).collect()
     )
     want = sorted(
         (d, w1, w2) for d, t in DOCS for w1, w2 in _ref_bigrams(t)
@@ -72,41 +68,6 @@ def test_lm_support_hand_computed(spark):
     assert got[3] == (0, 0, 0) and got[4] == (0, 0, 0)
 
 
-def test_train_min_count_prunes(spark):
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    full = train_bigram_counts(df)
-    pruned = train_bigram_counts(df, min_count=2)
-    corpus = Counter(bg for _, t in DOCS for bg in _ref_bigrams(t))
-    assert full.count() == len(corpus)
-    assert pruned.count() == sum(1 for c in corpus.values() if c >= 2)
-
-
-def test_bigram_logprob_vs_reference(spark):
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    model = train_bigram_counts(df)
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["avg_logprob"])
-        for r in bigram_logprob(df, model, k=1.0).collect()
-    }
-    corpus = Counter(bg for _, t in DOCS for bg in _ref_bigrams(t))
-    ctx = Counter()
-    for (w1, _), c in corpus.items():
-        ctx[w1] += c
-    v = len({w2 for _, w2 in corpus})
-    for d, t in DOCS:
-        bgs = _ref_bigrams(t)
-        if not bgs:
-            assert d not in got
-            continue
-        lps = [
-            math.log((corpus[b] + 1.0) / (ctx[b[0]] + v))
-            for b in bgs
-        ]
-        n, lp = got[d]
-        assert n == len(bgs)
-        assert abs(lp - sum(lps) / len(lps)) < 1e-9
-
-
 def test_zero_python_plan(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     plan = lm_support(df)._jdf.queryExecution().executedPlan().toString()
@@ -115,10 +76,6 @@ def test_zero_python_plan(spark):
 
 
 def test_doc_trigrams_matches_reference(spark):
-    from bigdata_invoice_stream_analysis_spark.functions.ngram_lm import (
-        doc_ngrams,
-    )
-
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     got = sorted(
         (r["doc_id"], r["w1"], r["w2"], r["w3"])

@@ -7,12 +7,11 @@ import pytest
 from bigdata_invoice_stream_analysis_spark.operators.ooxml import (
     decode_entities,
     encode_minimal_docx,
-    encode_minimal_pptx,
-    encode_minimal_xlsx,
     ooxml_document_profile,
     parse_ooxml,
     xml_tag_texts,
 )
+from fixture_writers import encode_minimal_pptx, encode_minimal_xlsx
 
 
 def test_entity_decoding_is_bounded():

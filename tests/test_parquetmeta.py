@@ -279,7 +279,6 @@ def test_spark_footer_profile_and_chunks(spark):
     )
     from bigdata_invoice_stream_analysis_spark.operators.parquetmeta import (
         parquet_column_chunks,
-        parquet_footer_profile,
     )
 
     ensure_package_on_workers(spark)
@@ -293,15 +292,6 @@ def test_spark_footer_profile_and_chunks(spark):
         (2, bytearray(b"not a parquet file at all")),
     ]
     files = spark.createDataFrame(blobs, "file_id long, payload binary")
-
-    prof = {r["file_id"]: r for r
-            in parquet_footer_profile(files).collect()}
-    assert prof[0]["ok"] and prof[0]["num_rows"] == 4
-    assert prof[0]["num_row_groups"] == 2
-    assert prof[0]["num_leaf_columns"] == 2
-    assert prof[0]["max_group_rows"] == 2
-    assert prof[1]["ok"] and prof[1]["num_rows"] == 1
-    assert not prof[2]["ok"] and prof[2]["error"]
 
     chunks = parquet_column_chunks(files).collect()
     assert len(chunks) == 5  # file0: 2 groups x 2 cols; file1: 1

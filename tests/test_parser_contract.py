@@ -20,10 +20,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from bigdata_invoice_stream_analysis_spark.operators.avro import (
-    encode_avro,
-    parse_avro,
-)
+from bigdata_invoice_stream_analysis_spark.operators.avro import parse_avro
 from bigdata_invoice_stream_analysis_spark.operators.parquetmeta import (
     CT_I32,
     _Writer,
@@ -36,6 +33,13 @@ from bigdata_invoice_stream_analysis_spark.operators.pdf import (
 )
 from bigdata_invoice_stream_analysis_spark.operators.tensorfile import (
     parse_npy,
+)
+from fixture_writers import (
+    _zigzag,
+    encode_avro,
+    encode_lz4_stream,
+    encode_tiff,
+    encode_zstd_stream,
 )
 
 
@@ -114,8 +118,6 @@ def _fixtures_media() -> list[tuple[str, object, bytes]]:
         parse_ico,
     )
     from bigdata_invoice_stream_analysis_spark.operators.compression import (
-        encode_lz4_stream,
-        encode_zstd_stream,
         parse_lz4_frames,
         parse_zstd_frames,
     )
@@ -129,7 +131,6 @@ def _fixtures_media() -> list[tuple[str, object, bytes]]:
     )
     from bigdata_invoice_stream_analysis_spark.operators.exif import (
         encode_exif_jpeg,
-        encode_tiff,
         parse_exif,
         parse_tiff,
     )
@@ -342,10 +343,6 @@ def test_avro_corrupt_deflate_block_is_valueerror():
         {"type": "record", "name": "R",
          "fields": [{"name": "x", "type": "long"}]},
         [{"x": 1}], codec="deflate")
-    from bigdata_invoice_stream_analysis_spark.operators.avro import (
-        _zigzag,
-    )
-
     sync = good[-16:]
     # container head ends right after the first sync marker
     head_end = good.index(sync) + 16
@@ -367,10 +364,7 @@ def test_avro_wrong_shape_schema_is_valueerror():
                             sort_keys=True,
                             separators=(",", ":")).encode()
     # rebuild the container with the truncated schema
-    from bigdata_invoice_stream_analysis_spark.operators.avro import (
-        MAGIC,
-        _zigzag,
-    )
+    from bigdata_invoice_stream_analysis_spark.operators.avro import MAGIC
 
     out = bytearray(MAGIC)
     meta = {"avro.codec": b"null", "avro.schema": bad_schema}
@@ -413,7 +407,6 @@ _FUZZ_EXEMPT: dict[str, str] = {
     "hls.parse_attribute_list": "line helper; fuzzed through parse_m3u8",
     "pdf.parse_object": "helper; fuzzed through parse_pdf",
     "pdf.parse_cmap": "helper; fuzzed through parse_pdf",
-    "pdf.parse_tounicode": "helper; fuzzed through parse_pdf",
     "orcmeta.parse_wire": "helper; fuzzed through parse_orc_footer",
     "mpegaudio.parse_id3v2_size": "syncsafe-int helper; via parse_mp3",
     "subtitles.parse_vtt": "fuzzed through parse_subtitles dispatch",

@@ -23,9 +23,9 @@ from bigdata_invoice_stream_analysis_spark.operators.pdf import (
     decode_stream,
     encode_minimal_pdf,
     extract_text,
+    parse_cmap,
     parse_object,
     parse_pdf,
-    parse_tounicode,
     pdf_text_pages,
 )
 
@@ -219,7 +219,7 @@ endcmap
 
 
 def test_parse_tounicode_bfchar_bfrange():
-    m = parse_tounicode(_CMAP)
+    m = parse_cmap(_CMAP)[1]
     assert m[0x01] == "A"
     assert m[0x02] == "Hi"          # ligature-style multi-char target
     assert m[0x10] == "a" and m[0x11] == "b" and m[0x12] == "c"

@@ -262,7 +262,63 @@ def test_prefix_filter_matches_exact_jaccard(spark):
 # PQ: encode determinism and ADC consistency
 # ---------------------------------------------------------------------------
 
+def pq_encode_literal(
+    df,
+    codebooks: list[list[tuple[int, list[int]]]],
+    vec_col: str = "qv",
+):
+    """The plan-literal PQ encode: per-subspace nearest-centroid
+    POSITION (0-based, in the cid-sorted codebook) as ``code_{m}`` int
+    columns, argmin of ||c||^2 - 2*x.c as one ``aggregate`` fold over a
+    literal codebook, ties to the lowest position. An independent
+    expression-form reference for the graded ``pq_encode_np`` path."""
+    sub_len = len(codebooks[0][0][1])
+    code_cols = []
+    for m, book in enumerate(codebooks):
+        ordered = sorted(book)
+        cents = F.array(
+            *[
+                F.array(*[F.lit(int(x)).cast("long") for x in cv])
+                for _, cv in ordered
+            ]
+        )
+        c2s = F.array(
+            *[
+                F.lit(sum(int(x) * int(x) for x in cv)).cast("long")
+                for _, cv in ordered
+            ]
+        )
+        sub = F.slice(F.col(vec_col), m * sub_len + 1, sub_len)
+
+        def score(p, cents=cents, c2s=c2s, sub=sub):
+            dot = F.aggregate(
+                F.zip_with(sub, F.element_at(cents, p + 1), lambda a, b: a * b),
+                F.lit(0).cast("long"),
+                lambda acc, v: acc + v,
+            )
+            return F.element_at(c2s, p + 1) - F.lit(2) * dot
+
+        # Evaluate each centroid's score exactly once, then argmin via
+        # lexicographic struct-min (ties -> lowest position = lowest
+        # cid, matching the oracle's (dist, cid) ordering).
+        positions = F.sequence(F.lit(0), F.lit(len(ordered) - 1))
+        scores = F.transform(positions, lambda p: score(p))
+        best = F.array_min(
+            F.zip_with(
+                scores,
+                positions,
+                lambda s, p: F.struct(s.alias("d"), p.cast("int").alias("pos")),
+            )
+        )
+        code_cols.append(best["pos"].alias(f"code_{m}"))
+    return df.select("*", *code_cols)
+
+
+
 def test_pq_encode_and_adc(spark):
+    """The graded PQ path on a hand-checkable codebook: pq_encode_np
+    codes, then ADC through a query's lookup table (pq_adc_lut +
+    adc_from_lut_codes)."""
     from bigdata_invoice_stream_analysis_spark.operators import similarity as SIM
 
     # 4-dim vectors, 2 subspaces of 2 dims, 2 centroids per subspace.
@@ -276,17 +332,19 @@ def test_pq_encode_and_adc(spark):
         [(100, [10, 0]), (200, [0, 10])],   # subspace 0
         [(100, [0, 10]), (200, [10, 0])],   # subspace 1
     ]
-    enc = SIM.pq_encode_literal(df, books, "qv")
-    codes = {r["vec_id"]: (r["code_0"], r["code_1"]) for r in enc.collect()}
+    enc = SIM.pq_encode_np(df, books, "qv")
+    codes = {r["vec_id"]: tuple(r["codes"]) for r in enc.collect()}
     # Codes are POSITIONS in the cid-sorted book: cid 100 -> 0, 200 -> 1.
     assert codes[1] == (0, 0) and codes[2] == (0, 0)
     assert codes[3] == (1, 1)
     # ADC distance of vector 1's own vector against codes of 3 is the
     # distance to 3's reconstructed centroids: (10,0,0,10)->(0,10,10,0)
-    q = spark.createDataFrame([(1, [10, 0, 0, 10])], "qid long, q array<long>")
+    lut = SIM.pq_adc_lut([10, 0, 0, 10], books)
+    q = spark.createDataFrame([(1, lut)], "qid long, lut array<long>")
     adc = (
         enc.crossJoin(q)
-        .select("vec_id", SIM.pq_adc_dist(F.col("q"), books).alias("d"))
+        .select("vec_id", SIM.adc_from_lut_codes(
+            F.col("lut"), F.col("codes"), 2, 2).alias("d"))
     )
     d = {r["vec_id"]: r["d"] for r in adc.collect()}
     assert d[1] == 0 and d[2] == 0          # same cell -> reconstruction = query
@@ -308,7 +366,7 @@ def test_pq_np_encode_matches_literal_encode(spark):
     ]
     lit = {
         r["vec_id"]: tuple(r[f"code_{m}"] for m in range(8))
-        for r in SIM.pq_encode_literal(base, books, "qv").collect()
+        for r in pq_encode_literal(base, books, "qv").collect()
     }
     np_ = {
         r["vec_id"]: tuple(r["codes"])

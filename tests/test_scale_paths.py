@@ -55,6 +55,7 @@ def test_legacy_state_on_rocksdb(spark, tmp_path):
     replay_to_dir(str(raw), src, chunk=2)
 
     from bigdata_invoice_stream_analysis_spark.streaming.runtime import (
+        await_all,
         rocksdb_provider,
     )
 
@@ -71,7 +72,7 @@ def test_legacy_state_on_rocksdb(spark, tmp_path):
             updates, collect, output_mode="update",
             checkpoint=str(tmp_path / "ckpt"), trigger_available_now=True,
         )
-        q.awaitTermination(120)
+        await_all([q], 120)
 
     assert set(rows) == {"I1", "I2"}
     assert rows["I1"].AvgUnitPrice == pytest.approx((2 * 10 + 1 * 30) / 3)
@@ -91,29 +92,6 @@ def test_partial_aggregation_before_shuffle(spark, sf_dir):
     )
     assert "Exchange hashpartitioning(InvoiceNo" in plan, plan
     assert "partial_" in plan, plan  # map-side combine present
-
-
-def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    """write_partitioned round-trips and a partition-column filter is
-    applied at PLANNING time: the scan's PartitionFilters carries the
-    predicate (directory pruning — excluded partitions are never read)
-    and it does not degrade into a post-scan Filter."""
-    from bigdata_invoice_stream_analysis_spark.sources.tables import write_partitioned
-
-    ev = load_table(spark, sf_dir, "events")
-    out = str(tmp_path / "events_part")
-    write_partitioned(ev, out, ["event_type"], sort_within=["user_id"])
-
-    back = spark.read.parquet(out)
-    assert back.count() == ev.count()
-
-    pruned = back.filter(F.col("event_type") == "error").select("event_id")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "event_type" in plan.split(
-        "PartitionFilters", 1
-    )[1].split("]", 1)[0], "partition predicate must prune at the source"
-    expected = ev.filter(F.col("event_type") == "error").count()
-    assert pruned.count() == expected
 
 
 def test_aqe_splits_skewed_join(spark, tmp_path):

@@ -35,7 +35,13 @@ def vec_df(spark):
 
 def test_quant_cosine_matches_numpy(vec_df):
     df, vecs = vec_df
-    out = SIM.cosine_dup_pairs(df, threshold=-1.1).collect()
+    q = df.select(F.col("vec_id").alias("id"),
+                  SIM.quantize(F.col("embedding")).alias("qv"))
+    pairs = q.alias("a").join(q.alias("b"), F.col("a.id") < F.col("b.id"))
+    out = pairs.select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+        SIM.quant_cosine(F.col("a.qv"), F.col("b.qv")).alias("cosine"),
+    ).collect()
     got = {(r["id_a"], r["id_b"]): r["cosine"] for r in out}
     q = np.round(vecs.astype(np.float64) * SIM.QUANT_SCALE)
     for (a, b), c in list(got.items())[:50]:
@@ -70,12 +76,6 @@ def test_ivf_same_cell_neighbor_found(vec_df):
     ).collect()
     # vec 1 is near-identical to vec 0 → identical cell → rank 1
     assert out[0]["neighbor_id"] == 1 and out[0]["rank"] == 1
-
-
-def test_cosine_dup_pairs_planted(vec_df):
-    df, _ = vec_df
-    out = SIM.cosine_dup_pairs(df, threshold=0.99).collect()
-    assert {(r["id_a"], r["id_b"]) for r in out} == {(0, 1)}
 
 
 def test_sign_lsh_pairs_matches_bruteforce_on_planted(vec_df):

@@ -241,9 +241,7 @@ def test_pdf_triage_rows():
 
 
 def test_tiff_triage_row():
-    from bigdata_invoice_stream_analysis_spark.operators.exif import (
-        encode_tiff,
-    )
+    from fixture_writers import encode_tiff
     from bigdata_invoice_stream_analysis_spark.operators.sniff import triage
 
     row = triage(encode_tiff(800, 600, gps=True, byte_order="MM"))
@@ -264,10 +262,8 @@ def test_triage_new_table_and_tensor_formats():
     import pyarrow.ipc as ipc
     import pyarrow.orc as pa_orc
 
-    from bigdata_invoice_stream_analysis_spark.operators.avro import (
+    from fixture_writers import (
         encode_avro,
-    )
-    from bigdata_invoice_stream_analysis_spark.operators.compression import (
         encode_lz4_stream,
         encode_zstd_stream,
     )

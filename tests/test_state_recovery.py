@@ -126,6 +126,7 @@ def test_state_v2_survives_restart(spark, tmp_path):
     both runs, proving the RocksDB snapshot restore works end-to-end
     through the miniproto wire (state server re-created per query)."""
     from bigdata_invoice_stream_analysis_spark.streaming.runtime import (
+        await_all,
         rocksdb_provider,
     )
 
@@ -143,7 +144,7 @@ def test_state_v2_survives_restart(spark, tmp_path):
             updates, collect, output_mode="update", checkpoint=str(ckpt),
             trigger_available_now=True,
         )
-        q.awaitTermination(120)
+        await_all([q], 120)
         return {r.InvoiceNo: r for r in rows}
 
     with rocksdb_provider(spark):

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from bigdata_invoice_stream_analysis_spark.streaming import pipeline as P
 from bigdata_invoice_stream_analysis_spark.streaming import scoring, sinks, state
 from bigdata_invoice_stream_analysis_spark.streaming.producer import replay_to_dir
+from bigdata_invoice_stream_analysis_spark.streaming.runtime import await_all
 from bigdata_invoice_stream_analysis_spark.streaming.sources import file_lines_source
 
 
@@ -66,12 +67,9 @@ def run_collect(spark, df, output_mode="update", checkpoint=None):
         df, collect, output_mode=output_mode, checkpoint=checkpoint,
         trigger_available_now=True,
     )
-    # awaitTermination returns False on timeout WITHOUT raising — under
-    # heavy machine load a silent timeout left `batches` incomplete and
-    # failed downstream asserts confusingly. Make the timeout loud.
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming drain did not finish within 300s")
+    # A silent timeout would leave `batches` incomplete and fail the
+    # downstream asserts confusingly: await_all raises instead.
+    await_all([q], 300)
     return batches
 
 
@@ -106,84 +104,11 @@ def test_cancellation_window_counts(spark, stream_dir):
     assert all(n <= 2 for _, n in rows)
 
 
-def test_customer_sessions(spark, stream_dir):
-    """Native session_window sessionization: 30-min gap per customer.
-    Customer 7's good lines land at 9:15, 9:20 / 10:00 / 11:30 / 23:59
-    → sessions A (two lines), B, C; the 23:59 line pushes the watermark
-    past A-C (append mode emits only closed sessions, so 23:59's own
-    session stays open and unemitted)."""
-    lines = file_lines_source(spark, stream_dir, max_files_per_trigger=1)
-    sessions = P.customer_sessions(
-        P.good_purchases(lines), gap="30 minutes", watermark="10 minutes"
-    )
-    batches = run_collect(spark, sessions, output_mode="append")
-    rows = sorted(
-        (r.session_start.strftime("%H:%M"), r.session_end.strftime("%H:%M"),
-         r.n_lines, float(r.n_items), r.n_invoices)
-        for _, bat in batches for r in bat
-    )
-    assert rows == [
-        ("09:15", "09:50", 2, 3.0, 1),   # I1 ×2, window end = last event + gap
-        ("10:00", "10:30", 1, 5.0, 1),   # I2
-        ("11:30", "12:00", 1, 3.0, 1),   # I1 again, new session
-    ]
-
-
-def test_deduped_lines_across_batches(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: a line replayed in a later
-    micro-batch (at-least-once redelivery) is emitted once; distinct
-    lines all survive; an unparseable-time line passes through."""
-    d = tmp_path / "chunks"
-    d.mkdir()
-    dup = line("55", 1, "1/4/2011 9:00", "2.0")
-    (d / "chunk-000000.txt").write_text(
-        "\n".join([dup, line("56", 1, "1/4/2011 9:05", "3.0")]) + "\n"
-    )
-    (d / "chunk-000001.txt").write_text(
-        "\n".join([dup, line("57", 1, "1/4/2011 9:10", "4.0"), "no,time,here"]) + "\n"
-    )
-    lines_df = file_lines_source(spark, str(d), max_files_per_trigger=1)
-    deduped = P.deduped_lines(lines_df, watermark="1 hour")
-    batches = run_collect(spark, deduped, output_mode="append")
-    got = sorted(r.value for _, bat in batches for r in bat)
-    assert got == sorted([
-        dup,
-        line("56", 1, "1/4/2011 9:05", "3.0"),
-        line("57", 1, "1/4/2011 9:10", "4.0"),
-        "no,time,here",
-    ])
-
-
-def test_cancellation_matches(spark, tmp_path):
-    """Stream-stream interval join: cancellations match the purchase
-    lines of their base invoice within 2 h; older purchases don't."""
-    d = tmp_path / "chunks"
-    d.mkdir()
-    (d / "chunk-000000.txt").write_text(
-        "\n".join([
-            line("77", 2, "1/4/2011 9:00", "10.0"),
-            line("77", 1, "1/4/2011 9:30", "5.0"),
-            line("C77", 1, "1/4/2011 10:00", "0.0"),   # within 2 h of both
-            line("88", 1, "1/4/2011 8:00", "3.0"),
-            line("C88", 1, "1/4/2011 11:00", "0.0"),   # 3 h later: no match
-            line("99", 1, "1/4/2011 23:00", "1.0"),    # watermark pusher
-        ]) + "\n"
-    )
-    lines = file_lines_source(spark, str(d))
-    matches = P.cancellation_matches(lines, watermark="10 minutes", within="2 hours")
-    batches = run_collect(spark, matches, output_mode="append")
-    got = sorted(
-        (r.InvoiceNo, r.purchase_ts.strftime("%H:%M"), r.cancel_ts.strftime("%H:%M"))
-        for _, bat in batches for r in bat
-    )
-    assert got == [("77", "09:00", "10:00"), ("77", "09:30", "10:00")]
-
-
 def test_invoice_updates_match_batch(spark, stream_dir):
     """Train/serve consistency: the streaming update-mode aggregation's
     final state equals the batch aggregation over the same lines."""
     lines = file_lines_source(spark, stream_dir, max_files_per_trigger=1)
-    updates = P.invoice_updates(P.good_purchases(lines), weighted_avg=True)
+    updates = P.invoice_updates(P.good_purchases(lines))
     batches = run_collect(spark, updates, output_mode="update")
     final = {}
     for _, rows in batches:
@@ -197,9 +122,7 @@ def test_invoice_updates_match_batch(spark, stream_dir):
     )
     expected = {
         r.InvoiceNo: r
-        for r in P.invoice_updates(
-            P.good_purchases(batch_lines), weighted_avg=True
-        ).collect()
+        for r in P.invoice_updates(P.good_purchases(batch_lines)).collect()
     }
     assert set(final) == set(expected) == {"I1", "I2", "I5"}
     for k in expected:
@@ -244,7 +167,7 @@ def test_stream_anomaly_scoring(spark, stream_dir):
     exactly the far-from-centroid invoices."""
     centers = [[2.0, 2.0, 2.0, 10.0, 5.0], [20.0, 10.0, 30.0, 10.0, 4.0]]
     lines = file_lines_source(spark, stream_dir, max_files_per_trigger=1)
-    updates = P.invoice_updates(P.good_purchases(lines), weighted_avg=True)
+    updates = P.invoice_updates(P.good_purchases(lines))
     flagged = scoring.anomalies_with_centroids(updates, centers, threshold=9.0)
     batches = run_collect(spark, flagged, output_mode="update")
     got = {r.InvoiceNo for _, rows in batches for r in rows}
@@ -272,14 +195,6 @@ def test_scoring_matches_numpy(spark):
         d = ((c - v) ** 2).sum(axis=1)
         assert r.prediction == int(d.argmin())
         assert r.dist == pytest.approx(float(d.min()))
-
-
-def test_rate_source_shape(spark):
-    from bigdata_invoice_stream_analysis_spark.streaming.sources import rate_lines_source
-
-    df = rate_lines_source(spark, rows_per_second=10)
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] == ["key", "value", "ingest_ts"]
 
 
 def test_state_v2_semantics(spark, stream_dir, tmp_path):
@@ -391,22 +306,6 @@ def test_kafka_record_projection_schema(spark):
     assert dict(rec.dtypes) == {"key": "string", "value": "string"}
 
 
-def test_enriched_purchases_stream_static(spark, stream_dir):
-    """Stream-static broadcast enrichment: purchases pick up dim
-    attributes; unknown customers survive with nulls."""
-    dim = spark.createDataFrame(
-        [("7", "GOLD", "ES")], "customer_id string, tier string, country string"
-    ).drop("country")
-    lines = file_lines_source(spark, stream_dir, max_files_per_trigger=1)
-    enriched = P.enriched_purchases(P.good_purchases(lines), dim)
-    batches = run_collect(spark, enriched, output_mode="append")
-    rows = [r for _, bat in batches for r in bat]
-    assert len(rows) == 5  # all good purchase lines across both chunks
-    tiers = {r.InvoiceNo: r.tier for r in rows}
-    assert tiers["I1"] == "GOLD"  # CustomerID 7 enriched
-    assert all(r.tier == "GOLD" for r in rows if r.CustomerID == "7")
-
-
 def test_idempotent_sink_exactly_once(spark, stream_dir, tmp_path):
     """Replaying a micro-batch into the idempotent sink overwrites its
     own partition instead of duplicating rows (exactly-once delivery
@@ -417,7 +316,7 @@ def test_idempotent_sink_exactly_once(spark, stream_dir, tmp_path):
     q = sinks.idempotent_parquet_sink(
         good, out, str(tmp_path / "ckpt"), trigger_available_now=True
     )
-    q.awaitTermination(120)
+    await_all([q], 120)
     first = spark.read.parquet(out)
     n1 = first.count()
     assert n1 == 5

@@ -22,6 +22,7 @@ from bigdata_invoice_stream_analysis_spark.sources.tables import (
     table_path,
     table_schema,
 )
+from bigdata_invoice_stream_analysis_spark.streaming.runtime import await_all
 
 NANOS_KEY = "spark.sql.legacy.parquet.nanosAsLong"
 # ~2^60 ns: a double holds 53 bits, so `ts / 1000` in double rounds the
@@ -153,10 +154,7 @@ def test_nanos_ts_truncates_to_micros_on_batch_and_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        assert q.awaitTermination(120)
-    finally:
-        q.stop()
+    await_all([q], 120)
     assert [r.us for r in got] == [TS_US]
 
     # what float division did: the double rounds the microsecond digit up

@@ -84,6 +84,12 @@ def test_fingerprint_normalizes_whitespace(spark):
 # Winnowing
 # ---------------------------------------------------------------------------
 
+def _ordered_shingles(text, k=3):
+    """Positional (non-distinct) shingle hashes, composed from token
+    hashes as winnow_fingerprints builds them."""
+    return TX.compose_token_hashes(TX.token_hashes(text), k)
+
+
 def _winnow_fps(spark, docs, k=3, w=4):
     """Run the winnowing selection (same logic as the gated query) over
     a small (doc_id, text) frame; returns {doc_id: set(fingerprints)}."""
@@ -92,10 +98,10 @@ def _winnow_fps(spark, docs, k=3, w=4):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     h = df.select(
         "doc_id",
-        F.posexplode(TX.ordered_shingle_hashes(F.col("text"), k)).alias(
+        F.posexplode(_ordered_shingles(F.col("text"), k)).alias(
             "pos0", "hash"
         ),
-        F.size(TX.ordered_shingle_hashes(F.col("text"), k)).alias("n"),
+        F.size(_ordered_shingles(F.col("text"), k)).alias("n"),
     )
     win = Window.partitionBy("doc_id").orderBy("pos0").rowsBetween(0, w - 1)
     sel = h.select("doc_id", F.min("hash").over(win).alias("fp"), "pos0", "n").where(
@@ -129,7 +135,7 @@ def test_winnowing_short_doc_emits_fingerprint(spark):
 def test_ordered_shingle_hashes_keeps_positions(spark):
     """Unlike shingle_hashes (distinct), repeated shingles stay."""
     n_ordered = one(
-        spark, F.size(TX.ordered_shingle_hashes(F.lit("a b c a b c a b c")))
+        spark, F.size(_ordered_shingles(F.lit("a b c a b c a b c")))
     )
     n_distinct = one(spark, F.size(TX.shingle_hashes(F.lit("a b c a b c a b c"))))
     assert n_ordered == 7  # 9 tokens -> 7 trigrams, duplicates kept

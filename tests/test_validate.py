@@ -49,7 +49,13 @@ def test_invalid_line_reference_mode(lines_df):
 
 
 def test_cancelled_and_good_routing(lines_df):
-    routes = validate.route_lines(lines_df)
+    line = F.col("value")
+    invalid = validate.is_invalid_line(line)
+    routes = {
+        "invalid": lines_df.filter(invalid),
+        "cancelled": lines_df.filter(~invalid & validate.is_cancelled_line(line)),
+        "good": lines_df.filter(validate.is_good_line(line)),
+    }
     assert collect_values(routes["cancelled"]) == {CANCELLED, NEG_QTY}
     assert collect_values(routes["good"]) == {GOOD}
     # every line lands in exactly one route

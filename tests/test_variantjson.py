@@ -12,7 +12,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from bigdata_invoice_stream_analysis_spark.functions.variantjson import (
     json_schema_drift,
     shred_json,
-    variant_field_profile,
 )
 
 EVENTS = [
@@ -65,22 +64,6 @@ def test_schema_drift_histogram(spark):
     extra = [k for k in drift if k[0] == "$.extra"
              and k[1].startswith("OBJECT")]
     assert len(extra) == 1 and drift[extra[0]] == 1
-
-
-def test_field_inventory_via_variant_explode(spark):
-    prof = variant_field_profile(_df(spark), "body",
-                                 id_col="event_id").collect()
-    by_field = {}
-    for r in prof:
-        by_field.setdefault(r["field"], 0)
-        by_field[r["field"]] += r["n_docs"]
-    # 4 parseable docs: user 4x, ts 4x, tags 2x, extra 1x
-    assert by_field["user"] == 4
-    assert by_field["ts"] == 4
-    assert by_field["tags"] == 2
-    assert by_field["extra"] == 1
-    ts_types = {r["value_schema"] for r in prof if r["field"] == "ts"}
-    assert ts_types == {"BIGINT", "STRING"}
 
 
 def test_plans_stay_jvm_side(spark):
