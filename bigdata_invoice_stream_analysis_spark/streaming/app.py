@@ -24,7 +24,14 @@ store (RocksDB via conf for large key spaces). AQE is off in streaming,
 so each query starts with its own state-partition count from
 streaming.runtime.state_partitions (the topology's cores split across
 its concurrent queries, one count for all of them since all their state
-is JVM state); the caller's session keeps its own count.
+is JVM state); the caller's session keeps its own count. A checkpoint
+root that Hadoop resolves to the local filesystem also starts every
+query with the FileSystem-API checkpoint file manager
+(streaming.runtime.local_checkpoints): Spark's default FileContext
+manager forks a ``readlink`` per checkpoint rename there without the
+native libhadoop, and both managers end in the same check-then-rename
+on a local disk. HDFS and object-store roots keep Spark's default, the
+manager whose rename is atomic on them.
 """
 
 from __future__ import annotations
@@ -85,6 +92,7 @@ def _start(
         return sinks.kafka_sink(
             df, cfg.brokers, name, ckpt,
             key_col=df.columns[0], output_mode=output_mode,
+            trigger_available_now=cfg.available_now,
         )
     if cfg.sink_mode == "parquet":
         # Update-mode branches route through the batch_id-overwrite
@@ -118,7 +126,9 @@ def _wire(
     feature stream — one per model, or with ``shared_scan`` one
     foreachBatch router for all of them. Every query starts under the
     JVM state-partition count for a topology of that many concurrent
-    queries. If wiring fails after some queries started (bad checkpoint
+    queries, and on a local ``out_dir`` under the FileSystem-API
+    checkpoint file manager; the caller's conf is restored either way.
+    If wiring fails after some queries started (bad checkpoint
     dir, broken sink), the survivors are stopped before the error
     propagates — a partial topology must not leak active streams into
     the session."""
@@ -129,7 +139,7 @@ def _wire(
     try:
         with runtime.shuffle_partitions(
             spark, runtime.state_partitions(spark, concurrent=concurrent)
-        ):
+        ), runtime.local_checkpoints(spark, cfg.out_dir):
             queries.append(
                 _start(P.invalid_lines(lines), TOPIC_INVALID, cfg, "append")
             )

@@ -64,19 +64,20 @@ def cancellation_counts(
     slide: str = DEFAULT_SLIDE,
     watermark: str = DEFAULT_WATERMARK,
     time_mode: str = "event",
-    exact: bool = True,
 ) -> DataFrame:
     """Branch 2 (P2 + A2 + A3 + W1): count of distinct cancelled
     invoices per sliding window (reduceByKeyAndWindow with inverse
     reduce, InvoicePipeline.scala:65-80).
 
-    exact=True chains two stateful aggs — dedup on (window, InvoiceNo)
-    then count per window — supported since Spark 3.4 with a watermark;
-    state for both levels is purged as the watermark advances, unlike
-    the reference whose manual inverse-reduce kept every key resident.
-    exact=False uses one agg with approx_count_distinct — half the
-    shuffle state, the right trade at very high cardinality.
-    Output: window_start, window_end, n_cancelled (append mode).
+    ONE stateful aggregation per window: the size of the window's set
+    of cancelled InvoiceNo values, an exact distinct count with one
+    shuffle and one state store per micro-batch. State is one row per
+    open window holding its distinct cancelled invoices (the same
+    entries a chained dedup on (window, InvoiceNo) would keep as rows),
+    and a micro-batch rewrites the sets of the windows it touches. All
+    of it is purged as the watermark closes windows, unlike the
+    reference whose manual inverse-reduce kept every key resident.
+    Output: window_start, window_end, n_cancelled bigint (append mode).
     """
     # Watermark BEFORE the cancelled filter: the event-time high-water
     # mark must advance with the whole stream, not only with cancelled
@@ -98,18 +99,9 @@ def cancellation_counts(
         .filter(keep)
         .select(F.col("key").alias("InvoiceNo"), "ts")
     )
-    w = F.window("ts", window, slide)
-    if exact:
-        per_invoice = cancelled.groupBy(w.alias("window"), "InvoiceNo").agg(
-            F.count(F.lit(1)).alias("n_lines")
-        )
-        counts = per_invoice.groupBy("window").agg(
-            F.count(F.lit(1)).alias("n_cancelled")
-        )
-    else:
-        counts = cancelled.groupBy(w.alias("window")).agg(
-            F.approx_count_distinct("InvoiceNo").alias("n_cancelled")
-        )
+    counts = cancelled.groupBy(F.window("ts", window, slide).alias("window")).agg(
+        F.size(F.collect_set("InvoiceNo")).cast("long").alias("n_cancelled")
+    )
     return counts.select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),

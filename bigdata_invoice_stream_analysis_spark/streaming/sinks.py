@@ -88,15 +88,21 @@ def kafka_sink(
     key_col: str = "key",
     output_mode: str = "update",
     trigger_interval: str | None = "20 seconds",  # IP:36 Seconds(20)
+    trigger_available_now: bool = False,
 ) -> StreamingQuery:
-    """S4 — one output topic, built-in Kafka sink."""
+    """S4 — one output topic, built-in Kafka sink. With
+    ``trigger_available_now`` the query drains what is available and
+    stops, as parquet_sink and memory_sink do; ``trigger_interval`` is
+    then ignored."""
     writer = (
         to_kafka_records(df, key_col)
         .writeStream.format("kafka")
         .options(**kafka_writer_options(brokers, topic, checkpoint))
         .outputMode(output_mode)
     )
-    if trigger_interval:
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_interval:
         writer = writer.trigger(processingTime=trigger_interval)
     return writer.start()
 
@@ -150,24 +156,15 @@ def foreach_batch_collector(
 
 
 def overwrite_batch(bdf: DataFrame, bid: int, path: str) -> None:
-    """The idempotent micro-batch write primitive: land the batch in
-    ``batch_id=N/`` with dynamic partition overwrite, so a replayed
-    batch (crash between sink write and checkpoint commit) overwrites
-    its own previous attempt instead of appending duplicates. Used by
-    idempotent_parquet_sink and by foreachBatch routers that fan one
-    batch out to several sinks transactionally."""
-    spark = bdf.sparkSession
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            bdf.withColumn("batch_id", F.lit(bid))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    """The idempotent micro-batch write primitive: overwrite the
+    batch's own ``batch_id=N/`` directory, so a replayed batch (crash
+    between sink write and checkpoint commit) replaces its own previous
+    attempt instead of appending duplicates, and no other batch's
+    directory is touched. Readers of ``path`` discover ``batch_id`` as
+    a partition column. Used by idempotent_parquet_sink and by
+    foreachBatch routers that fan one batch out to several sinks
+    transactionally."""
+    bdf.write.mode("overwrite").parquet(f"{path}/batch_id={bid}")
 
 
 def idempotent_parquet_sink(
@@ -182,12 +179,12 @@ def idempotent_parquet_sink(
     the plain parquet sink above is at-least-once on retry-after-crash).
 
     Mechanism: replayable source + deterministic batch ids + an
-    IDEMPOTENT write — each micro-batch lands in ``batch_id=N/`` with
-    dynamic partition overwrite, so a replayed batch (crash between
-    sink write and checkpoint commit) overwrites its own previous
-    attempt instead of appending duplicates. The same pattern carries
-    to any transactional target (JDBC upsert keyed on batch_id, Delta
-    txn appId/version)."""
+    IDEMPOTENT write — each micro-batch overwrites its own
+    ``batch_id=N/`` directory (overwrite_batch), so a replayed batch
+    (crash between sink write and checkpoint commit) replaces its own
+    previous attempt instead of appending duplicates. The same pattern
+    carries to any transactional target (JDBC upsert keyed on batch_id,
+    Delta txn appId/version)."""
     def write(bdf: DataFrame, bid: int) -> None:
         overwrite_batch(bdf, bid, path)
 

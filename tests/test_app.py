@@ -3,16 +3,19 @@ training CLI (ml.cli.train_all) — SURVEY.md §5.3/§5.5."""
 
 from __future__ import annotations
 
-import glob
+import contextlib
 import os
 
 import pytest
+from pyspark.sql.streaming import DataStreamWriter
 
 from bigdata_invoice_stream_analysis_spark.ml.cli import train_all
+from bigdata_invoice_stream_analysis_spark.streaming import runtime
 from bigdata_invoice_stream_analysis_spark.streaming.app import (
     ModelSpec,
     PipelineConfig,
     run_pipeline,
+    run_pipeline_router,
 )
 from bigdata_invoice_stream_analysis_spark.streaming.producer import replay_to_dir
 from bigdata_invoice_stream_analysis_spark.streaming.runtime import await_all, state_partitions
@@ -130,10 +133,6 @@ def test_run_pipeline_router_matches_four_query_topology(spark, tmp_path):
     """run_pipeline_router collapses the two anomaly sinks into ONE
     foreachBatch-router query (3 queries total) and must produce
     row-identical sink contents to run_pipeline's 4-query topology."""
-    from bigdata_invoice_stream_analysis_spark.streaming.app import (
-        run_pipeline_router,
-    )
-
     src = _replay(tmp_path, "in", chunk=4)
     lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
     out_a = str(tmp_path / "out_four")
@@ -334,6 +333,148 @@ def test_legacy_state_restart_equals_clean_run(spark, tmp_path):
     km = spark.read.parquet(f"{resumed_out}/anomalias_kmeans")
     last = max((r for r in km.collect() if r.InvoiceNo == "I9"), key=lambda r: r.batch_id)
     assert (last.Lines, last.Time) == (2, 11.0)
+
+
+FS_MANAGER = runtime.FILE_SYSTEM_CHECKPOINT_MANAGER.rsplit(".", 1)[1]
+CONTEXT_MANAGER = "FileContextBasedCheckpointFileManager"
+
+
+def _checkpoint_managers(queries) -> set[tuple[str, str, str]]:
+    """The (offset log, commit log, file-source log) checkpoint file
+    manager class names of a set of started queries. The source keeps
+    its log in a private field, read here by reflection."""
+    out = set()
+    for q in queries:
+        sq = q._jsq.streamingQuery()
+        field = sq.sources().head().getClass().getDeclaredField("metadataLog")
+        field.setAccessible(True)
+        out.add(tuple(
+            log.fileManager().getClass().getSimpleName()
+            for log in (sq.offsetLog(), sq.commitLog(), field.get(sq.sources().head()))
+        ))
+    return out
+
+
+@pytest.mark.parametrize("wire", [run_pipeline, run_pipeline_router])
+@pytest.mark.parametrize(
+    "caller",
+    [None, f"org.apache.spark.sql.execution.streaming.checkpointing.{CONTEXT_MANAGER}"],
+    ids=["unset", "caller_set"],
+)
+def test_local_root_checkpoints_through_file_system_manager(
+    spark, tmp_path, wire, caller
+):
+    """On a local out_dir every query of either topology keeps its
+    offset and commit logs through the FileSystem-API manager, and the
+    caller's checkpoint-manager conf is as it was after wiring: unset,
+    or the value the caller set."""
+    key = runtime.CHECKPOINT_FILE_MANAGER
+    assert spark.conf.get(key, None) is None
+    if caller:
+        spark.conf.set(key, caller)
+    try:
+        src = _replay(tmp_path, "in", chunk=4)
+        lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
+        queries = wire(lines, _config(str(tmp_path / "out")))
+        assert spark.conf.get(key, None) == caller
+        await_all(queries, 120)
+        assert _checkpoint_managers(queries) == {(FS_MANAGER,) * 3}
+    finally:
+        spark.conf.unset(key)
+
+
+def test_non_local_root_keeps_default_manager(spark, tmp_path, monkeypatch):
+    """Only a root Hadoop resolves to the local filesystem switches the
+    manager. A scheme-less path resolves against fs.defaultFS, so under
+    a non-local default it is not local (an FTP default, which Hadoop
+    resolves without connecting); and a root resolved elsewhere (the
+    resolution stubbed, as no HDFS is reachable here) starts its
+    queries under Spark's default manager with the conf left unset."""
+    key = runtime.CHECKPOINT_FILE_MANAGER
+    assert runtime.checkpoint_scheme(spark, "relative/out") == "file"
+    spark.conf.set("fs.defaultFS", "ftp://localhost:1/")
+    try:
+        assert runtime.checkpoint_scheme(spark, "/data/out") == "ftp"
+        with runtime.local_checkpoints(spark, "/data/out"):
+            assert spark.conf.get(key, None) is None
+        with runtime.local_checkpoints(spark, f"file://{tmp_path}"):
+            assert spark.conf.get(key) == runtime.FILE_SYSTEM_CHECKPOINT_MANAGER
+    finally:
+        spark.conf.unset("fs.defaultFS")
+    assert spark.conf.get(key, None) is None
+
+    monkeypatch.setattr(runtime, "checkpoint_scheme", lambda spark, root: "hdfs")
+    src = _replay(tmp_path, "in", chunk=4)
+    lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
+    queries = run_pipeline(lines, _config(str(tmp_path / "out")))
+    assert spark.conf.get(key, None) is None
+    await_all(queries, 120)
+    assert _checkpoint_managers(queries) == {(CONTEXT_MANAGER,) * 3}
+
+
+def test_default_manager_checkpoint_resumes(spark, tmp_path, monkeypatch):
+    """A checkpoint written under Spark's default manager resumes under
+    the FileSystem-API one: half the input drained with the switch
+    stubbed out, the rest through run_pipeline, leaves all four sinks
+    equal to one clean run."""
+    staged, src = _replay(tmp_path, "staged", chunk=2), tmp_path / "in"
+    files = sorted(os.listdir(staged))
+
+    def run(out_dir: str):
+        lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
+        queries = run_pipeline(lines, _config(out_dir))
+        await_all(queries, 120)
+        return _checkpoint_managers(queries)
+
+    resumed_out = str(tmp_path / "resumed")
+    _feed(staged, src, files[:2])
+    with monkeypatch.context() as m:
+        m.setattr(
+            runtime, "local_checkpoints",
+            lambda spark, root: contextlib.nullcontext(),
+        )
+        assert run(resumed_out) == {(CONTEXT_MANAGER,) * 3}
+    _feed(staged, src, files[2:])
+    assert run(resumed_out) == {(FS_MANAGER,) * 3}
+
+    clean_out = str(tmp_path / "clean")
+    run(clean_out)
+    for sink in SINKS:
+        assert _sink_rows(spark, resumed_out, sink) == _sink_rows(
+            spark, clean_out, sink
+        ), f"{sink}: the resumed run differs from a clean run"
+
+
+@pytest.mark.parametrize("available_now", [True, False])
+def test_kafka_mode_honours_available_now(
+    spark, tmp_path, monkeypatch, available_now
+):
+    """Kafka mode starts every query of both topologies on the
+    availableNow trigger when the config asks for it, and on the
+    reference's 20 s processing-time trigger otherwise (the per-model
+    queries through sinks.kafka_sink, the router through foreachBatch,
+    which has no interval). The Kafka connector is not installed, so
+    this reaches writer assembly only: DataStreamWriter.start is
+    stubbed and records the trigger each writer was given."""
+    triggers: list[dict] = []
+    monkeypatch.setattr(
+        DataStreamWriter, "trigger",
+        lambda self, **kw: (triggers.append(kw), self)[1],
+    )
+    monkeypatch.setattr(DataStreamWriter, "start", lambda self, *a, **kw: self)
+    src = tmp_path / "in"
+    src.mkdir()
+    lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
+    cfg = _config(
+        str(tmp_path / "out"), sink_mode="kafka", brokers="broker:9092",
+        available_now=available_now,
+    )
+    assert len(run_pipeline(lines, cfg)) == 4
+    assert len(run_pipeline_router(lines, cfg)) == 3
+    if available_now:
+        assert triggers == [{"availableNow": True}] * 7
+    else:
+        assert triggers == [{"processingTime": "20 seconds"}] * 6
 
 
 def test_train_all_cli(spark, tmp_path):
