@@ -1259,8 +1259,8 @@ def q_streaming_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
       * cancelaciones — 8min/1min windows of distinct cancelled
         invoices; append-mode emission releases exactly the windows
         whose end is ≤ the final watermark (max event time − 10 min,
-        watermarked BEFORE the cancel filter — the chained
-        dedup-then-count aggs flush through availableNow's
+        watermarked BEFORE the cancel filter — the one-operator
+        windowed distinct count flushes through availableNow's
         requires-another-batch loop);
       * anomalias_kmeans / anomalias_bisect_kmeans — per-invoice
         weighted-mean features scored against two plan-literal centroid
